@@ -106,6 +106,31 @@ class Node:
             )
         return out
 
+    def apply_payload_fn(
+        self,
+        df: DataFrame,
+        fn: Callable[[Any], Any],
+        decode_json: bool = True,
+        src: Column | None = None,
+        content_type: str | None = None,
+    ) -> DataFrame:
+        """Run the python ``fn`` over ``src`` (default: ``payload``) via
+        :func:`payload_fn_udf` and apply its result like
+        :meth:`apply_payload`, with the UDF's per-row error as ``err``.
+
+        The UDF result is projected once into a temporary struct column
+        and payload, err and state are all read from it, so each row
+        crosses into Python exactly once per plan (see
+        :func:`payload_fn_udf` for why that needs the nondeterministic
+        marking too)."""
+        udf = payload_fn_udf(fn, decode_json=decode_json)
+        out = df.withColumn("__fn", udf(F.col("payload") if src is None else src))
+        out = self.apply_payload(
+            out, F.col("__fn.payload"), content_type=content_type,
+            err=F.col("__fn.err"),
+        )
+        return out.drop("__fn")
+
     def set_state(self, df: DataFrame, cond: Column, state: str, err_msg: Column | None = None) -> DataFrame:
         # err_msg must be set BEFORE state: active_cond() is symbolic and
         # would resolve against the already-flipped state column.
@@ -201,6 +226,16 @@ def payload_fn_udf(fn: Callable[[Any], Any], decode_json: bool = True):
     the ONLY place arbitrary python runs in the hot path — everything
     expressible as built-in Spark functions stays JVM-side. Errors are
     captured per row, mirroring pypeman's per-message exception routing.
+
+    Once per message: the UDF is marked nondeterministic, and callers
+    (:meth:`Node.apply_payload_fn`) project its result into ONE struct
+    column that payload, err and state all read. Both halves are needed.
+    A deterministic UDF lets Catalyst push every downstream ``state``
+    filter (one per outcome in ``Pipeline.run``) below the projection
+    that holds it, inlining the UDF into the filter and adding a second
+    ``ArrowEvalPython`` per filter. A nondeterministic UDF referenced as
+    ``res["payload"]`` and ``res["err"]`` separately is evaluated once
+    per reference, since Spark may not merge nondeterministic calls.
     """
     import pandas as pd
 
@@ -227,4 +262,4 @@ def payload_fn_udf(fn: Callable[[Any], Any], decode_json: bool = True):
                 errs.append(f"{type(exc).__name__}: {exc}")
         return pd.DataFrame({"payload": payloads, "err": errs})
 
-    return _udf
+    return _udf.asNondeterministic()

@@ -298,8 +298,6 @@ class FileReader(Node):
         self.encoding = encoding
 
     def transform(self, df: DataFrame) -> DataFrame:
-        from .base import payload_fn_udf
-
         fixed, binary, encoding = self.filepath, self.binary_file, self.encoding
 
         def _read(path):
@@ -309,12 +307,8 @@ class FileReader(Node):
                 raw = fh.read()
             return base64.b64encode(raw).decode() if binary else raw.decode(encoding)
 
-        udf = payload_fn_udf(_read, decode_json=False)
         src = F.lit(fixed) if fixed else F.col("meta").getItem("filepath")
-        res = udf(src)
-        return self.apply_payload(
-            df,
-            res["payload"],
+        return self.apply_payload_fn(
+            df, _read, decode_json=False, src=src,
             content_type="application/octet-stream" if binary else "application/text",
-            err=res["err"],
         )

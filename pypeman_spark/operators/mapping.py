@@ -21,7 +21,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .base import Node, payload_fn_udf
+from .base import Node
 
 __all__ = ["MapItem", "JoinMapItem", "Map", "ToOrderedDict", "FuncNode", "MsgFuncNode"]
 
@@ -108,8 +108,7 @@ class Map(Node):
                 it.conv(obj, dst)
             return dst
 
-        res = payload_fn_udf(_map)(F.col("payload"))
-        return self.apply_payload(df, res["payload"], err=res["err"])
+        return self.apply_payload_fn(df, _map)
 
 
 class ToOrderedDict(Node):
@@ -128,8 +127,7 @@ class ToOrderedDict(Node):
             src = obj if isinstance(obj, dict) else {}
             return {k: src.get(k, defaults.get(k)) for k in keys}
 
-        res = payload_fn_udf(_proj)(F.col("payload"))
-        return self.apply_payload(df, res["payload"], err=res["err"])
+        return self.apply_payload_fn(df, _proj)
 
 
 class FuncNode(Node):
@@ -142,8 +140,7 @@ class FuncNode(Node):
         self.decode_json = decode_json
 
     def transform(self, df: DataFrame) -> DataFrame:
-        res = payload_fn_udf(self.fn, decode_json=self.decode_json)(F.col("payload"))
-        return self.apply_payload(df, res["payload"], err=res["err"])
+        return self.apply_payload_fn(df, self.fn, decode_json=self.decode_json)
 
 
 _MSG_RESULT = T.StructType(
@@ -190,7 +187,9 @@ class MsgFuncNode(Node):
                     out_e.append(f"{type(exc).__name__}: {exc}")
             return pd.DataFrame({"payload": out_p, "meta": out_m, "err": out_e})
 
-        res = _udf(F.col("payload"), F.col("meta"))
+        # nondeterministic, like payload_fn_udf: a state filter must not
+        # be pushed below the single __r projection
+        res = _udf.asNondeterministic()(F.col("payload"), F.col("meta"))
         from ..message import ERROR
         from .base import active_cond
 

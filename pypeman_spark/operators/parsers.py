@@ -18,7 +18,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .base import Node, payload_fn_udf
+from .base import Node
 
 __all__ = [
     "JsonToPython",
@@ -69,10 +69,9 @@ class PythonToJson(Node):
         expr = F.col("payload")
         if self.indent is not None:
             indent = self.indent
-            expr_udf = payload_fn_udf(lambda p: json.dumps(p, indent=indent))
-            res = expr_udf(F.col("payload"))
-            return self.apply_payload(
-                df, res["payload"], content_type="application/json", err=res["err"]
+            return self.apply_payload_fn(
+                df, lambda p: json.dumps(p, indent=indent),
+                content_type="application/json",
             )
         return self.apply_payload(df, expr, content_type="application/json")
 
@@ -113,13 +112,9 @@ class CSVstr2Python(Node):
 
     def transform(self, df: DataFrame) -> DataFrame:
         headers, to_dict, delim, quoting = self._opts
-        udf = payload_fn_udf(
-            lambda p: _parse_csv_text(p, headers, to_dict, delim, quoting),
-            decode_json=False,
-        )
-        res = udf(F.col("payload"))
-        return self.apply_payload(
-            df, res["payload"], content_type="application/json", err=res["err"]
+        return self.apply_payload_fn(
+            df, lambda p: _parse_csv_text(p, headers, to_dict, delim, quoting),
+            decode_json=False, content_type="application/json",
         )
 
 
@@ -147,13 +142,11 @@ class CSV2Python(CSVstr2Python):
             with open(path, encoding=encoding) as fh:
                 return _parse_csv_text(fh.read(), headers, to_dict, delim, quoting)
 
-        udf = payload_fn_udf(_read, decode_json=False)
         src = F.lit(fixed) if fixed else F.coalesce(
             F.col("meta").getItem("filepath"), F.col("payload")
         )
-        res = udf(src)
-        return self.apply_payload(
-            df, res["payload"], content_type="application/json", err=res["err"]
+        return self.apply_payload_fn(
+            df, _read, decode_json=False, src=src, content_type="application/json"
         )
 
 
@@ -190,11 +183,7 @@ class Python2CSVstr(Node):
                 w.writerows(obj or [])
             return buf.getvalue()
 
-        udf = payload_fn_udf(_to_csv)
-        res = udf(F.col("payload"))
-        return self.apply_payload(
-            df, res["payload"], content_type="text/csv", err=res["err"]
-        )
+        return self.apply_payload_fn(df, _to_csv, content_type="text/csv")
 
 
 # --- XML (contrib/xml.py uses xmltodict; we mirror its dict shape with
@@ -239,10 +228,8 @@ class XMLToPython(Node):
         def _parse(p):
             return _etree_to_dict(ET.fromstring(p))
 
-        udf = payload_fn_udf(_parse, decode_json=False)
-        res = udf(F.col("payload"))
-        return self.apply_payload(
-            df, res["payload"], content_type="application/json", err=res["err"]
+        return self.apply_payload_fn(
+            df, _parse, decode_json=False, content_type="application/json"
         )
 
 
@@ -274,10 +261,8 @@ class PythonToXML(Node):
     """dict payload → XML string (``contrib/xml.py:21-33``)."""
 
     def transform(self, df: DataFrame) -> DataFrame:
-        udf = payload_fn_udf(_dict_to_xml)
-        res = udf(F.col("payload"))
-        return self.apply_payload(
-            df, res["payload"], content_type="application/xml", err=res["err"]
+        return self.apply_payload_fn(
+            df, _dict_to_xml, content_type="application/xml"
         )
 
 
@@ -308,10 +293,8 @@ class HL7ToPython(Node):
     (``contrib/hl7.py:189-199``)."""
 
     def transform(self, df: DataFrame) -> DataFrame:
-        udf = payload_fn_udf(hl7_parse, decode_json=False)
-        res = udf(F.col("payload"))
-        return self.apply_payload(
-            df, res["payload"], content_type="application/json", err=res["err"]
+        return self.apply_payload_fn(
+            df, hl7_parse, decode_json=False, content_type="application/json"
         )
 
 
@@ -319,11 +302,7 @@ class PythonToHL7(Node):
     """Nested list structure → HL7 string (``contrib/hl7.py:202-211``)."""
 
     def transform(self, df: DataFrame) -> DataFrame:
-        udf = payload_fn_udf(hl7_unparse)
-        res = udf(F.col("payload"))
-        return self.apply_payload(
-            df, res["payload"], content_type="text/hl7", err=res["err"]
-        )
+        return self.apply_payload_fn(df, hl7_unparse, content_type="text/hl7")
 
 
 # --- bytes / base64 (nodes.py:495-540) — pure built-ins ----------------

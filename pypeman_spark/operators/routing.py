@@ -45,7 +45,22 @@ def condition_to_column(cond: Column | bool | Callable[[Any], bool]) -> Column:
             out.append(bool(cond(obj)))
         return pd.Series(out)
 
-    return _cond(F.col("payload"))
+    # nondeterministic for the reason given in base.payload_fn_udf;
+    # _route projects it once
+    return _cond.asNondeterministic()(F.col("payload"))
+
+
+def _route(node: Node, df: DataFrame, condition, state: str, message) -> DataFrame:
+    """Flip matching active rows to ``state``. A python condition is
+    projected into one temporary column first, so ``set_state`` reading
+    it twice, and a later ``state`` filter, do not re-run its UDF."""
+    cond = condition_to_column(condition)
+    err = F.lit(message) if message else F.lit(None).cast("string")
+    if isinstance(condition, (Column, bool)):
+        return node.set_state(df, cond, state, err_msg=err)
+    out = node.set_state(df.withColumn("__cond", cond), F.col("__cond"), state,
+                         err_msg=err)
+    return out.drop("__cond")
 
 
 class Drop(Node):
@@ -61,9 +76,7 @@ class Drop(Node):
         self.message = message
 
     def transform(self, df: DataFrame) -> DataFrame:
-        cond = condition_to_column(self.condition)
-        err = F.lit(self.message) if self.message else F.lit(None).cast("string")
-        return self.set_state(df, cond, DROPPED, err_msg=err)
+        return _route(self, df, self.condition, DROPPED, self.message)
 
 
 class Reject(Node):
@@ -77,9 +90,7 @@ class Reject(Node):
         self.message = message
 
     def transform(self, df: DataFrame) -> DataFrame:
-        cond = condition_to_column(self.condition)
-        err = F.lit(self.message) if self.message else F.lit(None).cast("string")
-        return self.set_state(df, cond, REJECTED, err_msg=err)
+        return _route(self, df, self.condition, REJECTED, self.message)
 
 
 class RaiseError(Node):

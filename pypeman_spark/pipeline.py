@@ -26,6 +26,17 @@ Scale notes: the entire chain is lazy; one pipeline = one Catalyst plan.
 whenever a branch contains stages, so a K-arm branch never re-executes
 the upstream plan (scan + UDF stages) K+1 times; ``release()``
 unpersists when the run's outputs are consumed.
+
+Once per message: ``run()`` builds ``all`` from one pass over the
+finalized frame. Outcomes without a handler chain leave through a single
+``state IN (...)`` filter, so a pipeline with no handler chains has no
+``Union`` in ``all``; outcomes with one get their own arm, and the
+upstream is then shared through the same ``_share``/``release()`` path.
+Together with the Python nodes' single nondeterministic projection
+(``operators.base.payload_fn_udf``), each Python node runs once per row
+of any one action on ``all``. A caller that runs several actions on it
+(``StreamingChannel.process_batch``, ``RetryStore.retry_once``)
+persists it once, or each action re-runs the whole chain.
 """
 
 from __future__ import annotations
@@ -66,6 +77,13 @@ def _slice_from(handlers: list[tuple[str, StageFn]], name: str) -> list:
     return handlers[names.index(name):]
 
 
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part, allowMissingColumns=True)
+    return out
+
+
 @dataclass
 class PipelineResult:
     """Outcome-partitioned result of one pipeline run.
@@ -78,7 +96,7 @@ class PipelineResult:
     dropped: DataFrame
     rejected: DataFrame
     errors: DataFrame
-    all: DataFrame  # union of every outcome, state column set
+    all: DataFrame  # every outcome's rows, state column set
 
     def counts(self) -> dict[str, int]:
         rows = (
@@ -232,10 +250,7 @@ class Pipeline:
             for i, (_c, sub) in enumerate(_subs):
                 part = tagged.filter(F.col("__arm") == i).drop("__arm")
                 parts.append(sub._apply_stages(part, sub.stages))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p, allowMissingColumns=True)
-            return out
+            return _union(parts)
 
         self.stages.append((name or f"case{len(self.stages)}", _case_stage))
         return self
@@ -323,8 +338,10 @@ class Pipeline:
                 )
             stages = stages[names.index(from_stage):]
         if to_stage is not None:
-            idx = [s for s, _ in stages].index(to_stage)
-            stages = stages[: idx + 1]
+            names = [s for s, _ in stages]
+            if to_stage not in names:
+                raise KeyError(f"unknown stage {to_stage!r}; have {names}")
+            stages = stages[: names.index(to_stage) + 1]
         init_nodes = [] if skip_init else self.init_nodes
         if init_from is not None:
             init_nodes = _slice_from(self.init_nodes, init_from)
@@ -345,32 +362,42 @@ class Pipeline:
             F.when(active_cond(), F.lit(PROCESSED)).otherwise(F.col("state")),
         )
 
-        processed = out.filter(F.col("state") == PROCESSED)
-        dropped = out.filter(F.col("state") == DROPPED)
-        rejected = out.filter(F.col("state") == REJECTED)
-        errors = out.filter(F.col("state") == ERROR)
+        # one pass over `out`: an outcome gets its own union arm only when
+        # it has a handler chain; every other row leaves through a single
+        # `state IN (...)` filter (rows in any other state are not in
+        # `all`). With no handler chains `all` is one filter, no Union.
+        chains = {
+            PROCESSED: self.join_nodes,
+            DROPPED: self.drop_nodes,
+            REJECTED: self.reject_nodes,
+            ERROR: self.fail_nodes,
+        }
+        if self.final_nodes or any(chains.values()):
+            # >1 arm reads `out`: share it so the upstream runs once
+            out = self._share(out)
+        parts = {
+            state: self._run_handlers(out.filter(F.col("state") == state), chain)
+            for state, chain in chains.items()
+        }
+        arms = [parts[state] for state, chain in chains.items() if chain]
+        plain = [state for state, chain in chains.items() if not chain]
         # auto_retry rows: parked for the retry store, no end-node chains
-        # (retry.py:58-86 parks before outcome handling)
-        waiting = out.filter(F.col("state") == WAIT_RETRY)
-
-        processed = self._run_handlers(processed, self.join_nodes)
-        dropped = self._run_handlers(dropped, self.drop_nodes)
-        rejected = self._run_handlers(rejected, self.reject_nodes)
-        errors = self._run_handlers(errors, self.fail_nodes)
-
-        allrows = processed
-        for part in (dropped, rejected, errors):
-            allrows = allrows.unionByName(part, allowMissingColumns=True)
-        allrows = self._run_handlers(allrows, self.final_nodes)
-        # retry-parked rows skip end-node chains entirely — they are not
+        # (retry.py:58-86 parks before outcome handling) — they are not
         # terminal; the retry sweep re-runs them (retry.py:130-170)
-        allrows = allrows.unionByName(waiting, allowMissingColumns=True)
+        if self.final_nodes:
+            if plain:
+                arms.append(out.filter(F.col("state").isin(*plain)))
+            allrows = self._run_handlers(_union(arms), self.final_nodes)
+            allrows = _union([allrows, out.filter(F.col("state") == WAIT_RETRY)])
+        else:
+            arms.append(out.filter(F.col("state").isin(*plain, WAIT_RETRY)))
+            allrows = _union(arms)
 
         return PipelineResult(
-            df=processed,
-            dropped=dropped,
-            rejected=rejected,
-            errors=errors,
+            df=parts[PROCESSED],
+            dropped=parts[DROPPED],
+            rejected=parts[REJECTED],
+            errors=parts[ERROR],
             all=allrows,
         )
 

@@ -131,9 +131,13 @@ class RetryStore:
 
         now = time.time() if now is None else now
         due = self.retry_due(now)
-        stages = [r["stage"] for r in due.select("stage").distinct().collect()]
+        # due rows per re-entry stage: the stage list and each stage's
+        # `retried` count from one job
+        stages = {
+            r["stage"]: r["count"] for r in due.groupBy("stage").count().collect()
+        }
         counts = {"retried": 0, "succeeded": 0, "rejected": 0, "reparked": 0}
-        for stage in stages:
+        for stage, n_due in stages.items():
             # snapshot the due generation BEFORE writing acks/re-parks:
             # the sweep's own appends would otherwise be visible to these
             # lazy frames on re-execution (reading files it just wrote)
@@ -146,18 +150,20 @@ class RetryStore:
             res = pipeline.run(batch, from_stage=stage)
             outcome = res.all.persist()
             try:
-                n_ok = outcome.filter(
-                    F.col("state").isin(PROCESSED, DROPPED)
-                ).count()
-                n_rej = outcome.filter(F.col("state") == REJECTED).count()
-                failed = outcome.filter(
-                    F.col("state").isin(ERROR, WAIT_RETRY)
-                )
+                # one job settles the stage's outcome: the counts below come
+                # from this aggregate, and the re-park reads persisted rows
+                by_state = {
+                    r["state"]: r["count"]
+                    for r in outcome.groupBy("state").count().collect()
+                }
+                n_ok = by_state.get(PROCESSED, 0) + by_state.get(DROPPED, 0)
+                n_rej = by_state.get(REJECTED, 0)
+                n_fail = by_state.get(ERROR, 0) + by_state.get(WAIT_RETRY, 0)
                 # consume this generation whatever the outcome; failures
                 # re-enter below as generation attempts+1
                 self.ack(sel.select("id", "attempts"))
-                n_fail = failed.count()
                 if n_fail:
+                    failed = outcome.filter(F.col("state").isin(ERROR, WAIT_RETRY))
                     stage_col = F.lit(stage).cast("string")
                     if "retry_stage" in failed.columns:
                         stage_col = F.coalesce(F.col("retry_stage"), stage_col)
@@ -180,7 +186,7 @@ class RetryStore:
                         )
                     )
                     repark.write.mode("append").parquet(self.msg_path)
-                counts["retried"] += sel.count()
+                counts["retried"] += n_due
                 counts["succeeded"] += n_ok
                 counts["rejected"] += n_rej
                 counts["reparked"] += n_fail

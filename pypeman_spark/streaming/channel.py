@@ -5,7 +5,12 @@ A :class:`StreamingChannel` binds a streaming message DataFrame (from
 sources/) to a :class:`~pypeman_spark.pipeline.Pipeline` via
 ``foreachBatch``:
 
-* each micro-batch runs the pipeline (one Catalyst plan per batch);
+* each micro-batch runs the pipeline (one Catalyst plan per batch) and
+  persists its outcome (``PipelineResult.all``) once: the retry park and
+  the store's state and meta appends all read those materialised rows,
+  so every message crosses each Python node once per batch, not once
+  per action. The outcome is unpersisted in ``finally``, so a failing
+  batch releases it too;
 * outcomes are appended to the message store (audit) in bulk;
 * rows whose ``state`` is ``wait_retry`` — or error rows when
   ``retry_on_error`` — are parked in the retry store with their re-entry
@@ -61,11 +66,14 @@ class StreamingChannel:
 
     # -- foreachBatch body ----------------------------------------------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        outcome = None
         try:
             if self.message_store is not None:
                 self.message_store.store(batch_df)
             res = self.pipeline.run(batch_df)
-            out = res.all
+            # the emptiness check, the park and both store appends read
+            # these materialised rows instead of re-running the chain
+            out = outcome = res.all.persist()
             if self.retry_store is not None:
                 retry_cond = F.col("state") == WAIT_RETRY
                 if self.retry_on_error:
@@ -79,8 +87,11 @@ class StreamingChannel:
                 self.message_store.add_meta_from_messages(out)
             self.batches_processed += 1
         finally:
-            # branch fan-outs persist per batch; release so a long-running
-            # stream doesn't accumulate cached frames across micro-batches
+            # the outcome and branch fan-outs persist per batch; release so
+            # a long-running stream doesn't accumulate cached frames across
+            # micro-batches
+            if outcome is not None:
+                outcome.unpersist()
             self.pipeline.release()
 
     # -- lifecycle (channels.py:206-247) --------------------------------

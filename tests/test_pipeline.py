@@ -4,6 +4,7 @@ semantics, explode fan-out, worst-substate aggregation, inject."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from pypeman_spark import Pipeline, messages_from_payloads
@@ -160,6 +161,20 @@ def test_inject_from_stage(spark):
     # inject at 'second': skips the +1
     partial = p.run(messages_from_payloads(spark, [{"n": 1}]), from_stage="second")
     assert payloads(partial.df) == ['{"n": 10}']
+
+
+def test_run_to_stage(spark):
+    p = Pipeline("t").add(
+        FuncNode(lambda d: {"n": d["n"] + 1}, name="first"),
+        FuncNode(lambda d: {"n": d["n"] * 10}, name="second"),
+    )
+    msgs = messages_from_payloads(spark, [{"n": 1}])
+    assert payloads(p.run(msgs, to_stage="first").df) == ['{"n": 2}']
+    # an unknown stage, or one before from_stage, names the stages it had
+    with pytest.raises(KeyError, match=r"unknown stage 'nope'; have \['first', 'second'\]"):
+        p.run(msgs, to_stage="nope")
+    with pytest.raises(KeyError, match=r"unknown stage 'first'; have \['second'\]"):
+        p.run(msgs, from_stage="second", to_stage="first")
 
 
 def test_join_and_final_nodes(spark):

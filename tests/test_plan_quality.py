@@ -71,11 +71,39 @@ def test_case_fanout_scans_source_once(spark):
         # relation's recipe, deduped by the CacheManager at execution)
         plan = plan_of(res.all)
         assert plan.count("InMemoryTableScan") >= 4, plan
+        # one python evaluation per arm node, none re-run by the outcome
+        # filters over the union
+        assert plan.count("ArrowEvalPython") == 3, plan
         # sanity: every row still routed exactly once
         assert res.all.count() == msgs.count()
     finally:
         p.release()
 
+
+def test_python_nodes_evaluate_once(spark):
+    # operators.base.payload_fn_udf and a python Drop condition (single
+    # nondeterministic projection) + Pipeline.run (one pass over the
+    # finalized frame): each python node is ONE ArrowEvalPython in the
+    # plans of `all` and `df`, and with no handler chains `all` is one
+    # filter, no Union
+    from pypeman_spark import Pipeline, messages_from_payloads
+    from pypeman_spark.operators import CSVstr2Python, Drop, FuncNode, MsgFuncNode
+
+    msgs = messages_from_payloads(
+        spark, ["a,b\n1,2", "a,b\n3,4", "a,b\n5,6"], content_type="text/csv"
+    )
+    p = Pipeline("t").add(
+        CSVstr2Python(to_dict=True),
+        Drop(condition=lambda rows: rows[0]["a"] == "5", name="d"),
+        FuncNode(lambda rows: rows if rows[0]["a"] != "3" else 1 / 0, name="f"),
+        MsgFuncNode(lambda d, m: (d, {**m, "seen": "1"}), name="m"),
+    )
+    res = p.run(msgs)
+    for df in (res.all, res.df):
+        plan = plan_of(df)
+        assert plan.count("ArrowEvalPython") == 4, plan
+    assert "Union" not in plan_of(res.all)
+    assert res.counts() == {"processed": 1, "error": 1, "dropped": 1}
 
 
 def _fn(name):

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pypeman_spark import Pipeline, messages_from_payloads
-from pypeman_spark.operators import FuncNode, JsonToPython, Drop
+from pypeman_spark.operators import FuncNode, JsonToPython, Drop, PythonToJson
 from pypeman_spark.sources.cron import cron_ticks
 from pypeman_spark.sources.file_watcher import FileWatcher, scan_files, stream_files
 from pypeman_spark.sources.http_sidecar import HttpLandingServer, hl7_ack_for_state
@@ -299,6 +299,61 @@ def test_streaming_channel_auto_retry_sweep(spark, tmp_path):
     counts = chan.run_retries_once()
     assert counts == {"retried": 1, "succeeded": 1, "rejected": 0, "reparked": 0}
     assert rs.is_empty()
+
+
+def test_process_batch_runs_each_message_once(spark, tmp_path):
+    # one process_batch = one pass of every message through the chain:
+    # the retry park and both store appends read one materialised
+    # outcome, so the python node's fn runs once per input message
+    from pypeman_spark.store import RetryStore
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def enrich(d):
+        calls.add(1)
+        if d["n"] == 3:
+            raise ConnectionError("downstream down")
+        return {**d, "enriched": True}
+
+    payloads = [{"n": i} for i in range(8)] + ["not json"]
+    metas = [
+        {"user": f"u{i}", "kind": "heartbeat" if i in (1, 5) else "event"}
+        for i in range(9)
+    ]
+    batch = messages_from_payloads(
+        spark, payloads, meta=metas, channel="once"
+    ).localCheckpoint(eager=True)  # fixed ids across the store and run
+    store = MemoryMessageStore(spark, channel="once")
+    rs = RetryStore(spark, str(tmp_path / "rt"), channel="once", retry_delay=0.0)
+    pipe = Pipeline("once").add(
+        JsonToPython(),
+        Drop(condition=F.col("meta").getItem("kind") == "heartbeat",
+             name="drop_hb"),
+        FuncNode(enrich, name="enrich", auto_retry=True, store_meta=["user"]),
+        PythonToJson(),
+    )
+    chan = StreamingChannel(None, pipe, message_store=store, retry_store=rs,
+                            checkpoint_dir=str(tmp_path / "ckpt"))
+    try:
+        chan.process_batch(batch, 0)
+        assert calls.value == 9
+        cur = store.current()
+        states = {
+            r["state"]: r["count"] for r in cur.groupBy("state").count().collect()
+        }
+        # the parked message keeps its stored pending state
+        assert states == {"processed": 5, "dropped": 2, "error": 1, "pending": 1}
+        parked = rs.pending().collect()
+        assert [(json.loads(r["payload"])["n"], r["stage"]) for r in parked] == [
+            (3, "enrich")
+        ]
+        meta = {
+            r["meta"]["user"]: r["store_meta"]
+            for r in cur.filter(F.col("store_meta").isNotNull()).collect()
+        }
+        assert meta == {f"u{i}": {"user": [f"u{i}"]} for i in (0, 2, 4, 6, 7)}
+    finally:
+        store.close()
 
 
 def test_http_sidecar_sync_respond_and_routing(spark, tmp_path):
