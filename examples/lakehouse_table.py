@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pypeman_spark import get_spark
 from pypeman_spark.sources.tables import load_table
 from pypeman_spark.store import TxTable
+from pypeman_spark.streaming.drain import await_stream
 
 
 def main() -> None:
@@ -105,7 +106,7 @@ def main() -> None:
             "checkpointLocation", os.path.join(root, "ckpt")
         ).trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120, "CDC stream drain")
     print("streaming feed rows:", spark.table("cdc").count(),
           "(must equal batch:", feed.count(), ")")
 

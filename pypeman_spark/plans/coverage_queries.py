@@ -53,6 +53,7 @@ from ..pipeline import Pipeline
 from ..sources.http_sidecar import hl7_ack_for_state
 from ..store.msgstore import FileMessageStore
 from ..store.retry import RetryStore
+from ..streaming.drain import await_stream
 from .queries import q, t
 
 
@@ -1326,8 +1327,10 @@ def txtable_acid_suite(spark, sf_dir):
             .trigger(availableNow=True).start()
         )
         try:
-            sq.awaitTermination(120)
+            await_stream(sq, 120, "CDC stream drain")
             break
+        except TimeoutError:
+            raise  # a slow drain is not a spawn failure: never retried
         except Exception as e:  # StreamingQueryException
             msg = str(e)
             if "connect back" not in msg and "PYTHON_WORKER" not in msg:
@@ -1722,9 +1725,7 @@ def stream_append_exactly_once(spark, sf_dir):
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
         )
-        if not sq.awaitTermination(600):
-            sq.stop()
-            raise RuntimeError("availableNow drain timed out")
+        await_stream(sq, 600, "availableNow drain")
 
     drain()
     v1 = tx.version()
@@ -1873,9 +1874,7 @@ def streaming_incremental_ingest(spark, sf_dir):
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
         )
-        if not sq.awaitTermination(600):
-            sq.stop()
-            raise RuntimeError("availableNow drain timed out")
+        await_stream(sq, 600, "availableNow drain")
 
     drain()
     v_corpus, v_index = corpus.version(), index.version()

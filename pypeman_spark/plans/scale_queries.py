@@ -20,6 +20,7 @@ from ..functions import text as TX
 from ..functions.joins import asof_join, range_join
 from ..functions.packing import greedy_pack
 from ..functions.timeutils import epoch_us
+from ..streaming.drain import await_stream
 from ..streaming.rollup import ContinuousRollup
 from ..streaming.stateful import session_window_counts, stream_dedup
 from .queries import q, t, tp
@@ -889,9 +890,7 @@ def _streaming_sessions_rollup_arm(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q1.awaitTermination(180):
-        q1.stop()
-        raise RuntimeError("stream_dedup drain did not finish in 180s")
+    await_stream(q1, 180, "stream_dedup drain")
     deduped = spark.read.parquet(dst)
 
     sessions = session_window_counts(
@@ -907,7 +906,7 @@ def _streaming_sessions_rollup_arm(spark, sf_dir):
         .option("maxFilesPerTrigger", "3")
         .parquet(dst)
     )
-    q2.awaitTermination(180)
+    await_stream(q2, 180, "rollup drain")
     hourly = rollup.read().groupBy("bucket_start").agg(
         F.sum("n").alias("hour_n"),
         F.sum("total").alias("hour_total"),  # exact: cents-valued doubles
@@ -1012,9 +1011,7 @@ def ttl_dedup_window_counts(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q1.awaitTermination(180):
-        q1.stop()
-        raise RuntimeError("ttl_first_seen drain did not finish in 180s")
+    await_stream(q1, 180, "ttl_first_seen drain")
     dd_schema = spark.read.parquet(dst).schema
 
     stream = (
@@ -1046,9 +1043,7 @@ def ttl_dedup_window_counts(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q2.awaitTermination(120):
-        q2.stop()
-        raise RuntimeError("window-count drain did not finish in 120s")
+    await_stream(q2, 120, "window-count drain")
     wc = spark.table(sink).select(
         F.lit("wc").alias("mode"),
         "window_start",
@@ -1104,9 +1099,7 @@ def ttl_dedup_window_counts(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q3.awaitTermination(180):
-        q3.stop()
-        raise RuntimeError("interval-join drain did not finish in 180s")
+    await_stream(q3, 180, "interval-join drain")
     ij = spark.table(jsink).select(
         F.lit("ijoin").alias("mode"),
         F.lit(None).cast("string").alias("window_start"),

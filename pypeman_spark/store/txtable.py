@@ -53,6 +53,21 @@ its load-bearing core — no proprietary code, just the public recipe:
   copy-on-write rewrite, so vectors stay metadata-sized by
   construction.
 
+Commit protocol: every mutation runs through one attempt runner,
+:meth:`TxTable._run_commit`. A mutation supplies only its
+single-attempt body, which turns a replayed snapshot into log actions
+plus the data files it staged (or into a version to return without
+committing). The runner owns the rest: the snapshot, the
+writer-protocol gate, the ``txn`` idempotence no-op, the v3 protocol
+bump a first deletion vector needs, the claim, deleting the staged
+files of a lost attempt and the final :class:`CommitConflict`.
+Ops in ``_COMMUTING_OPS`` claim through :meth:`TxTable._occ_commit`:
+past an interleaved commit that is scope-disjoint and commuting they
+re-claim the next version without restaging. Any other op (schema,
+constraint, protocol, restore) retries from a fresh snapshot on any
+lost race, so it re-validates against the winner. A mutation gives up
+after ``_COMMIT_ATTEMPTS`` attempts.
+
 Crash safety: a writer that dies after staging data files but before
 its commit leaves orphans that no snapshot references; :meth:`vacuum`
 deletes unreferenced files older than a grace period. A writer that
@@ -90,6 +105,10 @@ _VERSION_DIGITS = 20
 _COMMUTING_OPS = (
     "append", "merge", "delete", "compact", "update", "replace",
 )
+
+# Attempts a mutation makes (each from a fresh snapshot) before it
+# raises CommitConflict — see TxTable._run_commit.
+_COMMIT_ATTEMPTS = 20
 
 # Hive-style directory token for a NULL partition value (what Spark's
 # partitioned writer emits and its reader maps back to null).
@@ -150,11 +169,25 @@ class LogState(typing.NamedTuple):
     constraints: "dict[str, str]"
     protocol: "dict[str, int]"
 
+
+class _Plan(typing.NamedTuple):
+    """One commit attempt of a mutation: the log ``actions`` to
+    publish, the ``staged`` add actions whose files this attempt wrote
+    (deleted if the attempt loses), the write scope (``buckets``,
+    ``scopes``) other writers' clash checks read from the commit info,
+    and ``extra`` commit-info keys."""
+
+    actions: list
+    staged: "list | tuple" = ()
+    buckets: "list | tuple" = ()
+    scopes: "set | None" = None
+    extra: "dict | None" = None
+
 from .logstore import LogStore, open_logstore  # noqa: E402
 
 
 class CommitConflict(RuntimeError):
-    """Raised when a merge exhausts its OCC retries."""
+    """Raised when a mutation loses ``_COMMIT_ATTEMPTS`` commit races."""
 
 
 class VacuumedVersionError(RuntimeError):
@@ -629,6 +662,28 @@ def _schema_json_with(struct, dropped: "list[str]") -> str:
     return json.dumps(d)
 
 
+def _v2_bump(st: LogState, dv_acts: "list[dict]") -> "list[dict]":
+    """The protocol-v2 upgrade an update/replace commit carries on a
+    v1 table: both are v2 change-feed ops, and a v1 CDC reader must
+    fail loudly instead of silently skipping their row changes. A
+    commit with dv actions gets the v3 bump instead (_run_commit)."""
+    if dv_acts or st.protocol["min_reader"] >= 2:
+        return []
+    return [{"protocol": {"min_reader": 2, "min_writer": 2}}]
+
+
+def _schema_plan(
+    fields: list, schema_json: "str | None", dropped=(),
+) -> _Plan:
+    """A schema-only commit: ``fields`` become the schema; the drop
+    tombstones of ``schema_json``, plus ``dropped``, carry over."""
+    from pyspark.sql.types import StructType
+
+    return _Plan([{"schema": _schema_json_with(
+        StructType(fields), _schema_dropped(schema_json) + list(dropped)
+    )}])
+
+
 def _commit_actions_of(
     store: "LogStore | str", version: int
 ) -> "tuple[list[dict], list[str], list[dict], dict] | None":
@@ -909,9 +964,7 @@ class TxTable:
             self._discard(adds)
             raise ConstraintViolation(bad)
 
-    def add_constraint(
-        self, name: str, expr: str, max_retries: int = 10
-    ) -> int:
+    def add_constraint(self, name: str, expr: str) -> int:
         """Register a CHECK constraint (SQL expression over the table
         columns; NULL passes, like SQL CHECK). Existing rows are
         validated first — OCC-retried so a data commit landing between
@@ -924,41 +977,33 @@ class TxTable:
         per-message in Python nodes (``pypeman/nodes.py``) — here the
         rule is declarative and enforced at the storage boundary."""
         F.expr(expr)  # fail fast on unparseable expressions
-        for _ in range(max_retries):
-            base_v, live, _txns, schema, cons, proto = _replay_log(
-                self.logstore
-            )
-            self._check_writer(proto)
-            if name in cons:
+
+        def attempt(st: LogState) -> _Plan:
+            if name in st.constraints:
                 raise ValueError(f"constraint {name!r} already exists")
-            if live:
+            if st.live:
                 bad = self._violations(
-                    self._read_files(sorted(live), schema, dvs=live),
+                    self._read_files(
+                        sorted(st.live), st.schema, dvs=st.live
+                    ),
                     {name: expr},
                 )
                 if bad:
                     raise ConstraintViolation(bad)
-            if self._commit(
-                base_v + 1,
-                [{"constraint_add": {"name": name, "expr": expr}}],
-                op="constraint", buckets=[],
-            ):
-                return base_v + 1
-        raise CommitConflict(
-            f"add_constraint lost {max_retries} version races"
-        )
+            return _Plan([{"constraint_add": {"name": name, "expr": expr}}])
 
-    def drop_constraint(self, name: str, max_retries: int = 10) -> int:
-        for _ in range(max_retries):
-            base_v = self.version()
-            if self._commit(
-                base_v + 1, [{"constraint_drop": name}],
-                op="constraint", buckets=[],
-            ):
-                return base_v + 1
-        raise CommitConflict(
-            f"drop_constraint lost {max_retries} version races"
-        )
+        return self._run_commit("constraint", attempt)
+
+    def drop_constraint(self, name: str) -> int:
+        """Drop the CHECK constraint ``name``; ``ValueError`` if the
+        table has none by that name."""
+
+        def attempt(st: LogState) -> _Plan:
+            if name not in st.constraints:
+                raise ValueError(f"no such constraint: {name!r}")
+            return _Plan([{"constraint_drop": name}])
+
+        return self._run_commit("constraint", attempt)
 
     # --------------------------------------------- schema evolution --
 
@@ -979,8 +1024,18 @@ class TxTable:
                     f"drop it first"
                 )
 
-    def rename_column(self, old: str, new: str,
-                      max_retries: int = 10) -> int:
+    def _schema_to_edit(self, st: LogState, col: str):
+        """The snapshot's schema as a StructType, once the guards every
+        column edit shares pass (a schema exists, and ``col`` is
+        neither a key/partition column nor named by a constraint)."""
+        from pyspark.sql.types import StructType
+
+        if st.schema is None:
+            raise ValueError("table has no schema yet")
+        self._guard_schema_edit(col, st.constraints)
+        return StructType.fromJson(json.loads(st.schema))
+
+    def rename_column(self, old: str, new: str) -> int:
         """Rename a column WITHOUT rewriting any data: the column's
         physical (on-disk) name is fixed at birth and recorded in the
         field metadata; only the logical name changes (Delta's
@@ -988,24 +1043,17 @@ class TxTable:
         shows the old name — the mapping is part of each version's
         schema. Key columns are unrenameable (bucket layout identity);
         columns referenced by a CHECK constraint must drop it first."""
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import StructField
 
-        for _ in range(max_retries):
-            base_v, _l, _t, schema, cons, proto = _replay_log(
-                self.logstore
-            )
-            self._check_writer(proto)
-            if schema is None:
-                raise ValueError("table has no schema yet")
-            self._guard_schema_edit(old, cons)
-            st = StructType.fromJson(json.loads(schema))
-            names = [f.name for f in st.fields]
+        def attempt(st: LogState) -> _Plan:
+            struct = self._schema_to_edit(st, old)
+            names = [f.name for f in struct.fields]
             if old not in names:
                 raise ValueError(f"no such column: {old!r}")
             if new in names:
                 raise ValueError(f"column {new!r} already exists")
             fields = []
-            for f in st.fields:
+            for f in struct.fields:
                 if f.name == old:
                     md = dict(f.metadata or {})
                     md.setdefault("physical", old)
@@ -1014,20 +1062,11 @@ class TxTable:
                     )
                 else:
                     fields.append(f)
-            if self._commit(
-                base_v + 1,
-                [{"schema": _schema_json_with(
-                    StructType(fields), _schema_dropped(schema)
-                )}],
-                op="schema", buckets=[],
-            ):
-                return base_v + 1
-        raise CommitConflict(
-            f"rename_column lost {max_retries} version races"
-        )
+            return _schema_plan(fields, st.schema)
 
-    def widen_column(self, name: str, new_type,
-                     max_retries: int = 10) -> int:
+        return self._run_commit("schema", attempt)
+
+    def widen_column(self, name: str, new_type) -> int:
         """Widen a column's type WITHOUT rewriting any data (the Delta
         type-widening feature): only lossless promotions Spark's
         parquet reader performs natively on old files are allowed
@@ -1050,7 +1089,6 @@ class TxTable:
             LongType,
             ShortType,
             StructField,
-            StructType,
         )
 
         if isinstance(new_type, str):
@@ -1065,27 +1103,20 @@ class TxTable:
                 new_type = by_name[new_type]()
             except KeyError:
                 raise ValueError(f"unknown type name {new_type!r}")
-        for _ in range(max_retries):
-            base_v, _l, _t, schema, cons, proto = _replay_log(
-                self.logstore
+        if name in self.key_cols:
+            raise ValueError(
+                f"cannot widen key column {name!r}: the bucket "
+                f"hash is type-sensitive, widening would re-route "
+                f"every key"
             )
-            self._check_writer(proto)
-            if schema is None:
-                raise ValueError("table has no schema yet")
-            if name in self.key_cols:
-                raise ValueError(
-                    f"cannot widen key column {name!r}: the bucket "
-                    f"hash is type-sensitive, widening would re-route "
-                    f"every key"
-                )
-            self._guard_schema_edit(name, cons)
-            st = StructType.fromJson(json.loads(schema))
-            by = {f.name: f for f in st.fields}
+
+        def attempt(st: LogState) -> "_Plan | int":
+            by = {f.name: f for f in self._schema_to_edit(st, name).fields}
             if name not in by:
                 raise ValueError(f"no such column: {name!r}")
             cur_t = by[name].dataType
             if cur_t == new_type:
-                return base_v  # already wide enough: no-op
+                return st.version  # already wide enough: no-op
             if not _widens(cur_t.typeName(), new_type.typeName()):
                 raise ValueError(
                     f"cannot widen {name!r}: "
@@ -1093,57 +1124,33 @@ class TxTable:
                     f"{new_type.simpleString()} is not a supported "
                     f"lossless promotion ({_WIDENS})"
                 )
-            fields = [
+            return _schema_plan([
                 StructField(f.name, new_type, f.nullable, f.metadata)
                 if f.name == name else f
-                for f in st.fields
-            ]
-            if self._commit(
-                base_v + 1,
-                [{"schema": _schema_json_with(
-                    StructType(fields), _schema_dropped(schema)
-                )}],
-                op="schema", buckets=[],
-            ):
-                return base_v + 1
-        raise CommitConflict(
-            f"widen_column lost {max_retries} version races"
-        )
+                for f in by.values()
+            ], st.schema)
 
-    def drop_column(self, name: str, max_retries: int = 10) -> int:
+        return self._run_commit("schema", attempt)
+
+    def drop_column(self, name: str) -> int:
         """Drop a column WITHOUT rewriting any data — readers simply
         stop selecting its physical column. The physical name goes on
         the tombstone list inside the schema JSON, so a later re-ADD
         of the same logical name is born under a fresh physical name
         and old bytes can never resurrect into it."""
-        from pyspark.sql.types import StructType
 
-        for _ in range(max_retries):
-            base_v, _l, _t, schema, cons, proto = _replay_log(
-                self.logstore
-            )
-            self._check_writer(proto)
-            if schema is None:
-                raise ValueError("table has no schema yet")
-            self._guard_schema_edit(name, cons)
-            st = StructType.fromJson(json.loads(schema))
-            hit = [f for f in st.fields if f.name == name]
+        def attempt(st: LogState) -> _Plan:
+            fields = self._schema_to_edit(st, name).fields
+            hit = [f for f in fields if f.name == name]
             if not hit:
                 raise ValueError(f"no such column: {name!r}")
             physical = (hit[0].metadata or {}).get("physical", name)
-            fields = [f for f in st.fields if f.name != name]
-            if self._commit(
-                base_v + 1,
-                [{"schema": _schema_json_with(
-                    StructType(fields),
-                    _schema_dropped(schema) + [physical],
-                )}],
-                op="schema", buckets=[],
-            ):
-                return base_v + 1
-        raise CommitConflict(
-            f"drop_column lost {max_retries} version races"
-        )
+            return _schema_plan(
+                [f for f in fields if f.name != name], st.schema,
+                dropped=[physical],
+            )
+
+        return self._run_commit("schema", attempt)
 
     def last_txn_version(self, app: str) -> int:
         """Highest ``txn`` marker committed for ``app`` (-1 if none) —
@@ -1366,35 +1373,26 @@ class TxTable:
         self._maybe_checkpoint(expected_version)
         return True
 
-    def _bump_protocol(
-        self, min_reader: int, min_writer: int, why: str,
-        max_retries: int = 20,
-    ) -> None:
+    def _bump_protocol(self, min_reader: int, min_writer: int) -> int:
         """Commit a standalone protocol-bump action (idempotent: a
         no-op when the table already demands at least these
         versions). Op ``protocol`` is outside _COMMUTING_OPS, so any
         concurrent bucket-scoped writer that raced past it retries
         from a fresh snapshot and re-checks the writer gate."""
-        for _ in range(max_retries):
-            st = _replay_log(self.logstore)
+
+        def attempt(st: LogState) -> "_Plan | int":
             p = st.protocol
             if (
                 p["min_reader"] >= min_reader
                 and p["min_writer"] >= min_writer
             ):
-                return
-            if self._commit(
-                st.version + 1,
-                [{"protocol": {
-                    "min_reader": int(min_reader),
-                    "min_writer": int(min_writer),
-                }}],
-                op="protocol", buckets=[],
-            ):
-                return
-        raise CommitConflict(
-            f"protocol bump for {why} conflicted {max_retries} times"
-        )
+                return st.version
+            return _Plan([{"protocol": {
+                "min_reader": int(min_reader),
+                "min_writer": int(min_writer),
+            }}])
+
+        return self._run_commit("protocol", attempt)
 
     def _maybe_checkpoint(self, version: int) -> None:
         if version == 0 or version % self.checkpoint_interval != 0:
@@ -1511,7 +1509,7 @@ class TxTable:
     ) -> "int | None":
         """One pass of the commit-else-probe loop every bucket-scoped
         rewrite shares: claim the next version; on a race, walk the
-        interleaved commits — scope-disjoint commuting ops let us
+        interleaved commits — commits :meth:`_commutes` clears let us
         re-claim directly (our rewrite is still exact), anything else
         returns None so the caller retries from a fresh snapshot."""
         v = base_v
@@ -1522,11 +1520,99 @@ class TxTable:
             ):
                 return v + 1
             v += 1
-            info = self._commit_info(v) or {}
-            if self._clash(info, touched, scopes) or (
-                info.get("op") not in _COMMUTING_OPS
-            ):
+            if not self._commutes(v, touched, scopes, txn):
                 return None
+
+    def _commutes(
+        self, version: int, touched: "set[int]", scopes: "set | None",
+        txn: "tuple[str, int] | None",
+    ) -> bool:
+        """May an in-flight scoped write re-claim past the commit at
+        ``version`` without looking at a fresh snapshot? Only if that
+        commit is a commuting op whose scope is disjoint from ours,
+        changed no schema (our staged files and schema action were
+        built against the old one) and carries no marker of our
+        ``txn`` app (it may be our own batch, delivered twice)."""
+        acts = [
+            json.loads(line)
+            for line in (self.logstore.read(version) or "").splitlines()
+            if line.strip()
+        ]
+        info = next((a["commit"] for a in acts if "commit" in a), {})
+        return (
+            info.get("op") in _COMMUTING_OPS
+            and not self._clash(info, touched, scopes)
+            and not any("schema" in a for a in acts)
+            and (txn is None or info.get("txn", {}).get("app") != txn[0])
+        )
+
+    def _run_commit(
+        self, op: str,
+        attempt: "typing.Callable[[LogState], _Plan | int]",
+        txn: "tuple[str, int] | None" = None,
+    ) -> int:
+        """The one optimistic-commit loop every mutation runs through
+        (module docstring, "Commit protocol"). Each attempt replays a
+        fresh snapshot, applies the writer gate and the ``txn`` no-op,
+        then calls ``attempt``: it returns a :class:`_Plan`, or an int
+        — the version to return without committing. A plan carrying
+        the table's first deletion vector also bumps the protocol to
+        v3 in the same commit (a pre-v3 reader would resurrect the
+        rows it kills). Ops in ``_COMMUTING_OPS`` claim through
+        :meth:`_occ_commit`, any other op with one :meth:`_commit`.
+        The staged files of a lost attempt are deleted, except those
+        the next attempt commits again (append keeps its files unless
+        the column mapping moved); after ``_COMMIT_ATTEMPTS`` lost
+        attempts, :class:`CommitConflict`."""
+        lost = None  # the last attempt, once its claim is known lost
+        try:
+            for _ in range(_COMMIT_ATTEMPTS):
+                st = _replay_log(self.logstore)
+                self._check_writer(st.protocol)
+                if txn is not None and st.txns.get(txn[0], -1) >= txn[1]:
+                    return st.version  # already applied: provable no-op
+                plan = attempt(st)
+                if lost is not None:
+                    keep = {
+                        a["add"]["file"] for a in plan.staged
+                    } if isinstance(plan, _Plan) else set()
+                    self._discard([
+                        a for a in lost.staged if a["add"]["file"] not in keep
+                    ])
+                    lost = None
+                if not isinstance(plan, _Plan):
+                    return plan
+                actions = plan.actions
+                if st.protocol["min_reader"] < 3 and any(
+                    "dv" in a for a in actions
+                ):
+                    actions = actions + [
+                        {"protocol": {"min_reader": 3, "min_writer": 3}}
+                    ]
+                # a claim that raises may still have landed (a lost
+                # ack), so its files are only ever deleted once the
+                # claim has returned False
+                if op in _COMMUTING_OPS:
+                    got = self._occ_commit(
+                        st.version, actions, op, plan.buckets,
+                        plan.scopes, set(plan.buckets), txn=txn,
+                    )
+                elif self._commit(
+                    st.version + 1, actions, op=op, buckets=plan.buckets,
+                    extra=plan.extra,
+                ):
+                    got = st.version + 1
+                else:
+                    got = None
+                if got is not None:
+                    return got
+                lost = plan
+            raise CommitConflict(
+                f"{op} lost {_COMMIT_ATTEMPTS} commit races"
+            )
+        finally:
+            if lost is not None:
+                self._discard(lost.staged)
 
     @staticmethod
     def _file_stats(abspath: str) -> "tuple[dict, int] | None":
@@ -2542,7 +2628,8 @@ class TxTable:
         backlog always admits at least one commit, so a stall is
         always a configuration or environment fault)."""
         import glob as _glob
-        import time as _time
+
+        from ..streaming.drain import await_stream
 
         target = self.version()
 
@@ -2581,15 +2668,9 @@ class TxTable:
                 .trigger(availableNow=True)
                 .start()
             )
-            deadline = _time.time() + run_timeout_s
-            q.awaitTermination(run_timeout_s)
-            if q.isActive:
-                q.stop()
-                if _time.time() >= deadline:
-                    raise TimeoutError(
-                        f"drain_changes_available: run {runs + 1} "
-                        f"exceeded {run_timeout_s}s"
-                    )
+            await_stream(
+                q, run_timeout_s, f"drain_changes_available run {runs + 1}"
+            )
             runs += 1
             if committed() <= before:
                 # an availableNow run over a non-empty backlog always
@@ -2610,7 +2691,7 @@ class TxTable:
 
     # ---------------------------------------------------- mutations --
 
-    def append(self, df: DataFrame, max_retries: int = 20,
+    def append(self, df: DataFrame,
                txn: "tuple[str, int] | None" = None) -> int:
         """Add-only commit: never conflicts with other appends (two
         interleaved appends both land — union semantics). ``txn``
@@ -2629,56 +2710,41 @@ class TxTable:
         leak its values into a renamed column's physical slot. If a
         concurrent schema commit (rename/drop/another writer's
         evolution) lands between staging and commit, the physical
-        mapping our files were written under may be stale: the retry
-        loop recomputes the evolution against the fresh schema and
-        restages whenever the {logical: physical} map for ``df``'s
-        columns changed (same non-commuting-op discipline as merge)."""
+        mapping our files were written under may be stale: the next
+        attempt recomputes the evolution against the fresh schema and
+        restages only when the {logical: physical} map for ``df``'s
+        columns changed; it re-validates only when the constraints
+        changed."""
 
         def _staged_map(schema_json: "str | None") -> "dict[str, str]":
             cm = _schema_colmap(schema_json)
             return {c: cm.get(c, c) for c in df.columns}
 
-        _bv0, _l0, _t0, base, _c0, proto0 = _replay_log(self.logstore)
-        self._check_writer(proto0)
-        if txn is not None and _t0.get(txn[0], -1) >= txn[1]:
-            return _bv0  # already applied: stage nothing
-        schema_act = self._evolved_schema_action(df, base)
-        eff = schema_act[0]["schema"] if schema_act else base
-        adds = self._stage(df, schema_json=eff)
-        v = self.version()
-        validated: "dict | None" = None
-        for _ in range(max_retries):
-            _bv, _live, _txns, schema, cons, _pr = _replay_log(
-                self.logstore
-            )
-            if txn is not None and _txns.get(txn[0], -1) >= txn[1]:
-                # a concurrent writer landed our marker mid-race
-                self._discard(adds)
-                return _bv
-            if schema != base:  # schema commit interleaved: re-evolve
-                base = schema
-                schema_act = self._evolved_schema_action(df, base)
-                new_eff = schema_act[0]["schema"] if schema_act else base
-                if _staged_map(new_eff) != _staged_map(eff):
-                    # staged files carry now-wrong physical names
-                    self._discard(adds)
-                    adds = self._stage(df, schema_json=new_eff)
-                    validated = None
-                eff = new_eff
-            if cons != validated:  # (re-)check on any rule change
-                self._validate_adds(adds, eff, cons)
-                validated = dict(cons)
-            actions = adds + schema_act
-            if self._commit(
-                v + 1, actions, op="append",
+        # what the last attempt staged, and under which schema and
+        # constraints — reused while they still hold
+        last: dict = {"adds": None, "map": None, "validated": None}
+
+        def attempt(st: LogState) -> _Plan:
+            schema_act = self._evolved_schema_action(df, st.schema)
+            eff = schema_act[0]["schema"] if schema_act else st.schema
+            if last["adds"] is None or _staged_map(eff) != last["map"]:
+                # first attempt, or the staged files carry now-wrong
+                # physical names
+                last.update(
+                    adds=self._stage(df, schema_json=eff),
+                    map=_staged_map(eff), validated=None,
+                )
+            adds = last["adds"]
+            if st.constraints != last["validated"]:
+                self._validate_adds(adds, eff, st.constraints)
+                last["validated"] = dict(st.constraints)
+            return _Plan(
+                adds + schema_act, staged=adds,
                 buckets=[a["add"]["bucket"] for a in adds],
                 scopes=self._scopes_of_adds(adds),
-                txn=txn,
-            ):
-                return v + 1
-            v = self.version()
-        self._discard(adds)
-        raise CommitConflict(f"append lost {max_retries} version races")
+            )
+
+        return self._run_commit("append", attempt, txn=txn)
 
     def foreach_batch_append(self, app: str):
         """Structured-Streaming sink for APPEND-ONLY tables:
@@ -2713,8 +2779,7 @@ class TxTable:
 
         return _sink
 
-    def merge_upsert(self, updates: DataFrame, max_retries: int = 10,
-                     mode: str = "rewrite",
+    def merge_upsert(self, updates: DataFrame, mode: str = "rewrite",
                      txn: "tuple[str, int] | None" = None) -> int:
         """MERGE: rows matching an existing key replace it, new keys
         insert — rewriting ONLY the buckets ``updates`` touches.
@@ -2758,49 +2823,34 @@ class TxTable:
                         upd[c] = F.col(f"s.{c}")
             return self.merge(
                 updates, when_matched_update=upd or None,
-                when_not_matched_insert=True,
-                max_retries=max_retries, mode="dv", txn=txn,
+                when_not_matched_insert=True, mode="dv", txn=txn,
             )
         updates = updates.cache()
+
+        def attempt(st: LogState) -> _Plan:
+            tb, scopes = self._touched_scopes(updates)
+            old = self._old_files(st.live, set(tb), scopes)
+            schema_act = self._evolved_schema_action(updates, st.schema)
+            eff = schema_act[0]["schema"] if schema_act else st.schema
+            if old:
+                cur = self._read_files(old, st.schema, dvs=st.live)
+                merged = cur.join(
+                    updates.select(*self.key_cols),
+                    on=self.key_cols, how="left_anti",
+                ).unionByName(updates, allowMissingColumns=True)
+            else:
+                merged = updates
+            adds = self._stage(merged, schema_json=eff)
+            self._validate_adds(adds, eff, st.constraints)
+            return _Plan(
+                adds + [{"remove": {"file": f}} for f in old] + schema_act,
+                staged=adds, buckets=tb, scopes=scopes,
+            )
+
         try:
-            for _ in range(max_retries):
-                base_v, live, txns, schema, cons, proto = _replay_log(
-                    self.logstore
-                )
-                self._check_writer(proto)
-                if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                    return base_v  # already applied — provable no-op
-                tb, scopes = self._touched_scopes(updates)
-                touched = set(tb)
-                old = self._old_files(live, touched, scopes)
-                schema_act = self._evolved_schema_action(updates, schema)
-                eff = schema_act[0]["schema"] if schema_act else schema
-                if old:
-                    cur = self._read_files(old, schema, dvs=live)
-                    merged = cur.join(
-                        updates.select(*self.key_cols),
-                        on=self.key_cols, how="left_anti",
-                    ).unionByName(updates, allowMissingColumns=True)
-                else:
-                    merged = updates
-                adds = self._stage(merged, schema_json=eff)
-                self._validate_adds(adds, eff, cons)
-                actions = (
-                    adds + [{"remove": {"file": f}} for f in old]
-                    + schema_act
-                )
-                got = self._occ_commit(
-                    base_v, actions, "merge", tb, scopes, touched,
-                    txn=txn,
-                )
-                if got is not None:
-                    return got
-                self._discard(adds)
+            return self._run_commit("merge", attempt, txn=txn)
         finally:
             updates.unpersist()
-        raise CommitConflict(
-            f"merge conflicted {max_retries} times on buckets"
-        )
 
     def merge(
         self,
@@ -2809,7 +2859,6 @@ class TxTable:
         when_matched_delete: "object | None" = None,
         when_not_matched_insert: "dict[str, object] | bool" = True,
         when_matched_condition: "object | None" = None,
-        max_retries: int = 10,
         mode: str = "rewrite",
         txn: "tuple[str, int] | None" = None,
     ) -> int:
@@ -2892,175 +2941,156 @@ class TxTable:
             }
 
         source = source.cache()
+
+        def attempt(st: LogState) -> _Plan:
+            live, schema = st.live, st.schema
+            tb, scopes = self._touched_scopes(source)
+            old = self._old_files(live, set(tb), scopes)
+            # table columns + types: current schema, plus source
+            # columns when inserting as-is (schema evolution)
+            from pyspark.sql.types import StructType
+
+            types: dict = {}
+            tbl_cols: list[str] = []
+            if schema is not None:
+                for f in StructType.fromJson(json.loads(schema)).fields:
+                    tbl_cols.append(f.name)
+                    types[f.name] = f.dataType
+            else:  # first write: the table IS the source's shape
+                for f in source.schema.fields:
+                    tbl_cols.append(f.name)
+                    types[f.name] = f.dataType
+            schema_act = []
+            if when_not_matched_insert is True or schema is None:
+                schema_act = self._evolved_schema_action(source, schema)
+            eff = schema_act[0]["schema"] if schema_act else schema
+            if when_not_matched_insert is True:
+                for f in source.schema.fields:
+                    if f.name not in types:
+                        tbl_cols.append(f.name)
+                        types[f.name] = f.dataType
+            unknown = (set(upd) | set(ins_map or {})) - set(tbl_cols)
+            if unknown:
+                raise ValueError(
+                    f"merge targets unknown column(s): "
+                    f"{sorted(unknown)} (table has {tbl_cols})"
+                )
+
+            def null_of(c):
+                return F.lit(None).cast(types[c])
+
+            s = source.withColumn("__s", F.lit(1)).alias("s")
+            if old:
+                t = self._read_files(
+                    old, schema, dvs=live,
+                    with_meta=(mode == "dv"),
+                ).withColumn("__t", F.lit(1)).alias("t")
+                j = t.join(s, on=self.key_cols, how="full_outer")
+                t_cols = set(t.columns)
+            else:
+                j = s.withColumn("__t", F.lit(None).cast("int"))
+                t_cols = set()
+            m_t = F.col("__t").isNotNull()
+            m_s = F.col("__s").isNotNull()
+            matched = m_t & m_s
+
+            def t_val(c):
+                if c in self.key_cols:
+                    return F.col(c)
+                if c in t_cols:
+                    return F.col(f"t.{c}")
+                return null_of(c)
+
+            def s_val(c):
+                if c in self.key_cols:
+                    return F.col(c)
+                if c in source.columns:
+                    return F.col(f"s.{c}")
+                return null_of(c)
+
+            upd_gate = matched if when_matched_condition is None else (
+                matched & when_matched_condition
+            )
+            keep = F.lit(True)
+            if del_cond is not None:
+                keep = keep & ~(matched & F.coalesce(
+                    del_cond, F.lit(False)
+                ))
+            if when_not_matched_insert is False:
+                keep = keep & m_t
+            out_cols = []
+            for c in tbl_cols:
+                if c in self.key_cols:
+                    out_cols.append(F.col(c).alias(c))
+                    continue
+                ins_v = (
+                    ins_map.get(c, null_of(c)) if ins_map is not None
+                    else s_val(c)
+                )
+                if c in upd:
+                    v = (
+                        F.when(upd_gate, upd[c])
+                        .when(m_t, t_val(c))
+                        .otherwise(ins_v)
+                    )
+                else:
+                    v = F.when(m_t, t_val(c)).otherwise(ins_v)
+                out_cols.append(v.alias(c))
+            dv_acts: list[dict] = []
+            removed = old
+            if mode == "dv" and old:
+                # rows a clause actually KILLS: updated (post-image
+                # re-appends below) or deleted (gone). Matched rows
+                # no clause fires on stay alive in place — dv merge
+                # stages only the churn.
+                kill_upd = upd_gate if upd else F.lit(False)
+                kill_del = (
+                    matched & F.coalesce(del_cond, F.lit(False))
+                    if del_cond is not None else F.lit(False)
+                )
+                killg = kill_upd | kill_del
+                dv_acts, rewrite = self._dv_plan_matched(
+                    j.where(killg).select("__txdv_fp", "__txdv_ri"),
+                    old, live,
+                )
+                dv_uris = [
+                    _file_uri(os.path.join(
+                        self.path, a["dv"]["file"]
+                    )) for a in dv_acts
+                ]
+                esc_uris = [
+                    _file_uri(os.path.join(self.path, f))
+                    for f in rewrite
+                ]
+                fp = F.col("__txdv_fp")
+                stage_gate = keep & (
+                    (~m_t)  # inserts
+                    # updated rows of vectored files re-append
+                    | ((fp.isin(dv_uris) if dv_uris
+                        else F.lit(False)) & killg)
+                    # over-dead files: full copy-on-write rewrite
+                    | (fp.isin(esc_uris) if esc_uris
+                       else F.lit(False))
+                )
+                merged = j.where(stage_gate).select(*out_cols)
+                removed = rewrite
+            else:
+                merged = j.where(keep).select(*out_cols)
+
+            adds = self._stage(merged, schema_json=eff)
+            self._validate_adds(adds, eff, st.constraints)
+            return _Plan(
+                adds + [{"remove": {"file": f}} for f in removed]
+                + dv_acts + schema_act,
+                staged=adds, buckets=tb, scopes=scopes,
+            )
+
         try:
-            for _ in range(max_retries):
-                base_v, live, txns, schema, cons, proto = _replay_log(
-                    self.logstore
-                )
-                self._check_writer(proto)
-                if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                    return base_v
-                tb, scopes = self._touched_scopes(source)
-                touched = set(tb)
-                old = self._old_files(live, touched, scopes)
-                # table columns + types: current schema, plus source
-                # columns when inserting as-is (schema evolution)
-                from pyspark.sql.types import StructType
-
-                types: dict = {}
-                tbl_cols: list[str] = []
-                if schema is not None:
-                    for f in StructType.fromJson(json.loads(schema)).fields:
-                        tbl_cols.append(f.name)
-                        types[f.name] = f.dataType
-                else:  # first write: the table IS the source's shape
-                    for f in source.schema.fields:
-                        tbl_cols.append(f.name)
-                        types[f.name] = f.dataType
-                schema_act = []
-                if when_not_matched_insert is True or schema is None:
-                    schema_act = self._evolved_schema_action(source, schema)
-                eff = schema_act[0]["schema"] if schema_act else schema
-                if when_not_matched_insert is True:
-                    for f in source.schema.fields:
-                        if f.name not in types:
-                            tbl_cols.append(f.name)
-                            types[f.name] = f.dataType
-                unknown = (set(upd) | set(ins_map or {})) - set(tbl_cols)
-                if unknown:
-                    raise ValueError(
-                        f"merge targets unknown column(s): "
-                        f"{sorted(unknown)} (table has {tbl_cols})"
-                    )
-
-                def null_of(c):
-                    return F.lit(None).cast(types[c])
-
-                s = source.withColumn("__s", F.lit(1)).alias("s")
-                if old:
-                    t = self._read_files(
-                        old, schema, dvs=live,
-                        with_meta=(mode == "dv"),
-                    ).withColumn("__t", F.lit(1)).alias("t")
-                    j = t.join(s, on=self.key_cols, how="full_outer")
-                    t_cols = set(t.columns)
-                else:
-                    j = s.withColumn("__t", F.lit(None).cast("int"))
-                    t_cols = set()
-                m_t = F.col("__t").isNotNull()
-                m_s = F.col("__s").isNotNull()
-                matched = m_t & m_s
-
-                def t_val(c):
-                    if c in self.key_cols:
-                        return F.col(c)
-                    if c in t_cols:
-                        return F.col(f"t.{c}")
-                    return null_of(c)
-
-                def s_val(c):
-                    if c in self.key_cols:
-                        return F.col(c)
-                    if c in source.columns:
-                        return F.col(f"s.{c}")
-                    return null_of(c)
-
-                upd_gate = matched if when_matched_condition is None else (
-                    matched & when_matched_condition
-                )
-                keep = F.lit(True)
-                if del_cond is not None:
-                    keep = keep & ~(matched & F.coalesce(
-                        del_cond, F.lit(False)
-                    ))
-                if when_not_matched_insert is False:
-                    keep = keep & m_t
-                out_cols = []
-                for c in tbl_cols:
-                    if c in self.key_cols:
-                        out_cols.append(F.col(c).alias(c))
-                        continue
-                    ins_v = (
-                        ins_map.get(c, null_of(c)) if ins_map is not None
-                        else s_val(c)
-                    )
-                    if c in upd:
-                        v = (
-                            F.when(upd_gate, upd[c])
-                            .when(m_t, t_val(c))
-                            .otherwise(ins_v)
-                        )
-                    else:
-                        v = F.when(m_t, t_val(c)).otherwise(ins_v)
-                    out_cols.append(v.alias(c))
-                dv_acts: list[dict] = []
-                removed = old
-                if mode == "dv" and old:
-                    # rows a clause actually KILLS: updated (post-image
-                    # re-appends below) or deleted (gone). Matched rows
-                    # no clause fires on stay alive in place — dv merge
-                    # stages only the churn.
-                    kill_upd = upd_gate if upd else F.lit(False)
-                    kill_del = (
-                        matched & F.coalesce(del_cond, F.lit(False))
-                        if del_cond is not None else F.lit(False)
-                    )
-                    killg = kill_upd | kill_del
-                    dv_acts, rewrite = self._dv_plan_matched(
-                        j.where(killg).select("__txdv_fp", "__txdv_ri"),
-                        old, live,
-                    )
-                    dv_uris = [
-                        _file_uri(os.path.join(
-                            self.path, a["dv"]["file"]
-                        )) for a in dv_acts
-                    ]
-                    esc_uris = [
-                        _file_uri(os.path.join(self.path, f))
-                        for f in rewrite
-                    ]
-                    fp = F.col("__txdv_fp")
-                    stage_gate = keep & (
-                        (~m_t)  # inserts
-                        # updated rows of vectored files re-append
-                        | ((fp.isin(dv_uris) if dv_uris
-                            else F.lit(False)) & killg)
-                        # over-dead files: full copy-on-write rewrite
-                        | (fp.isin(esc_uris) if esc_uris
-                           else F.lit(False))
-                    )
-                    merged = j.where(stage_gate).select(*out_cols)
-                    removed = rewrite
-                else:
-                    merged = j.where(keep).select(*out_cols)
-
-                adds = self._stage(merged, schema_json=eff)
-                self._validate_adds(adds, eff, cons)
-                actions = (
-                    adds + [{"remove": {"file": f}} for f in removed]
-                    + dv_acts + schema_act
-                )
-                if dv_acts and proto.get("min_reader", 1) < 3:
-                    # first dv commit: pre-v3 readers would resurrect
-                    # the dead preimages — upgrade in the SAME commit
-                    actions.append(
-                        {"protocol": {"min_reader": 3, "min_writer": 3}}
-                    )
-                got = self._occ_commit(
-                    base_v, actions, "merge", tb, scopes, touched,
-                    txn=txn,
-                )
-                if got is not None:
-                    return got
-                self._discard(adds)
+            return self._run_commit("merge", attempt, txn=txn)
         finally:
             source.unpersist()
-        raise CommitConflict(
-            f"merge conflicted {max_retries} times on buckets"
-        )
 
-    def delete_keys(self, keys: DataFrame, max_retries: int = 10,
-                    mode: str = "rewrite",
+    def delete_keys(self, keys: DataFrame, mode: str = "rewrite",
                     txn: "tuple[str, int] | None" = None) -> int:
         """Delete by key: scope-bound rewrite without the matching
         rows (same OCC loop as merge; partition-refined when
@@ -3078,64 +3108,47 @@ class TxTable:
                 f"got {mode!r}"
             )
         keys = keys.select(*self.key_cols).cache()
+
+        def attempt(st: LogState) -> "_Plan | int":
+            live, schema = st.live, st.schema
+            tb, scopes = self._touched_scopes(keys)
+            old = self._old_files(live, set(tb), scopes)
+            if not old:
+                return st.version  # nothing to delete
+            dv_acts: list[dict] = []
+            if mode == "dv":
+                matched = self._read_files(
+                    old, schema, dvs=live, with_meta=True
+                ).join(
+                    keys, on=self.key_cols, how="left_semi"
+                ).select("__txdv_fp", "__txdv_ri")
+                dv_acts, rewrite = self._dv_plan_matched(
+                    matched, old, live
+                )
+                if not dv_acts and not rewrite:
+                    return st.version  # no key present: provable no-op
+            else:
+                rewrite = old
+            adds: list[dict] = []
+            if rewrite:
+                cur = self._read_files(rewrite, schema, dvs=live)
+                kept = cur.join(keys, on=self.key_cols, how="left_anti")
+                adds = self._stage(kept, schema_json=schema)
+            return _Plan(
+                adds + [{"remove": {"file": f}} for f in rewrite]
+                + dv_acts,
+                staged=adds, buckets=tb, scopes=scopes,
+            )
+
         try:
-            for _ in range(max_retries):
-                st = _replay_log(self.logstore)
-                self._check_writer(st.protocol)
-                base_v, live, schema = st.version, st.live, st.schema
-                if txn is not None and st.txns.get(txn[0], -1) >= txn[1]:
-                    return base_v  # already applied — provable no-op
-                tb, scopes = self._touched_scopes(keys)
-                touched = set(tb)
-                old = self._old_files(live, touched, scopes)
-                if not old:
-                    return base_v  # nothing to delete
-                dv_acts: list[dict] = []
-                if mode == "dv":
-                    matched = self._read_files(
-                        old, schema, dvs=live, with_meta=True
-                    ).join(
-                        keys, on=self.key_cols, how="left_semi"
-                    ).select("__txdv_fp", "__txdv_ri")
-                    dv_acts, rewrite = self._dv_plan_matched(
-                        matched, old, live
-                    )
-                    if not dv_acts and not rewrite:
-                        return base_v  # no key present: provable no-op
-                else:
-                    rewrite = old
-                adds: list[dict] = []
-                if rewrite:
-                    cur = self._read_files(rewrite, schema, dvs=live)
-                    kept = cur.join(
-                        keys, on=self.key_cols, how="left_anti"
-                    )
-                    adds = self._stage(kept, schema_json=schema)
-                actions = (
-                    adds + [{"remove": {"file": f}} for f in rewrite]
-                    + dv_acts
-                )
-                if dv_acts and st.protocol.get("min_reader", 1) < 3:
-                    actions.append(
-                        {"protocol": {"min_reader": 3, "min_writer": 3}}
-                    )
-                got = self._occ_commit(
-                    base_v, actions, "delete", tb, scopes, touched,
-                    txn=txn,
-                )
-                if got is not None:
-                    return got
-                self._discard(adds)
+            return self._run_commit("delete", attempt, txn=txn)
         finally:
             keys.unpersist()
-        raise CommitConflict(
-            f"delete conflicted {max_retries} times on buckets"
-        )
 
     # ---------------------------------------------- predicate DML --
 
     def delete_where(
-        self, *preds: "tuple[str, str, object]", max_retries: int = 10,
+        self, *preds: "tuple[str, str, object]",
         mode: str = "rewrite",
         txn: "tuple[str, int] | None" = None,
     ) -> int:
@@ -3179,24 +3192,20 @@ class TxTable:
                 f"got {mode!r}"
             )
         self._build_cond(preds)  # fail fast on unknown ops
-        for _ in range(max_retries):
-            base_v, live, txns, schema, _cons, proto = _replay_log(
-                self.logstore
-            )
-            self._check_writer(proto)
-            if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                return base_v  # already applied — provable no-op
+
+        def attempt(st: LogState) -> "_Plan | int":
+            live, schema = st.live, st.schema
             cm = _schema_colmap(schema)
             cands, full = self._classify_candidates(live, preds, cm)
             if not cands:
-                return base_v  # provably nothing to delete
+                return st.version  # provably nothing to delete
             mixed = [f for f in cands if f not in full]
             dv_acts: list[dict] = []
             if mode == "dv" and mixed:
                 dv_acts, rewrite = self._dv_plan(mixed, preds, schema,
                                                  live)
                 if not dv_acts and not rewrite and not full:
-                    return base_v  # nothing actually matched
+                    return st.version  # nothing actually matched
             else:
                 rewrite = mixed
             adds: list[dict] = []
@@ -3207,33 +3216,9 @@ class TxTable:
                 )
                 adds = self._stage(kept, schema_json=schema)
             removed = sorted(full) + rewrite
-            touched_files = removed + [
-                a["dv"]["file"] for a in dv_acts
-            ]
-            actions = (
-                adds + [{"remove": {"file": f}} for f in removed]
-                + dv_acts
-            )
-            if dv_acts and proto.get("min_reader", 1) < 3:
-                # first dv commit: pre-v3 readers would resurrect
-                # deleted rows — upgrade in the SAME atomic commit
-                actions.append(
-                    {"protocol": {"min_reader": 3, "min_writer": 3}}
-                )
-            touched = {live[f].get("bucket") for f in touched_files} | {
-                a["add"]["bucket"] for a in adds
-            }
-            scopes = self._dml_scopes(live, touched_files, adds)
-            got = self._occ_commit(
-                base_v, actions, "delete", sorted(touched), scopes,
-                touched, txn=txn,
-            )
-            if got is not None:
-                return got
-            self._discard(adds)
-        raise CommitConflict(
-            f"delete_where conflicted {max_retries} times"
-        )
+            return self._dml_plan(live, adds, removed, dv_acts)
+
+        return self._run_commit("delete", attempt, txn=txn)
 
     def _dv_plan(
         self, files: "list[str]",
@@ -3369,7 +3354,7 @@ class TxTable:
 
     def update_where(
         self, assignments: "dict[str, object]",
-        *preds: "tuple[str, str, object]", max_retries: int = 10,
+        *preds: "tuple[str, str, object]",
         mode: str = "rewrite",
         txn: "tuple[str, int] | None" = None,
     ) -> int:
@@ -3418,17 +3403,13 @@ class TxTable:
             for c, e in assignments.items()
         }
         self._build_cond(preds)
-        for _ in range(max_retries):
-            base_v, live, txns, schema, cons, proto = _replay_log(
-                self.logstore
-            )
-            self._check_writer(proto)
-            if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                return base_v  # already applied — provable no-op
+
+        def attempt(st: LogState) -> "_Plan | int":
+            live, schema = st.live, st.schema
             cm = _schema_colmap(schema)
             cands, _full = self._classify_candidates(live, preds, cm)
             if not cands:
-                return base_v
+                return st.version
             unknown = set(assignments) - {
                 f.name for f in self.table_schema().fields
             } if schema is not None else set()
@@ -3448,7 +3429,7 @@ class TxTable:
                         cands, live,
                     )
                     if not dv_acts and not rewrite:
-                        return base_v  # nothing matched: provable no-op
+                        return st.version  # nothing matched: provable no-op
                     adds: list[dict] = []
                     dv_rel = [a["dv"]["file"] for a in dv_acts]
                     if dv_rel:
@@ -3481,45 +3462,16 @@ class TxTable:
                 })
                 adds = self._stage(updated, schema_json=schema)
                 removed = list(cands)
-            self._validate_adds(adds, schema, cons)
-            actions = (
-                adds + [{"remove": {"file": f}} for f in removed]
-                + dv_acts
+            self._validate_adds(adds, schema, st.constraints)
+            return self._dml_plan(
+                live, adds, removed, dv_acts, _v2_bump(st, dv_acts),
             )
-            if dv_acts and proto.get("min_reader", 1) < 3:
-                # first dv commit: pre-v3 readers would resurrect the
-                # dead preimages — upgrade in the SAME atomic commit
-                actions.append(
-                    {"protocol": {"min_reader": 3, "min_writer": 3}}
-                )
-            elif proto["min_reader"] < 2:
-                # 'update' is a protocol-v2 change-feed op: upgrade in
-                # the same commit so a v1 CDC reader fails loudly
-                # instead of silently skipping these row changes
-                actions.append(
-                    {"protocol": {"min_reader": 2, "min_writer": 2}}
-                )
-            touched_files = removed + [
-                a["dv"]["file"] for a in dv_acts
-            ]
-            touched = {
-                live[f].get("bucket") for f in touched_files
-            } | {a["add"]["bucket"] for a in adds}
-            scopes = self._dml_scopes(live, touched_files, adds)
-            got = self._occ_commit(
-                base_v, actions, "update", sorted(touched), scopes,
-                touched, txn=txn,
-            )
-            if got is not None:
-                return got
-            self._discard(adds)
-        raise CommitConflict(
-            f"update_where conflicted {max_retries} times"
-        )
+
+        return self._run_commit("update", attempt, txn=txn)
 
     def replace_where(
         self, df: DataFrame,
-        *preds: "tuple[str, str, object]", max_retries: int = 10,
+        *preds: "tuple[str, str, object]",
         mode: str = "rewrite",
         txn: "tuple[str, int] | None" = None,
     ) -> int:
@@ -3559,13 +3511,9 @@ class TxTable:
                 f"replace_where: {n_out} incoming row(s) do not "
                 f"satisfy the replace predicates"
             )
-        for _ in range(max_retries):
-            base_v, live, txns, schema, cons, proto = _replay_log(
-                self.logstore
-            )
-            self._check_writer(proto)
-            if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                return base_v  # already applied — provable no-op
+
+        def attempt(st: LogState) -> _Plan:
+            live, schema = st.live, st.schema
             cm = _schema_colmap(schema)
             cands, full = self._classify_candidates(live, preds, cm)
             schema_act = self._evolved_schema_action(df, schema)
@@ -3584,40 +3532,31 @@ class TxTable:
                     ~F.coalesce(self._build_cond(preds), F.lit(False))
                 )
                 adds += self._stage(outside, schema_json=schema)
-            self._validate_adds(adds, eff, cons)
-            removed = sorted(full) + rewrite
-            actions = (
-                adds + [{"remove": {"file": f}} for f in removed]
-                + dv_acts + schema_act
+            self._validate_adds(adds, eff, st.constraints)
+            return self._dml_plan(
+                live, adds, sorted(full) + rewrite, dv_acts,
+                schema_act + _v2_bump(st, dv_acts),
             )
-            if dv_acts and proto.get("min_reader", 1) < 3:
-                # first dv commit: pre-v3 readers would resurrect the
-                # dead preimages — upgrade in the SAME atomic commit
-                actions = actions + [
-                    {"protocol": {"min_reader": 3, "min_writer": 3}}
-                ]
-            elif proto["min_reader"] < 2:
-                # 'replace' is a protocol-v2 change-feed op (see
-                # update_where)
-                actions = actions + [
-                    {"protocol": {"min_reader": 2, "min_writer": 2}}
-                ]
-            touched_files = removed + [
-                a["dv"]["file"] for a in dv_acts
-            ]
-            touched = {
-                live[f].get("bucket") for f in touched_files
-            } | {a["add"]["bucket"] for a in adds}
-            scopes = self._dml_scopes(live, touched_files, adds)
-            got = self._occ_commit(
-                base_v, actions, "replace", sorted(touched), scopes,
-                touched, txn=txn,
-            )
-            if got is not None:
-                return got
-            self._discard(adds)
-        raise CommitConflict(
-            f"replace_where conflicted {max_retries} times"
+
+        return self._run_commit("replace", attempt, txn=txn)
+
+    def _dml_plan(
+        self, live: "dict[str, dict]", adds: "list[dict]",
+        removed: "list[str]", dv_acts: "list[dict]", tail: list = (),
+    ) -> _Plan:
+        """Plan of a predicate-DML commit: publish ``adds``, drop
+        ``removed``, publish ``dv_acts``, then the ``tail`` actions.
+        Its write scope covers every removed, vectored and staged
+        file."""
+        touched_files = removed + [a["dv"]["file"] for a in dv_acts]
+        touched = {live[f].get("bucket") for f in touched_files} | {
+            a["add"]["bucket"] for a in adds
+        }
+        return _Plan(
+            adds + [{"remove": {"file": f}} for f in removed]
+            + dv_acts + list(tail),
+            staged=adds, buckets=sorted(touched),
+            scopes=self._dml_scopes(live, touched_files, adds),
         )
 
     def _dml_scopes(
@@ -3644,7 +3583,7 @@ class TxTable:
 
     # ------------------------------------------------- maintenance --
 
-    def compact(self, min_files: int = 2, max_retries: int = 10,
+    def compact(self, min_files: int = 2,
                 cluster_by: "list[str] | None" = None,
                 files_per_bucket: int = 1, zorder: bool = False,
                 where: "tuple[tuple[str, str, object], ...] | None"
@@ -3681,10 +3620,9 @@ class TxTable:
         regardless of ``min_files``: the rewrite reads them with the
         vector applied and drops it with the file — compaction is how
         merge-on-read deletes are materialized away."""
-        for _ in range(max_retries):
-            st = _replay_log(self.logstore)
-            self._check_writer(st.protocol)
-            base_v, live, schema = st.version, st.live, st.schema
+
+        def attempt(st: LogState) -> "_Plan | int":
+            live, schema = st.live, st.schema
             if where:
                 cm = _schema_colmap(schema)
                 cand, _full = self._classify_candidates(live, where, cm)
@@ -3706,7 +3644,7 @@ class TxTable:
                         cluster_by and len(fs) >= 1
                     ) or any(live[f].get("dv") for f in fs)}
             if not todo:
-                return base_v
+                return st.version
             scopes = (
                 set(todo)
                 if self.partition_by
@@ -3737,18 +3675,13 @@ class TxTable:
             adds = self._stage(
                 staged_df, arranged=True, schema_json=schema
             )
-            actions = adds + [{"remove": {"file": f}} for f in old]
-            tb = sorted({b for _p, b in todo})
-            touched = set(tb)
-            got = self._occ_commit(
-                base_v, actions, "compact", tb, scopes, touched,
+            return _Plan(
+                adds + [{"remove": {"file": f}} for f in old],
+                staged=adds, buckets=sorted({b for _p, b in todo}),
+                scopes=scopes,
             )
-            if got is not None:
-                return got
-            self._discard(adds)
-        raise CommitConflict(
-            f"compact conflicted {max_retries} times on buckets"
-        )
+
+        return self._run_commit("compact", attempt)
 
     def _min_consumer_offset(self, ttl_s: float) -> "int | None":
         """Lowest committed offset among ACTIVE streaming CDC
@@ -3795,7 +3728,6 @@ class TxTable:
 
     def restore(
         self, version: "int | None" = None, timestamp=None,
-        max_retries: int = 10,
     ) -> int:
         """``RESTORE TABLE ... TO VERSION AS OF`` — one atomic commit
         that returns the table's state (live files, deletion vectors,
@@ -3847,18 +3779,21 @@ class TxTable:
                 b, sort_keys=True
             )
 
-        for _ in range(max_retries):
-            base_v, live, _txns, schema, cons, proto = _replay_log(
-                self.logstore
+        # what the last attempt re-adds: the post-commit guard checks
+        # that a concurrent vacuum did not reap any of it
+        readds: list[dict] = []
+
+        def attempt(st: LogState) -> "_Plan | int":
+            base_v, live, schema, cons = (
+                st.version, st.live, st.schema, st.constraints
             )
-            self._check_writer(proto)
             if version > base_v:
                 raise ValueError(
                     f"cannot restore to version {version}: table is "
                     f"at {base_v}"
                 )
             actions: list[dict] = []
-            readds: list[dict] = []
+            readds.clear()
             removes: list[str] = []
             for f, info in sorted(tgt.live.items()):
                 cur = live.get(f)
@@ -3923,25 +3858,20 @@ class TxTable:
                     )
             if not actions:
                 return base_v  # already at the target state
-            touched = sorted({
+            return _Plan(actions, buckets=sorted({
                 info.get("bucket")
                 for info in (
                     [live[f] for f in removes if f in live]
                     + readds
                 )
-            } - {None})
-            if self._commit(
-                base_v + 1, actions, op="restore", buckets=touched,
-                extra={"restored_to": version},
-            ):
-                self._guard_vacuumed(
-                    [i["file"] for i in readds],
-                    f"restore(version={version}) post-commit",
-                )
-                return base_v + 1
-        raise CommitConflict(
-            f"restore conflicted {max_retries} times"
+            } - {None}), extra={"restored_to": version})
+
+        got = self._run_commit("restore", attempt)
+        self._guard_vacuumed(
+            [i["file"] for i in readds],
+            f"restore(version={version}) post-commit",
         )
+        return got
 
     def clone(
         self, dest_path: str, version: "int | None" = None,
@@ -4532,7 +4462,7 @@ class TxTable:
             # 1..floor-1: resurrected/phantom rows, no error. v4 =
             # truncatable log; bump BEFORE any entry is deleted so
             # such readers fail loudly — the dv v3 precedent.
-            self._bump_protocol(4, 4, why="truncate_log")
+            self._bump_protocol(4, 4)
             # intent next: a floor above surviving entries is safe
             # (reads below it refuse); entries >= floor never deleted
             d = getattr(

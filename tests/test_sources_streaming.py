@@ -683,3 +683,23 @@ def test_ingest_sink_schema_evolution_mid_stream(spark, tmp_path):
     ), 1)
     assert corpus.version() == 2 and index.version() == 2
     assert corpus.count() == 4
+
+
+def test_await_stream_times_out_and_stops_the_query(spark, tmp_path):
+    """A drain still running past its timeout raises TimeoutError and
+    leaves the query stopped, so the caller never reads a partial
+    sink. A rate source never finishes on its own."""
+    from pypeman_spark.streaming.drain import await_stream
+
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError, match="rate drain"):
+            await_stream(q, 1, "rate drain")
+        assert not q.isActive
+    finally:
+        q.stop()

@@ -181,6 +181,118 @@ def test_disjoint_bucket_merge_commits_without_restage(spark, tmp_path):
     assert stages["n"] == 1  # staged exactly once: no restage needed
 
 
+def test_append_never_reclaims_past_a_schema_evolution(spark, tmp_path):
+    """Two appends in disjoint buckets that each add a column: the
+    loser must not re-claim past the winner's commit with a schema
+    action built before it, which would drop the winner's column. It
+    re-evolves from a fresh snapshot, so both columns survive."""
+    t_a = _mk(spark, tmp_path, n_buckets=64)
+    t_b = TxTable(spark, str(tmp_path / "tbl"))
+    t_a.append(_df(spark, [(i, f"v{i}") for i in range(20)]))
+    # two NEW keys (appends add rows, they do not upsert) in
+    # different buckets
+    b = {
+        r["k"]: r["b"]
+        for r in _df(spark, [(i, "") for i in range(100, 120)])
+        .select("k", t_a._bucket_col().alias("b")).collect()
+    }
+    k1 = 100
+    k2 = next(k for k in b if b[k] != b[k1])
+    real_commit = t_a._commit
+    fired = {"done": False}
+
+    def hooked(expected_version, actions, op, buckets, **kw):
+        if op == "append" and not fired["done"]:
+            fired["done"] = True
+            t_b.append(spark.createDataFrame(
+                [(k2, "from_b", 2)], "k long, val string, b_col long"
+            ))
+        return real_commit(expected_version, actions, op, buckets, **kw)
+
+    t_a._commit = hooked
+    t_a.append(spark.createDataFrame(
+        [(k1, "from_a", "x")], "k long, val string, a_col string"
+    ))
+    assert fired["done"]
+    assert {"a_col", "b_col"} <= set(t_a.table_schema().fieldNames())
+    rows = {r["k"]: r for r in t_a.read().collect()}
+    assert rows[k1]["a_col"] == "x" and rows[k2]["b_col"] == 2
+
+
+# Every mutator that retries lost commits, each with a call that
+# commits a new version on the table test_conflict_exhaustion_raises
+# builds.
+_MUTATIONS = {
+    "add_constraint": lambda t, s: t.add_constraint("pos", "k > 0"),
+    "drop_constraint": lambda t, s: t.drop_constraint("seeded"),
+    "rename_column": lambda t, s: t.rename_column("val", "val2"),
+    "widen_column": lambda t, s: t.widen_column("n", "long"),
+    "drop_column": lambda t, s: t.drop_column("val"),
+    "_bump_protocol": lambda t, s: t._bump_protocol(3, 3),
+    "append": lambda t, s: t.append(_df3(s, [(7, "g", 7)])),
+    "merge_upsert": lambda t, s: t.merge_upsert(_df3(s, [(1, "A", 1)])),
+    "merge": lambda t, s: t.merge(
+        _df3(s, [(1, "A", 1)]), when_matched_update={"val": "s.val"},
+    ),
+    "delete_keys": lambda t, s: t.delete_keys(_df3(s, [(1, "", 0)])),
+    "delete_where": lambda t, s: t.delete_where(("k", "=", 1)),
+    "update_where": lambda t, s: t.update_where(
+        {"val": "upper(val)"}, ("k", "=", 1),
+    ),
+    "replace_where": lambda t, s: t.replace_where(
+        _df3(s, [(1, "R", 1)]), ("k", "=", 1),
+    ),
+    "compact": lambda t, s: t.compact(),
+    "restore": lambda t, s: t.restore(1),
+}
+
+
+def _df3(spark, rows):
+    return spark.createDataFrame(rows, "k long, val string, n int")
+
+
+@pytest.mark.parametrize("mutation", sorted(_MUTATIONS))
+def test_conflict_exhaustion_raises(spark, tmp_path, monkeypatch, mutation):
+    """A mutation that loses every commit race raises CommitConflict
+    after _COMMIT_ATTEMPTS attempts, claiming once per attempt, and
+    leaves nothing behind: no staging directory and no data file the
+    log does not reference."""
+    from pypeman_spark.store import txtable
+    from pypeman_spark.store.txtable import CommitConflict
+
+    monkeypatch.setattr(txtable, "_COMMIT_ATTEMPTS", 3)
+    t = _mk(spark, tmp_path, n_buckets=1)
+    t.append(_df3(spark, [(1, "a", 1), (2, "b", 2)]))  # version 1
+    t.append(_df3(spark, [(3, "c", 3)]))  # 2 files in the one bucket
+    t.add_constraint("seeded", "k > 0")
+    real = t._commit
+
+    def always_lose(expected_version, actions, op, buckets, **kw):
+        # a rival claims the version first, with a non-commuting op
+        assert real(expected_version, [], op="rival", buckets=[])
+        return real(expected_version, actions, op, buckets, **kw)
+
+    t._commit = always_lose
+    v = t.version()
+    with pytest.raises(CommitConflict):
+        _MUTATIONS[mutation](t, spark)
+    t._commit = real
+    assert t.version() == v + 3  # one claim per attempt, each lost
+    assert not [n for n in os.listdir(t.path) if n.startswith("_staging_")]
+    referenced = set()
+    for version in range(t.version() + 1):
+        adds, _removes, _dvs, _info = txtable._commit_actions_of(
+            t.logstore, version
+        )
+        referenced |= {a["file"] for a in adds}
+    on_disk = {
+        os.path.relpath(os.path.join(root, f), t.path).replace(os.sep, "/")
+        for root, _dirs, files in os.walk(t.data_dir)
+        for f in files if f.endswith(".parquet")
+    }
+    assert on_disk and on_disk <= referenced
+
+
 def _race_commits(path, writer_id, n_commits, barrier):
     """Child process: race raw commits through the atomic-claim
     protocol (no Spark needed — the race is pure filesystem)."""
@@ -1175,6 +1287,34 @@ def test_add_constraint_validates_existing_rows(spark, tmp_path):
     t.add_constraint("dup", "k > 0")
     with pytest.raises(ValueError):
         t.add_constraint("dup", "k > 0")
+
+
+def test_drop_constraint_checks_writer_protocol(spark, tmp_path):
+    """drop_constraint passes the writer-protocol gate like every
+    other mutation: a table demanding a newer writer refuses it."""
+    from pypeman_spark.store.txtable import (
+        _SUPPORTED_WRITER,
+        TableProtocolError,
+    )
+
+    t = _mk(spark, tmp_path, n_buckets=2)
+    t.add_constraint("pos", "k > 0")
+    assert t._commit(t.version() + 1, [{"protocol": {
+        "min_reader": 1, "min_writer": _SUPPORTED_WRITER + 1,
+    }}], op="protocol", buckets=[])
+    v = t.version()
+    with pytest.raises(TableProtocolError, match="writer protocol"):
+        t.drop_constraint("pos")
+    assert t.version() == v and t.constraints() == {"pos": "k > 0"}
+
+
+def test_drop_constraint_unknown_name_raises(spark, tmp_path):
+    t = _mk(spark, tmp_path, n_buckets=2)
+    t.add_constraint("pos", "k > 0")
+    v = t.version()
+    with pytest.raises(ValueError, match="no such constraint"):
+        t.drop_constraint("nope")
+    assert t.version() == v and t.constraints() == {"pos": "k > 0"}
 
 
 def test_constraint_survives_checkpoint_and_conflicts_merges(

@@ -16,7 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pypeman_spark.store.txtable import (
-    CommitConflict,
     LogTruncatedError,
     TxTable,
     VacuumedVersionError,
@@ -284,23 +283,6 @@ def test_restore_retries_past_concurrent_commit(spark, tmp_path):
     assert raced["n"] == 1
     assert rv == t.version()
     assert _rows(t.snapshot()) == [(1, "a"), (2, "b")]  # LATE gone
-
-
-def test_restore_conflict_exhaustion_raises(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    v1 = t.append(_df(spark, [(1, "a")]))
-    t.append(_df(spark, [(2, "b")]))
-    other = _mk(spark, tmp_path)
-    real = t._commit
-
-    def always_lose(expected_version, *a, **kw):
-        other.append(_df(spark, [(100 + expected_version, "x")]))
-        return real(expected_version, *a, **kw)
-
-    t._commit = always_lose
-    with pytest.raises(CommitConflict):
-        t.restore(v1, max_retries=3)
-    t._commit = real
 
 
 def test_restore_of_restore(spark, tmp_path):

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pypeman_spark.session import get_spark  # noqa: E402
 from pypeman_spark.sources.tables import load_table  # noqa: E402
 from pypeman_spark.store import TxTable  # noqa: E402
+from pypeman_spark.streaming.drain import await_stream  # noqa: E402
 
 
 def main() -> None:
@@ -107,7 +108,7 @@ def main() -> None:
     q = (tx.stream_changes().writeStream.format("noop")
          .option("checkpointLocation", os.path.join(root, "ckpt"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(600)
+    await_stream(q, 600, "CDC stream drain")
     out["cdc_stream_s"] = round(time.time() - t0, 3)
 
     t0 = time.time()
