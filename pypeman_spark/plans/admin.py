@@ -152,23 +152,31 @@ class ChannelRegistry:
     def replay_msg(self, channel: str, msg_id: str) -> dict:
         """``channels.py:857-869``: fetch → renew → re-run pipeline."""
         pipe, store = self.get(channel)
-        df = store.get_for_replay(msg_id)
-        store.store(df)
-        res = pipe.run(df)
-        out = res.all
-        store.change_message_states(out)
-        rows = out.collect()
-        return {"replayed": msg_id, "outcomes": [r["state"] for r in rows]}
+        # detached from the store's files: the settle appends to them,
+        # and a write to a path drops every cached frame that reads it
+        df = store.get_for_replay(msg_id).localCheckpoint(eager=True)
+        return {"replayed": msg_id, "outcomes": self._run(pipe, store, df)}
 
     def push_msg(self, channel: str, payload: str) -> dict:
         """``remoteadmin.py:217-228``: wrap raw text, run the channel."""
         pipe, store = self.get(channel)
         df = messages_from_payloads(self.spark, [payload], channel=channel)
+        return {"pushed": 1, "outcomes": self._run(pipe, store, df)}
+
+    @staticmethod
+    def _run(pipe, store, df) -> list[str]:
+        """Store, run and settle ``df`` the way a channel batch does:
+        the state append, the ``store_meta`` flush and the returned
+        outcomes all read one materialised run of the pipeline."""
         store.store(df)
-        res = pipe.run(df)
-        store.change_message_states(res.all)
-        states = [r["state"] for r in res.all.collect()]
-        return {"pushed": 1, "outcomes": states}
+        out = pipe.run(df).all.persist()
+        try:
+            store.change_message_states(out)
+            store.add_meta_from_messages(out)
+            return [r["state"] for r in out.select("state").collect()]
+        finally:
+            out.unpersist()
+            pipe.release()
 
 
 _ROUTES = [

@@ -11,10 +11,12 @@ to MERGE/DELETE):
 
 * ``messages/`` — one row per stored message, Hive-partitioned by
   ``date`` (Catalyst partition pruning replaces directory skipping).
-* ``events/``  — state changes / sub-message states / meta additions as
-  appended events; "current" values resolve with a max-timestamp window,
-  so no rewrite is ever needed. This is the plain-parquet fallback of
-  SURVEY §7.4 ("mutable-store semantics on parquet").
+* ``events/``  — state changes / sub-message states / meta additions /
+  deletes as appended events, so no rewrite is ever needed. One per-id
+  fold resolves them (:meth:`MessageStore.current`): one aggregate over
+  the narrow event log, then one join to the wide message side. This is
+  the plain-parquet fallback of SURVEY §7.4 ("mutable-store semantics on
+  parquet").
 
 At 100 TB the messages table is the one that grows; events stay tiny
 relative to it. ``search`` compiles to a single Catalyst plan with
@@ -36,12 +38,12 @@ import time
 import uuid as _uuid
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..message import (
     MESSAGE_COLUMNS,
     PENDING,
-    STATES_PRIORITY,
+    SUBSTATE_TYPE,
     ensure_message_columns,
     renew,
     worst_state_expr,
@@ -313,14 +315,16 @@ class MessageStore:
         self._append_events([(msg_id, "meta", None, None, name, str(value), time.time())])
 
     def set_state_to_worst_sub_state(self, msg_id: str) -> None:
-        """``msgstore.py:687-705``: state := worst recorded substate."""
-        ev = self._events().filter(
-            (F.col("id") == msg_id) & (F.col("kind") == "substate")
+        """``msgstore.py:687-705``: state := worst of the id's current
+        substates (:meth:`current`'s fold, pruned to the id's date)."""
+        rows = (
+            self.current(dates=self._id_dates(msg_id))
+            .filter(F.col("id") == msg_id)
+            .select(worst_state_expr(F.col("submessage_states.state")).alias("w"))
+            .collect()
         )
-        states = [r["state"] for r in ev.select("state").collect()]
-        if states:
-            worst = max(states, key=lambda s: STATES_PRIORITY.index(s))
-            self.change_message_state(msg_id, worst)
+        if rows and rows[0]["w"] is not None:
+            self.change_message_state(msg_id, rows[0]["w"])
 
     def delete(self, msg_id: str) -> None:
         """``msgstore.py:877-888``. Append a tombstone event; the current
@@ -393,12 +397,18 @@ class MessageStore:
         """Fold the event log into the base table (the plain-parquet
         analogue of Delta OPTIMIZE + checkpoint).
 
-        The event log grows with every state change; ``current()`` pays
-        one extra join chain per query until it is folded. Compaction
-        rewrites the base from ``current()`` (latest state and substates
-        become base columns, tombstoned rows disappear) and re-emits
-        store-meta lists as a fresh, minimal event log — schemas are
-        unchanged, so readers never see a special case.
+        The event log grows with every state change; ``current()``
+        folds all of it on every read until it is compacted. Compaction
+        rewrites the base from ``current()`` (latest state and resolved
+        substates become base columns, tombstoned rows disappear) and
+        re-emits each store-meta list as a fresh, minimal event log: in
+        list order, with timestamps strictly below the compaction time.
+        Schemas are unchanged, so readers never see a special case.
+
+        Contract: inserting ``compact()`` anywhere in a sequence of
+        store and event calls never changes what ``current()`` returns,
+        then or after later events: later events sort after everything
+        compaction wrote, and the fold puts events after the base.
 
         Concurrency + crash safety (VERDICT r6 #6): the whole fold —
         snapshot through swap — runs under the writer lease, so a
@@ -445,14 +455,14 @@ class MessageStore:
                 .partitionBy("date")
                 .parquet(new_msg)
             )
+            # one event per list value, 1 ms apart in list order and all
+            # before `now`: later appends sort after every re-emitted value
+            now = time.time()
             meta_ev = (
-                cur.filter(F.col("store_meta").isNotNull())
+                cur.select("id", F.explode("store_meta").alias("meta_key", "__vals"))
                 .select(
-                    "id",
-                    F.explode("store_meta").alias("meta_key", "__vals"),
-                )
-                .select(
-                    "id", F.posexplode("__vals").alias("__pos", "meta_value"), "meta_key"
+                    "id", "meta_key", F.size("__vals").alias("__n"),
+                    F.posexplode("__vals").alias("__pos", "meta_value"),
                 )
                 .select(
                     F.col("id"),
@@ -461,8 +471,8 @@ class MessageStore:
                     F.lit(None).cast("string").alias("sub_id"),
                     F.col("meta_key"),
                     F.col("meta_value"),
-                    # position preserves list order through the re-read
-                    (F.lit(time.time()) + F.col("__pos")).alias("event_ts"),
+                    (F.lit(now) - (F.col("__n") - F.col("__pos")) * 1e-3)
+                    .alias("event_ts"),
                 )
             )
             meta_ev.write.mode("overwrite").parquet(new_ev)
@@ -519,76 +529,55 @@ class MessageStore:
         return self.spark.read.schema(_EVENT_SCHEMA).parquet(self.event_path)
 
     def current(self, dates: list | None = None) -> DataFrame:
-        """Current view: base messages + latest state event + substates +
-        store-meta lists. All four joins key on ``id`` — no broadcast
-        hints: the event aggregates scale 1:1 with message volume, so
-        AQE broadcasts them while small and co-shuffles at scale (one
-        shared hash partitioning on ``id`` across the join chain).
+        """Current view: the one fold of the event log — one
+        ``groupBy("id")`` over ``events/``, one left join to ``messages/``:
 
-        ``dates`` (internal, from :meth:`_id_dates`) pre-filters the
-        base scan on the partition column so point lookups read one
-        date directory instead of the whole store; every event join
-        still applies, so semantics are identical to the full view."""
+        * ``state`` — the latest state event, else the base state;
+        * ``submessage_states`` — the base list, then the substate
+          events in ``event_ts`` order;
+        * ``store_meta`` — ``{key: [values]}`` in ``event_ts`` order
+          (ties by value), NULL without meta events;
+        * a delete event hides the id.
+
+        Events only ever land after the base, so :meth:`compact`, which
+        writes this view back as the base, never changes the answer.
+        ``dates`` (internal, from :meth:`_id_dates`) prunes the base
+        scan to those date partitions; the fold is unchanged."""
         msgs = self._messages()
         if dates:
             msgs = msgs.filter(F.col("date").isin(list(dates)))
-        events = self._events()
-
-        w = Window.partitionBy("id").orderBy(F.col("event_ts").desc())
-        latest_state = (
-            events.filter(F.col("kind") == "state")
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("id", F.col("state").alias("__new_state"))
+        kind = F.col("kind")
+        # event_ts leads each struct: collect_list order is partition-
+        # dependent, and max_by/collect_list skip the other kinds' NULLs
+        subs = F.sort_array(F.collect_list(F.when(
+            kind == "substate", F.struct("event_ts", "sub_id", "state"))))
+        fold = self._events().groupBy("id").agg(
+            F.max_by("state", F.when(kind == "state", F.col("event_ts")))
+            .alias("__state"),
+            F.transform(subs, lambda e: F.struct(
+                e["sub_id"].alias("sub_id"), e["state"].alias("state"),
+                e["event_ts"].alias("ts"))).alias("__subs"),
+            F.sort_array(F.collect_list(F.when(
+                kind == "meta", F.struct("event_ts", "meta_value", "meta_key")
+            ))).alias("__metas"),
+            F.max(kind == "delete").alias("__deleted"),
         )
-        substates = (
-            events.filter(F.col("kind") == "substate")
-            .groupBy("id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("sub_id"), F.col("state"), F.col("event_ts").alias("ts")
-                        )
-                    )
-                ).alias("__substates")
-            )
+        keys = F.array_distinct(F.transform("__metas", lambda e: e["meta_key"]))
+        store_meta = F.when(F.size("__metas") > 0, F.map_from_arrays(
+            keys, F.transform(keys, lambda k: F.transform(
+                F.filter("__metas", lambda e: e["meta_key"] == k),
+                lambda e: e["meta_value"]))))
+        subs_cur = F.when(F.size("__subs") > 0, F.concat(
+            F.coalesce("submessage_states", F.array().cast(SUBSTATE_TYPE)),
+            "__subs")).otherwise(F.col("submessage_states"))
+        return (
+            msgs.join(fold, "id", "left")
+            .filter(~F.coalesce("__deleted", F.lit(False)))
+            .withColumn("state", F.coalesce("__state", "state"))
+            .withColumn("submessage_states", subs_cur)
+            .withColumn("store_meta", store_meta)
+            .drop("__state", "__subs", "__metas", "__deleted")
         )
-        store_meta = (
-            events.filter(F.col("kind") == "meta")
-            .groupBy("id", "meta_key")
-            # collect_list order is partition-dependent; sort on event_ts
-            # so list order is append order at any parallelism
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("event_ts", "meta_value"))
-                    ),
-                    lambda s: s["meta_value"],
-                ).alias("__vals")
-            )
-            .groupBy("id")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct("meta_key", "__vals"))
-                ).alias("store_meta")
-            )
-        )
-        deleted = events.filter(F.col("kind") == "delete").select("id").distinct()
-
-        cur = (
-            msgs.join(latest_state, "id", "left")
-            .join(substates, "id", "left")
-            .join(store_meta, "id", "left")
-            .join(deleted, "id", "left_anti")
-            .withColumn("state", F.coalesce("__new_state", "state"))
-            .withColumn(
-                "submessage_states",
-                F.coalesce(F.col("__substates"), F.col("submessage_states")),
-            )
-            .drop("__new_state", "__substates")
-        )
-        return cur
 
     def total(self) -> int:
         """``msgstore.py:292``."""

@@ -18,7 +18,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession, Window, functions as F, types as T
 
-__all__ = ["KVStore", "MemoryKVStore", "SqliteKVStoreStub"]
+__all__ = ["KVStore", "MemoryKVStore"]
 
 _KV_SCHEMA = T.StructType(
     [
@@ -63,11 +63,3 @@ class MemoryKVStore(KVStore):
 
     def __init__(self, spark: SparkSession):
         super().__init__(spark, tempfile.mkdtemp(prefix="pypeman_spark_kv_"))
-
-
-class SqliteKVStoreStub(KVStore):
-    """The reference's sqlite backend (``persistence.py:93``) — same API,
-    parquet engine; named for discoverability."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        super().__init__(spark, path)

@@ -51,6 +51,19 @@ class RetryStore:
         carrying a ``retry_stage`` column (set by ``auto_retry`` nodes,
         ``nodes.py:194-204``) re-enter at that per-row stage; ``stage``
         is the fallback (None = restart from the first stage)."""
+        out = (
+            self._park_rows(df, stage)
+            .withColumn("retry_at", F.lit(time.time() + self.retry_delay))
+            .withColumn("attempts", F.lit(1))
+        )
+        out.write.mode("append").parquet(self.msg_path)
+
+    def _park_rows(self, df: DataFrame, stage: str | None,
+                   generations: DataFrame | None = None) -> DataFrame:
+        """``df`` as retry rows, less ``retry_at`` and ``attempts``: the
+        message columns, ``state=wait_retry`` and the re-entry ``stage``
+        (a row's ``retry_stage`` wins). A re-park joins in the consumed
+        ``generations`` (id, attempts) it counts from."""
         stage_col = F.lit(stage).cast("string")
         if "retry_stage" in df.columns:
             stage_col = F.coalesce(F.col("retry_stage"), stage_col)
@@ -58,13 +71,14 @@ class RetryStore:
             ensure_message_columns(df, channel=self.channel)
             .withColumn("__stage", stage_col)
             .select(*MESSAGE_COLUMNS, "__stage")
-            .withColumn("state", F.lit(WAIT_RETRY))
+        )
+        if generations is not None:
+            out = out.join(generations, "id")
+        return (
+            out.withColumn("state", F.lit(WAIT_RETRY))
             .withColumn("stage", F.col("__stage"))
             .drop("__stage")
-            .withColumn("retry_at", F.lit(time.time() + self.retry_delay))
-            .withColumn("attempts", F.lit(1))
         )
-        out.write.mode("append").parquet(self.msg_path)
 
     def _acks(self) -> DataFrame:
         if not os.path.isdir(self.ack_path):
@@ -164,17 +178,8 @@ class RetryStore:
                 self.ack(sel.select("id", "attempts"))
                 if n_fail:
                     failed = outcome.filter(F.col("state").isin(ERROR, WAIT_RETRY))
-                    stage_col = F.lit(stage).cast("string")
-                    if "retry_stage" in failed.columns:
-                        stage_col = F.coalesce(F.col("retry_stage"), stage_col)
                     repark = (
-                        ensure_message_columns(failed, channel=self.channel)
-                        .withColumn("__stage", stage_col)
-                        .select(*MESSAGE_COLUMNS, "__stage")
-                        .join(sel.select("id", "attempts"), "id")
-                        .withColumn("state", F.lit(WAIT_RETRY))
-                        .withColumn("stage", F.col("__stage"))
-                        .drop("__stage")
+                        self._park_rows(failed, stage, sel.select("id", "attempts"))
                         .withColumn(
                             "retry_at",
                             F.lit(float(now))

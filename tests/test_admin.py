@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pypeman_spark import Pipeline, messages_from_payloads
-from pypeman_spark.operators import FuncNode, JsonToPython
+from pypeman_spark.operators import FuncNode, JsonToPython, MsgFuncNode
 from pypeman_spark.plans.admin import AdminServer, ChannelRegistry
 from pypeman_spark.store import MemoryMessageStore
 
@@ -90,6 +90,42 @@ def test_push_msg(admin):
     assert body == {"pushed": 1, "outcomes": ["processed"]}
     assert store.total() == 4
 
+
+def test_push_and_replay_run_the_pipeline_once(spark):
+    # a push or replay settles like a channel batch: the state append,
+    # the store_meta flush and the returned outcomes read one run
+    calls = spark.sparkContext.accumulator(0)
+
+    def count(d):
+        calls.add(1)
+        return d
+
+    store = MemoryMessageStore(spark, channel="once")
+    pipe = Pipeline("once").add(
+        JsonToPython(),
+        MsgFuncNode(lambda p, m: (p, {**m, "tag": str(p["n"])}), name="tag"),
+        FuncNode(count, name="count", store_meta=["tag"]),
+    )
+    reg = ChannelRegistry(spark)
+    reg.register("once", pipe, store)
+    try:
+        assert reg.push_msg("once", json.dumps({"n": 7})) == {
+            "pushed": 1, "outcomes": ["processed"]
+        }
+        assert calls.value == 1
+        (pushed,) = store.current().collect()
+        assert pushed["state"] == "processed"
+        assert pushed["store_meta"] == {"tag": ["7"]}
+        assert reg.replay_msg("once", pushed["id"]) == {
+            "replayed": pushed["id"], "outcomes": ["processed"]
+        }
+        assert calls.value == 2
+        replayed = store.current().filter(F.col("id") != pushed["id"]).collect()
+        assert [(r["state"], r["store_meta"]) for r in replayed] == [
+            ("processed", {"tag": ["7"]})
+        ]
+    finally:
+        store.close()
 
 def test_admin_shell_client(admin):
     # remoteadmin.py:403-557 shell client verbs over the live server

@@ -253,6 +253,87 @@ def test_compact_folds_events(spark, tmp_path):
     assert store.search(meta={"k": "v2"}).count() == 1
 
 
+def _resolved(store):
+    # current() minus event timestamps, which differ between two stores
+    # fed the same calls
+    return {
+        r["id"]: (
+            r["state"],
+            [(s["sub_id"], s["state"]) for s in r["submessage_states"] or []],
+            {k: list(v) for k, v in (r["store_meta"] or {}).items()},
+        )
+        for r in store.current().collect()
+    }
+
+
+def test_compact_never_changes_current(spark):
+    # the compaction contract: one store compacted mid-sequence and one
+    # never compacted resolve every later event to the same view
+    msgs = messages_from_payloads(
+        spark, [{"i": i} for i in range(5)]
+    ).localCheckpoint(eager=True)  # same ids in both stores
+    stores = [MemoryMessageStore(spark, channel=f"inv{n}") for n in range(2)]
+    try:
+        for s in stores:
+            s.store(msgs)
+        ids = sorted(r["id"] for r in stores[0].current().select("id").collect())
+        for s in stores:
+            s.change_message_state(ids[0], "processed")
+            s.add_sub_message_state(ids[1], "s1", "processed")
+            s.add_sub_message_state(ids[1], "s2", "error")
+            for v in range(5):
+                s.add_message_meta_infos(ids[2], "k", f"v{v}")
+            s.delete(ids[3])
+        stores[0].compact()
+        for s in stores:
+            s.add_message_meta_infos(ids[2], "k", "v5")
+            s.add_sub_message_state(ids[1], "s3", "rejected")
+            s.set_state_to_worst_sub_state(ids[1])
+            s.change_message_state(ids[3], "processed")  # stays deleted
+            s.change_message_state(ids[2], "rejected")
+            s.delete(ids[4])
+        compacted, plain = (_resolved(s) for s in stores)
+        assert compacted == plain
+        assert plain == {
+            ids[0]: ("processed", [], {}),
+            ids[1]: (
+                "error",
+                [("s1", "processed"), ("s2", "error"), ("s3", "rejected")],
+                {},
+            ),
+            ids[2]: ("rejected", [], {"k": [f"v{v}" for v in range(6)]}),
+        }
+    finally:
+        for s in stores:
+            s.close()
+
+
+def test_worst_sub_state_after_compact(spark, store):
+    _store_n(spark, store, 2)
+    mid = sorted(r["id"] for r in store.current().select("id").collect())[0]
+    for sub, state in (("a", "processed"), ("b", "error"), ("c", "rejected")):
+        store.add_sub_message_state(mid, sub, state)
+    store.compact()
+    store.set_state_to_worst_sub_state(mid)
+    assert store.get(mid)["state"] == "error"
+
+
+def test_current_folds_events_in_one_scan_and_one_join(spark, store):
+    _store_n(spark, store, 3)
+    mid = store.current().select("id").collect()[0]["id"]
+    store.change_message_state(mid, "processed")
+    store.add_sub_message_state(mid, "s", "error")
+    store.add_message_meta_infos(mid, "k", "v")
+    store.delete(mid)
+    plan = store.current()._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert sum(store.event_path in ln for ln in scans) == 1
+    assert sum(store.msg_path in ln for ln in scans) == 1
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert len(joins) == 1, joins
+    assert "Window" not in plan
+
+
 def test_apply_retention_drops_old_partitions(spark, tmp_path):
     import datetime as dt
 
