@@ -439,6 +439,8 @@ class Pipeline:
         from .message import messages_from_payloads
 
         msgdf = messages_from_payloads(spark, [payload], meta=meta, channel=self.channel)
-        res = self.run(msgdf)
-        rows = res.all.collect()
+        try:
+            rows = self.run(msgdf).all.collect()
+        finally:
+            self.release()
         return rows[0] if rows else None

@@ -6,11 +6,17 @@ retries oldest-first every ``retry_delay`` seconds; the channel pauses
 while the store is non-empty.
 
 Spark design: the retry table IS the buffer — no global pause needed
-(SURVEY §2.H row 63). A retry row is the full message plus ``(stage,
-retry_at, attempts)``. ``retry_due`` reads rows whose ``retry_at`` has
-passed; the caller re-runs ``Pipeline.run(df, from_stage=stage)`` and
-acks success. Appends only (Delta-ready); acks are tombstone events, so
-nothing rewrites at scale.
+(SURVEY §2.H row 63). It is one append-only log, ``retry_log/``, read
+with one schema (``_LOG_SCHEMA``): a park is one row per generation —
+the full message plus ``(stage, retry_at, attempts)`` — and an ack is a
+tombstone row ``(id, attempts, acked=true)`` in the same log. One fold,
+``_live()``, anti-joins the tombstones away; ``retry_due``, ``ack`` and
+``is_empty`` read it, and only the public ``pending()`` sorts (pypeman
+lists the queue oldest first). A sweep checkpoints its due rows once,
+re-runs ``Pipeline.run(df, from_stage=stage)`` per stage, and settles
+with one append: the tombstones of every consumed generation plus the
+re-parks, so a failed settle leaves every message parked. Appends only
+(Delta-ready), so nothing rewrites at scale.
 """
 
 from __future__ import annotations
@@ -20,20 +26,35 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..message import MESSAGE_COLUMNS, WAIT_RETRY, ensure_message_columns
+from ..message import (
+    DROPPED,
+    ERROR,
+    MESSAGE_COLUMNS,
+    MESSAGE_SCHEMA,
+    PROCESSED,
+    REJECTED,
+    WAIT_RETRY,
+    ensure_message_columns,
+)
 
 __all__ = ["RetryStore"]
 
-# acks are keyed (id, attempts): re-parking a failed retry appends a new
-# generation of the same message id, and acking the consumed generation
-# must not tombstone the fresh one
-_ACK_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
+# tombstones are keyed (id, attempts): re-parking a failed retry appends
+# a new generation of the same message id, and acking the consumed
+# generation must not tombstone the fresh one
+_LOG_SCHEMA = T.StructType(
+    MESSAGE_SCHEMA.fields
+    + [
+        T.StructField("stage", T.StringType()),
+        T.StructField("retry_at", T.DoubleType()),
         T.StructField("attempts", T.IntegerType()),
-        T.StructField("ack_ts", T.DoubleType()),
+        T.StructField("acked", T.BooleanType()),
     ]
 )
+
+
+def _tombstones(generations: DataFrame) -> DataFrame:
+    return generations.select("id", "attempts", F.lit(True).alias("acked"))
 
 
 class RetryStore:
@@ -43,8 +64,7 @@ class RetryStore:
         self.base_path = base_path
         self.channel = channel
         self.retry_delay = retry_delay
-        self.msg_path = os.path.join(base_path, "retry_messages")
-        self.ack_path = os.path.join(base_path, "retry_acks")
+        self.log_path = os.path.join(base_path, "retry_log")
 
     def store_until_retry(self, df: DataFrame, stage: str | None = None) -> None:
         """Park rows for retry at ``stage`` (``retry.py:58-86``). Rows
@@ -56,14 +76,14 @@ class RetryStore:
             .withColumn("retry_at", F.lit(time.time() + self.retry_delay))
             .withColumn("attempts", F.lit(1))
         )
-        out.write.mode("append").parquet(self.msg_path)
+        out.write.mode("append").parquet(self.log_path)
 
     def _park_rows(self, df: DataFrame, stage: str | None,
                    generations: DataFrame | None = None) -> DataFrame:
-        """``df`` as retry rows, less ``retry_at`` and ``attempts``: the
-        message columns, ``state=wait_retry`` and the re-entry ``stage``
-        (a row's ``retry_stage`` wins). A re-park joins in the consumed
-        ``generations`` (id, attempts) it counts from."""
+        """``df`` as un-acked log rows, less ``retry_at`` and
+        ``attempts``: the message columns, ``state=wait_retry`` and the
+        re-entry ``stage`` (a row's ``retry_stage`` wins). A re-park joins
+        in the consumed ``generations`` (id, attempts) it counts from."""
         stage_col = F.lit(stage).cast("string")
         if "retry_stage" in df.columns:
             stage_col = F.coalesce(F.col("retry_stage"), stage_col)
@@ -77,62 +97,51 @@ class RetryStore:
         return (
             out.withColumn("state", F.lit(WAIT_RETRY))
             .withColumn("stage", F.col("__stage"))
+            .withColumn("acked", F.lit(False))
             .drop("__stage")
         )
 
-    def _acks(self) -> DataFrame:
-        if not os.path.isdir(self.ack_path):
-            return self.spark.createDataFrame([], _ACK_SCHEMA)
-        return self.spark.read.schema(_ACK_SCHEMA).parquet(self.ack_path)
+    def _live(self) -> DataFrame:
+        """The fold: parked generations without a tombstone, unsorted."""
+        if os.path.isdir(self.log_path):
+            log = self.spark.read.schema(_LOG_SCHEMA).parquet(self.log_path)
+        else:
+            log = self.spark.createDataFrame([], _LOG_SCHEMA)
+        # no broadcast hint: tombstones grow with parked volume; AQE
+        # broadcasts the anti-join side while it is small
+        return (
+            log.filter(~F.col("acked"))
+            .join(log.filter("acked"), ["id", "attempts"], "left_anti")
+            .drop("acked")
+        )
 
     def pending(self) -> DataFrame:
         """All parked, un-acked rows, oldest first (``retry.py:96-120``)."""
-        if not os.path.isdir(self.msg_path):
-            from ..message import MESSAGE_SCHEMA
-
-            schema = T.StructType(
-                MESSAGE_SCHEMA.fields
-                + [
-                    T.StructField("stage", T.StringType()),
-                    T.StructField("retry_at", T.DoubleType()),
-                    T.StructField("attempts", T.IntegerType()),
-                ]
-            )
-            return self.spark.createDataFrame([], schema)
-        # no broadcast hint: acks grow with parked volume between
-        # compactions; AQE broadcasts the anti-join side while small
-        parked = self.spark.read.parquet(self.msg_path)
-        return parked.join(
-            self._acks(), ["id", "attempts"], "left_anti"
-        ).orderBy("id")
+        return self._live().orderBy("id")
 
     def retry_due(self, now: float | None = None) -> DataFrame:
         """Rows whose backoff has elapsed (``retry.py:225-240``)."""
         now = time.time() if now is None else now
-        return self.pending().filter(F.col("retry_at") <= now)
+        return self._live().filter(F.col("retry_at") <= now)
 
     def ack(self, df: DataFrame) -> None:
         """Tombstone parked rows (``retry.py:150-160`` delete).
 
         Rows from :meth:`pending`/:meth:`retry_due` carry ``attempts``;
-        a frame without it acks every parked generation of each id.
+        a frame without it acks every live generation of each id.
         """
         if "attempts" not in df.columns:
-            generations = self.spark.read.parquet(self.msg_path).select(
-                "id", "attempts"
-            )
-            df = df.select("id").join(generations, "id")
-        df.select("id", "attempts").withColumn(
-            "ack_ts", F.lit(time.time())
-        ).write.mode("append").parquet(self.ack_path)
+            df = df.select("id").join(self._live().select("id", "attempts"), "id")
+        _tombstones(df).write.mode("append").parquet(self.log_path)
 
     def is_empty(self) -> bool:
-        return self.pending().isEmpty()
+        return self._live().isEmpty()
 
     def retry_once(self, pipeline, now: float | None = None) -> dict[str, int]:
         """One retry sweep (the reference's background loop body,
         ``retry.py:130-170``): group due rows by re-entry stage, run the
-        pipeline from that stage, then settle every outcome —
+        pipeline from that stage, then settle every outcome in one
+        append —
 
         * processed/dropped → success, acked;
         * rejected → terminal, acked (handler side effects must not
@@ -141,61 +150,51 @@ class RetryStore:
           re-parked as generation ``attempts+1`` with doubled backoff
           (``retry_at = now + retry_delay * 2**attempts``).
         """
-        from ..message import DROPPED, ERROR, PROCESSED, REJECTED
-
         now = time.time() if now is None else now
-        due = self.retry_due(now)
-        # due rows per re-entry stage: the stage list and each stage's
-        # `retried` count from one job
+        # snapshot the due generations once: the settle append would
+        # otherwise be visible to these lazy frames on re-execution
+        due = self.retry_due(now).localCheckpoint(eager=True)
         stages = {
             r["stage"]: r["count"] for r in due.groupBy("stage").count().collect()
         }
         counts = {"retried": 0, "succeeded": 0, "rejected": 0, "reparked": 0}
-        for stage, n_due in stages.items():
-            # snapshot the due generation BEFORE writing acks/re-parks:
-            # the sweep's own appends would otherwise be visible to these
-            # lazy frames on re-execution (reading files it just wrote)
-            sel = due.filter(
-                F.col("stage").eqNullSafe(F.lit(stage))
-            ).localCheckpoint(eager=True)
-            batch = sel.select(*MESSAGE_COLUMNS).withColumn(
-                "state", F.lit(None).cast("string")
-            )
-            res = pipeline.run(batch, from_stage=stage)
-            outcome = res.all.persist()
-            try:
-                # one job settles the stage's outcome: the counts below come
-                # from this aggregate, and the re-park reads persisted rows
+        settle = _tombstones(due)
+        outcomes = []
+        try:
+            for stage, n_due in stages.items():
+                sel = due.filter(F.col("stage").eqNullSafe(F.lit(stage)))
+                batch = sel.select(*MESSAGE_COLUMNS).withColumn(
+                    "state", F.lit(None).cast("string")
+                )
+                outcome = pipeline.run(batch, from_stage=stage).all.persist()
+                outcomes.append(outcome)
+                # one job counts the stage's outcome; the re-parks below
+                # read the persisted rows
                 by_state = {
                     r["state"]: r["count"]
                     for r in outcome.groupBy("state").count().collect()
                 }
                 n_ok = by_state.get(PROCESSED, 0) + by_state.get(DROPPED, 0)
-                n_rej = by_state.get(REJECTED, 0)
                 n_fail = by_state.get(ERROR, 0) + by_state.get(WAIT_RETRY, 0)
-                # consume this generation whatever the outcome; failures
-                # re-enter below as generation attempts+1
-                self.ack(sel.select("id", "attempts"))
                 if n_fail:
                     failed = outcome.filter(F.col("state").isin(ERROR, WAIT_RETRY))
-                    repark = (
-                        self._park_rows(failed, stage, sel.select("id", "attempts"))
-                        .withColumn(
-                            "retry_at",
-                            F.lit(float(now))
-                            + F.lit(float(self.retry_delay))
-                            * F.pow(F.lit(2.0), F.col("attempts")),
-                        )
-                        .withColumn(
-                            "attempts", (F.col("attempts") + 1).cast("int")
-                        )
-                    )
-                    repark.write.mode("append").parquet(self.msg_path)
+                    repark = self._park_rows(
+                        failed, stage, sel.select("id", "attempts")
+                    ).withColumn(
+                        "retry_at",
+                        F.lit(float(now))
+                        + F.lit(float(self.retry_delay))
+                        * F.pow(F.lit(2.0), F.col("attempts")),
+                    ).withColumn("attempts", (F.col("attempts") + 1).cast("int"))
+                    settle = settle.unionByName(repark, allowMissingColumns=True)
                 counts["retried"] += n_due
                 counts["succeeded"] += n_ok
-                counts["rejected"] += n_rej
+                counts["rejected"] += by_state.get(REJECTED, 0)
                 counts["reparked"] += n_fail
-            finally:
+            if stages:
+                settle.write.mode("append").parquet(self.log_path)
+        finally:
+            for outcome in outcomes:
                 outcome.unpersist()
-                pipeline.release()
+            pipeline.release()
         return counts

@@ -201,6 +201,71 @@ def test_retry_repark_doubles_backoff(spark, tmp_path):
     assert rs.is_empty()
 
 
+def test_retry_ack_without_attempts(spark, tmp_path):
+    # a frame without `attempts` acks every live generation of its ids;
+    # on a store with nothing parked that is a no-op, not a missing path
+    rs = RetryStore(spark, str(tmp_path), channel="t", retry_delay=0.0)
+    msgs = messages_from_payloads(spark, [{"n": 1}, {"n": 2}])
+    rs.ack(msgs.select("id"))
+    assert rs.is_empty()
+
+    rs.store_until_retry(msgs, "flaky")
+    rs.ack(msgs.filter(F.col("payload").contains('"n": 1')).select("id"))
+    assert [r["payload"] for r in rs.pending().collect()] == ['{"n": 2}']
+
+
+def test_retry_sweep_settle_is_all_or_nothing(spark, tmp_path, monkeypatch):
+    # the acks and the re-parks of a sweep land in one write: if that
+    # write fails, every consumed generation is still parked
+    from pyspark.sql import DataFrameWriter
+
+    p = Pipeline("t").add(FuncNode(
+        lambda d: (_ for _ in ()).throw(RuntimeError("still down")), name="flaky"
+    ))
+    rs = RetryStore(spark, str(tmp_path), channel="t", retry_delay=0.0)
+    rs.store_until_retry(
+        messages_from_payloads(spark, [{"n": i} for i in range(4)]), "flaky"
+    )
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if "payload" in self._df.columns:
+            raise OSError("settle write failed")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(OSError, match="settle write failed"):
+        rs.retry_once(p, now=time.time() + 1)
+    monkeypatch.undo()
+
+    parked = rs.pending().collect()
+    assert len(parked) == 4
+    assert {r["attempts"] for r in parked} == {1}
+
+
+def test_retry_sweep_job_count(spark, tmp_path):
+    # one single-stage sweep: the due rows are read and checkpointed once,
+    # the pipeline runs once, and the settle is one append
+    p = Pipeline("t").add(
+        FuncNode(lambda d: (_ for _ in ()).throw(RuntimeError("still down"))
+                 if d["n"] % 2 else d, name="flaky"),
+    )
+    rs = RetryStore(spark, str(tmp_path), channel="t", retry_delay=0.0)
+    rs.store_until_retry(
+        messages_from_payloads(spark, [{"n": i} for i in range(4)]), "flaky"
+    )
+    sc = spark.sparkContext
+    group = f"retry_sweep_jobs_{tmp_path.name}"
+    sc.setJobGroup(group, "one retry sweep")
+    try:
+        counts = rs.retry_once(p, now=time.time() + 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == {"retried": 4, "succeeded": 2, "rejected": 0, "reparked": 2}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
+
+
 def test_store_meta_node_param(spark, store):
     # nodes.py:119-121,216-222 store_meta: after the node, meta[k] is
     # appended to the audit store's meta list, queryable via search

@@ -3,8 +3,10 @@ pypeman/test.py + nodes.py:244-343 mock hooks)."""
 
 import json
 
+from pyspark.sql import functions as F
+
 from pypeman_spark import Pipeline, messages_from_payloads
-from pypeman_spark.operators import FuncNode
+from pypeman_spark.operators import FuncNode, Reject
 from pypeman_spark.testing import mock_stage, observe_outcomes, spy_stage
 
 
@@ -45,6 +47,18 @@ def test_handle_and_wait(spark):
     row = _pipe().handle_and_wait(spark, {"n": 4})
     assert json.loads(row["payload"]) == {"n": 50}
     assert row["state"] == "processed"
+
+
+def test_handle_and_wait_releases_shared_frames(spark):
+    # a handler chain shares the stage output across outcome arms; the
+    # synchronous run unpersists it once the row is collected
+    p = Pipeline("t").add(
+        Reject(condition=F.col("payload").contains('"n": 4'), name="rej")
+    ).add_reject_nodes(FuncNode(lambda d: {**d, "seen": True}, name="on_rej"))
+    row = p.handle_and_wait(spark, {"n": 4})
+    assert row["state"] == "rejected"
+    assert json.loads(row["payload"]) == {"n": 4, "seen": True}
+    assert p._persisted == []
 
 
 def test_observe_outcomes(spark):
