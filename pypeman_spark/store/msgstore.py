@@ -508,19 +508,21 @@ class MessageStore:
             self._release_lock()
 
     # -- reads -----------------------------------------------------------
-    def _messages(self) -> DataFrame:
+    def _no_messages(self) -> DataFrame:
         from ..message import MESSAGE_SCHEMA
 
-        empty_schema = T.StructType(
+        return self.spark.createDataFrame([], T.StructType(
             MESSAGE_SCHEMA.fields + [T.StructField("date", T.DateType())]
-        )
+        ))
+
+    def _messages(self) -> DataFrame:
         # existence checks avoid a logged JVM FileNotFound on fresh
         # stores and UNABLE_TO_INFER_SCHEMA on a store whose every date
         # partition was expired by apply_retention (dir exists, empty)
         if not os.path.isdir(self.msg_path) or not any(
             n.startswith("date=") for n in os.listdir(self.msg_path)
         ):
-            return self.spark.createDataFrame([], empty_schema)
+            return self._no_messages()
         return self.spark.read.parquet(self.msg_path)
 
     def _events(self) -> DataFrame:
@@ -733,7 +735,9 @@ class MessageStore:
 
 
 class NullMessageStore(MessageStore):
-    """No-op store (``msgstore.py:315``)."""
+    """No-op store (``msgstore.py:315``), pypeman's default: it keeps
+    nothing on disk. Every write is dropped and every read sees an
+    empty store."""
 
     def __init__(self, spark: SparkSession, channel: str = "default"):
         self.spark = spark
@@ -742,8 +746,29 @@ class NullMessageStore(MessageStore):
     def store(self, df: DataFrame, state: str = PENDING) -> None:
         pass
 
-    def _messages(self) -> DataFrame:  # pragma: no cover
-        raise RuntimeError("NullMessageStore is write-only/no-op")
+    def _append_events(self, rows: list[tuple]) -> None:
+        pass
+
+    def change_message_states(self, df: DataFrame, state_col: str = "state") -> None:
+        pass
+
+    def add_meta_from_messages(self, df: DataFrame) -> None:
+        pass
+
+    def apply_retention(self, keep_days: int | None = None, before=None) -> list[str]:
+        return []
+
+    def compact(self) -> None:
+        pass
+
+    def _messages(self) -> DataFrame:
+        return self._no_messages()
+
+    def _events(self) -> DataFrame:
+        return self.spark.createDataFrame([], _EVENT_SCHEMA)
+
+    def _id_dates(self, msg_id: str) -> list | None:
+        return None
 
 
 class MemoryMessageStore(MessageStore):

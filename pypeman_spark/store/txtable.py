@@ -53,6 +53,17 @@ its load-bearing core — no proprietary code, just the public recipe:
   copy-on-write rewrite, so vectors stay metadata-sized by
   construction.
 
+Row-level DML: ``delete_keys``, ``delete_where``, ``update_where``,
+``replace_where`` and ``merge`` each pick their candidate files and
+their plan shape, then hand the row work to one step,
+:meth:`TxTable._dml_step`: the files' target rows, a ``kill`` Column
+and an optional post-image of the killed rows. ``mode="dv"``
+(merge-on-read) caches the killed rows with their positions and
+decides per file: a vectored file stages only the post-images, an
+escalated file is read again and rewritten. ``mode="rewrite"``
+(copy-on-write) is that same path with every touched file escalated,
+so it reads no row position at all.
+
 Commit protocol: every mutation runs through one attempt runner,
 :meth:`TxTable._run_commit`. A mutation supplies only its
 single-attempt body, which turns a replayed snapshot into log actions
@@ -79,6 +90,7 @@ the sqlite store commits the row transactionally).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -660,6 +672,16 @@ def _schema_json_with(struct, dropped: "list[str]") -> str:
     if dropped:
         d["x_dropped"] = sorted(set(dropped))
     return json.dumps(d)
+
+
+def _dml_mode(op: str, mode: str) -> str:
+    """A row-level DML verb's ``mode``, checked here for all of them:
+    "rewrite" (copy-on-write) or "dv" (merge-on-read)."""
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(
+            f"{op} mode must be 'rewrite' or 'dv', got {mode!r}"
+        )
+    return mode
 
 
 def _v2_bump(st: LogState, dv_acts: "list[dict]") -> "list[dict]":
@@ -2799,12 +2821,7 @@ class TxTable:
         semantics to the rewrite path): matched positions go dead in
         the deletion vectors, upserted rows append, untouched rows in
         the same buckets stay in place."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"merge_upsert mode must be 'rewrite' or 'dv', "
-                f"got {mode!r}"
-            )
-        if mode == "dv":
+        if _dml_mode("merge_upsert", mode) == "dv":
             tbl = self.table_schema()
             upd: "dict[str, object]" = {}
             if tbl is not None:
@@ -2907,15 +2924,10 @@ class TxTable:
         the change feed reconstructs update_pre/postimages from the
         position diff joined with the new adds. First dv commit bumps
         the protocol to v3; :meth:`compact` materializes vectors.
-        Cost note: dv mode evaluates the target-source join twice
-        (once to plan positions, once to stage post-images) but
-        stages only the churn — the trade wins whenever staging the
-        touched buckets would dominate, i.e. everywhere past toy
-        scale."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"merge mode must be 'rewrite' or 'dv', got {mode!r}"
-            )
+        Cost note: dv mode caches the join's killed and inserted rows
+        once, stages the post-images from that cache and joins again
+        only the escalated files."""
+        _dml_mode("merge", mode)
         upd = {
             c: (F.expr(e) if isinstance(e, str) else e)
             for c, e in (when_matched_update or {}).items()
@@ -2941,11 +2953,18 @@ class TxTable:
             }
 
         source = source.cache()
+        s = source.withColumn("__s", F.lit(1)).alias("s")
+
+        def rows(t: "DataFrame | None") -> DataFrame:
+            # the full-outer join; without target files, all inserts
+            if t is None:
+                return s.withColumn("__t", F.lit(None).cast("int"))
+            return t.alias("t").join(s, on=self.key_cols, how="full_outer")
 
         def attempt(st: LogState) -> _Plan:
-            live, schema = st.live, st.schema
+            schema = st.schema
             tb, scopes = self._touched_scopes(source)
-            old = self._old_files(live, set(tb), scopes)
+            old = self._old_files(st.live, set(tb), scopes)
             # table columns + types: current schema, plus source
             # columns when inserting as-is (schema evolution)
             from pyspark.sql.types import StructType
@@ -2960,6 +2979,7 @@ class TxTable:
                 for f in source.schema.fields:
                     tbl_cols.append(f.name)
                     types[f.name] = f.dataType
+            t_cols = set(tbl_cols) if old else set()
             schema_act = []
             if when_not_matched_insert is True or schema is None:
                 schema_act = self._evolved_schema_action(source, schema)
@@ -2979,17 +2999,6 @@ class TxTable:
             def null_of(c):
                 return F.lit(None).cast(types[c])
 
-            s = source.withColumn("__s", F.lit(1)).alias("s")
-            if old:
-                t = self._read_files(
-                    old, schema, dvs=live,
-                    with_meta=(mode == "dv"),
-                ).withColumn("__t", F.lit(1)).alias("t")
-                j = t.join(s, on=self.key_cols, how="full_outer")
-                t_cols = set(t.columns)
-            else:
-                j = s.withColumn("__t", F.lit(None).cast("int"))
-                t_cols = set()
             m_t = F.col("__t").isNotNull()
             m_s = F.col("__s").isNotNull()
             matched = m_t & m_s
@@ -3011,11 +3020,13 @@ class TxTable:
             upd_gate = matched if when_matched_condition is None else (
                 matched & when_matched_condition
             )
-            keep = F.lit(True)
-            if del_cond is not None:
-                keep = keep & ~(matched & F.coalesce(
-                    del_cond, F.lit(False)
-                ))
+            # rows a clause actually KILLS: updated (the post-image
+            # stages) or deleted (gone); matched rows no clause fires
+            # on keep their place
+            kill_del = F.lit(False) if del_cond is None else (
+                matched & F.coalesce(del_cond, F.lit(False))
+            )
+            keep = ~kill_del
             if when_not_matched_insert is False:
                 keep = keep & m_t
             out_cols = []
@@ -3036,48 +3047,11 @@ class TxTable:
                 else:
                     v = F.when(m_t, t_val(c)).otherwise(ins_v)
                 out_cols.append(v.alias(c))
-            dv_acts: list[dict] = []
-            removed = old
-            if mode == "dv" and old:
-                # rows a clause actually KILLS: updated (post-image
-                # re-appends below) or deleted (gone). Matched rows
-                # no clause fires on stay alive in place — dv merge
-                # stages only the churn.
-                kill_upd = upd_gate if upd else F.lit(False)
-                kill_del = (
-                    matched & F.coalesce(del_cond, F.lit(False))
-                    if del_cond is not None else F.lit(False)
-                )
-                killg = kill_upd | kill_del
-                dv_acts, rewrite = self._dv_plan_matched(
-                    j.where(killg).select("__txdv_fp", "__txdv_ri"),
-                    old, live,
-                )
-                dv_uris = [
-                    _file_uri(os.path.join(
-                        self.path, a["dv"]["file"]
-                    )) for a in dv_acts
-                ]
-                esc_uris = [
-                    _file_uri(os.path.join(self.path, f))
-                    for f in rewrite
-                ]
-                fp = F.col("__txdv_fp")
-                stage_gate = keep & (
-                    (~m_t)  # inserts
-                    # updated rows of vectored files re-append
-                    | ((fp.isin(dv_uris) if dv_uris
-                        else F.lit(False)) & killg)
-                    # over-dead files: full copy-on-write rewrite
-                    | (fp.isin(esc_uris) if esc_uris
-                       else F.lit(False))
-                )
-                merged = j.where(stage_gate).select(*out_cols)
-                removed = rewrite
-            else:
-                merged = j.where(keep).select(*out_cols)
-
-            adds = self._stage(merged, schema_json=eff)
+            adds, removed, dv_acts = self._dml_step(
+                st, old, (upd_gate if upd else F.lit(False)) | kill_del,
+                rows=rows, post=lambda d: d.where(keep).select(*out_cols),
+                mode=mode, schema_json=eff,
+            )
             self._validate_adds(adds, eff, st.constraints)
             return _Plan(
                 adds + [{"remove": {"file": f}} for f in removed]
@@ -3102,40 +3076,28 @@ class TxTable:
         buckets — deleting K keys from a 100 TB table is K positions
         of commit-log metadata, zero data rewritten. Same per-file
         escalation bounds; first dv commit bumps the protocol to v3."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"delete_keys mode must be 'rewrite' or 'dv', "
-                f"got {mode!r}"
+        _dml_mode("delete_keys", mode)
+        keys = keys.select(*self.key_cols).distinct().withColumn(
+            "__s", F.lit(1)
+        ).cache()
+
+        def rows(t: DataFrame) -> DataFrame:  # target rows, keys tagged
+            return t.join(keys, on=self.key_cols, how="left").select(
+                *t.columns, "__s"
             )
-        keys = keys.select(*self.key_cols).cache()
 
         def attempt(st: LogState) -> "_Plan | int":
-            live, schema = st.live, st.schema
             tb, scopes = self._touched_scopes(keys)
-            old = self._old_files(live, set(tb), scopes)
+            old = self._old_files(st.live, set(tb), scopes)
             if not old:
                 return st.version  # nothing to delete
-            dv_acts: list[dict] = []
-            if mode == "dv":
-                matched = self._read_files(
-                    old, schema, dvs=live, with_meta=True
-                ).join(
-                    keys, on=self.key_cols, how="left_semi"
-                ).select("__txdv_fp", "__txdv_ri")
-                dv_acts, rewrite = self._dv_plan_matched(
-                    matched, old, live
-                )
-                if not dv_acts and not rewrite:
-                    return st.version  # no key present: provable no-op
-            else:
-                rewrite = old
-            adds: list[dict] = []
-            if rewrite:
-                cur = self._read_files(rewrite, schema, dvs=live)
-                kept = cur.join(keys, on=self.key_cols, how="left_anti")
-                adds = self._stage(kept, schema_json=schema)
+            adds, removed, dv_acts = self._dml_step(
+                st, old, F.col("__s").isNotNull(), rows=rows, mode=mode,
+            )
+            if not (removed or dv_acts):
+                return st.version  # no key present: provable no-op
             return _Plan(
-                adds + [{"remove": {"file": f}} for f in rewrite]
+                adds + [{"remove": {"file": f}} for f in removed]
                 + dv_acts,
                 staged=adds, buckets=tb, scopes=scopes,
             )
@@ -3186,89 +3148,121 @@ class TxTable:
                 "delete_where with no predicates would truncate the "
                 "table — pass predicates, or delete_keys(snapshot())"
             )
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"delete_where mode must be 'rewrite' or 'dv', "
-                f"got {mode!r}"
-            )
-        self._build_cond(preds)  # fail fast on unknown ops
+        _dml_mode("delete_where", mode)
+        cond = self._build_cond(preds)  # fail fast on unknown ops
 
         def attempt(st: LogState) -> "_Plan | int":
-            live, schema = st.live, st.schema
-            cm = _schema_colmap(schema)
-            cands, full = self._classify_candidates(live, preds, cm)
-            if not cands:
+            cands, full = self._classify_candidates(
+                st.live, preds, _schema_colmap(st.schema)
+            )
+            adds, removed, dv_acts = self._dml_step(
+                st, [f for f in cands if f not in full], cond, mode=mode,
+            )
+            if not (full or removed or dv_acts):
                 return st.version  # provably nothing to delete
-            mixed = [f for f in cands if f not in full]
-            dv_acts: list[dict] = []
-            if mode == "dv" and mixed:
-                dv_acts, rewrite = self._dv_plan(mixed, preds, schema,
-                                                 live)
-                if not dv_acts and not rewrite and not full:
-                    return st.version  # nothing actually matched
-            else:
-                rewrite = mixed
-            adds: list[dict] = []
-            if rewrite:
-                cur = self._read_files(rewrite, schema, dvs=live)
-                kept = cur.where(
-                    ~F.coalesce(self._build_cond(preds), F.lit(False))
-                )
-                adds = self._stage(kept, schema_json=schema)
-            removed = sorted(full) + rewrite
-            return self._dml_plan(live, adds, removed, dv_acts)
+            return self._dml_plan(
+                st.live, adds, sorted(full) + removed, dv_acts,
+            )
 
         return self._run_commit("delete", attempt, txn=txn)
 
-    def _dv_plan(
-        self, files: "list[str]",
-        preds: "tuple[tuple[str, str, object], ...]",
-        schema: "str | None", live: "dict[str, dict]",
-    ) -> "tuple[list[dict], list[str]]":
-        """(dv actions, files escalating to copy-on-write) for a
-        ``mode="dv"`` delete: match ``preds`` over ``files`` with the
-        row positions exposed, decide PER FILE from counts alone
-        (before any position is collected) whether the cumulative
-        vector stays inside the metadata bounds, then gather positions
-        only for the files that do. Already-dead rows are filtered at
-        read (``dvs=live``) so they can't be re-matched; each action
-        publishes the CUMULATIVE union with the file's existing
-        vector (replay is last-writer-wins per file)."""
-        cond = F.coalesce(self._build_cond(preds), F.lit(False))
-        matched = self._read_files(
-            files, schema, dvs=live, with_meta=True
-        ).where(cond).select("__txdv_fp", "__txdv_ri")
-        return self._dv_plan_matched(matched, files, live)
+    def _dml_step(
+        self, st: LogState, files: "list[str]", kill: "F.Column",
+        rows: "typing.Callable | None" = None,
+        post: "typing.Callable | None" = None, mode: str = "rewrite",
+        schema_json: "str | None" = None,
+    ) -> "tuple[list[dict], list[str], list[dict]]":
+        """The one row-level DML step (module docstring, "Row-level
+        DML"): (staged adds, removed files, dv actions) that kill the
+        ``kill`` rows of ``files`` in snapshot ``st``, staged by one
+        :meth:`_stage` call under ``schema_json`` (default: the
+        snapshot's schema).
 
-    def _dv_plan_matched(
-        self, matched: DataFrame, files: "list[str]",
+        ``rows(t)`` turns the target rows ``t`` of ``files``, tagged
+        ``__t``, into the rows the verb works on (default: ``t``); a
+        joined source tags its rows ``__s``. ``rows(None)`` stands for
+        no files. ``post(d)`` is the staged image of rows ``d``: the
+        row itself where ``kill`` is false, its post-image (or no row)
+        where it is true, the inserted row where ``__t`` is null.
+        Without ``post``, killed rows are dropped (a delete).
+
+        ``mode="rewrite"`` escalates every file: it stages the image of
+        all their rows and removes them, and reads no row position.
+        ``mode="dv"`` caches the killed and inserted rows with their
+        positions, lets :meth:`_dv_plan_cached` vector or escalate each
+        file, stages post-images and inserts from that cache, and reads
+        again only the escalated files, staged as in rewrite."""
+        kill = F.coalesce(kill, F.lit(False))
+        new = F.col("__t").isNull()  # a row no target file holds
+
+        def frame(fs: "list[str]", meta: bool = False):
+            t = self._read_files(
+                fs, st.schema, dvs=st.live, with_meta=meta,
+            ).withColumn("__t", F.lit(1)) if fs else None
+            return (rows or (lambda t: t))(t)
+
+        def image(d: DataFrame) -> DataFrame:
+            d = post(d) if post is not None else d.where(~kill)
+            return d.drop("__t", "__s", "__txdv_fp", "__txdv_ri")
+
+        parts: "list[DataFrame]" = []
+        removed, dv_acts, changed = list(files), [], None
+        try:
+            if mode == "rewrite" or not files:
+                d = frame(files)
+                parts = [] if d is None else [image(d)]
+            else:
+                changed = frame(files, meta=True).where(kill | new)
+                if post is None:  # a delete stages no killed row
+                    changed = changed.select("__txdv_fp", "__txdv_ri")
+                changed = changed.cache()
+                dv_acts, removed, n_new = self._dv_plan_cached(
+                    changed, files, st.live
+                )
+                if post is not None and (dv_acts or n_new):
+                    uris = [_file_uri(os.path.join(
+                        self.path, a["dv"]["file"]
+                    )) for a in dv_acts]
+                    parts.append(image(changed.where(
+                        F.col("__txdv_fp").isin(uris) | new
+                    )))
+                if removed:
+                    parts.append(image(frame(removed).where(~new)))
+            adds = self._stage(
+                functools.reduce(DataFrame.unionByName, parts),
+                schema_json=schema_json or st.schema,
+            ) if parts else []
+        finally:
+            if changed is not None:
+                changed.unpersist()
+        return adds, removed, dv_acts
+
+    def _dv_plan_cached(
+        self, changed: DataFrame, files: "list[str]",
         live: "dict[str, dict]",
-    ) -> "tuple[list[dict], list[str]]":
-        """Escalation core shared by predicate and by-key dv deletes:
-        ``matched`` carries the to-delete rows' (``__txdv_fp``,
-        ``__txdv_ri``) — see :meth:`_dv_plan` for the contract."""
+    ) -> "tuple[list[dict], list[str], int]":
+        """(dv actions, files escalating to copy-on-write, inserted
+        rows) for the cached ``changed`` rows of a ``mode="dv"``
+        :meth:`_dml_step` over ``files``: killed rows carry their
+        (``__txdv_fp``, ``__txdv_ri``) positions, inserted rows a null
+        ``__txdv_fp``. Decides PER FILE from counts alone (before any
+        position is collected) whether the cumulative vector stays
+        inside the metadata bounds, then gathers positions only for
+        the files that do. Already-dead rows were filtered at read, so
+        they can't be re-matched; each action publishes the CUMULATIVE
+        union with the file's existing vector (replay is
+        last-writer-wins per file)."""
         uri2rel = {
             _file_uri(os.path.join(self.path, f)): f for f in files
         }
-        # two bounded driver reads over one cached match: counts first
-        # (decide per-file BEFORE collecting any position), positions
-        # only for files staying under the caps
-        matched = matched.cache()
-        try:
-            return self._dv_plan_cached(matched, uri2rel, live)
-        finally:
-            matched.unpersist()
-
-    def _dv_plan_cached(
-        self, matched: DataFrame, uri2rel: "dict[str, str]",
-        live: "dict[str, dict]",
-    ) -> "tuple[list[dict], list[str]]":
         counts = {
-            uri2rel[r["__txdv_fp"]]: int(r["cnt"])
-            for r in matched.groupBy("__txdv_fp").agg(
+            r["__txdv_fp"]: int(r["cnt"])
+            for r in changed.groupBy("__txdv_fp").agg(
                 F.count("*").alias("cnt")
             ).collect()
         }
+        n_new = counts.pop(None, 0)
+        counts = {uri2rel[u]: n for u, n in counts.items()}
         escalate: list[str] = []
         dv_files: list[str] = []
         for f, cnt in sorted(counts.items()):
@@ -3315,11 +3309,11 @@ class TxTable:
             rel2uri = {rel: u for u, rel in uri2rel.items()}
             for chunk in chunks:
                 per: "dict[str, set[int]]" = {}
-                for r in matched.where(
+                for r in changed.where(
                     F.col("__txdv_fp").isin(
                         [rel2uri[f] for f in chunk]
                     )
-                ).collect():
+                ).select("__txdv_fp", "__txdv_ri").collect():
                     per.setdefault(
                         uri2rel[r["__txdv_fp"]], set()
                     ).add(int(r["__txdv_ri"]))
@@ -3350,7 +3344,7 @@ class TxTable:
                         dv_acts.append(
                             {"dv": {"file": f, "pos": enc, "card": card}}
                         )
-        return dv_acts, sorted(escalate)
+        return dv_acts, sorted(escalate), n_new
 
     def update_where(
         self, assignments: "dict[str, object]",
@@ -3386,11 +3380,7 @@ class TxTable:
             raise ValueError("update_where needs predicates")
         if not assignments:
             raise ValueError("update_where needs assignments")
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"update_where mode must be 'rewrite' or 'dv', "
-                f"got {mode!r}"
-            )
+        _dml_mode("update_where", mode)
         bad = set(assignments) & (
             set(self.key_cols) | set(self.partition_by)
         )
@@ -3398,73 +3388,35 @@ class TxTable:
             raise ValueError(
                 f"cannot update key/partition column(s): {sorted(bad)}"
             )
-        exprs = {
-            c: (F.expr(e) if isinstance(e, str) else e)
+        gate = F.coalesce(self._build_cond(preds), F.lit(False))
+        updated = {
+            c: F.when(gate, F.expr(e) if isinstance(e, str) else e)
+            .otherwise(F.col(c))
             for c, e in assignments.items()
         }
-        self._build_cond(preds)
 
         def attempt(st: LogState) -> "_Plan | int":
-            live, schema = st.live, st.schema
-            cm = _schema_colmap(schema)
-            cands, _full = self._classify_candidates(live, preds, cm)
+            cands, _full = self._classify_candidates(
+                st.live, preds, _schema_colmap(st.schema)
+            )
             if not cands:
                 return st.version
             unknown = set(assignments) - {
-                f.name for f in self.table_schema().fields
-            } if schema is not None else set()
+                f["name"] for f in json.loads(st.schema)["fields"]
+            } if st.schema is not None else set()
             if unknown:
                 raise ValueError(
                     f"update targets unknown column(s): {sorted(unknown)}"
                 )
-            gate = F.coalesce(self._build_cond(preds), F.lit(False))
-            dv_acts: list[dict] = []
-            if mode == "dv":
-                matched = self._read_files(
-                    cands, schema, dvs=live, with_meta=True
-                ).where(gate).cache()
-                try:
-                    dv_acts, rewrite = self._dv_plan_matched(
-                        matched.select("__txdv_fp", "__txdv_ri"),
-                        cands, live,
-                    )
-                    if not dv_acts and not rewrite:
-                        return st.version  # nothing matched: provable no-op
-                    adds: list[dict] = []
-                    dv_rel = [a["dv"]["file"] for a in dv_acts]
-                    if dv_rel:
-                        uris = [
-                            _file_uri(os.path.join(self.path, f))
-                            for f in dv_rel
-                        ]
-                        upd_rows = matched.where(
-                            F.col("__txdv_fp").isin(uris)
-                        ).drop("__txdv_fp", "__txdv_ri").withColumns(
-                            exprs
-                        )
-                        adds += self._stage(upd_rows, schema_json=schema)
-                    if rewrite:
-                        # over-dead files: copy-on-write in the SAME
-                        # commit, updates applied in place
-                        cur2 = self._read_files(rewrite, schema, dvs=live)
-                        adds += self._stage(cur2.withColumns({
-                            c: F.when(gate, e).otherwise(F.col(c))
-                            for c, e in exprs.items()
-                        }), schema_json=schema)
-                finally:
-                    matched.unpersist()
-                removed = list(rewrite)
-            else:
-                cur = self._read_files(cands, schema, dvs=live)
-                updated = cur.withColumns({
-                    c: F.when(gate, e).otherwise(F.col(c))
-                    for c, e in exprs.items()
-                })
-                adds = self._stage(updated, schema_json=schema)
-                removed = list(cands)
-            self._validate_adds(adds, schema, st.constraints)
+            adds, removed, dv_acts = self._dml_step(
+                st, cands, gate, post=lambda d: d.withColumns(updated),
+                mode=mode,
+            )
+            if not (removed or dv_acts):
+                return st.version  # nothing matched: provable no-op
+            self._validate_adds(adds, st.schema, st.constraints)
             return self._dml_plan(
-                live, adds, removed, dv_acts, _v2_bump(st, dv_acts),
+                st.live, adds, removed, dv_acts, _v2_bump(st, dv_acts),
             )
 
         return self._run_commit("update", attempt, txn=txn)
@@ -3499,11 +3451,7 @@ class TxTable:
         outside rows."""
         if not preds:
             raise ValueError("replace_where needs predicates")
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(
-                f"replace_where mode must be 'rewrite' or 'dv', "
-                f"got {mode!r}"
-            )
+        _dml_mode("replace_where", mode)
         cond = self._build_cond(preds)
         n_out = df.where(~F.coalesce(cond, F.lit(False))).count()
         if n_out:
@@ -3513,28 +3461,20 @@ class TxTable:
             )
 
         def attempt(st: LogState) -> _Plan:
-            live, schema = st.live, st.schema
-            cm = _schema_colmap(schema)
-            cands, full = self._classify_candidates(live, preds, cm)
-            schema_act = self._evolved_schema_action(df, schema)
-            eff = schema_act[0]["schema"] if schema_act else schema
+            cands, full = self._classify_candidates(
+                st.live, preds, _schema_colmap(st.schema)
+            )
+            schema_act = self._evolved_schema_action(df, st.schema)
+            eff = schema_act[0]["schema"] if schema_act else st.schema
             adds = self._stage(df, schema_json=eff)
-            rewrite = [f for f in cands if f not in full]
-            dv_acts: list[dict] = []
-            if mode == "dv" and rewrite:
-                # straddlers: inside-region rows go dead in the
-                # vector; over-dead files escalate to the rewrite
-                dv_acts, rewrite = self._dv_plan(
-                    rewrite, preds, schema, live
-                )
-            if rewrite:
-                outside = self._read_files(rewrite, schema, dvs=live).where(
-                    ~F.coalesce(self._build_cond(preds), F.lit(False))
-                )
-                adds += self._stage(outside, schema_json=schema)
+            # straddlers: their inside-region rows die
+            more, removed, dv_acts = self._dml_step(
+                st, [f for f in cands if f not in full], cond, mode=mode,
+            )
+            adds += more
             self._validate_adds(adds, eff, st.constraints)
             return self._dml_plan(
-                live, adds, sorted(full) + rewrite, dv_acts,
+                st.live, adds, sorted(full) + removed, dv_acts,
                 schema_act + _v2_bump(st, dv_acts),
             )
 

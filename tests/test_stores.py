@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 
 from pypeman_spark import Pipeline, messages_from_payloads
 from pypeman_spark.operators import FuncNode, Reject
-from pypeman_spark.store import KVStore, MemoryMessageStore, RetryStore
+from pypeman_spark.store import (
+    KVStore, MemoryMessageStore, NullMessageStore, RetryStore,
+)
+from pypeman_spark.streaming.channel import StreamingChannel
 
 
 @pytest.fixture()
@@ -91,6 +94,27 @@ def test_delete_many_single_append(spark, store):
     assert store.total() == 2
     left = sorted(r["id"] for r in store.current().select("id").collect())
     assert left == ids[3:]
+
+
+def test_null_message_store_is_a_noop(spark, tmp_path):
+    """pypeman's default store keeps nothing: a channel batch runs
+    through it, every write is dropped, and every read sees an empty
+    store."""
+    store = NullMessageStore(spark, channel="null")
+    pipe = Pipeline("null").add(FuncNode(lambda d: {**d, "x": 1}))
+    chan = StreamingChannel(None, pipe, store,
+                            checkpoint_dir=str(tmp_path / "ckpt"))
+    chan.process_batch(messages_from_payloads(spark, [{"n": 1}, {"n": 2}]), 0)
+    assert chan.batches_processed == 1
+    store.change_message_state("m1", "processed")
+    store.add_message_meta_infos("m1", "k", "v")
+    store.delete_many(["m1"])
+    store.compact()
+    assert store.apply_retention(keep_days=1) == []
+    assert store.total() == 0
+    assert store.search(text="n").count() == 0
+    assert store.get("m1") is None
+    assert store.get_preview_str("m1") is None
 
 
 def test_retry_store_cycle(spark, tmp_path):

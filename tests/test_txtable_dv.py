@@ -754,3 +754,97 @@ def test_dv_foreach_batch_merge_sink(spark, tmp_path):
     assert t.version() == v
     rows = {r["k"]: r["val"] for r in t.snapshot().collect()}
     assert rows[3] == "B0" and rows[50] == "I0" and len(rows) == 41
+
+
+# ------------------------------------------- one row-level DML step --
+
+
+@pytest.mark.parametrize("verb", ["delete_where", "delete_keys", "merge"])
+def test_dv_matches_rewrite_when_one_file_vectors_one_escalates(
+    spark, tmp_path, verb
+):
+    """Copy-on-write is the dv step with every file escalated: one dv
+    commit that vectors one file (1 of ~20 rows dead) and escalates
+    the other (3/4 dead, past _DV_MAX_FRAC) leaves the same table and
+    the same change feed as the rewrite."""
+    rows = [(i, f"v{i}") for i in range(40)]
+    ta = _mk(spark, tmp_path / "dv", n_buckets=2)
+    tb = _mk(spark, tmp_path / "rw", n_buckets=2)
+    for t in (ta, tb):
+        t.append(_df(spark, rows))
+    by: dict = {}
+    for r in _df(spark, rows).select(
+        "k", ta._bucket_col().alias("b")
+    ).collect():
+        by.setdefault(r["b"], []).append(r["k"])
+    few, most = by.values()
+    most = most[: len(most) * 3 // 4]
+    doomed = [few[0]] + most
+
+    def run(t, mode):
+        if verb == "delete_where":
+            return t.delete_where(("k", "in", tuple(doomed)), mode=mode)
+        if verb == "delete_keys":
+            return t.delete_keys(spark.createDataFrame(
+                [(k,) for k in doomed], "k long"
+            ), mode=mode)
+        src = spark.createDataFrame(
+            [(few[0], -1), (few[1], 5), (100, 3)]
+            + [(k, 20) for k in most],
+            "k long, delta long",
+        )
+        return t.merge(
+            src,
+            when_matched_update={"val": "concat(t.val, '+', s.delta)"},
+            when_matched_delete="s.delta < 0",
+            when_not_matched_insert={"val": "concat('ins', s.delta)"},
+            when_matched_condition="s.delta >= 10",
+            mode=mode,
+        )
+
+    va, vb = run(ta, "dv"), run(tb, "rewrite")
+    _adds, removes, dvs, _info = ta._commit_actions(va)
+    assert len(dvs) == 1 and len(removes) == 1  # vectored + escalated
+    assert sorted(tuple(r) for r in ta.snapshot().collect()) == sorted(
+        tuple(r) for r in tb.snapshot().collect()
+    )
+
+    def feed(t, v):
+        return sorted(
+            (r["_change_type"], r["k"], r["val"])
+            for r in t.table_changes(v - 1, v).collect()
+        )
+
+    assert feed(ta, va) == feed(tb, vb)
+
+
+def test_rewrite_mode_reads_no_row_positions(spark, tmp_path):
+    """Rewrite mode builds no vector, so no frame the five row-level
+    verbs stage may read a row position (``_metadata``)."""
+    t = _mk(spark, tmp_path, n_buckets=2)
+    t.append(_df(spark, [(i, f"v{i}") for i in range(20)]))
+    plans = []
+    real_stage = t._stage
+
+    def hooked_stage(df, **kw):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        return real_stage(df, **kw)
+
+    t._stage = hooked_stage
+    t.delete_keys(spark.createDataFrame([(1,)], "k long"))
+    t.delete_where(("k", "=", 2))
+    t.update_where({"val": "upper(val)"}, ("k", "<", 5))
+    t.replace_where(_df(spark, [(7, "r7")]), ("k", "between", (6, 8)))
+    t.merge(
+        spark.createDataFrame([(3, 1), (50, 2)], "k long, delta long"),
+        when_matched_update={"val": "concat(t.val, s.delta)"},
+        when_not_matched_insert={"val": "'ins'"},
+    )
+    # replace_where stages its rows, then the straddlers' outside rows
+    assert len(plans) == 6
+    for p in plans:
+        assert not any(
+            m in p for m in ("_metadata", "row_index", "__txdv_fp")
+        ), p
+    assert t.stats().get("dv_files", 0) == 0
+    assert {r["k"]: r["val"] for r in t.snapshot().collect()}[3] == "V31"

@@ -12,7 +12,9 @@ scale-relevant ratios the design claims:
   is O(log), not O(data).
 - CDC costs are per-commit-diff, not per-table.
 
-Run: ``python tools/txtable_bench.py`` (sf0.1 default).
+Run: ``python tools/txtable_bench.py`` (sf0.1 default;
+``SPARK_GRAFT_SF_DIR`` picks the scale, ``SPARK_GRAFT_CPUS`` the Spark
+cores, default 32). The JSON line records ``cpus`` and ``nproc``.
 """
 
 from __future__ import annotations
@@ -41,8 +43,11 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("txtable_bench", cpus=cpus)
     root = tempfile.mkdtemp(prefix="txbench_")
+    # timings compare only at the same core count: record both the
+    # Spark cores asked for and the cores this process may run on
     out: dict = {"metric": "txtable_lifecycle", "unit": "sec",
-                 "sf_dir": sf_dir}
+                 "sf_dir": sf_dir, "cpus": cpus,
+                 "nproc": len(os.sched_getaffinity(0))}
 
     # the synthetic lineitem does NOT keep (orderkey, linenumber)
     # unique (118k dup pairs at sf0.1) — dedupe to honor the merge
