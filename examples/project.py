@@ -20,7 +20,10 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F
+
 from pypeman_spark import Pipeline, get_spark
+from pypeman_spark.message import PROCESSED
 from pypeman_spark.operators import FuncNode, Log
 from pypeman_spark.plans.admin import ChannelRegistry
 from pypeman_spark.sources import FileWatcher, cron_ticks
@@ -53,6 +56,19 @@ def build_project(spark, base_dir: str, watch_dir: str):
     return registry
 
 
+def _tick(pipe, store, msgs) -> int:
+    """Store, run and settle one tick the way a channel batch does: the
+    settle append and the processed count read one persisted run."""
+    store.store(msgs)
+    out = pipe.run(msgs).all.persist()
+    try:
+        store.settle(out)
+        return out.filter(F.col("state") == PROCESSED).count()
+    finally:
+        out.unpersist()
+        pipe.release()
+
+
 def run_periodic_tick(spark, registry: ChannelRegistry) -> int:
     """One cron firing: payload = the tick timestamp (contrib/time.py:8)."""
     from datetime import datetime, timedelta, timezone
@@ -61,10 +77,8 @@ def run_periodic_tick(spark, registry: ChannelRegistry) -> int:
     now = datetime.now(timezone.utc).replace(tzinfo=None, second=0, microsecond=0)
     msgs = cron_ticks(spark, now, now + timedelta(minutes=1), cron="* * * * *",
                       channel="periodic")
-    store.store(msgs)
-    res = pipe.run(msgs)
-    store.change_message_states(res.all)
-    return res.df.count()
+    return _tick(pipe, store, msgs)
+
 
 def run_watch_tick(spark, registry: ChannelRegistry, watch_dir: str) -> int:
     """One watcher poll over ``watch_dir`` for ``*.txt``."""
@@ -74,10 +88,7 @@ def run_watch_tick(spark, registry: ChannelRegistry, watch_dir: str) -> int:
     msgs = scan_files(spark, watch_dir, regex=r".*\.txt$", channel="watch_txt")
     if msgs.isEmpty():
         return 0
-    store.store(msgs)
-    res = pipe.run(msgs)
-    store.change_message_states(res.all)
-    return res.df.count()
+    return _tick(pipe, store, msgs)
 
 
 if __name__ == "__main__":

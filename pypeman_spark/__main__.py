@@ -443,28 +443,6 @@ def cmd_printsettings(args) -> int:
     return 0
 
 
-def _tools_frame(args):
-    """Shared loader for the store tools: MessageStore → filtered frame
-    of (id, payload). ``--filter k=v`` matches top-level payload JSON
-    fields with TYPED equality — the shared ``tools.view_store.Filter``
-    predicate (reference semantics:
-    ``payload.get(name) == literal_eval(val)``: a JSON string ``"9"``
-    does not match ``-f k=9``, while ``-f k=9.0`` matches an
-    int-encoded ``9``)."""
-    from .session import get_spark
-    from .store.msgstore import MessageStore
-    from .tools.view_store import Filter
-
-    spark = get_spark("pypeman-tools", cpus=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "4")
-    ))
-    store = MessageStore(spark, args.store_path, channel=args.channel)
-    df = store.search(count=args.count)
-    for fstr in args.filter or []:
-        df = df.filter(Filter(fstr).column())
-    return df.select("id", "payload")
-
-
 def cmd_tools(args) -> int:
     """``pypeman tools view_store|send_from_store`` parity (reference
     ``tool_commands.py:11-14``, ``tools/view_store.py``,
@@ -614,29 +592,25 @@ def cmd_tools(args) -> int:
             print(f"dropped {name}")
         print(f"expired {len(dropped)} partition(s)")
         return 0
-    df = _tools_frame(args)
+    # view_store / send_from_store: the package's own store tools over
+    # the store rooted at store_path (payload filters: view_store.Filter)
+    from .session import get_spark
+    from .store.msgstore import MessageStore
+    from .tools.send_from_store import send_messages
+    from .tools.view_store import Filter, filtered_messages
+
+    spark = get_spark("pypeman-tools", cpus=int(
+        os.environ.get("SPARK_GRAFT_CPUS", "4")
+    ))
+    store = MessageStore(spark, args.store_path, channel=args.channel)
+    df = filtered_messages(
+        store, [Filter(f) for f in args.filter or []], count=args.count
+    )
     if args.tool == "view_store":
-        for r in df.collect():
+        for r in df.select("id", "payload").collect():
             print(r["id"], r["payload"])
         return 0
-    # send_from_store: POST each payload to the destination (reference
-    # http_send, tools/send_from_store.py:12-20) — stdlib client, the
-    # collected batch is bounded by --count
-    import urllib.request
-
-    sent = 0
-    for r in df.collect():
-        req = urllib.request.Request(
-            args.dest,
-            data=(r["payload"] or "").encode(),
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        with urllib.request.urlopen(req, timeout=30) as resp:
-            resp.read()
-        print(f"send {r['id']} to {args.dest}")
-        sent += 1
-    print(f"sent {sent} messages")
+    print(f"sent {send_messages(df, args.dest)} messages")
     return 0
 
 

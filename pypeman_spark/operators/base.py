@@ -23,8 +23,8 @@ Cross-cutting BaseNode params reproduced here (``nodes.py:114-121``):
 * ``store_meta`` — after the node, append ``str(meta[k])`` for each
   listed key to the row's audit store-meta list (``nodes.py:119-121,
   216-222``); collected into a ``__store_meta`` column and bulk-flushed
-  by ``MessageStore.add_meta_from_messages`` — one distributed append,
-  no per-row driver loop.
+  with the row's state by ``MessageStore.settle`` — one distributed
+  append, no per-row driver loop.
 
 Per-row failure never raises: nodes write ``err_msg`` and flip ``state``
 to ``error``; downstream nodes skip non-active rows. This is the columnar

@@ -166,13 +166,12 @@ class ChannelRegistry:
     @staticmethod
     def _run(pipe, store, df) -> list[str]:
         """Store, run and settle ``df`` the way a channel batch does:
-        the state append, the ``store_meta`` flush and the returned
-        outcomes all read one materialised run of the pipeline."""
+        the settle append (states and ``store_meta``) and the returned
+        outcomes both read one materialised run of the pipeline."""
         store.store(df)
         out = pipe.run(df).all.persist()
         try:
-            store.change_message_states(out)
-            store.add_meta_from_messages(out)
+            store.settle(out)
             return [r["state"] for r in out.select("state").collect()]
         finally:
             out.unpersist()

@@ -12,11 +12,14 @@ to MERGE/DELETE):
 * ``messages/`` — one row per stored message, Hive-partitioned by
   ``date`` (Catalyst partition pruning replaces directory skipping).
 * ``events/``  — state changes / sub-message states / meta additions /
-  deletes as appended events, so no rewrite is ever needed. One per-id
-  fold resolves them (:meth:`MessageStore.current`): one aggregate over
-  the narrow event log, then one join to the wide message side. This is
-  the plain-parquet fallback of SURVEY §7.4 ("mutable-store semantics on
-  parquet").
+  deletes as appended events, so no rewrite is ever needed. Every event
+  has one shape (``_event``) and every write to the log goes through
+  one append (``_append_events``); a channel batch settles its outcome
+  states and store-meta in ONE append (:meth:`MessageStore.settle`).
+  One per-id fold resolves them (:meth:`MessageStore.current`): one
+  aggregate over the narrow event log, then one join to the wide
+  message side. This is the plain-parquet fallback of SURVEY §7.4
+  ("mutable-store semantics on parquet").
 
 At 100 TB the messages table is the one that grows; events stay tiny
 relative to it. ``search`` compiles to a single Catalyst plan with
@@ -70,6 +73,24 @@ _EVENT_SCHEMA = T.StructType(
         T.StructField("event_ts", T.DoubleType()),
     ]
 )
+
+
+def _event(kind: str, **cols: F.Column) -> F.Column:
+    """The one event shape: a ``kind`` event as a struct of the
+    ``_EVENT_SCHEMA`` columns after ``id`` — ``cols`` where given, else
+    NULL, and ``event_ts`` the time of this call."""
+    cols = {"kind": F.lit(kind), "event_ts": F.lit(time.time()), **cols}
+    return F.struct(*[
+        (cols[f.name] if f.name in cols else F.lit(None))
+        .cast(f.dataType.simpleString()).alias(f.name)
+        for f in _EVENT_SCHEMA.fields[1:]
+    ])
+
+
+def _meta_events(ts: F.Column) -> F.Column:
+    """``__store_meta`` (``Node._append_store_meta``) as meta events."""
+    return F.transform("__store_meta", lambda e: _event(
+        "meta", meta_key=e["key"], meta_value=e["value"], event_ts=ts))
 
 
 class MessageStore:
@@ -258,61 +279,56 @@ class MessageStore:
                 self.index_path
             )
 
-    def _append_events(self, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, _EVENT_SCHEMA)
+    def _append_events(self, df: DataFrame, events: F.Column) -> None:
+        """The one append to ``events/``: each row of ``df`` with its
+        ``events`` (an array of :func:`_event`), in one write under the
+        lease."""
+        ev = df.select("id", F.inline(events))
         with self._writer_lock("events"):
-            df.write.mode("append").parquet(self.event_path)
+            ev.write.mode("append").parquet(self.event_path)
+
+    def _append_ids(self, ids: list[str], event: F.Column) -> None:
+        self._append_events(
+            self.spark.createDataFrame([(i,) for i in ids], "id string"),
+            F.array(event),
+        )
 
     def change_message_state(self, msg_id: str, state: str) -> None:
         """``msgstore.py:110-130``."""
-        self._append_events([(msg_id, "state", state, None, None, None, time.time())])
+        self._append_ids([msg_id], _event("state", state=F.lit(state)))
 
-    def change_message_states(self, df: DataFrame, state_col: str = "state") -> None:
-        """Bulk variant: one append for a whole batch's outcomes — the
-        scale path (per-row events would be a driver loop)."""
-        ev = df.select(
-            F.col("id"),
-            F.lit("state").alias("kind"),
-            F.col(state_col).alias("state"),
-            F.lit(None).cast("string").alias("sub_id"),
-            F.lit(None).cast("string").alias("meta_key"),
-            F.lit(None).cast("string").alias("meta_value"),
-            F.lit(time.time()).alias("event_ts"),
-        )
-        with self._writer_lock("events"):
-            ev.write.mode("append").parquet(self.event_path)
+    def change_message_states(self, df: DataFrame) -> None:
+        """Bulk variant: one append for a whole batch's outcomes."""
+        self._append_events(df, F.array(_event("state", state=F.col("state"))))
 
     def add_meta_from_messages(self, df: DataFrame) -> None:
-        """Bulk flush of node-level ``store_meta`` captures: explode the
-        ``__store_meta`` column (built by ``Node._append_store_meta``)
-        into ``kind=meta`` events — one distributed append for the whole
-        batch (``nodes.py:216-222`` per-message, done set-at-a-time)."""
-        if "__store_meta" not in df.columns:
-            return
-        ev = (
-            df.filter(F.col("__store_meta").isNotNull())
-            .select("id", F.explode("__store_meta").alias("__e"))
-            .select(
-                F.col("id"),
-                F.lit("meta").alias("kind"),
-                F.lit(None).cast("string").alias("state"),
-                F.lit(None).cast("string").alias("sub_id"),
-                F.col("__e.key").alias("meta_key"),
-                F.col("__e.value").alias("meta_value"),
-                F.lit(time.time()).alias("event_ts"),
-            )
-        )
-        with self._writer_lock("events"):
-            ev.write.mode("append").parquet(self.event_path)
+        """Bulk flush of node-level ``store_meta`` captures as ``meta``
+        events, one append (``nodes.py:216-222``, set-at-a-time)."""
+        if "__store_meta" in df.columns:
+            self._append_events(df, _meta_events(F.lit(time.time())))
+
+    def settle(self, df: DataFrame) -> None:
+        """Settle a batch's outcome rows: their state events and their
+        ``__store_meta`` events in ONE append at one timestamp, one
+        ``inline`` of ``[state event] ++ meta events`` — one scan, one
+        job, one file set. Rows left out of ``df`` (a channel's parked
+        ``wait_retry`` rows) keep their stored state and get no meta."""
+        ts = F.lit(time.time())
+        events = F.array(_event("state", state=F.col("state"), event_ts=ts))
+        if "__store_meta" in df.columns:
+            events = F.concat(events, F.coalesce(_meta_events(ts), F.array()))
+        self._append_events(df, events)
 
     def add_sub_message_state(self, msg_id: str, sub_id: str, state: str) -> None:
         """``msgstore.py:74-108``."""
-        self._append_events([(msg_id, "substate", state, sub_id, None, None, time.time())])
+        self._append_ids([msg_id], _event(
+            "substate", state=F.lit(state), sub_id=F.lit(sub_id)))
 
     def add_message_meta_infos(self, msg_id: str, name: str, value: str) -> None:
         """Append ``value`` to the store-meta list ``name``
         (``msgstore.py:44-64``)."""
-        self._append_events([(msg_id, "meta", None, None, name, str(value), time.time())])
+        self._append_ids([msg_id], _event(
+            "meta", meta_key=F.lit(name), meta_value=F.lit(str(value))))
 
     def set_state_to_worst_sub_state(self, msg_id: str) -> None:
         """``msgstore.py:687-705``: state := worst of the id's current
@@ -329,18 +345,14 @@ class MessageStore:
     def delete(self, msg_id: str) -> None:
         """``msgstore.py:877-888``. Append a tombstone event; the current
         view filters deleted ids (parquet is immutable; Delta: DELETE)."""
-        self._append_events([(msg_id, "delete", None, None, None, None, time.time())])
+        self._append_ids([msg_id], _event("delete"))
 
     def delete_many(self, msg_ids: list[str]) -> None:
         """Bulk tombstone: ONE event-log append for any number of ids —
         the scale path (per-id :meth:`delete` is a driver loop of tiny
         writes)."""
-        if not msg_ids:
-            return
-        now = time.time()
-        self._append_events(
-            [(mid, "delete", None, None, None, None, now) for mid in msg_ids]
-        )
+        if msg_ids:
+            self._append_ids(msg_ids, _event("delete"))
 
     def apply_retention(
         self,
@@ -458,24 +470,13 @@ class MessageStore:
             # one event per list value, 1 ms apart in list order and all
             # before `now`: later appends sort after every re-emitted value
             now = time.time()
-            meta_ev = (
-                cur.select("id", F.explode("store_meta").alias("meta_key", "__vals"))
-                .select(
-                    "id", "meta_key", F.size("__vals").alias("__n"),
-                    F.posexplode("__vals").alias("__pos", "meta_value"),
-                )
-                .select(
-                    F.col("id"),
-                    F.lit("meta").alias("kind"),
-                    F.lit(None).cast("string").alias("state"),
-                    F.lit(None).cast("string").alias("sub_id"),
-                    F.col("meta_key"),
-                    F.col("meta_value"),
-                    (F.lit(now) - (F.col("__n") - F.col("__pos")) * 1e-3)
-                    .alias("event_ts"),
-                )
-            )
-            meta_ev.write.mode("overwrite").parquet(new_ev)
+            vals = cur.select("id", F.explode("store_meta").alias("key", "__vs"))
+            vals = vals.select("id", "key", F.size("__vs").alias("__n"),
+                               F.posexplode("__vs").alias("__pos", "value"))
+            vals.select("id", F.inline(F.array(_event(
+                "meta", meta_key=F.col("key"), meta_value=F.col("value"),
+                event_ts=F.lit(now) - (F.col("__n") - F.col("__pos")) * 1e-3,
+            )))).write.mode("overwrite").parquet(new_ev)
             idx_files = max(1, cur.count() // 2_000_000)
             (
                 cur.select("id", F.to_date("timestamp").alias("date"))
@@ -746,13 +747,7 @@ class NullMessageStore(MessageStore):
     def store(self, df: DataFrame, state: str = PENDING) -> None:
         pass
 
-    def _append_events(self, rows: list[tuple]) -> None:
-        pass
-
-    def change_message_states(self, df: DataFrame, state_col: str = "state") -> None:
-        pass
-
-    def add_meta_from_messages(self, df: DataFrame) -> None:
+    def _append_events(self, df: DataFrame, events: F.Column) -> None:
         pass
 
     def apply_retention(self, keep_days: int | None = None, before=None) -> list[str]:

@@ -354,9 +354,9 @@ _DV_COLLECT_CHUNK = 1 << 22
 # metadata-sized table costs more than the copy. Above it, the
 # (src, dst) pairs ship as Spark tasks: bytes move through the
 # cluster's aggregate storage bandwidth with task retry, never
-# bottlenecked on one node. (tools/deep_clone_study.py measures the
-# distributed path's wall time scaling near-linearly with task
-# parallelism.)
+# bottlenecked on one node. (DEEP_CLONE_STUDY_r12.json records the
+# distributed path's wall time at 1 to 32 copy tasks against the
+# driver-serial copy of the same 2 GB.)
 _DEEP_CLONE_DRIVER_MAX_BYTES = 256 << 20
 # Shallow-clone marker staleness: a clone's reads refresh its marker
 # at the source, so an active clone pins source vacuum/log-retention
@@ -2961,7 +2961,7 @@ class TxTable:
                 return s.withColumn("__t", F.lit(None).cast("int"))
             return t.alias("t").join(s, on=self.key_cols, how="full_outer")
 
-        def attempt(st: LogState) -> _Plan:
+        def attempt(st: LogState) -> "_Plan | int":
             schema = st.schema
             tb, scopes = self._touched_scopes(source)
             old = self._old_files(st.live, set(tb), scopes)
@@ -3052,6 +3052,8 @@ class TxTable:
                 rows=rows, post=lambda d: d.where(keep).select(*out_cols),
                 mode=mode, schema_json=eff,
             )
+            if not (adds or removed or dv_acts or schema_act):
+                return st.version  # nothing to write: provable no-op
             self._validate_adds(adds, eff, st.constraints)
             return _Plan(
                 adds + [{"remove": {"file": f}} for f in removed]

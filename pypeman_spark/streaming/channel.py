@@ -7,11 +7,13 @@ sources/) to a :class:`~pypeman_spark.pipeline.Pipeline` via
 
 * each micro-batch runs the pipeline (one Catalyst plan per batch) and
   persists its outcome (``PipelineResult.all``) once: the retry park and
-  the store's state and meta appends all read those materialised rows,
-  so every message crosses each Python node once per batch, not once
-  per action. The outcome is unpersisted in ``finally``, so a failing
-  batch releases it too;
-* outcomes are appended to the message store (audit) in bulk;
+  the store's settle append both read those materialised rows, so every
+  message crosses each Python node once per batch, not once per action.
+  The outcome is unpersisted in ``finally``, so a failing batch releases
+  it too;
+* outcomes settle in the message store (audit) with one append
+  (``MessageStore.settle``): each row's state event and its
+  ``store_meta`` events, one job and one file set per batch;
 * rows whose ``state`` is ``wait_retry`` — or error rows when
   ``retry_on_error`` — are parked in the retry store with their re-entry
   stage (dead-letter topology, ``retry.py:13-240``);
@@ -71,7 +73,7 @@ class StreamingChannel:
             if self.message_store is not None:
                 self.message_store.store(batch_df)
             res = self.pipeline.run(batch_df)
-            # the emptiness check, the park and both store appends read
+            # the emptiness check, the park and the settle append read
             # these materialised rows instead of re-running the chain
             out = outcome = res.all.persist()
             if self.retry_store is not None:
@@ -83,8 +85,7 @@ class StreamingChannel:
                     self.retry_store.store_until_retry(to_retry, None)
                     out = out.filter(~retry_cond)
             if self.message_store is not None:
-                self.message_store.change_message_states(out)
-                self.message_store.add_meta_from_messages(out)
+                self.message_store.settle(out)
             self.batches_processed += 1
         finally:
             # the outcome and branch fan-outs persist per batch; release so

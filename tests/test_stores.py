@@ -312,6 +312,80 @@ def test_store_meta_node_param(spark, store):
     assert store.search(meta={"text_absent": ""}).count() == 0
 
 
+def _settle_batch(spark, tmp_path, store, name):
+    """One channel batch through a ``store_meta`` node and an
+    ``auto_retry`` node: ``n=1`` parks, the rest settle. Returns the
+    batch's Spark job count and the message ids by ``n``."""
+    def flaky(d):
+        if d["n"] == 1:
+            raise RuntimeError("boom")
+        return d
+
+    pipe = Pipeline("t").add(
+        FuncNode(lambda d: d, name="tag", store_meta=["kind"]),
+        FuncNode(flaky, name="flaky", auto_retry=True),
+    )
+    rs = RetryStore(spark, str(tmp_path / f"retry_{name}"), channel="t",
+                    retry_delay=0.0)
+    chan = StreamingChannel(None, pipe, store, rs,
+                            checkpoint_dir=str(tmp_path / f"ckpt_{name}"))
+    msgs = messages_from_payloads(
+        spark, [{"n": i} for i in range(4)],
+        meta=[{"kind": "a"}, {"kind": "b"}, {"kind": "c"}, {}],
+    ).localCheckpoint(eager=True)
+    ids = {json.loads(r["payload"])["n"]: r["id"] for r in msgs.collect()}
+    sc = spark.sparkContext
+    group = f"settle_{name}_{tmp_path.name}"
+    sc.setJobGroup(group, "one channel batch")
+    try:
+        chan.process_batch(msgs, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["stage"] for r in rs.pending().collect()] == ["flaky"]
+    return len(sc.statusTracker().getJobIdsForGroup(group)), ids
+
+
+def test_channel_batch_settles_in_one_event_append(spark, tmp_path):
+    """A batch's states and store-meta land in ONE events/ append, one
+    Spark job fewer than a state append plus a meta append."""
+    from pypeman_spark.store import FileMessageStore
+
+    one = FileMessageStore(spark, str(tmp_path / "one"), channel="t")
+    locks = []
+    real_lock = one._writer_lock
+
+    def spy_lock(op, **kw):
+        locks.append(op)
+        return real_lock(op, **kw)
+
+    one._writer_lock = spy_lock
+    jobs_one, _ = _settle_batch(spark, tmp_path, one, "one")
+    assert locks.count("events") == 1
+
+    two = FileMessageStore(spark, str(tmp_path / "two"), channel="t")
+    two.settle = lambda out: (two.change_message_states(out),
+                              two.add_meta_from_messages(out))
+    jobs_two, _ = _settle_batch(spark, tmp_path, two, "two")
+    assert jobs_one == jobs_two - 1
+
+
+def test_channel_batch_settle_current_view(spark, tmp_path):
+    """After one settled batch, ``current()`` holds each settled row's
+    state and store-meta; the parked row keeps ``pending`` and no meta."""
+    from pypeman_spark.store import FileMessageStore
+
+    store = FileMessageStore(spark, str(tmp_path / "audit"), channel="t")
+    _, ids = _settle_batch(spark, tmp_path, store, "view")
+    got = {r["id"]: (r["state"], r["store_meta"])
+           for r in store.current().collect()}
+    assert got == {
+        ids[0]: ("processed", {"kind": ["a"]}),
+        ids[1]: ("pending", None),
+        ids[2]: ("processed", {"kind": ["c"]}),
+        ids[3]: ("processed", None),
+    }
+
+
 def test_compact_folds_events(spark, tmp_path):
     # compaction = plain-parquet OPTIMIZE: same query surface before/after
     from pypeman_spark.store import FileMessageStore

@@ -848,3 +848,21 @@ def test_rewrite_mode_reads_no_row_positions(spark, tmp_path):
         ), p
     assert t.stats().get("dv_files", 0) == 0
     assert {r["k"]: r["val"] for r in t.snapshot().collect()}[3] == "V31"
+
+
+
+def test_dv_merge_with_nothing_to_write_commits_no_version(spark, tmp_path):
+    """A merge whose plan holds no action returns the current version
+    and commits nothing: here one unmatched key with inserts off."""
+    t = _mk(spark, tmp_path, n_buckets=2)
+    t.append(_df(spark, [(i, f"v{i}") for i in range(40)]))
+    v_before, n_before = t.version(), len(t.history())
+    got = t.merge(
+        spark.createDataFrame([(100, 1)], "k long, delta long"),
+        when_matched_update={"val": "concat(t.val, s.delta)"},
+        when_not_matched_insert=False,
+        mode="dv",
+    )
+    assert got == v_before
+    assert len(t.history()) == n_before
+    assert t.snapshot().count() == 40
