@@ -494,21 +494,22 @@ def connected_components(
     each round so plans don't grow with iterations. At 100 TB this is
     the standard alternating-star CC shape: no step ever materialises
     more than |edges| rows, and the label table is 16 bytes/node.
+
+    ``assume_canonical=True`` is the caller's promise that ``pairs`` are
+    DISTINCT with ``id_a < id_b``, as both in-repo pair producers emit
+    them (``minhash_candidate_pairs`` ends in ``.distinct()``,
+    ``embedding_near_dup_pairs`` emits one row per same-bucket pair).
+    The two-direction edge union then holds no duplicate, so the
+    edge-set ``distinct`` is skipped: one shuffle of 2|pairs| rows less
+    per call (§2.4). A broken promise costs rows, not correctness:
+    duplicate or reversed pairs only repeat edges, and a minimum over
+    repeated labels is the same minimum. The default keeps the dedup.
     """
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    # ``assume_canonical=True``: the caller guarantees pairs are
-    # DISTINCT with id_a < id_b (both in-repo pair producers —
-    # minhash_candidate_pairs ends in .distinct() and
-    # embedding_near_dup_pairs emits one row per same-bucket pair —
-    # do). Then the two-direction union cannot contain duplicates
-    # ((a,b)==(b',a') would need a<b and a'<b'), so the edge-set
-    # distinct is a provably-empty dedup: skipping it removes a full
-    # shuffle of 2|pairs| rows from every CC call (§2.4). The default
-    # keeps the dedup for arbitrary inputs.
     if not assume_canonical:
         edges = edges.distinct()
     edges = edges.localCheckpoint()

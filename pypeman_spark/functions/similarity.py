@@ -130,11 +130,6 @@ def _l2sq_sql(a: str, b: str) -> str:
     )
 
 
-def cosine_cols(a: str, b: str) -> Column:
-    """``cosine`` over two columns given BY NAME — one ``F.expr``."""
-    return F.expr(_cos_sql(_q(a), _q(b)))
-
-
 def _stage_norm(df: DataFrame, vec_col: str, out: str) -> DataFrame:
     """Stage ``||vec||`` as its own column BELOW the join that fans the
     row out to many (query, candidate) pairs. The inline cosine

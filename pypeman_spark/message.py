@@ -182,6 +182,22 @@ def ensure_message_columns(
     return out
 
 
+def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """``df`` as exactly ``schema``'s columns, in its order and types;
+    a column ``df`` lacks is NULL. A table that records its schema on
+    the first write (``TxTable``) then sees one schema from every
+    writer, nested nullability included. ``schema``'s names, nested
+    ones too, are plain identifiers."""
+    have = set(df.columns)
+    # SQL text: one py4j call per expression, where a Column per field
+    # costs several
+    return df.selectExpr(*[
+        f"CAST({f'`{f.name}`' if f.name in have else 'NULL'} "
+        f"AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for f in schema.fields
+    ])
+
+
 def messages_from_payloads(
     spark: SparkSession,
     payloads: Iterable[Any],

@@ -3,7 +3,6 @@ from .msgstore import (  # noqa: F401
     MemoryMessageStore,
     MessageStore,
     NullMessageStore,
-    StoreLockTimeout,
 )
 from .persistence import KVStore, MemoryKVStore  # noqa: F401
 from .retry import RetryStore  # noqa: F401

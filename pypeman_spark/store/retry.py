@@ -6,17 +6,22 @@ retries oldest-first every ``retry_delay`` seconds; the channel pauses
 while the store is non-empty.
 
 Spark design: the retry table IS the buffer — no global pause needed
-(SURVEY §2.H row 63). It is one append-only log, ``retry_log/``, read
-with one schema (``_LOG_SCHEMA``): a park is one row per generation —
-the full message plus ``(stage, retry_at, attempts)`` — and an ack is a
+(SURVEY §2.H row 63). It is one append-only log, ``retry_log/``: a
+:class:`~.txtable.TxTable` keyed by ``id`` with one bucket, every row in
+one schema (``_LOG_SCHEMA``). A park is one row per generation — the
+full message plus ``(stage, retry_at, attempts)`` — and an ack is a
 tombstone row ``(id, attempts, acked=true)`` in the same log. One fold,
-``_live()``, anti-joins the tombstones away; ``retry_due``, ``ack`` and
-``is_empty`` read it, and only the public ``pending()`` sorts (pypeman
-lists the queue oldest first). A sweep checkpoints its due rows once,
-re-runs ``Pipeline.run(df, from_stage=stage)`` per stage, and settles
-with one append: the tombstones of every consumed generation plus the
-re-parks, so a failed settle leaves every message parked. Appends only
-(Delta-ready), so nothing rewrites at scale.
+``_live()``, anti-joins the tombstones away over one ``snapshot()``;
+``retry_due``, ``ack`` and ``is_empty`` read it, and only the public
+``pending()`` sorts (pypeman lists the queue oldest first). A sweep
+checkpoints its due rows once, re-runs ``Pipeline.run(df,
+from_stage=stage)`` per stage, and settles with one commit: the
+tombstones of every consumed generation plus the re-parks, so a failed
+settle leaves every message parked. A park takes ``txn=(app, version)``
+and no-ops when ``version`` is not above the log's last committed one
+for ``app``, so a channel's re-delivered epoch parks once. Files the log no longer references are
+reclaimed by ``TxTable.vacuum`` past its grace period
+(``RetryStore.log.vacuum()``).
 """
 
 from __future__ import annotations
@@ -34,8 +39,10 @@ from ..message import (
     PROCESSED,
     REJECTED,
     WAIT_RETRY,
+    conform,
     ensure_message_columns,
 )
+from .txtable import TxTable
 
 __all__ = ["RetryStore"]
 
@@ -64,19 +71,25 @@ class RetryStore:
         self.base_path = base_path
         self.channel = channel
         self.retry_delay = retry_delay
-        self.log_path = os.path.join(base_path, "retry_log")
+        self.log = TxTable(spark, os.path.join(base_path, "retry_log"),
+                           key_cols=["id"], n_buckets=1)
 
-    def store_until_retry(self, df: DataFrame, stage: str | None = None) -> None:
+    def _append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> None:
+        self.log.append(conform(df, _LOG_SCHEMA), txn=txn)
+
+    def store_until_retry(self, df: DataFrame, stage: str | None = None,
+                          txn: tuple[str, int] | None = None) -> None:
         """Park rows for retry at ``stage`` (``retry.py:58-86``). Rows
         carrying a ``retry_stage`` column (set by ``auto_retry`` nodes,
         ``nodes.py:194-204``) re-enter at that per-row stage; ``stage``
-        is the fallback (None = restart from the first stage)."""
-        out = (
+        is the fallback (None = restart from the first stage). ``txn``:
+        see the module docstring."""
+        self._append(
             self._park_rows(df, stage)
             .withColumn("retry_at", F.lit(time.time() + self.retry_delay))
-            .withColumn("attempts", F.lit(1))
+            .withColumn("attempts", F.lit(1)),
+            txn=txn,
         )
-        out.write.mode("append").parquet(self.log_path)
 
     def _park_rows(self, df: DataFrame, stage: str | None,
                    generations: DataFrame | None = None) -> DataFrame:
@@ -103,9 +116,8 @@ class RetryStore:
 
     def _live(self) -> DataFrame:
         """The fold: parked generations without a tombstone, unsorted."""
-        if os.path.isdir(self.log_path):
-            log = self.spark.read.schema(_LOG_SCHEMA).parquet(self.log_path)
-        else:
+        log = self.log.snapshot()
+        if not log.columns:  # nothing parked yet: no schema recorded
             log = self.spark.createDataFrame([], _LOG_SCHEMA)
         # no broadcast hint: tombstones grow with parked volume; AQE
         # broadcasts the anti-join side while it is small
@@ -132,7 +144,7 @@ class RetryStore:
         """
         if "attempts" not in df.columns:
             df = df.select("id").join(self._live().select("id", "attempts"), "id")
-        _tombstones(df).write.mode("append").parquet(self.log_path)
+        self._append(_tombstones(df))
 
     def is_empty(self) -> bool:
         return self._live().isEmpty()
@@ -141,7 +153,7 @@ class RetryStore:
         """One retry sweep (the reference's background loop body,
         ``retry.py:130-170``): group due rows by re-entry stage, run the
         pipeline from that stage, then settle every outcome in one
-        append —
+        commit —
 
         * processed/dropped → success, acked;
         * rejected → terminal, acked (handler side effects must not
@@ -151,8 +163,8 @@ class RetryStore:
           (``retry_at = now + retry_delay * 2**attempts``).
         """
         now = time.time() if now is None else now
-        # snapshot the due generations once: the settle append would
-        # otherwise be visible to these lazy frames on re-execution
+        # materialise the due generations once: the stage count, every
+        # stage's run and the settle's tombstones read them
         due = self.retry_due(now).localCheckpoint(eager=True)
         stages = {
             r["stage"]: r["count"] for r in due.groupBy("stage").count().collect()
@@ -192,7 +204,7 @@ class RetryStore:
                 counts["rejected"] += by_state.get(REJECTED, 0)
                 counts["reparked"] += n_fail
             if stages:
-                settle.write.mode("append").parquet(self.log_path)
+                self._append(settle)
         finally:
             for outcome in outcomes:
                 outcome.unpersist()

@@ -396,6 +396,11 @@ def _dv_decode(pos: str) -> "list[int]":
     return a.tolist()
 
 
+def _sql_name(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _file_uri(abspath: str) -> str:
     """``abspath`` in exactly the form Spark's ``_metadata.file_path``
     reports it (Hadoop ``Path.toString``: ``file:`` + single slash +
@@ -1704,7 +1709,9 @@ class TxTable:
         the cluster so per-bucket write parallelism is enough.
         ``arranged=True`` skips the repartition for callers that
         pre-arranged the layout (clustered compaction must keep its
-        range partitioning + sort). ``schema_json`` supplies the
+        range partitioning + sort). A table with one bucket and no
+        partition columns coalesces to one partition instead: the same
+        one file, without a shuffle. ``schema_json`` supplies the
         column mapping: renamed columns are written under their FIXED
         physical names (key columns are unrenameable, so the bucket
         expression always sees logical names)."""
@@ -1726,7 +1733,11 @@ class TxTable:
                         f"{f.dataType.simpleString()}; supported: "
                         f"{_PARTITIONABLE_TYPES}"
                     )
-        if not arranged:
+        if not arranged and not pcols and self.n_buckets == 1:
+            # one combo: a narrow coalesce writes its one file without
+            # the shuffle, one job instead of two for a small commit
+            df = df.coalesce(1)
+        elif not arranged:
             # optimized write: one shuffle partition (= one file) per
             # (partition tuple, bucket) combo present in the commit
             df = df.repartition(
@@ -1826,10 +1837,12 @@ class TxTable:
                 if d and int(d.get("card", 0)) > 0:
                     dvmap[f] = d["pos"]
         need_meta = with_meta or bool(dvmap)
+        # projections as SQL text: one py4j call per expression, where
+        # a Column per field costs several, and every read pays them
         meta_cols = [
-            F.col("_metadata.file_path").alias("__txdv_fp"),
-            F.col("_metadata.row_index").alias("__txdv_ri"),
-        ]
+            "_metadata.file_path AS __txdv_fp",
+            "_metadata.row_index AS __txdv_ri",
+        ] if need_meta else []
         if schema_json is not None:
             from pyspark.sql.types import StructField, StructType
 
@@ -1844,14 +1857,12 @@ class TxTable:
                 for f in schema.fields
             ])
             sel = [
-                F.col(cm.get(f.name, f.name)).alias(f.name)
+                f"{_sql_name(cm.get(f.name, f.name))} AS {_sql_name(f.name)}"
                 for f in schema.fields
             ]
             parts = [
                 self.spark.read.option("basePath", base)
-                .schema(phys).parquet(*grp).select(
-                    *sel, *(meta_cols if need_meta else [])
-                )
+                .schema(phys).parquet(*grp).selectExpr(*sel, *meta_cols)
                 for base, grp in sorted(by_base.items())
             ]
         else:
@@ -1860,9 +1871,9 @@ class TxTable:
                 raw = self.spark.read.option(
                     "basePath", base
                 ).parquet(*grp)
-                parts.append(raw.select(
-                    *[F.col(c) for c in raw.columns if c != "bucket"],
-                    *(meta_cols if need_meta else []),
+                parts.append(raw.selectExpr(
+                    *[_sql_name(c) for c in raw.columns if c != "bucket"],
+                    *meta_cols,
                 ))
         out = parts[0]
         for p in parts[1:]:
@@ -3481,6 +3492,32 @@ class TxTable:
             )
 
         return self._run_commit("replace", attempt, txn=txn)
+
+    def swap(self, fn: "typing.Callable[[DataFrame], DataFrame]") -> int:
+        """Replace the whole table by ``fn(rows)`` in ONE commit:
+        ``rows`` is the snapshot the attempt read, and the commit removes
+        exactly that snapshot's files. ``fn`` runs again on every retry,
+        so a commit that lands between the read and the claim and
+        touches a rewritten bucket has its rows go through ``fn`` on the
+        fresh snapshot; one on an untouched bucket stays as it landed.
+        Either way no row is dropped unseen. The use is folding a log
+        into its minimal equivalent. Returns the new version, or the
+        current one for an empty table."""
+
+        def attempt(st: LogState) -> "_Plan | int":
+            if not st.live:
+                return st.version
+            df = fn(self._read_files(sorted(st.live), st.schema, dvs=st.live))
+            schema_act = self._evolved_schema_action(df, st.schema)
+            eff = schema_act[0]["schema"] if schema_act else st.schema
+            adds = self._stage(df, schema_json=eff)
+            self._validate_adds(adds, eff, st.constraints)
+            return self._dml_plan(
+                st.live, adds, sorted(st.live), [],
+                schema_act + _v2_bump(st, []),
+            )
+
+        return self._run_commit("replace", attempt)
 
     def _dml_plan(
         self, live: "dict[str, dict]", adds: "list[dict]",

@@ -13,7 +13,7 @@ sources/) to a :class:`~pypeman_spark.pipeline.Pipeline` via
   it too;
 * outcomes settle in the message store (audit) with one append
   (``MessageStore.settle``): each row's state event and its
-  ``store_meta`` events, one job and one file set per batch;
+  ``store_meta`` events, one job and one commit per batch;
 * rows whose ``state`` is ``wait_retry`` — or error rows when
   ``retry_on_error`` — are parked in the retry store with their re-entry
   stage (dead-letter topology, ``retry.py:13-240``);
@@ -22,20 +22,32 @@ sources/) to a :class:`~pypeman_spark.pipeline.Pipeline` via
   subscribe through :func:`add_listener` (events.py:6-60 parity via
   ``StreamingQueryListener``).
 
-Exactly-once: the file-source offset log + checkpointLocation give
-at-least-once delivery into ``foreachBatch``; the audit append is keyed
-by message id so replays are idempotent at the query level.
+Delivery: the file-source offset log + checkpointLocation give
+at-least-once delivery into ``foreachBatch``; Spark re-delivers an epoch
+whose offsets it had not committed before a crash. The store append,
+the park and the settle each commit with ``txn=(token, epoch_id)``,
+where ``token`` is the query id from ``<checkpoint_dir>/cp/metadata``
+(stable across restarts of one checkpoint), else a uuid minted per
+channel instance. So each table's write is exactly-once: a re-delivered
+epoch stores, parks and settles nothing twice, while a fresh checkpoint
+(epoch ids from 0 again) still lands. The batch as a whole is not
+exactly-once. A re-delivery re-runs the pipeline, so its side effects
+run again. And after a crash between the park and the settle, the first
+delivery's parks stand: a message the re-run settles is still retried
+once more by the next sweep.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..message import WAIT_RETRY
 from ..pipeline import Pipeline
+from .token import query_token
 
 __all__ = ["StreamingChannel"]
 
@@ -65,13 +77,16 @@ class StreamingChannel:
         )
         self.query = None
         self.batches_processed = 0
+        self._token = uuid.uuid4().hex
 
     # -- foreachBatch body ----------------------------------------------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        txn = (query_token(os.path.join(self.checkpoint_dir, "cp"),
+                           self._token), int(epoch_id))
         outcome = None
         try:
             if self.message_store is not None:
-                self.message_store.store(batch_df)
+                self.message_store.store(batch_df, txn=txn)
             res = self.pipeline.run(batch_df)
             # the emptiness check, the park and the settle append read
             # these materialised rows instead of re-running the chain
@@ -82,10 +97,10 @@ class StreamingChannel:
                     retry_cond = retry_cond | (F.col("state") == "error")
                 to_retry = out.filter(retry_cond)
                 if not to_retry.isEmpty():
-                    self.retry_store.store_until_retry(to_retry, None)
+                    self.retry_store.store_until_retry(to_retry, None, txn=txn)
                     out = out.filter(~retry_cond)
             if self.message_store is not None:
-                self.message_store.settle(out)
+                self.message_store.settle(out, txn=txn)
             self.batches_processed += 1
         finally:
             # the outcome and branch fan-outs persist per batch; release so

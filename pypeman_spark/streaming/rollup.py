@@ -25,6 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .token import query_token
+
 __all__ = ["ContinuousRollup"]
 
 
@@ -56,26 +58,6 @@ class ContinuousRollup:
         self.value_col = value_col
         self.checkpoint: str | None = None
         self._query_token: str | None = None
-
-    def _current_query_token(self) -> str:
-        """Identity of the query feeding this store. Replay-guard
-        markers are only honored for the SAME query: a checkpointed
-        query's id (``<ckpt>/metadata``, stable across restarts) when
-        available, else the token :meth:`start` minted for this run.
-        Without this, a FRESH query (checkpoint reset — batch ids
-        restart at 0) pointed at an existing store would silently skip
-        every batch up to the old marker: data loss, not exactly-once."""
-        if self.checkpoint:
-            meta = os.path.join(self.checkpoint, "metadata")
-            if os.path.isfile(meta):
-                import json
-
-                try:
-                    with open(meta) as fh:
-                        return str(json.load(fh)["id"])
-                except (OSError, ValueError, KeyError):
-                    pass
-        return self._query_token or "adhoc"
 
     # -- aggregation pieces -------------------------------------------------
     def _partials(self, df: DataFrame) -> DataFrame:
@@ -117,7 +99,10 @@ class ContinuousRollup:
         that needs a transactional table format (Delta/Iceberg MERGE),
         the same substitution the localCheckpoint note below makes."""
         marker = os.path.join(self.path, "_last_batch")
-        token = self._current_query_token()
+        # the checkpointed query's id, else the token start() minted:
+        # a fresh query pointed at an existing store must not skip
+        # batches up to an older query's marker (data loss)
+        token = query_token(self.checkpoint, self._query_token or "adhoc")
         if os.path.isfile(marker):
             with open(marker) as fh:
                 txt = fh.read().strip()

@@ -157,59 +157,6 @@ def test_nanos_columns_unified_over_all_parts(tmp_path):
 # ---- round-7 ADVICE pins ---------------------------------------------------
 
 
-def _write_journal(base, pairs):
-    import json
-
-    tmp = os.path.join(base, ".compact_journal.t")
-    with open(tmp, "w") as fh:
-        json.dump({"pairs": pairs}, fh)
-    os.replace(tmp, os.path.join(base, ".compact_journal"))
-
-
-def test_recover_skips_live_compact_lease(spark, tmp_path):
-    """Opening a store while ANOTHER process's compact() lease is LIVE
-    must not touch its journal or fresh dirs: the pre-fix _recover ran
-    unconditionally and could sweep the live compactor's fresh dir,
-    culminating in the messages directory being deleted outright."""
-    from pypeman_spark.store.msgstore import MessageStore
-
-    base = str(tmp_path / "store")
-    live = os.path.join(base, "messages")
-    fresh = os.path.join(base, ".compact_msg_live")
-    orphan = os.path.join(base, ".compact_ev_orphan")
-    for d in (live, fresh, orphan):
-        os.makedirs(d)
-    open(os.path.join(fresh, "part-0"), "w").write("fresh")
-    _write_journal(base, [[live, fresh]])
-    # a LIVE lease: our own pid is alive, so the lock is not stale
-    with open(os.path.join(base, ".store_lock"), "w") as fh:
-        fh.write(f"{os.getpid()} compact {0.0}")
-
-    MessageStore(spark, base)  # open while the "compactor" is live
-
-    assert os.path.isfile(os.path.join(base, ".compact_journal"))
-    assert os.path.isdir(fresh), "live compactor's fresh dir was swept"
-    assert os.path.isdir(orphan)
-    assert os.path.isdir(live)
-
-    # holder "dies": lease becomes provably dead -> next open recovers
-    import subprocess
-    import sys as _sys
-
-    dead = subprocess.Popen([_sys.executable, "-c", "pass"])
-    dead.wait()
-    with open(os.path.join(base, ".store_lock"), "w") as fh:
-        fh.write(f"{dead.pid} recover {0.0}")
-    MessageStore(spark, base)
-    assert not os.path.isfile(os.path.join(base, ".compact_journal"))
-    assert not os.path.isdir(fresh), "journal was not rolled forward"
-    assert not os.path.isdir(orphan), "orphan not swept after recovery"
-    assert os.path.isdir(live)
-    assert os.path.isfile(os.path.join(live, "part-0")) or True
-    # recovery releases the lease it took
-    assert not os.path.isfile(os.path.join(base, ".store_lock"))
-
-
 def test_bpe_merge_with_dollar_and_backslash(spark):
     """A merge whose winning pair concatenates to '$1' (or contains a
     backslash) must not crash regexp_replace with Java group-reference

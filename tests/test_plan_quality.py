@@ -284,6 +284,18 @@ def test_connected_components_assume_canonical_matches_default(spark):
     }
     assert fast == base == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 42: 42}
 
+    # a broken promise — a duplicate pair and a reversed pair — still
+    # labels exactly as the default path does
+    messy = pairs.unionByName(spark.createDataFrame(
+        [(1, 2), (4, 3)], "id_a long, id_b long"
+    ))
+    labels = [
+        {r["node"]: r["cluster_id"] for r in connected_components(
+            messy, nodes=nodes, assume_canonical=canon).collect()}
+        for canon in (False, True)
+    ]
+    assert labels[1] == labels[0] == base
+
 
 def test_corpus_hygiene_queries_scale_clean(spark):
     # round-2b corpus ops: no cartesian/NLJ anywhere (semantic dedup's

@@ -351,20 +351,13 @@ def test_channel_batch_settles_in_one_event_append(spark, tmp_path):
     from pypeman_spark.store import FileMessageStore
 
     one = FileMessageStore(spark, str(tmp_path / "one"), channel="t")
-    locks = []
-    real_lock = one._writer_lock
-
-    def spy_lock(op, **kw):
-        locks.append(op)
-        return real_lock(op, **kw)
-
-    one._writer_lock = spy_lock
+    events_before = one.events.version()
     jobs_one, _ = _settle_batch(spark, tmp_path, one, "one")
-    assert locks.count("events") == 1
+    assert one.events.version() - events_before == 1
 
     two = FileMessageStore(spark, str(tmp_path / "two"), channel="t")
-    two.settle = lambda out: (two.change_message_states(out),
-                              two.add_meta_from_messages(out))
+    two.settle = lambda out, txn=None: (two.change_message_states(out),
+                                        two.add_meta_from_messages(out))
     jobs_two, _ = _settle_batch(spark, tmp_path, two, "two")
     assert jobs_one == jobs_two - 1
 
@@ -537,313 +530,124 @@ def test_apply_retention_drops_old_partitions(spark, tmp_path):
         store.apply_retention(keep_days=5, before="2024-01-01")
 
 
-def test_point_lookup_uses_id_index_partition_pruning(spark, tmp_path):
-    import datetime as dt
+def _parking_channel(spark, tmp_path, store, rs, name):
+    """A channel whose ``flaky`` node parks the messages with ``n < 4``."""
+    def flaky(d):
+        if d["n"] < 4:
+            raise RuntimeError("boom")
+        return d
 
-    from pyspark.sql import functions as F
-
-    from pypeman_spark.store import MessageStore
-
-    store = MessageStore(spark, str(tmp_path / "s"), channel="idx")
-    base = dt.datetime(2026, 1, 1, 12)
-    df = spark.createDataFrame(
-        [(f"d{i}", base + dt.timedelta(days=i)) for i in range(5)],
-        "payload string, timestamp timestamp",
-    )
-    store.store(df)
-    target = store.current().filter("payload = 'd3'").collect()[0]["id"]
-
-    # the index knows exactly one date for the id
-    dates = store._id_dates(target)
-    assert dates == [dt.date(2026, 1, 4)]
-    # and the pruned base scan carries a date PartitionFilter
-    pruned = store.current(dates=dates).filter(F.col("id") == target)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters")[1][:160]
-    assert "date" in pf and ("2026-01-04" in pf or " IN " in pf or "= 20" in pf)
-
-    row = store.get(target)
-    assert row is not None and row["payload"] == "d3"
-    assert store.get_preview_str(target, 2) == "d3"[:2]
-    # unknown id: index miss -> clean None (fallback full view)
-    assert store.get("nope") is None
-    # index survives retention semantics: expired id simply vanishes
-    store.apply_retention(before="2026-01-03")
-    assert store.get(target) is not None  # unexpired id still resolves
-    expired = store.current().filter("payload = 'd0'").count()
-    assert expired == 0
+    pipe = Pipeline("t").add(FuncNode(flaky, name="flaky", auto_retry=True))
+    return StreamingChannel(None, pipe, store, rs,
+                            checkpoint_dir=str(tmp_path / f"ckpt_{name}"))
 
 
-def test_compact_rewrites_id_index(spark, tmp_path):
-    # ADVICE r5: every store() appends small files to the id index and
-    # deletes leave stale rows — compact() must rewrite it (live ids
-    # only, coalesced) so point lookups don't scan an ever-growing
-    # many-small-files side table
-    import datetime as dt
-    import glob
-
-    from pypeman_spark.store import MessageStore
-
-    store = MessageStore(spark, str(tmp_path / "s"), channel="idxc")
-    base = dt.datetime(2026, 2, 1, 9)
-    for batch in range(3):  # 3 appends -> >= 3 index files
-        df = spark.createDataFrame(
-            [(f"b{batch}-{i}", base + dt.timedelta(days=batch)) for i in range(4)],
-            "payload string, timestamp timestamp",
-        )
-        store.store(df)
-
-    def idx_files():
-        return glob.glob(str(tmp_path / "s" / "id_index" / "*.parquet"))
-
-    def idx_ids():
-        return {
-            r["id"] for r in spark.read.parquet(store.index_path).collect()
-        }
-
-    assert len(idx_files()) >= 3
-    victim = store.current().filter("payload = 'b1-2'").collect()[0]["id"]
-    store.delete(victim)
-    assert victim in idx_ids()  # tombstone alone leaves the index stale
-
-    store.compact()
-    assert len(idx_files()) == 1  # coalesced
-    live = idx_ids()
-    assert victim not in live and len(live) == 11
-    # index still drives pruned point lookups after the rewrite
-    target = store.current().filter("payload = 'b2-3'").collect()[0]["id"]
-    assert store._id_dates(target) == [dt.date(2026, 2, 3)]
-    assert store.get(target)["payload"] == "b2-3"
-    assert store.get(victim) is None
+def _batch(spark, first, n=10):
+    return messages_from_payloads(
+        spark, [{"n": i} for i in range(first, first + n)]
+    ).localCheckpoint(eager=True)  # one set of ids for every delivery
 
 
-def test_writer_lock_blocks_second_writer(spark, tmp_path):
-    # VERDICT r6 #6: the store is no longer implicitly single-writer —
-    # every mutating entry point takes the .store_lock lease, so a
-    # concurrent compact/store cannot interleave with a swap
-    from pypeman_spark.store import FileMessageStore, StoreLockTimeout
-
-    store = FileMessageStore(spark, str(tmp_path / "audit"), channel="t")
-    store.store(messages_from_payloads(spark, [{"i": 1}]))
-    other = FileMessageStore(spark, str(tmp_path / "audit"), channel="t")
-
-    store._acquire_lock("test-holder")
-    try:
-        with pytest.raises(StoreLockTimeout):
-            other._acquire_lock("contender", timeout=0.3)
-        # a held LIVE lease blocks mutations on the other handle
-        t0 = time.time()
-        with pytest.raises(StoreLockTimeout):
-            with other._writer_lock("store", timeout=0.3):
-                pass
-        assert time.time() - t0 < 5
-    finally:
-        store._release_lock()
-    # released -> the other handle proceeds
-    other.store(messages_from_payloads(spark, [{"i": 2}]))
-    assert store.total() == 2
-
-
-def test_stale_lock_from_dead_pid_is_broken(spark, tmp_path):
+def test_channel_redelivered_epoch_lands_once(spark, tmp_path):
+    """Spark re-delivers an epoch whose offsets it had not committed:
+    the second delivery stores, parks and settles nothing again."""
     from pypeman_spark.store import FileMessageStore
 
     store = FileMessageStore(spark, str(tmp_path / "audit"), channel="t")
-    # a lease left by a crashed process: pid that cannot exist
-    import os as _os
+    rs = RetryStore(spark, str(tmp_path / "retry"), channel="t")
+    chan = _parking_channel(spark, tmp_path, store, rs, "a")
+    msgs = _batch(spark, 0)
 
-    _os.makedirs(store.base_path, exist_ok=True)
-    with open(store.lock_path, "w") as fh:
-        fh.write("999999999 crashed 0")
-    # acquire must break it and proceed, not dead-wait
-    store.store(messages_from_payloads(spark, [{"i": 1}]))
-    assert store.total() == 1
-    assert not _os.path.exists(store.lock_path)
+    def seen():
+        parked = sorted((r["id"], r["attempts"]) for r in rs.pending().collect())
+        return store.total(), _resolved(store), parked
+
+    chan.process_batch(msgs, 0)
+    first = seen()
+    assert first[0] == 10 and len(first[2]) == 4
+    chan.process_batch(msgs, 0)
+    assert seen() == first
 
 
-def test_crash_mid_compact_rolls_forward_never_mixed(spark, tmp_path):
-    # kill the process between the three swap renames: the journal is
-    # on disk, so the next open must roll FORWARD to the fully-new
-    # state — a reader never sees new messages with the old event log
-    import os as _os
-
+def test_fresh_channel_lands_its_epoch_zero(spark, tmp_path):
+    """A second channel over the same stores, on a fresh checkpoint dir,
+    is a new query: its epoch 0 is not the first channel's epoch 0."""
     from pypeman_spark.store import FileMessageStore
 
-    path = str(tmp_path / "audit")
+    store = FileMessageStore(spark, str(tmp_path / "audit"), channel="t")
+    rs = RetryStore(spark, str(tmp_path / "retry"), channel="t")
+    _parking_channel(spark, tmp_path, store, rs, "a").process_batch(
+        _batch(spark, 0), 0)
+    _parking_channel(spark, tmp_path, store, rs, "b").process_batch(
+        _batch(spark, 10), 0)
+    assert store.total() == 20
+    assert rs.pending().count() == 4
+
+
+def _compactable(spark, path):
+    from pypeman_spark.store import FileMessageStore
+
     store = FileMessageStore(spark, path, channel="t")
-    store.store(messages_from_payloads(spark, [{"i": i} for i in range(5)]))
+    store.store(messages_from_payloads(spark, [{"i": i} for i in range(4)]))
     ids = sorted(r["id"] for r in store.current().select("id").collect())
     store.change_message_state(ids[0], "processed")
-    store.delete(ids[1])
-    expected = {
-        r["id"]: r["state"] for r in store.current().collect()
-    }
-
-    real_replace = _os.replace
-    calls = {"n": 0}
-
-    def dying_replace(src, dst):
-        # let the journal land (first replace), then die after the
-        # FIRST directory rename of the swap — messages/ is moved to
-        # .old, nothing else has happened: maximum mixed-state hazard
-        real_replace(src, dst)
-        if dst == store.journal_path:
-            return
-        calls["n"] += 1
-        if calls["n"] >= 1:
-            raise RuntimeError("simulated crash mid-swap")
-
-    _os.replace = dying_replace
-    try:
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            store.compact()
-    finally:
-        _os.replace = real_replace
-    assert _os.path.isfile(store.journal_path)  # crash left the journal
-
-    # next open (a new process in real life) recovers; lease from the
-    # "crashed" holder is ours-alive here, so drop it as the crash would
-    store._release_lock()
-    recovered = FileMessageStore(spark, path, channel="t")
-    assert not _os.path.isfile(recovered.journal_path)
-    got = {r["id"]: r["state"] for r in recovered.current().collect()}
-    assert got == expected  # the compacted (new) state, complete
-    # and the store is fully functional post-recovery
-    recovered.change_message_state(ids[2], "error")
-    assert recovered.get(ids[2])["state"] == "error"
-    recovered.compact()
-    assert {
-        r["id"]: r["state"] for r in recovered.current().collect()
-    }[ids[2]] == "error"
+    store.change_message_state(ids[0], "error")
+    store.add_sub_message_state(ids[1], "s1", "rejected")
+    store.add_message_meta_infos(ids[2], "k", "v")
+    store.delete(ids[3])
+    return store, ids
 
 
-def test_crash_before_journal_leaves_store_untouched(spark, tmp_path):
-    # a crash while WRITING the fresh dirs (pre-journal) must leave the
-    # live store intact; the orphan .compact_* dirs are swept on open
-    import glob as _glob
-    import os as _os
-
+def test_compact_keeps_events_appended_mid_swap(spark, tmp_path):
+    """An events append that lands between compact()'s snapshot of the
+    log and its commit survives the swap."""
     from pypeman_spark.store import FileMessageStore
 
     path = str(tmp_path / "audit")
-    store = FileMessageStore(spark, path, channel="t")
-    store.store(messages_from_payloads(spark, [{"i": i} for i in range(3)]))
-    expected = sorted(r["id"] for r in store.current().select("id").collect())
+    store, ids = _compactable(spark, path)
+    other = FileMessageStore(spark, path, channel="t")
+    fold = store._minimal_events
+    calls = []
 
-    # simulate: fresh dirs half-written, process died before the journal
-    # (base_path is <path>/<channel> — the store root, not the parent)
-    _os.makedirs(_os.path.join(store.base_path, ".compact_msg_deadbeef"))
-    store._release_lock()
+    def fold_racing_an_append(events):
+        if not calls:
+            other.change_message_state(ids[1], "processed")
+        calls.append(1)
+        return fold(events)
 
-    recovered = FileMessageStore(spark, path, channel="t")
-    assert not _glob.glob(_os.path.join(store.base_path, ".compact_*"))
-    assert sorted(
-        r["id"] for r in recovered.current().select("id").collect()
-    ) == expected
-
-
-# ---- cross-process lease contention (VERDICT r7 task #8) -------------------
-
-_HOLDER = """
-import os, signal, sys, time
-lock = sys.argv[1]
-hold_s = float(sys.argv[2])
-fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-with os.fdopen(fd, "w") as fh:
-    fh.write(f"{os.getpid()} ext_compact {time.time()}")
-print("HELD", flush=True)
-time.sleep(hold_s)
-os.unlink(lock)
-print("RELEASED", flush=True)
-"""
+    store._minimal_events = fold_racing_an_append
+    store.compact()
+    assert len(calls) == 2  # the swap lost its claim and folded again
+    reopened = FileMessageStore(spark, path, channel="t")
+    assert reopened.get(ids[1])["state"] == "processed"
+    assert _resolved(reopened) == _resolved(other)
 
 
-def _spawn_holder(lock_path, hold_s):
-    import subprocess
-    import sys
-
-    p = subprocess.Popen(
-        [sys.executable, "-c", _HOLDER, lock_path, str(hold_s)],
-        stdout=subprocess.PIPE, text=True,
-    )
-    assert p.stdout.readline().strip() == "HELD"
-    return p
-
-
-def test_store_blocks_on_live_foreign_lease_then_succeeds(spark, tmp_path):
-    """A SECOND PROCESS holds the writer lease mid-'compact'; this
-    process's store() must BLOCK (not proceed, not error) until the
-    holder releases, then land the rows."""
-    import os
-
+def test_compact_crash_between_commits_keeps_current(spark, tmp_path):
+    """compact() dying after its messages commit and before its events
+    commit leaves current() as it was, read from a reopened store."""
     from pypeman_spark.store import FileMessageStore
 
     path = str(tmp_path / "audit")
-    store = FileMessageStore(spark, path, channel="t")
-    store.store(messages_from_payloads(spark, [{"i": 0}]))
+    store, ids = _compactable(spark, path)
+    before = _resolved(store)
 
-    holder = _spawn_holder(store.lock_path, 3.0)
-    t0 = time.monotonic()
-    store.store(messages_from_payloads(spark, [{"i": 1}]))  # must block
-    waited = time.monotonic() - t0
-    holder.wait(timeout=10)
-    assert waited >= 2.0, f"store() did not wait for the live lease ({waited:.1f}s)"
-    assert store.current().count() == 2
-    assert not os.path.isfile(store.lock_path)  # our lease released too
+    def crash(fn):
+        raise RuntimeError("simulated crash before the events commit")
 
-
-def test_store_takes_over_sigkilled_holder_lease(spark, tmp_path):
-    """A holder process SIGKILLed mid-lease leaves a lock naming a dead
-    pid; the next store() must detect the dead holder and take over
-    promptly instead of waiting out the timeout."""
-    import os
-    import signal
-
-    from pypeman_spark.store import FileMessageStore
-
-    path = str(tmp_path / "audit")
-    store = FileMessageStore(spark, path, channel="t")
-    store.store(messages_from_payloads(spark, [{"i": 0}]))  # creates dirs
-    holder = _spawn_holder(store.lock_path, 3600.0)  # would hold forever
-    os.kill(holder.pid, signal.SIGKILL)
-    holder.wait(timeout=10)
-
-    t0 = time.monotonic()
-    store.store(messages_from_payloads(spark, [{"i": 1}]))
-    waited = time.monotonic() - t0
-    assert waited < 20.0, "stale-lease takeover took too long"
-    assert store.current().count() == 2
-    assert not os.path.isfile(store.lock_path)
+    store.events.swap = crash
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store.compact()
+    reopened = FileMessageStore(spark, path, channel="t")
+    assert reopened.messages.snapshot().count() == 3  # step 1 landed
+    assert _resolved(reopened) == before
 
 
-def test_concurrent_recovery_waits_for_live_compactor(spark, tmp_path):
-    """Opening a store while a FOREIGN LIVE process holds the lease and
-    a compact journal exists must leave the journal for the holder (no
-    roll-forward under a live lease), but a dead holder's journal is
-    recovered on the next open."""
-    import json as _json
-    import os
-    import signal
-
-    from pypeman_spark.store import FileMessageStore
-
-    path = str(tmp_path / "audit")
-    store = FileMessageStore(spark, path, channel="t")
-    store.store(messages_from_payloads(spark, [{"i": 0}]))
-    base = store.base_path
-    fresh = os.path.join(base, ".compact_msg_x")
-    os.makedirs(fresh)
-    with open(os.path.join(base, ".compact_journal"), "w") as fh:
-        _json.dump({"pairs": [[os.path.join(base, "events"), fresh]]}, fh)
-
-    holder = _spawn_holder(store.lock_path, 3600.0)
-    try:
-        FileMessageStore(spark, path, channel="t")  # open under live lease
-        assert os.path.isfile(os.path.join(base, ".compact_journal"))
-        assert os.path.isdir(fresh)
-    finally:
-        os.kill(holder.pid, signal.SIGKILL)
-        holder.wait(timeout=10)
-
-    FileMessageStore(spark, path, channel="t")  # holder dead -> recover
-    assert not os.path.isfile(os.path.join(base, ".compact_journal"))
-    assert not os.path.isdir(fresh)
+def test_compact_leaves_one_state_event_per_id(spark, tmp_path):
+    store, ids = _compactable(spark, str(tmp_path / "audit"))
+    before = _resolved(store)
+    store.compact()
+    per_id = store.events.snapshot().groupBy("id", "kind").count()
+    assert per_id.filter("kind = 'state' AND count > 1").count() == 0
+    assert per_id.filter(F.col("id") == ids[3]).count() == 0  # deleted id
+    assert _resolved(store) == before

@@ -101,17 +101,22 @@ def main() -> int:
     # default stays Spark's default so the sf0.001-0.1 gates keep
     # driver parity; set e.g. SPARK_GRAFT_DRIVER_MEM=4g for sf1 runs.
     drv_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    # None when unset; else whether it could apply and is recorded in
+    # the JSON output
+    drv_mem_applied = None
     if drv_mem:
         # spark.driver.memory only takes effect when THIS builder
-        # launches the JVM; under spark-submit or a pre-existing
-        # gateway the knob is silently ignored — warn so an sf1 run in
-        # a reused session doesn't assume it applied (ADVICE r14).
-        from pyspark import SparkContext
-
-        if SparkContext._active_spark_context is not None:
+        # launches the JVM. Under spark-submit (PYSPARK_GATEWAY_PORT is
+        # set: the JVM is already up) or with an active session the
+        # knob is ignored, so say so on stderr and in the JSON output.
+        drv_mem_applied = (
+            SparkSession.getActiveSession() is None
+            and "PYSPARK_GATEWAY_PORT" not in os.environ
+        )
+        if not drv_mem_applied:
             print(
-                "WARNING: SPARK_GRAFT_DRIVER_MEM set but a SparkContext "
-                "already exists — driver memory NOT changed",
+                "WARNING: SPARK_GRAFT_DRIVER_MEM set but the driver JVM "
+                "is already running — driver memory NOT changed",
                 file=sys.stderr,
             )
         builder = builder.config("spark.driver.memory", drv_mem)
@@ -239,6 +244,9 @@ def main() -> int:
             json.dump(
                 {
                     "sf_dir": SF_DIR,
+                    "driver_mem": {
+                        "requested": drv_mem, "applied": drv_mem_applied,
+                    },
                     "n_queries": len(results),
                     "n_failures": len(failures),
                     "failures": failures,
