@@ -76,7 +76,8 @@ def scan_files(
             if seen.get(p) != mtime:
                 fresh.append(p)
                 new_seen[p] = mtime
-        kv_store.save_data("file_watcher", basedir, new_seen)
+        if new_seen != seen:
+            kv_store.save_data("file_watcher", basedir, new_seen)
         paths = fresh
     if not paths:
         from ..message import MESSAGE_SCHEMA

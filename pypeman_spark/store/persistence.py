@@ -3,20 +3,21 @@
 Reference: ``pypeman/persistence.py:45,93`` — Memory and Sqlite backends
 behind ``BaseNode.save_data/restore_data`` (``nodes.py:283-303``).
 
-Spark design: a tiny ``(namespace, key, value, ts)`` parquet table;
-writes append, reads resolve latest-wins with a max-ts window. With
-Delta this becomes a MERGE. Values are JSON strings.
+Spark design: a small ``(namespace, key, value)`` :class:`~.txtable.TxTable`
+keyed by ``(namespace, key)`` with one bucket. A save is a MERGE of one
+row (``merge_upsert``), so the table holds one row per key and the last
+commit wins; a restore filters the snapshot. Values are JSON strings.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import tempfile
-import time
 from typing import Any
 
-from pyspark.sql import SparkSession, Window, functions as F, types as T
+from pyspark.sql import SparkSession, functions as F, types as T
+
+from .txtable import TxTable
 
 __all__ = ["KVStore", "MemoryKVStore"]
 
@@ -25,7 +26,6 @@ _KV_SCHEMA = T.StructType(
         T.StructField("namespace", T.StringType()),
         T.StructField("key", T.StringType()),
         T.StructField("value", T.StringType()),
-        T.StructField("ts", T.DoubleType()),
     ]
 )
 
@@ -34,25 +34,21 @@ class KVStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self.table = TxTable(spark, path, key_cols=["namespace", "key"],
+                             n_buckets=1)
 
     def save_data(self, namespace: str, key: str, value: Any) -> None:
-        df = self.spark.createDataFrame(
-            [(namespace, key, json.dumps(value), time.time())], _KV_SCHEMA
-        )
-        df.write.mode("append").parquet(self.path)
+        self.table.merge_upsert(self.spark.createDataFrame(
+            [(namespace, key, json.dumps(value))], _KV_SCHEMA
+        ))
 
     def restore_data(self, namespace: str, key: str, default: Any = None) -> Any:
-        if not os.path.isdir(self.path):
+        df = self.table.snapshot()
+        if not df.columns:  # nothing saved yet: no schema recorded
             return default
-        df = self.spark.read.schema(_KV_SCHEMA).parquet(self.path)
-        w = Window.partitionBy("namespace", "key").orderBy(F.col("ts").desc())
-        rows = (
-            df.filter((F.col("namespace") == namespace) & (F.col("key") == key))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("value")
-            .collect()
-        )
+        rows = df.filter(
+            (F.col("namespace") == namespace) & (F.col("key") == key)
+        ).select("value").collect()
         if not rows:
             return default
         return json.loads(rows[0]["value"])

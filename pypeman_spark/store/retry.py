@@ -11,17 +11,20 @@ Spark design: the retry table IS the buffer — no global pause needed
 one schema (``_LOG_SCHEMA``). A park is one row per generation — the
 full message plus ``(stage, retry_at, attempts)`` — and an ack is a
 tombstone row ``(id, attempts, acked=true)`` in the same log. One fold,
-``_live()``, anti-joins the tombstones away over one ``snapshot()``;
-``retry_due``, ``ack`` and ``is_empty`` read it, and only the public
-``pending()`` sorts (pypeman lists the queue oldest first). A sweep
-checkpoints its due rows once, re-runs ``Pipeline.run(df,
-from_stage=stage)`` per stage, and settles with one commit: the
-tombstones of every consumed generation plus the re-parks, so a failed
-settle leaves every message parked. A park takes ``txn=(app, version)``
-and no-ops when ``version`` is not above the log's last committed one
-for ``app``, so a channel's re-delivered epoch parks once. Files the log no longer references are
-reclaimed by ``TxTable.vacuum`` past its grace period
-(``RetryStore.log.vacuum()``).
+``_fold()``, anti-joins the tombstones away; ``_live()`` applies it to
+one ``snapshot()``. ``retry_due``, ``ack`` and ``is_empty`` read that,
+and only the public ``pending()`` sorts (pypeman lists the queue oldest
+first). A sweep checkpoints its due rows once, re-runs
+``Pipeline.run(df, from_stage=stage)`` per stage, and settles with one
+commit: the tombstones of every consumed generation plus the re-parks,
+so a failed settle leaves every message parked. A park takes
+``txn=(app, version)`` and no-ops when ``version`` is not above the
+log's last committed one for ``app``, so a channel's re-delivered epoch
+parks once. Files the log no longer references are reclaimed by
+``TxTable.vacuum`` past its grace period (``RetryStore.log.vacuum()``).
+
+:meth:`RetryStore.compact` bounds the log: one ``TxTable.swap`` replaces
+it by its fold, then ``TxTable.compact`` merges the files.
 """
 
 from __future__ import annotations
@@ -114,18 +117,30 @@ class RetryStore:
             .drop("__stage")
         )
 
+    @staticmethod
+    def _fold(log: DataFrame) -> DataFrame:
+        """The fold: the parked generations of ``log`` without a
+        tombstone, unsorted, as log rows."""
+        # no broadcast hint: tombstones grow with parked volume; AQE
+        # broadcasts the anti-join side while it is small
+        return log.filter(~F.col("acked")).join(
+            log.filter("acked"), ["id", "attempts"], "left_anti"
+        )
+
     def _live(self) -> DataFrame:
-        """The fold: parked generations without a tombstone, unsorted."""
+        """The live generations, without the ``acked`` column."""
         log = self.log.snapshot()
         if not log.columns:  # nothing parked yet: no schema recorded
             log = self.spark.createDataFrame([], _LOG_SCHEMA)
-        # no broadcast hint: tombstones grow with parked volume; AQE
-        # broadcasts the anti-join side while it is small
-        return (
-            log.filter(~F.col("acked"))
-            .join(log.filter("acked"), ["id", "attempts"], "left_anti")
-            .drop("acked")
-        )
+        return self._fold(log).drop("acked")
+
+    def compact(self) -> None:
+        """Shrink the log without changing :meth:`pending`: one swap for
+        its live generations (tombstones and the rows they ack go), then
+        ``TxTable.compact`` into one file. A park that lands during the
+        swap is kept: the swap folds again on the fresh snapshot."""
+        self.log.swap(self._fold)
+        self.log.compact()
 
     def pending(self) -> DataFrame:
         """All parked, un-acked rows, oldest first (``retry.py:96-120``)."""

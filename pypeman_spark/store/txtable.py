@@ -2966,19 +2966,13 @@ class TxTable:
         source = source.cache()
         s = source.withColumn("__s", F.lit(1)).alias("s")
 
-        def rows(t: "DataFrame | None") -> DataFrame:
-            # the full-outer join; without target files, all inserts
-            if t is None:
-                return s.withColumn("__t", F.lit(None).cast("int"))
-            return t.alias("t").join(s, on=self.key_cols, how="full_outer")
-
         def attempt(st: LogState) -> "_Plan | int":
             schema = st.schema
             tb, scopes = self._touched_scopes(source)
             old = self._old_files(st.live, set(tb), scopes)
             # table columns + types: current schema, plus source
             # columns when inserting as-is (schema evolution)
-            from pyspark.sql.types import StructType
+            from pyspark.sql.types import StructField, StructType
 
             types: dict = {}
             tbl_cols: list[str] = []
@@ -3058,6 +3052,18 @@ class TxTable:
                 else:
                     v = F.when(m_t, t_val(c)).otherwise(ins_v)
                 out_cols.append(v.alias(c))
+
+            def rows(t: "DataFrame | None") -> DataFrame:
+                # the full-outer join; without target files the target
+                # is empty but typed, so `t.<col>` in a clause resolves
+                if t is None:
+                    t = self.spark.createDataFrame([], StructType([
+                        StructField(c, types[c]) for c in tbl_cols
+                    ])).withColumn("__t", F.lit(1))
+                return t.alias("t").join(
+                    s, on=self.key_cols, how="full_outer"
+                )
+
             adds, removed, dv_acts = self._dml_step(
                 st, old, (upd_gate if upd else F.lit(False)) | kill_del,
                 rows=rows, post=lambda d: d.where(keep).select(*out_cols),

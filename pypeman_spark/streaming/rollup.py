@@ -1,19 +1,27 @@
 """Continuous time-bucketed rollup (the "hypertable continuous
 aggregate" pattern): a streaming ``foreachBatch`` merges each
-micro-batch's partial aggregates into a date-partitioned parquet store.
+micro-batch's partial aggregates into a :class:`~..store.txtable.TxTable`
+keyed by ``(day, bucket_start, *keys)`` and partitioned by ``day``.
 
 Why this shape at 100 TB:
 
 * The store keeps ONE row per (bucket, key) — mergeable partial state
   (count + sum), never raw events. Readers get the rollup with a plain
   scan; no re-aggregation of history.
-* Each micro-batch only rewrites the *day partitions it touches*:
-  the merge filters the store to affected days (partition-pruned scan),
-  unions the batch partials, re-aggregates, and rewrites just those
-  partitions via dynamic partition overwrite. Steady-state cost is
-  proportional to the batch's time spread, not to history size.
+* Each micro-batch is one ``MERGE``: matched rows add the batch's
+  partials to their own, new (bucket, key) rows insert. ``day`` is
+  derived from ``bucket_start`` and is both a key and the partition
+  column, so the merge rewrites only the *day partitions it touches*;
+  steady-state cost is proportional to the batch's time spread, not to
+  history size.
 * count/sum are associative, so merging partials is exact regardless of
   how the stream is micro-batched; avg/rates derive at read time.
+* The merge commits under ``txn=(query token, batch_id)``: the marker
+  lands in the same commit as the data, so a re-delivered batch is a
+  no-op and no crash point merges a batch twice.
+
+Key columns match by equality, as in SQL ``MERGE``: a null key never
+matches a stored row, so each batch adds its own row for it.
 
 This is the streaming twin of the batch ``hourly_event_rollup`` query —
 the registry drives both against the same oracle.
@@ -21,10 +29,11 @@ the registry drives both against the same oracle.
 
 from __future__ import annotations
 
-import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..store.txtable import TxTable
 from .token import query_token
 
 __all__ = ["ContinuousRollup"]
@@ -34,7 +43,7 @@ class ContinuousRollup:
     """Incrementally-maintained ``(bucket_start, *keys) -> (n, total)``
     aggregate over an event-time column.
 
-    :param path: parquet store directory (partitioned by ``day``)
+    :param path: store directory (a ``TxTable`` partitioned by ``day``)
     :param bucket: time bucket width, e.g. ``"1 hour"``
     :param keys: grouping key columns beside the bucket
     :param ts_col: event-time column
@@ -58,8 +67,11 @@ class ContinuousRollup:
         self.value_col = value_col
         self.checkpoint: str | None = None
         self._query_token: str | None = None
+        self.table = TxTable(
+            spark, path, key_cols=["day", "bucket_start", *self.keys],
+            n_buckets=1, partition_by=["day"],
+        )
 
-    # -- aggregation pieces -------------------------------------------------
     def _partials(self, df: DataFrame) -> DataFrame:
         aggs = [F.count(F.lit(1)).alias("n")]
         if self.value_col:
@@ -75,93 +87,30 @@ class ContinuousRollup:
             .withColumn("day", F.to_date(F.col("bucket_start")))
         )
 
-    def _merge_partials(self, df: DataFrame) -> DataFrame:
-        aggs = [F.sum("n").alias("n")]
-        if self.value_col:
-            aggs.append(F.sum("total").alias("total"))
-        return df.groupBy("bucket_start", *self.keys, "day").agg(*aggs)
-
     # -- foreachBatch sink --------------------------------------------------
     def merge_batch(self, batch_df: DataFrame, batch_id: int = 0) -> None:
-        """Merge one (micro-)batch into the store. Exact for any batch
-        split because count/sum partials are associative.
+        """Merge one (micro-)batch into the store: one ``TxTable.merge``
+        that adds the batch's partials to the matching rows. Exact for
+        any batch split because count/sum partials are associative.
 
         Replay guard: ``foreachBatch`` is AT-LEAST-ONCE across query
         restarts — after a crash between a completed merge and the
         checkpoint commit, Structured Streaming re-delivers the same
-        ``batch_id``. The ``_last_batch`` marker (written tmp+rename
-        after each merge) makes the re-delivery a no-op instead of a
-        double-merge. Task-level retries WITHIN a batch need no guard
-        (Spark recomputes deterministically before the sink commits).
-        Remaining window, stated honestly: the multi-day dynamic
-        partition overwrite plus the marker write are not one atomic
-        unit — a crash between them still replays one merge; closing
-        that needs a transactional table format (Delta/Iceberg MERGE),
-        the same substitution the localCheckpoint note below makes."""
-        marker = os.path.join(self.path, "_last_batch")
-        # the checkpointed query's id, else the token start() minted:
-        # a fresh query pointed at an existing store must not skip
-        # batches up to an older query's marker (data loss)
+        ``batch_id``. The merge commits under ``txn=(token, batch_id)``,
+        so a re-delivery of a committed batch is a no-op. ``token`` is
+        the checkpointed query's id, else the token :meth:`start`
+        minted: a fresh query pointed at an existing store merges from
+        its batch 0. Task-level retries WITHIN a batch need no guard
+        (Spark recomputes deterministically before the sink commits)."""
         token = query_token(self.checkpoint, self._query_token or "adhoc")
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                txt = fh.read().strip()
-            # marker format "<query_token>:<batch_id>" — skip only when
-            # the SAME query re-delivers; a fresh query's batch 0 must
-            # merge even if an old marker is present (checkpoint reset)
-            if ":" in txt:
-                mtok, _, mid = txt.rpartition(":")
-                if mtok == token and mid and batch_id <= int(mid):
-                    return
-            elif txt.isdigit() and self.checkpoint and os.path.isfile(
-                os.path.join(self.checkpoint, "metadata")
-            ):
-                # Legacy bare-int marker from a pre-token version of
-                # this store, under a checkpoint-backed query. Spark
-                # re-delivers at most the LAST uncommitted batch, so a
-                # genuine replay arrives with batch_id == marker —
-                # honor exactly that (adopting the marker under the
-                # current token), which restores the old format's
-                # replay protection. Any OTHER batch id means this is
-                # not a replay of the marker batch (a reset checkpoint
-                # restarts at 0, a continuation arrives at marker+1):
-                # merge, and the post-merge marker write upgrades the
-                # format. This avoids re-introducing the reset-time
-                # data loss the token format exists to prevent.
-                if batch_id == int(txt):
-                    tmp2 = marker + f".tmp{os.getpid()}"
-                    with open(tmp2, "w") as fh:
-                        fh.write(f"{token}:{int(txt)}")
-                    os.replace(tmp2, marker)
-                    return
-        spark = batch_df.sparkSession
-        partials = self._partials(batch_df)
-        days = [r["day"] for r in partials.select("day").distinct().collect()]
-        if not days:
-            return
-        merged = partials
-        if os.path.isdir(self.path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.path)
-        ):
-            existing = spark.read.parquet(self.path).filter(
-                F.col("day").isin(days)  # partition-pruned: touched days only
-            )
-            merged = existing.unionByName(partials)
-        # localCheckpoint truncates lineage so the write doesn't see its
-        # own input path ("cannot overwrite a path being read from") —
-        # it also materializes the merge once. On a real deployment a
-        # table format (Delta/Iceberg MERGE INTO) replaces this dance.
-        merged = self._merge_partials(merged).localCheckpoint(eager=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day")
-            .parquet(self.path)
+        add = {"n": "t.n + s.n"}
+        if self.value_col:
+            # sum() skips nulls: a null partial leaves the other side
+            add["total"] = "coalesce(t.total + s.total, t.total, s.total)"
+        self.table.merge(
+            self._partials(batch_df), when_matched_update=add,
+            txn=(token, int(batch_id)),
         )
-        tmp = marker + f".tmp{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(f"{token}:{batch_id}")
-        os.replace(tmp, marker)
 
     def start(
         self,
@@ -176,12 +125,10 @@ class ContinuousRollup:
         checkpoint gets a new id and merges from batch 0. Without one,
         each ``start()`` mints a fresh token — an un-checkpointed query
         can never legitimately re-deliver across runs, so skipping on
-        an older run's marker would be data loss."""
-        import uuid as _uuid
-
+        an older run's commit would be data loss."""
         if checkpoint:
             self.checkpoint = checkpoint
-        self._query_token = _uuid.uuid4().hex
+        self._query_token = uuid.uuid4().hex
         writer = stream_df.writeStream.foreachBatch(self.merge_batch)
         if self.checkpoint:
             writer = writer.option("checkpointLocation", self.checkpoint)
@@ -190,4 +137,4 @@ class ContinuousRollup:
         return writer.start()
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self.table.snapshot()

@@ -278,51 +278,3 @@ def test_mp4_picks_video_trak_behind_audio_trak():
     ts_p, samples_p = _parse_mp4(patched)
     assert ts_p == ts_v == 90000
     assert samples_p == samples_v
-
-
-def test_rollup_legacy_marker_exact_replay_honored(tmp_path, spark):
-    """A legacy bare-int marker (pre-token store) under a checkpointed
-    query: re-delivery of exactly the marker batch is a no-op (the old
-    format's replay protection — Spark re-runs at most the LAST
-    uncommitted batch, so a genuine replay always arrives with
-    batch_id == marker), while any other batch id merges. An upgraded
-    store thus neither double-counts the re-delivered batch nor loses
-    data after a checkpoint reset."""
-    from pypeman_spark.streaming.rollup import ContinuousRollup
-
-    path = str(tmp_path / "agg")
-    ckpt = tmp_path / "ckpt"
-    ckpt.mkdir()
-    (ckpt / "metadata").write_text('{"id": "q-legacy"}')
-    df1 = spark.createDataFrame(
-        [("2024-01-01 10:05:00", "a", 1.0)],
-        "ts string, event_type string, value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    r = ContinuousRollup(spark, path)
-    r.checkpoint = str(ckpt)
-    r.merge_batch(df1, batch_id=5)
-    marker = os.path.join(path, "_last_batch")
-    with open(marker, "w") as fh:  # simulate a pre-upgrade marker
-        fh.write("5")
-
-    # same checkpoint re-delivers batch 5 -> no-op, marker upgraded
-    r.merge_batch(df1, batch_id=5)
-    assert r.read().agg(F.sum("n")).collect()[0][0] == 1
-    with open(marker) as fh:
-        assert fh.read() == "q-legacy:5"
-
-    # continuation batch 6 merges through the upgraded marker
-    r.merge_batch(df1, batch_id=6)
-    assert r.read().agg(F.sum("n")).collect()[0][0] == 2
-
-    # legacy marker + checkpoint RESET (fresh id, batch 0): must merge
-    with open(marker, "w") as fh:
-        fh.write("6")
-    ckpt2 = tmp_path / "ckpt2"
-    ckpt2.mkdir()
-    (ckpt2 / "metadata").write_text('{"id": "q-new"}')
-    r2 = ContinuousRollup(spark, path)
-    r2.checkpoint = str(ckpt2)
-    r2.merge_batch(df1, batch_id=0)
-    assert r2.read().agg(F.sum("n")).collect()[0][0] == 3

@@ -192,6 +192,40 @@ def test_continuous_rollup_matches_batch(spark, tmp_path):
     assert exact.exceptAll(inc).count() == 0
 
 
+def test_continuous_rollup_merge_rewrites_only_touched_day(spark, tmp_path):
+    # a batch that touches one day rewrites that day's files only; the
+    # live files of every other day stay as they were
+    from pypeman_spark.streaming.rollup import ContinuousRollup
+
+    def batch(*rows):
+        return spark.createDataFrame(
+            list(rows), "ts timestamp, event_type string, value double"
+        )
+
+    rollup = ContinuousRollup(spark, str(tmp_path / "agg"))
+    day2 = BASE + dt.timedelta(days=1)
+    rollup.merge_batch(batch((_m(0), "a", 1.0), (day2, "a", 2.0)), 0)
+
+    def files_by_day():
+        _v, live = rollup.table._replay()
+        out = {}
+        for f, info in live.items():
+            out.setdefault(info["parts"]["day"], set()).add(f)
+        return out
+
+    before = files_by_day()
+    rollup.merge_batch(batch((_m(5), "a", 3.0), (_m(7), "b", 4.0)), 1)
+    after = files_by_day()
+    touched = str(BASE.date())
+    assert set(before) == set(after) == {touched, str(day2.date())}
+    assert after[str(day2.date())] == before[str(day2.date())]
+    assert after[touched] != before[touched]
+    got = {
+        (r["event_type"], r["n"], r["total"]) for r in rollup.read().collect()
+    }
+    assert got == {("a", 2, 4.0), ("a", 1, 2.0), ("b", 1, 4.0)}
+
+
 def test_hash_sample_nested_and_stable(spark):
     from pypeman_spark.functions.sampling import hash_sample
 

@@ -68,6 +68,20 @@ def test_scan_files_mtime_repickup(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["payload"] == "v2"
 
 
+def test_scan_files_idle_ticks_save_nothing(spark, tmp_path):
+    # a tick that finds no new or modified file leaves the kv store alone
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "x.txt").write_text("v1")
+    kv = KVStore(spark, str(tmp_path / "kv"))
+    w = FileWatcher(spark, str(d), regex=r".*\.txt$", kv_store=kv)
+    assert w.tick().count() == 1
+    v = kv.table.version()
+    assert w.tick().count() == 0
+    assert w.tick().count() == 0
+    assert kv.table.version() == v
+
+
 def test_merge_channels(spark):
     # test_mergechannel :1275
     a = messages_from_payloads(spark, [{"s": 1}], channel="a")

@@ -159,6 +159,15 @@ def test_kv_store_latest_wins(spark, tmp_path):
     assert kv.restore_data("ns", "k") == {"v": 2}
 
 
+def test_kv_store_keeps_one_row_per_key(spark, tmp_path):
+    # a save merges over the key's row instead of appending another
+    kv = KVStore(spark, str(tmp_path / "kv"))
+    for i in range(5):
+        kv.save_data("ns", "k", i)
+    assert kv.table.count() == 1
+    assert kv.restore_data("ns", "k") == 4
+
+
 def test_auto_retry_node_parks_at_stage(spark, tmp_path):
     # nodes.py:132,194-204 auto_retry_exceptions: a failing node's rows
     # become wait_retry tagged with the node name, not error
@@ -236,6 +245,66 @@ def test_retry_ack_without_attempts(spark, tmp_path):
     rs.store_until_retry(msgs, "flaky")
     rs.ack(msgs.filter(F.col("payload").contains('"n": 1')).select("id"))
     assert [r["payload"] for r in rs.pending().collect()] == ['{"n": 2}']
+
+
+def _failing_half_parked(spark, path):
+    """A retry store after two sweeps of a pipeline that fails the odd
+    rows: 2 of 4 messages acked, 2 re-parked twice."""
+    p = Pipeline("t").add(
+        FuncNode(lambda d: (_ for _ in ()).throw(RuntimeError("still down"))
+                 if d["n"] % 2 else d, name="flaky"),
+    )
+    rs = RetryStore(spark, path, channel="t", retry_delay=0.0)
+    rs.store_until_retry(
+        messages_from_payloads(spark, [{"n": i} for i in range(4)]), "flaky"
+    )
+    for step in (1, 2):
+        rs.retry_once(p, now=time.time() + step)
+    return rs
+
+
+def _parked(rs):
+    return sorted(
+        (r["id"], r["attempts"], r["retry_at"], r["payload"])
+        for r in rs.pending().collect()
+    )
+
+
+def test_retry_compact_keeps_pending_and_drops_settled_rows(spark, tmp_path):
+    rs = _failing_half_parked(spark, str(tmp_path))
+    before = _parked(rs)
+    assert len(before) == 2 and {a for _i, a, _t, _p in before} == {3}
+    assert rs.log.count() > 2  # parks, re-parks and their tombstones
+    rs.compact()
+    assert _parked(rs) == before
+    log = rs.log.snapshot()
+    assert log.count() == 2 and log.filter("acked").count() == 0
+    assert len(rs.log._replay()[1]) == 1  # one file after the compaction
+    assert _parked(RetryStore(spark, str(tmp_path), channel="t")) == before
+
+
+def test_retry_compact_keeps_park_landing_mid_swap(spark, tmp_path):
+    # a park that commits between compact()'s read of the log and its
+    # commit survives the swap
+    rs = _failing_half_parked(spark, str(tmp_path))
+    other = RetryStore(spark, str(tmp_path), channel="t", retry_delay=0.0)
+    late = messages_from_payloads(spark, [{"n": 99}])
+    fold = rs._fold
+    calls = []
+
+    def fold_racing_a_park(log):
+        if not calls:
+            other.store_until_retry(late, "flaky")
+        calls.append(1)
+        return fold(log)
+
+    rs._fold = fold_racing_a_park
+    rs.compact()
+    assert len(calls) == 2  # the swap lost its claim and folded again
+    parked = rs.pending().collect()
+    assert len(parked) == 3
+    assert late.first()["id"] in {r["id"] for r in parked}
+    assert rs.log.snapshot().filter("acked").count() == 0
 
 
 def test_retry_sweep_settle_is_all_or_nothing(spark, tmp_path, monkeypatch):

@@ -1128,6 +1128,25 @@ def test_merge_txn_idempotence(spark, tmp_path):
     assert {r["bal"] for r in t.read().collect()} == {15}
 
 
+def test_merge_clauses_see_target_without_files(spark, tmp_path):
+    """Clauses that reference ``t.<col>`` resolve when the merge reads
+    no target file: on the first write to an empty table, and when
+    every source key hashes to a bucket that holds no file."""
+    for mode in ("rewrite", "dv"):
+        t = _mk(spark, tmp_path / mode, n_buckets=16)
+        kw = dict(when_matched_update={"n": "t.n + s.n"},
+                  when_matched_condition="t.n >= 0",
+                  when_matched_delete="t.n < 0", mode=mode)
+        t.merge(spark.createDataFrame([(1, 5)], "k long, n long"), **kw)
+        keys = spark.range(1, 64).select(F.col("id").alias("k"))
+        b1 = keys.where("k = 1").select(t._bucket_col()).first()[0]
+        k2 = keys.where(t._bucket_col() != b1).first()["k"]
+        t.merge(spark.createDataFrame([(k2, 7)], "k long, n long"), **kw)
+        t.merge(spark.createDataFrame([(1, 5)], "k long, n long"), **kw)
+        got = {r["k"]: r["n"] for r in t.read().collect()}
+        assert got == {1: 10, k2: 7}, mode
+
+
 def test_scan_never_prunes_nan_rows_on_float_gt(spark, tmp_path):
     """Spark orders NaN above every double but footer stats exclude
     NaN: a '>' scan on a float column must NOT prune the file whose
