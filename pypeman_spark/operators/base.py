@@ -29,11 +29,15 @@ Cross-cutting BaseNode params reproduced here (``nodes.py:114-121``):
 Per-row failure never raises: nodes write ``err_msg`` and flip ``state``
 to ``error``; downstream nodes skip non-active rows. This is the columnar
 translation of pypeman's per-message exception routing
-(``channels.py:465-517``).
+(``channels.py:465-517``). Every Python callable a node runs goes
+through one builder, :func:`python_udf`, applied by
+:meth:`Node.apply_python`: a row whose call raises becomes that row's
+``error`` (or ``wait_retry`` under ``auto_retry``), never a failed batch.
 """
 
 
 import json
+from operator import call
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
@@ -48,7 +52,7 @@ from ..message import (
     add_context,
 )
 
-__all__ = ["Node", "active_cond", "payload_fn_udf"]
+__all__ = ["Node", "active_cond", "python_udf"]
 
 
 def active_cond() -> Column:
@@ -90,19 +94,56 @@ class Node:
         """Replace ``payload`` for active rows only; optionally record a
         per-row error condition (``err`` column evaluating to an error
         string or NULL)."""
-        act = active_cond()
+        return self._write_active(df, {"payload": expr}, content_type, err)
+
+    def apply_python(
+        self,
+        df: DataFrame,
+        fn: Callable[..., Any],
+        inputs: list[Column],
+        outputs: dict[str, T.DataType],
+        decode_json: bool = True,
+        content_type: str | None = None,
+    ) -> DataFrame:
+        """Run the Python ``fn`` over ``inputs`` through :func:`python_udf`
+        and write its ``outputs``, each to the column of its name.
+
+        The UDF result is projected once into a temporary struct column
+        that every write reads, so each row crosses into Python exactly
+        once per plan (see :func:`python_udf` for why that also needs
+        the nondeterministic marking). A row whose call raised goes to
+        ``error`` with the exception as ``err_msg`` (``wait_retry``
+        under ``auto_retry``); the outputs are written as in
+        :meth:`_write_active`."""
+        out = df.withColumn(
+            "__py", python_udf(fn, outputs, decode_json=decode_json)(*inputs)
+        )
+        cols = {name: F.col(f"__py.{name}") for name in outputs}
+        out = self._write_active(out, cols, content_type, F.col("__py.err"))
+        return out.drop("__py")
+
+    def _write_active(
+        self,
+        df: DataFrame,
+        cols: dict[str, Column],
+        content_type: str | None,
+        err: Column | None,
+    ) -> DataFrame:
+        """Route rows whose ``err`` is not NULL through :meth:`set_state`
+        (so ``auto_retry`` rewrites error → wait_retry), then write each
+        of ``cols`` (and ``content_type``) to the rows still active. The
+        other rows keep the column's value, or get NULL in a column
+        ``df`` does not have."""
         out = df
         if err is not None:
-            # via set_state so auto_retry rewrites error → wait_retry
             out = self.set_state(out, err.isNotNull(), ERROR, err_msg=err)
-            act = active_cond()
-        out = out.withColumn(
-            "payload", F.when(act, expr).otherwise(F.col("payload"))
-        )
         if content_type is not None:
+            cols = {**cols, "content_type": F.lit(content_type)}
+        act = active_cond()
+        for name, expr in cols.items():
+            new = F.when(act, expr)
             out = out.withColumn(
-                "content_type",
-                F.when(act, F.lit(content_type)).otherwise(F.col("content_type")),
+                name, new.otherwise(F.col(name)) if name in df.columns else new
             )
         return out
 
@@ -114,22 +155,13 @@ class Node:
         src: Column | None = None,
         content_type: str | None = None,
     ) -> DataFrame:
-        """Run the python ``fn`` over ``src`` (default: ``payload``) via
-        :func:`payload_fn_udf` and apply its result like
-        :meth:`apply_payload`, with the UDF's per-row error as ``err``.
-
-        The UDF result is projected once into a temporary struct column
-        and payload, err and state are all read from it, so each row
-        crosses into Python exactly once per plan (see
-        :func:`payload_fn_udf` for why that needs the nondeterministic
-        marking too)."""
-        udf = payload_fn_udf(fn, decode_json=decode_json)
-        out = df.withColumn("__fn", udf(F.col("payload") if src is None else src))
-        out = self.apply_payload(
-            out, F.col("__fn.payload"), content_type=content_type,
-            err=F.col("__fn.err"),
+        """:meth:`apply_python` for a ``payload -> payload`` callable
+        reading ``src`` (default: ``payload``)."""
+        return self.apply_python(
+            df, fn, [F.col("payload") if src is None else src],
+            {"payload": T.StringType()}, decode_json=decode_json,
+            content_type=content_type,
         )
-        return out.drop("__fn")
 
     def set_state(self, df: DataFrame, cond: Column, state: str, err_msg: Column | None = None) -> DataFrame:
         # err_msg must be set BEFORE state: active_cond() is symbolic and
@@ -213,53 +245,80 @@ class Node:
         return f"<{type(self).__name__} {self.name!r}>"
 
 
-_FN_RESULT = T.StructType(
-    [T.StructField("payload", T.StringType()), T.StructField("err", T.StringType())]
-)
+def _dump(value: Any) -> str | None:
+    """A Python value as a payload string: ``None`` and ``str`` pass,
+    anything else is JSON-encoded."""
+    return value if value is None or isinstance(value, str) else json.dumps(value)
 
 
-def payload_fn_udf(fn: Callable[[Any], Any], decode_json: bool = True):
-    """Lift an arbitrary python ``payload -> payload`` callable to an
-    Arrow-batched pandas UDF returning ``(payload, err)``.
+def _encoder(dtype: T.DataType) -> Callable[[Any], Any]:
+    """How a callable's return value becomes a value of ``dtype``."""
+    if isinstance(dtype, T.BooleanType):
+        return bool
+    if isinstance(dtype, T.MapType):  # meta: every value a string
+        return lambda m: {k: str(v) for k, v in m.items()}
+    if isinstance(dtype, T.ArrayType):  # a JSON array's elements
+        return lambda xs: None if xs is None else [
+            x if isinstance(x, str) else json.dumps(x) for x in xs
+        ]
+    return _dump
 
-    This is the generic escape hatch (FuncNode, ``nodes.py:976-1007``) and
-    the ONLY place arbitrary python runs in the hot path — everything
-    expressible as built-in Spark functions stays JVM-side. Errors are
-    captured per row, mirroring pypeman's per-message exception routing.
 
-    Once per message: the UDF is marked nondeterministic, and callers
-    (:meth:`Node.apply_payload_fn`) project its result into ONE struct
-    column that payload, err and state all read. Both halves are needed.
-    A deterministic UDF lets Catalyst push every downstream ``state``
-    filter (one per outcome in ``Pipeline.run``) below the projection
-    that holds it, inlining the UDF into the filter and adding a second
-    ``ArrowEvalPython`` per filter. A nondeterministic UDF referenced as
+def python_udf(fn: Callable[..., Any], outputs: dict[str, T.DataType],
+               decode_json: bool = True):
+    """Lift a Python callable to an Arrow-batched pandas UDF returning
+    ``struct<*outputs, err>``: the one place arbitrary Python runs in a
+    node. Everything expressible as built-in Spark functions stays
+    JVM-side.
+
+    Per row, ``fn`` receives the input columns' values (a JSON string
+    decoded when ``decode_json``, left as is when it does not parse; a
+    map as a dict) and returns one value per output, a tuple when there
+    are several. Each value is encoded by its output type (a payload
+    string is JSON-encoded unless it is ``None`` or a ``str``). A row
+    whose call raises gets null outputs and ``"<Type>: <message>"`` as
+    ``err``, pypeman's per-message exception routing.
+
+    Once per message: the UDF is marked nondeterministic, and
+    :meth:`Node.apply_python` projects its result into ONE struct
+    column that every output, ``err`` and ``state`` read. Both halves
+    are needed. A deterministic UDF lets Catalyst push every downstream
+    ``state`` filter (one per outcome in ``Pipeline.run``) below the
+    projection that holds it, inlining the UDF into the filter and
+    adding a second ``ArrowEvalPython`` per filter, or prune it from an
+    action (a count) that does not read its outputs, so a raising row
+    would count as processed. A nondeterministic UDF referenced as
     ``res["payload"]`` and ``res["err"]`` separately is evaluated once
     per reference, since Spark may not merge nondeterministic calls.
     """
     import pandas as pd
 
-    @F.pandas_udf(_FN_RESULT)
-    def _udf(s: pd.Series) -> pd.DataFrame:
-        payloads: list[str | None] = []
-        errs: list[str | None] = []
-        for raw in s:
+    names = list(outputs)
+    encoders = [_encoder(t) for t in outputs.values()]
+    single = len(names) == 1
+    failed = (None,) * len(names)
+    schema = T.StructType(
+        [T.StructField(n, t) for n, t in outputs.items()]
+        + [T.StructField("err", T.StringType())]
+    )
+
+    def decode(value: Any) -> Any:
+        if decode_json and isinstance(value, str):
             try:
-                obj = raw
-                if decode_json and raw is not None:
-                    try:
-                        obj = json.loads(raw)
-                    except (ValueError, TypeError):
-                        obj = raw
-                res = fn(obj)
-                if res is None or isinstance(res, str):
-                    payloads.append(res)
-                else:
-                    payloads.append(json.dumps(res))
-                errs.append(None)
+                return json.loads(value)
+            except ValueError:
+                pass
+        return value
+
+    @F.pandas_udf(schema)
+    def _udf(*cols: pd.Series) -> pd.DataFrame:
+        rows = []
+        for vals in zip(*cols):
+            try:
+                res = fn(*map(decode, vals))
+                rows.append((*map(call, encoders, (res,) if single else res), None))
             except Exception as exc:  # noqa: BLE001 — per-row error routing
-                payloads.append(raw)
-                errs.append(f"{type(exc).__name__}: {exc}")
-        return pd.DataFrame({"payload": payloads, "err": errs})
+                rows.append((*failed, f"{type(exc).__name__}: {exc}"))
+        return pd.DataFrame(rows, columns=[*names, "err"])
 
     return _udf.asNondeterministic()

@@ -4,14 +4,14 @@ In pypeman, ``msg.ctx[key]`` holds payload/meta snapshots taken at
 earlier nodes (``message.py:92-102``); ``contrib/ctx.py`` restores or
 combines them. In Spark **columns are the context** — a snapshot is a
 struct copy inside the same codegen stage; restoring is a column swap.
-No joins, no shuffles, no UDFs anywhere in this module.
+No joins and no shuffles; the only UDF is :class:`CombineCtx`'s dict
+merge.
 """
 
 
-import json
 from typing import Any
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..message import META_TYPE, add_context
 from .base import Node, active_cond
@@ -56,7 +56,8 @@ class CombineCtx(Node):
     selects which context supplies meta.
 
     The merge itself is dict-level (payloads are JSON), done in one
-    Arrow batch; the ctx lookup stays columnar.
+    Arrow batch through the nodes' one Python builder, so a context that
+    cannot merge makes its row an error; the ctx lookup stays columnar.
     """
 
     def __init__(self, keys: list[str], flatten: bool = False,
@@ -68,31 +69,24 @@ class CombineCtx(Node):
 
     def transform(self, df: DataFrame) -> DataFrame:
         keys, flatten = self.keys, self.flatten
-        import pandas as pd
-        from pyspark.sql import types as T
 
-        @F.pandas_udf(T.StringType())
-        def _combine(*payloads: pd.Series) -> pd.Series:
-            out = []
-            for vals in zip(*payloads):
-                if flatten:
-                    merged: dict[str, Any] = {}
-                    for v in vals:
-                        obj = json.loads(v) if v is not None else {}
-                        if not isinstance(obj, dict):
-                            raise TypeError("flatten requires dict payloads")
-                        merged.update(obj)
-                    out.append(json.dumps(merged))
-                else:
-                    nested = {
-                        k: (json.loads(v) if v is not None else None)
-                        for k, v in zip(keys, vals)
-                    }
-                    out.append(json.dumps(nested))
-            return pd.Series(out)
+        def _combine(*payloads):
+            if not flatten:
+                return dict(zip(keys, payloads))
+            merged: dict[str, Any] = {}
+            for obj in payloads:
+                if obj is None:
+                    continue
+                if not isinstance(obj, dict):
+                    raise TypeError("flatten requires dict payloads")
+                merged.update(obj)
+            return merged
 
-        cols = [F.col("ctx").getItem(k).getField("payload") for k in keys]
-        out = self.apply_payload(df, _combine(*cols), content_type="application/json")
+        out = self.apply_python(
+            df, _combine,
+            [F.col("ctx").getItem(k).getField("payload") for k in keys],
+            {"payload": T.StringType()}, content_type="application/json",
+        )
         if self.meta_from:
             act = active_cond()
             out = out.withColumn(

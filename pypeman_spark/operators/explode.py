@@ -10,16 +10,15 @@ relational op — distributes the fan-out across the cluster, unlike the
 reference's sequential loop), and the state roll-up is a ``groupBy`` on
 the parent ``id`` with ``array_position`` priority max. The split of the
 JSON array into element strings crosses into python once per Arrow
-batch; the explode itself is JVM-side.
+batch through the nodes' one Python builder (``base.python_udf``); the
+explode itself is JVM-side.
 """
 
-
-import json
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..message import STATES_PRIORITY, SUBSTATE_TYPE, worst_state_expr
-from .base import Node, active_cond
+from .base import Node
 
 __all__ = ["Yielder", "aggregate_substates"]
 
@@ -31,31 +30,14 @@ class Yielder(Node):
     pass through with one output row (explode must not lose them)."""
 
     def transform(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
+        def _split(obj):
+            return obj if isinstance(obj, list) else None
 
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def _split(s: pd.Series) -> pd.Series:
-            out = []
-            for raw in s:
-                if raw is None:
-                    out.append(None)
-                    continue
-                try:
-                    obj = json.loads(raw)
-                except (ValueError, TypeError):
-                    out.append(None)
-                    continue
-                if isinstance(obj, list):
-                    out.append(
-                        [e if isinstance(e, str) else json.dumps(e) for e in obj]
-                    )
-                else:
-                    out.append(None)
-            return pd.Series(out)
-
-        act = active_cond()
-        elems = F.when(act, _split(F.col("payload"))).otherwise(F.lit(None))
-        exploded = df.withColumn("__elems", elems).select(
+        split = self.apply_python(
+            df, _split, [F.col("payload")],
+            {"__elems": T.ArrayType(T.StringType())},
+        )
+        exploded = split.select(
             "*", F.posexplode_outer(F.col("__elems")).alias("__pos", "__elem")
         )
         out = (

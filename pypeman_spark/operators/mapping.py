@@ -16,11 +16,11 @@ Reference: Map ``nodes.py:752-796``, MapItem/JoinMapItem
 """
 
 
-import json
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..message import META_TYPE
 from .base import Node
 
 __all__ = ["MapItem", "JoinMapItem", "Map", "ToOrderedDict", "FuncNode", "MsgFuncNode"]
@@ -143,15 +143,6 @@ class FuncNode(Node):
         return self.apply_payload_fn(df, self.fn, decode_json=self.decode_json)
 
 
-_MSG_RESULT = T.StructType(
-    [
-        T.StructField("payload", T.StringType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("err", T.StringType()),
-    ]
-)
-
-
 class MsgFuncNode(Node):
     """Whole-row mutator ``(payload, meta) → (payload, meta)``
     (``nodes.py:943-973``). The callable receives the decoded payload and
@@ -163,47 +154,13 @@ class MsgFuncNode(Node):
 
     def transform(self, df: DataFrame) -> DataFrame:
         fn = self.fn
-        import pandas as pd
 
-        @F.pandas_udf(_MSG_RESULT)
-        def _udf(payloads: pd.Series, metas: pd.Series) -> pd.DataFrame:
-            out_p, out_m, out_e = [], [], []
-            for raw, meta in zip(payloads, metas):
-                try:
-                    try:
-                        obj = json.loads(raw) if raw is not None else None
-                    except (ValueError, TypeError):
-                        obj = raw
-                    m = dict(meta) if meta is not None else {}
-                    ret = fn(obj, m)
-                    if ret is not None:
-                        obj, m = ret
-                    out_p.append(obj if isinstance(obj, str) or obj is None else json.dumps(obj))
-                    out_m.append({k: str(v) for k, v in m.items()})
-                    out_e.append(None)
-                except Exception as exc:  # noqa: BLE001
-                    out_p.append(raw)
-                    out_m.append(dict(meta) if meta is not None else {})
-                    out_e.append(f"{type(exc).__name__}: {exc}")
-            return pd.DataFrame({"payload": out_p, "meta": out_m, "err": out_e})
+        def _call(obj, meta):
+            meta = meta or {}
+            ret = fn(obj, meta)
+            return (obj, meta) if ret is None else ret
 
-        # nondeterministic, like payload_fn_udf: a state filter must not
-        # be pushed below the single __r projection
-        res = _udf.asNondeterministic()(F.col("payload"), F.col("meta"))
-        from ..message import ERROR
-        from .base import active_cond
-
-        out = df.withColumn("__r", res)
-        # through set_state so auto_retry rewrites error → wait_retry
-        out = self.set_state(
-            out, F.col("__r.err").isNotNull(), ERROR, err_msg=F.col("__r.err")
+        return self.apply_python(
+            df, _call, [F.col("payload"), F.col("meta")],
+            {"payload": T.StringType(), "meta": META_TYPE},
         )
-        act2 = active_cond()
-        out = (
-            out.withColumn(
-                "payload", F.when(act2, F.col("__r.payload")).otherwise(F.col("payload"))
-            )
-            .withColumn("meta", F.when(act2, F.col("__r.meta")).otherwise(F.col("meta")))
-            .drop("__r")
-        )
-        return out

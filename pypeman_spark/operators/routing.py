@@ -9,58 +9,34 @@ carries every outcome and the pipeline splits them at the end
 
 Conditions are Spark ``Column`` booleans (JVM-side); python callables
 over the decoded payload are accepted for reference parity
-(``channels.py:1193-1197``) and compiled to a pandas UDF.
+(``channels.py:1193-1197``) and run through the nodes' one Python
+builder (``base.python_udf``).
 """
 
 
-import json
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..message import DROPPED, ERROR, REJECTED
 from .base import Node
 
-__all__ = ["Drop", "Reject", "RaiseError", "Empty", "condition_to_column"]
-
-
-def condition_to_column(cond: Column | bool | Callable[[Any], bool]) -> Column:
-    """Normalize a condition: Column passes through; bool becomes a
-    literal; a python ``payload -> bool`` callable is Arrow-compiled
-    (``callable_or_value``, ``nodes.py:54-62``)."""
-    if isinstance(cond, Column):
-        return cond
-    if isinstance(cond, bool):
-        return F.lit(cond)
-    import pandas as pd
-
-    @F.pandas_udf(T.BooleanType())
-    def _cond(s: pd.Series) -> pd.Series:
-        out = []
-        for raw in s:
-            try:
-                obj = json.loads(raw) if raw is not None else None
-            except (ValueError, TypeError):
-                obj = raw
-            out.append(bool(cond(obj)))
-        return pd.Series(out)
-
-    # nondeterministic for the reason given in base.payload_fn_udf;
-    # _route projects it once
-    return _cond.asNondeterministic()(F.col("payload"))
+__all__ = ["Drop", "Reject", "RaiseError", "Empty"]
 
 
 def _route(node: Node, df: DataFrame, condition, state: str, message) -> DataFrame:
-    """Flip matching active rows to ``state``. A python condition is
-    projected into one temporary column first, so ``set_state`` reading
-    it twice, and a later ``state`` filter, do not re-run its UDF."""
-    cond = condition_to_column(condition)
+    """Flip matching active rows to ``state``. A Column or bool
+    condition is a JVM predicate; a Python ``payload -> bool`` callable
+    (``callable_or_value``, ``nodes.py:54-62``) runs through
+    :meth:`Node.apply_python` into a temporary column, so a row whose
+    call raises becomes that row's error."""
     err = F.lit(message) if message else F.lit(None).cast("string")
-    if isinstance(condition, (Column, bool)):
-        return node.set_state(df, cond, state, err_msg=err)
-    out = node.set_state(df.withColumn("__cond", cond), F.col("__cond"), state,
-                         err_msg=err)
-    return out.drop("__cond")
+    if isinstance(condition, (Column, bool)):  # lit() passes a Column
+        return node.set_state(df, F.lit(condition), state, err_msg=err)
+    out = node.apply_python(
+        df, condition, [F.col("payload")], {"__cond": T.BooleanType()}
+    )
+    return node.set_state(out, F.col("__cond"), state, err_msg=err).drop("__cond")
 
 
 class Drop(Node):

@@ -32,9 +32,12 @@ finalized frame. Outcomes without a handler chain leave through a single
 ``state IN (...)`` filter, so a pipeline with no handler chains has no
 ``Union`` in ``all``; outcomes with one get their own arm, and the
 upstream is then shared through the same ``_share``/``release()`` path.
-Together with the Python nodes' single nondeterministic projection
-(``operators.base.payload_fn_udf``), each Python node runs once per row
-of any one action on ``all``. A caller that runs several actions on it
+Every Python callable a node runs goes through one builder,
+``operators.base.python_udf``, projected once and marked
+nondeterministic (``Node.apply_python``); with it, each Python node
+runs once per row of any one action on ``all``, and a row whose call
+raises is that row's ``error`` (``wait_retry`` under ``auto_retry``),
+never a failed batch. A caller that runs several actions on it
 (``StreamingChannel.process_batch``, ``RetryStore.retry_once``)
 persists it once, or each action re-runs the whole chain.
 """

@@ -958,9 +958,7 @@ def ttl_dedup_window_counts(spark, sf_dir):
     The events slice is written TWICE to the source directory and
     replayed through ``readStream`` into
     streaming/stateful.py:ttl_first_seen (key = event_id, no TTL →
-    exact first-occurrence state; ``api='auto'`` picks the arbitrary-
-    state v2 implementation when protobuf exists, the
-    applyInPandasWithState v1 otherwise — identical semantics here).
+    exact first-occurrence state, kept by applyInPandasWithState).
     Each event packs ``(second-truncated ts)|event_type`` into its
     payload, so whichever copy wins emits the same value and the drain
     is deterministic. The deduped stream lands in parquet; a second

@@ -118,8 +118,9 @@ class FTPWatcher:
                 if self.delete_after:
                     conn.delete(remote)
             # deleted-after files must stay "seen" only while still listed
-            self._save_listing(current if not self.delete_after
-                               else current - set(fresh))
+            listing = current - set(fresh) if self.delete_after else current
+            if listing != previous:  # an idle tick saves nothing
+                self._save_listing(listing)
             return landed
         finally:
             conn.close()

@@ -36,6 +36,7 @@ import re
 import threading
 import time
 import uuid
+from datetime import datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 from urllib.parse import parse_qsl, urlsplit
@@ -66,6 +67,13 @@ def hl7_ack_for_state(state: str, msh_fields: list | None = None) -> str:
     if msh_fields and len(msh_fields) > 9:
         ctrl_id = msh_fields[9] if isinstance(msh_fields[9], str) else ""
     return f"MSH|^~\\&|PYPEMAN_SPARK|ACK|||{time.strftime('%Y%m%d%H%M%S')}||ACK|{ctrl_id}|P|2.3.1\rMSA|{code}|{ctrl_id}|\r"
+
+
+def landing_id() -> str:
+    """A landing file's name stem, ``<YYYYmmdd_HHMMSS_ffffff>_<uuid>``:
+    files sort by arrival to the microsecond, where a stamp to the second
+    would order two arrivals within one second by their random uuid."""
+    return f"{datetime.now().strftime('%Y%m%d_%H%M%S_%f')}_{uuid.uuid4().hex}"
 
 
 def http_response_for_row(row) -> tuple[int, str]:
@@ -155,7 +163,7 @@ class HttpLandingServer:
                     match_info = m.groupdict()
                 length = int(self.headers.get("Content-Length", 0))
                 body = self.rfile.read(length).decode(encoding, "replace")
-                msg_id = f"{time.strftime('%Y%m%d_%H%M%S')}_{uuid.uuid4().hex}"
+                msg_id = landing_id()
                 # match-info first: known keys (method/url/...) win on
                 # collision, same as contrib/http.py:145-150
                 meta = dict(match_info)

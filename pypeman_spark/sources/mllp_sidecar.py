@@ -21,11 +21,9 @@ from __future__ import annotations
 import os
 import socketserver
 import threading
-import time
-import uuid
 from typing import Callable
 
-from .http_sidecar import MLLP_CR, MLLP_FS, MLLP_VT, hl7_ack_for_state
+from .http_sidecar import MLLP_CR, MLLP_FS, MLLP_VT, hl7_ack_for_state, landing_id
 
 __all__ = ["MllpLandingServer"]
 
@@ -71,7 +69,7 @@ class MllpLandingServer:
 
     def _land(self, frame: str) -> str:
         """Write the frame as a landing file; return the state for the ACK."""
-        msg_id = f"{time.strftime('%Y%m%d_%H%M%S')}_{uuid.uuid4().hex}"
+        msg_id = landing_id()
         tmp = os.path.join(self.landing_dir, f".{msg_id}.tmp")
         dest = os.path.join(self.landing_dir, f"{msg_id}.hl7")
         with open(tmp, "w") as fh:

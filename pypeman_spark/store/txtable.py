@@ -102,6 +102,8 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..streaming.token import query_token
+
 __all__ = [
     "TxTable", "CommitConflict", "ConstraintViolation",
     "TableProtocolError", "VacuumedVersionError",
@@ -2783,14 +2785,19 @@ class TxTable:
         """Structured-Streaming sink for APPEND-ONLY tables:
         ``writeStream.foreachBatch(tx.foreach_batch_append(query_name))``
         appends each micro-batch exactly once — a batch re-delivered
-        after checkpoint restart carries the same (app, batch_id) txn
-        marker and no-ops (see :meth:`append`). Cheaper than
+        after checkpoint restart carries the same (query id, batch_id)
+        txn marker and no-ops (see :meth:`append`), while a query on a
+        fresh checkpoint (a new id, batch ids from 0) lands. ``app`` is
+        the txn app of a direct call, outside a running query
+        (:func:`~..streaming.token.query_token`). Cheaper than
         :meth:`foreach_batch_merge` when the stream is insert-only
         (event logs, ingestion feeds): no key hashing against the
         existing table, no bucket rewrite — just staged adds."""
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            self.append(batch_df, txn=(app, int(batch_id)))
+            self.append(
+                batch_df, txn=(query_token(self.spark, app), int(batch_id))
+            )
 
         return _sink
 
@@ -2798,7 +2805,8 @@ class TxTable:
         """Structured-Streaming sink: ``writeStream.foreachBatch(
         tx.foreach_batch_merge(query_name))`` MERGEs each micro-batch
         exactly once — a batch re-delivered after checkpoint restart
-        carries the same (app, batch_id) txn marker and no-ops.
+        carries the same (query id, batch_id) txn marker and no-ops;
+        ``app`` keys a direct call, as in :meth:`foreach_batch_append`.
         ``mode="dv"`` applies each batch merge-on-read (matched
         positions dead + post-images appended) — the right setting
         for a high-frequency CDC consumer whose batches touch a tiny
@@ -2807,7 +2815,8 @@ class TxTable:
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
             self.merge_upsert(
-                batch_df, mode=mode, txn=(app, int(batch_id))
+                batch_df, mode=mode,
+                txn=(query_token(self.spark, app), int(batch_id)),
             )
 
         return _sink
@@ -2825,6 +2834,10 @@ class TxTable:
         with the same app and version >= this one already landed, the
         call is a no-op (exactly-once for streaming foreachBatch
         re-deliveries after checkpoint restart).
+
+        Keys match by equality, as in SQL ``MERGE``: a key holding a
+        null never matches a stored row, so each merge of it inserts
+        another row.
 
         ``mode="dv"`` delegates to :meth:`merge` with a whole-row
         update clause (matched rows replaced column-by-column, table
@@ -2915,7 +2928,10 @@ class TxTable:
         conflicts retry from a fresh snapshot unless the interleaved
         commit's buckets are disjoint. ``txn`` gives streaming
         foreachBatch idempotence. Source must carry one row per key —
-        the merge discipline. Matched rows the clauses leave untouched
+        the merge discipline. Keys match by equality, as in SQL
+        ``MERGE``: a key holding a null never matches a stored row, so
+        each merge of it inserts another row (the ``when_not_matched``
+        clause). Matched rows the clauses leave untouched
         are physically rewritten but unchanged, so the change feed
         (:meth:`table_changes` / :meth:`stream_changes`) stays silent
         about them. Reference basis: this generalizes the store

@@ -26,9 +26,10 @@ Delivery: the file-source offset log + checkpointLocation give
 at-least-once delivery into ``foreachBatch``; Spark re-delivers an epoch
 whose offsets it had not committed before a crash. The store append,
 the park and the settle each commit with ``txn=(token, epoch_id)``,
-where ``token`` is the query id from ``<checkpoint_dir>/cp/metadata``
-(stable across restarts of one checkpoint), else a uuid minted per
-channel instance. So each table's write is exactly-once: a re-delivered
+where ``token`` is the running query's id
+(:func:`~.token.query_token`; stable across restarts of one
+checkpoint), else, for a direct call, a uuid minted per channel
+instance. So each table's write is exactly-once: a re-delivered
 epoch stores, parks and settles nothing twice, while a fresh checkpoint
 (epoch ids from 0 again) still lands. The batch as a whole is not
 exactly-once. A re-delivery re-runs the pipeline, so its side effects
@@ -81,8 +82,7 @@ class StreamingChannel:
 
     # -- foreachBatch body ----------------------------------------------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        txn = (query_token(os.path.join(self.checkpoint_dir, "cp"),
-                           self._token), int(epoch_id))
+        txn = (query_token(batch_df.sparkSession, self._token), int(epoch_id))
         outcome = None
         try:
             if self.message_store is not None:

@@ -4,8 +4,9 @@
 packages the same semantics for Structured Streaming — every arriving
 micro-batch is deduped within itself, probed against the PERSISTED
 MinHash index (history text never re-read), and the survivors appended
-to BOTH tables exactly-once (TxTable txn markers keyed by the stream's
-batch_id, so a checkpoint-restart re-delivery is a provable no-op).
+to BOTH tables exactly-once (TxTable txn markers keyed by the running
+query's id and batch_id, so a checkpoint-restart re-delivery is a
+provable no-op while a query on a fresh checkpoint still lands).
 
 Reference basis: the reference engine's channels replay safely via
 message-store state (``/root/reference/pypeman/channels.py`` process /
@@ -25,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import dedup as D
+from .token import query_token
 
 
 def incremental_ingest_sink(
@@ -50,11 +52,12 @@ def incremental_ingest_sink(
     index rows, keeping the lowest id of each agreeing pair; a batch
     that arrives carrying two paraphrases of one document must not
     ingest both), near-dup-probed against the index, and the survivors
-    appended to both tables under txn ids ``(app, batch_id)`` /
-    ``(app + "_idx", batch_id)`` — a re-delivered batch (crash between
-    the appends and the stream's checkpoint commit) no-ops on
-    whichever appends already landed, so the pair converges
-    exactly-once without a cross-table transaction.
+    appended to both tables under txn ids ``(token, batch_id)`` /
+    ``(token + "_idx", batch_id)``, where ``token`` is the running
+    query's id (``app`` for a direct call) — a re-delivered batch
+    (crash between the appends and the stream's checkpoint commit)
+    no-ops on whichever appends already landed, so the pair
+    converges exactly-once without a cross-table transaction.
 
     Cost shape: the batch's MinHash signatures are computed ONCE
     (``minhash_index`` rows), reused for the self-probe, the history
@@ -95,10 +98,11 @@ def incremental_ingest_sink(
         # one materialization: everything below appends THIS relation
         survivors = survivors.localCheckpoint()
         if survivors.count():
-            corpus.append(survivors, txn=(app, int(batch_id)))
+            token = query_token(batch_df.sparkSession, app)
+            corpus.append(survivors, txn=(token, int(batch_id)))
             index.append(
                 rows.join(survivors, id_col, "left_semi"),
-                txn=(f"{app}_idx", int(batch_id)),
+                txn=(f"{token}_idx", int(batch_id)),
             )
 
     return _sink

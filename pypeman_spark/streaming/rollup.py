@@ -66,7 +66,7 @@ class ContinuousRollup:
         self.ts_col = ts_col
         self.value_col = value_col
         self.checkpoint: str | None = None
-        self._query_token: str | None = None
+        self._query_token = uuid.uuid4().hex
         self.table = TxTable(
             spark, path, key_cols=["day", "bucket_start", *self.keys],
             n_buckets=1, partition_by=["day"],
@@ -98,11 +98,13 @@ class ContinuousRollup:
         checkpoint commit, Structured Streaming re-delivers the same
         ``batch_id``. The merge commits under ``txn=(token, batch_id)``,
         so a re-delivery of a committed batch is a no-op. ``token`` is
-        the checkpointed query's id, else the token :meth:`start`
-        minted: a fresh query pointed at an existing store merges from
-        its batch 0. Task-level retries WITHIN a batch need no guard
-        (Spark recomputes deterministically before the sink commits)."""
-        token = query_token(self.checkpoint, self._query_token or "adhoc")
+        the running query's id (:func:`~.token.query_token`): a fresh
+        query pointed at an existing store merges from its batch 0. A
+        direct call keys on the id of the query :meth:`start` last
+        started, else on a uuid minted per instance. Task-level retries
+        WITHIN a batch need no guard (Spark recomputes
+        deterministically before the sink commits)."""
+        token = query_token(self.spark, self._query_token)
         add = {"n": "t.n + s.n"}
         if self.value_col:
             # sum() skips nulls: a null partial leaves the other side
@@ -123,18 +125,20 @@ class ContinuousRollup:
         With ``checkpoint``, restarts of the same checkpoint share a
         query identity (batch re-deliveries are no-ops) while a RESET
         checkpoint gets a new id and merges from batch 0. Without one,
-        each ``start()`` mints a fresh token — an un-checkpointed query
-        can never legitimately re-deliver across runs, so skipping on
-        an older run's commit would be data loss."""
+        each ``start()`` is a new query with a new id — an
+        un-checkpointed query can never legitimately re-deliver across
+        runs, so skipping on an older run's commit would be data
+        loss."""
         if checkpoint:
             self.checkpoint = checkpoint
-        self._query_token = uuid.uuid4().hex
         writer = stream_df.writeStream.foreachBatch(self.merge_batch)
         if self.checkpoint:
             writer = writer.option("checkpointLocation", self.checkpoint)
         if available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        query = writer.start()
+        self._query_token = str(query.id)
+        return query
 
     def read(self) -> DataFrame:
         return self.table.snapshot()

@@ -13,9 +13,7 @@ Provided operators:
   late-data handling via watermark (pypeman has no event-time semantics
   at all — SURVEY §2 'not present'; this is the Spark-first upgrade).
 * :func:`ttl_first_seen` — first-occurrence filter with processing-time
-  TTL eviction (arbitrary-state v2 ``transformWithStateInPandas`` when
-  protobuf is available, ``applyInPandasWithState`` +
-  ``ProcessingTimeTimeout`` otherwise).
+  TTL eviction (``applyInPandasWithState`` + ``ProcessingTimeTimeout``).
 
 Scale: state is partitioned by key across the cluster; the watermark
 bounds state size (old windows evicted), so the operator runs
@@ -167,25 +165,11 @@ _FIRST_SEEN_OUT = T.StructType(
 )
 
 
-def _tws_available() -> bool:
-    """``transformWithStateInPandas`` (the Spark 4 arbitrary-state v2
-    API) drives its state protocol over protobuf; absent the
-    ``protobuf`` package the driver worker crashes at query start, so
-    the v2 path is gated on the import."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def ttl_first_seen(
     df: DataFrame,
     key_col: str = "payload",
     payload_col: str | None = None,
     ttl_ms: int | None = None,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming first-occurrence filter with processing-time TTL:
     emits only the FIRST row seen per key; later duplicates are
@@ -201,69 +185,20 @@ def ttl_first_seen(
     ``ttl_ms=None`` keeps keys forever (exact dedup, state grows with
     distinct keys).
 
-    Two equivalent implementations, selected by ``api``:
+    Implementation: ``applyInPandasWithState`` with
+    ``ProcessingTimeTimeout``. The timeout IS the TTL: it is set on
+    every sighting, and a timed-out key's state is removed so its next
+    occurrence re-emits. Timing nuance: Spark fires the timeout only
+    in a micro-batch where the key has NO new data, so a duplicate
+    arriving in the first batch after expiry, before any batch has
+    fired the timeout, is still swallowed.
 
-    * ``"v2"`` — ``transformWithStateInPandas`` (Spark 4 arbitrary
-      state): ``ValueState`` with native ``ttlDurationMs``. Requires
-      the ``protobuf`` package and the RocksDB state-store provider.
-    * ``"v1"`` — ``applyInPandasWithState`` with
-      ``ProcessingTimeTimeout``: the timeout IS the TTL (set on every
-      sighting; a timed-out key's state is removed so its next
-      occurrence re-emits). One semantic nuance vs v2: Spark fires a
-      v1 timeout only in a micro-batch where the key has NO new data,
-      so a duplicate arriving in the first batch after expiry — before
-      any batch has fired the timeout — is still swallowed; v2's
-      ``ttlDurationMs`` is checked at state-read time and re-emits
-      immediately.
-    * ``"auto"`` (default) — v2 when protobuf is importable, else v1.
-
-    Scale: either way, state is hash-partitioned by key across
-    executors and lives in the checkpointed state store, so the
-    operator runs indefinitely on unbounded streams with bounded
-    memory once a TTL is set."""
+    Scale: state is hash-partitioned by key across executors and lives
+    in the checkpointed state store, so the operator runs indefinitely
+    on unbounded streams with bounded memory once a TTL is set."""
     import pandas as pd
 
     out_payload = payload_col or key_col
-    if api == "auto":
-        api = "v2" if _tws_available() else "v1"
-
-    if api == "v2":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class FirstSeen(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._seen = handle.getValueState(
-                    "seen", "seen BOOLEAN", ttlDurationMs=ttl_ms
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                if self._seen.exists():
-                    return
-                first = None
-                for pdf in rows:
-                    if len(pdf):
-                        first = pdf[out_payload].iloc[0]
-                        break
-                self._seen.update((True,))
-                yield pd.DataFrame(
-                    {"key": [str(key[0])], "first_payload": [first]}
-                )
-
-            def close(self) -> None:
-                pass
-
-        return df.groupBy(F.col(key_col)).transformWithStateInPandas(
-            statefulProcessor=FirstSeen(),
-            outputStructType=_FIRST_SEEN_OUT,
-            outputMode="append",
-            timeMode="ProcessingTime",
-        )
-
-    if api != "v1":
-        raise ValueError(f"api must be 'auto', 'v1' or 'v2', got {api!r}")
 
     def update(
         key: Tuple[Any, ...],

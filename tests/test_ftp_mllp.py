@@ -62,6 +62,26 @@ def test_ftp_watcher_delete_after(tmp_path):
     assert (tmp_path / "land" / "x.csv").read_bytes() == b"X2"
 
 
+def test_ftp_watcher_idle_ticks_save_nothing(spark, tmp_path):
+    # a tick whose listing did not change leaves the kv store alone
+    from pypeman_spark.store import KVStore
+
+    FakeFTP.store = {"/in/a.csv": b"A"}
+    kv = KVStore(spark, str(tmp_path / "kv"))
+    w = FTPWatcher("/in", str(tmp_path / "land"), conn_factory=FakeFTP,
+                   kv_store=kv)
+    assert len(w.tick()) == 1
+    v = kv.table.version()
+    assert w.tick() == []
+    assert w.tick() == []
+    assert kv.table.version() == v
+    # a listing change still saves, and the next tick sees it
+    FakeFTP.store["/in/b.csv"] = b"B"
+    assert [p.split("/")[-1] for p in w.tick()] == ["b.csv"]
+    assert kv.table.version() == v + 1
+    assert w.tick() == []
+
+
 def test_ftp_read_write_file():
     FakeFTP.store = {}
     ftp_write_file(FakeFTP, "/out/result.txt", b"payload")

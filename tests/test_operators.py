@@ -13,6 +13,7 @@ from pypeman_spark.operators import (
     CSVstr2Python,
     CombineCtx,
     Decode,
+    Drop,
     Empty,
     EmptyMeta,
     Encode,
@@ -25,6 +26,7 @@ from pypeman_spark.operators import (
     Python2CSVstr,
     PythonToHL7,
     PythonToXML,
+    Reject,
     SaveContext,
     SetCtx,
     ToOrderedDict,
@@ -173,6 +175,59 @@ def test_ctx_nested_combine_and_meta(spark):
     msgs = messages_from_payloads(spark, [{"a": 5}])
     row = p.run(msgs).all.collect()[0]
     assert json.loads(row["payload"]) == {"s1": {"a": 5}, "s2": {"x": 5}}
+
+
+def _outcomes(res):
+    return {
+        json.dumps(json.loads(r["payload"]), sort_keys=True):
+            (r["state"], r["err_msg"])
+        for r in res.all.collect()
+    }
+
+
+def test_raising_condition_errors_only_its_row(spark):
+    # a Python Drop/Reject condition that raises on one message sends
+    # that message to error with its exception (channels.py:465-517);
+    # the other messages route on
+    for node, state in ((Drop(condition=lambda d: d["x"] > 1), "dropped"),
+                        (Reject(condition=lambda d: d["x"] > 1), "rejected")):
+        msgs = messages_from_payloads(spark, [{"x": 1}, {"y": 2}, {"x": 3}])
+        res = Pipeline("t").add(node).run(msgs)
+        assert _outcomes(res) == {
+            '{"x": 1}': ("processed", None),
+            '{"y": 2}': ("error", "KeyError: 'x'"),
+            '{"x": 3}': (state, None),
+        }
+        assert res.counts() == {"processed": 1, "error": 1, state: 1}
+
+
+def test_raising_condition_auto_retry_parks_its_row(spark):
+    node = Drop(condition=lambda d: d["x"] > 1, name="d", auto_retry=True)
+    msgs = messages_from_payloads(spark, [{"x": 1}, {"y": 2}, {"x": 3}])
+    res = Pipeline("t").add(node).run(msgs)
+    rows = {r["state"]: r for r in res.all.collect()}
+    assert sorted(rows) == ["dropped", "processed", "wait_retry"]
+    parked = rows["wait_retry"]
+    assert json.loads(parked["payload"]) == {"y": 2}
+    assert parked["retry_stage"] == "d"
+    assert parked["err_msg"] == "KeyError: 'x'"
+
+
+def test_combine_ctx_flatten_non_dict_errors_its_row(spark):
+    # a context that cannot flatten errors its own row, and counts()
+    # (which reads only `state`) agrees with the collected rows
+    p = Pipeline("t").add(
+        SaveContext("s1"),
+        SaveContext("s2"),
+        CombineCtx(["s1", "s2"], flatten=True),
+    )
+    msgs = messages_from_payloads(spark, [{"a": 1}, [1, 2]])
+    res = p.run(msgs)
+    assert _outcomes(res) == {
+        '{"a": 1}': ("processed", None),
+        "[1, 2]": ("error", "TypeError: flatten requires dict payloads"),
+    }
+    assert res.counts() == {"processed": 1, "error": 1}
 
 
 def test_set_ctx_restores(spark):

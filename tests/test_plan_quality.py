@@ -81,8 +81,8 @@ def test_case_fanout_scans_source_once(spark):
 
 
 def test_python_nodes_evaluate_once(spark):
-    # operators.base.payload_fn_udf and a python Drop condition (single
-    # nondeterministic projection) + Pipeline.run (one pass over the
+    # operators.base.python_udf, the one builder of every python node
+    # (single nondeterministic projection) + Pipeline.run (one pass over the
     # finalized frame): each python node is ONE ArrowEvalPython in the
     # plans of `all` and `df`, and with no handler chains `all` is one
     # filter, no Union
@@ -104,6 +104,16 @@ def test_python_nodes_evaluate_once(spark):
         assert plan.count("ArrowEvalPython") == 4, plan
     assert "Union" not in plan_of(res.all)
     assert res.counts() == {"processed": 1, "error": 1, "dropped": 1}
+
+    # the fan-out and the context merge are one evaluation each too
+    from pypeman_spark.operators import CombineCtx, SaveContext, Yielder
+
+    msgs = messages_from_payloads(spark, [[1, 2], [3]])
+    for node in (Yielder(), CombineCtx(["a", "b"], flatten=False)):
+        res = Pipeline("t").add(SaveContext("a"), SaveContext("b"), node).run(msgs)
+        for df in (res.all, res.df):
+            plan = plan_of(df)
+            assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def _fn(name):

@@ -17,7 +17,7 @@ from pypeman_spark import Pipeline, messages_from_payloads
 from pypeman_spark.operators import FuncNode, JsonToPython, Drop, PythonToJson
 from pypeman_spark.sources.cron import cron_ticks
 from pypeman_spark.sources.file_watcher import FileWatcher, scan_files, stream_files
-from pypeman_spark.sources.http_sidecar import HttpLandingServer, hl7_ack_for_state
+from pypeman_spark.sources.http_sidecar import HttpLandingServer, hl7_ack_for_state, landing_id
 from pypeman_spark.sources.merge import merge_channels
 from pypeman_spark.store import KVStore, MemoryMessageStore
 from pypeman_spark.streaming.channel import StreamingChannel
@@ -430,6 +430,13 @@ def test_http_sidecar_sync_respond_and_routing(spark, tmp_path):
     assert records[0]["meta"]["order_id"] == "o42"
     assert json.loads(records[0]["meta"]["get_params"]) == {"src": "web"}
     assert records[0]["meta"]["method"] == "POST"
+
+
+def test_landing_ids_sort_by_arrival():
+    # landing files are read in name order; arrivals within one second
+    # must not be ordered by their random uuid
+    ids = [landing_id() for _ in range(50)]
+    assert ids == sorted(ids)
 
 
 def test_http_sidecar_get_routing(spark, tmp_path):

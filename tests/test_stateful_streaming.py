@@ -70,10 +70,8 @@ def test_watermarked_window_counts_batch_semantics(spark, sf_dir):
 
 
 def test_ttl_first_seen_dedup_across_batches(spark, tmp_path):
-    # first-occurrence filter (auto-selects the v1 applyInPandasWithState
-    # path here: protobuf, required by the v2 transformWithState driver
-    # protocol, is absent): only first occurrences emit; duplicates
-    # across micro-batches are swallowed
+    # first-occurrence filter (applyInPandasWithState): only first
+    # occurrences emit; duplicates across micro-batches are swallowed
     import time
     from pypeman_spark.streaming.stateful import ttl_first_seen
 

@@ -540,6 +540,35 @@ def test_foreach_batch_append_sink(spark, tmp_path):
     assert t.last_txn_version("ingestq") == 1
 
 
+def test_foreach_batch_append_fresh_checkpoint_lands(spark, tmp_path):
+    """Two queries on fresh checkpoints through ONE sink are two
+    queries: the second one's batch ids restart at 0, and its batches
+    land instead of being taken for re-deliveries of the first's."""
+    from pypeman_spark.streaming.drain import await_stream
+
+    src = str(tmp_path / "src")
+    _df(spark, [(1, "x"), (2, "y"), (3, "z")]).write.parquet(src)
+    t = _mk(spark, tmp_path)
+    sink = t.foreach_batch_append("q")
+
+    def drain(ck):
+        q = (
+            spark.readStream.schema("k long, val string").parquet(src)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", str(tmp_path / ck))
+            .trigger(availableNow=True).start()
+        )
+        await_stream(q, 120, ck)
+
+    drain("ck1")
+    assert t.count() == 3
+    drain("ck2")
+    assert t.count() == 6
+    assert sorted(r["val"] for r in t.read().collect()) == [
+        "x", "x", "y", "y", "z", "z"
+    ]
+
+
 def test_lookup_prunes_to_key_buckets(spark, tmp_path):
     """Point reads touch only the probed keys' buckets — the parquet
     scan's file list must be a strict subset of the live set."""
@@ -630,6 +659,7 @@ def test_streaming_sink_checkpoint_restart_exactly_once(spark, tmp_path):
             .start()
         )
         q.awaitTermination(120)
+        return str(q.id)
 
     def put(name, pairs):
         import pyarrow as pa
@@ -641,22 +671,22 @@ def test_streaming_sink_checkpoint_restart_exactly_once(spark, tmp_path):
         )
 
     put("f1.parquet", [(i, f"a{i}") for i in range(8)])
-    drain(1)
+    qid = drain(1)  # the sink's txn app: the query's id, kept by ``ck``
     assert {r["k"]: r["val"] for r in t.read().collect()} == {
         i: f"a{i}" for i in range(8)
     }
     v_after_first = t.version()
-    txn_after_first = t.last_txn_version("stream-q")
+    txn_after_first = t.last_txn_version(qid)
 
     # restart with a delta file: keys 4-11, overwriting 4-7
     put("f2.parquet", [(i, f"b{i}") for i in range(4, 12)])
-    drain(2)
+    assert drain(2) == qid
     rows = {r["k"]: r["val"] for r in t.read().collect()}
     assert rows == {
         **{i: f"a{i}" for i in range(4)},
         **{i: f"b{i}" for i in range(4, 12)},
     }
-    assert t.last_txn_version("stream-q") > txn_after_first
+    assert t.last_txn_version(qid) > txn_after_first
     assert t.version() > v_after_first
 
     # restart with no new input: provably nothing happens
