@@ -4,8 +4,8 @@ project.py`) re-expressed in pypeman_spark.
 The reference defines two channels at import time: a CronChannel logging
 and storing a tick, and a FileWatcherChannel picking up ``*.txt`` files.
 Here the same project is a function returning configured channels —
-plans instead of asyncio tasks; run it batch (one tick) or start the
-streaming form.
+plans instead of asyncio tasks; a tick runs the channel's ``handle``
+like any channel batch, or start the streaming form.
 
 Run a single watch tick against a directory::
 
@@ -26,7 +26,7 @@ from pypeman_spark import Pipeline, get_spark
 from pypeman_spark.message import PROCESSED
 from pypeman_spark.operators import FuncNode, Log
 from pypeman_spark.plans.admin import ChannelRegistry
-from pypeman_spark.sources import FileWatcher, cron_ticks
+from pypeman_spark.sources import cron_ticks
 from pypeman_spark.store import FileMessageStore
 
 
@@ -56,39 +56,26 @@ def build_project(spark, base_dir: str, watch_dir: str):
     return registry
 
 
-def _tick(pipe, store, msgs) -> int:
-    """Store, run and settle one tick the way a channel batch does: the
-    settle append and the processed count read one persisted run."""
-    store.store(msgs)
-    out = pipe.run(msgs).all.persist()
-    try:
-        store.settle(out)
-        return out.filter(F.col("state") == PROCESSED).count()
-    finally:
-        out.unpersist()
-        pipe.release()
-
-
 def run_periodic_tick(spark, registry: ChannelRegistry) -> int:
     """One cron firing: payload = the tick timestamp (contrib/time.py:8)."""
     from datetime import datetime, timedelta, timezone
 
-    pipe, store = registry.get("periodic")
     now = datetime.now(timezone.utc).replace(tzinfo=None, second=0, microsecond=0)
     msgs = cron_ticks(spark, now, now + timedelta(minutes=1), cron="* * * * *",
                       channel="periodic")
-    return _tick(pipe, store, msgs)
+    with registry.get("periodic").handle(msgs) as out:
+        return out.filter(F.col("state") == PROCESSED).count()
 
 
 def run_watch_tick(spark, registry: ChannelRegistry, watch_dir: str) -> int:
     """One watcher poll over ``watch_dir`` for ``*.txt``."""
     from pypeman_spark.sources import scan_files
 
-    pipe, store = registry.get("watch_txt")
     msgs = scan_files(spark, watch_dir, regex=r".*\.txt$", channel="watch_txt")
     if msgs.isEmpty():
         return 0
-    return _tick(pipe, store, msgs)
+    with registry.get("watch_txt").handle(msgs) as out:
+        return out.filter(F.col("state") == PROCESSED).count()
 
 
 if __name__ == "__main__":

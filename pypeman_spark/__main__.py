@@ -57,17 +57,15 @@ def graph_lines(registry, dot: bool = False):
         for name in registry.names():
             yield '{node[shape=box]; "%s"; }' % name
         for name in registry.names():
-            pipe, _store = registry.get(name)
             prev = name
-            for stage, _fn in pipe.stages:
+            for stage, _fn in registry.get(name).pipeline.stages:
                 yield f'"{prev}" -> "{stage}";'
                 prev = stage
         yield "}"
     else:
         for name in registry.names():
-            pipe, _store = registry.get(name)
             yield f"{name} ({registry.channel_status(name)})"
-            for stage, _fn in pipe.stages:
+            for stage, _fn in registry.get(name).pipeline.stages:
                 yield f"|-{stage}"
             yield ""
 
@@ -267,8 +265,7 @@ def cmd_start(args) -> int:
 
     started = []
     for name in registry.names():
-        sc = registry._streams.get(name)
-        if sc is not None:
+        if registry.get(name).source is not None:
             registry.start_channel(name)
             started.append(name)
             print(f"channel {name}: started")

@@ -1,14 +1,15 @@
 """Projection / reshaping operators (SURVEY §2.C, rows 22–25).
 
-``Map``/``ToOrderedDict`` reshape dict payloads. Two execution paths:
-
-* **schema path** (fast, JVM): when the caller declares the payload
-  struct schema, the node compiles to ``from_json`` + column expressions
-  + ``to_json`` — whole-stage-codegen, zero python. This is the path to
-  use at 100 TB.
-* **dynamic path** (parity): no schema → Arrow-batched pandas UDF doing
-  dict surgery, reproducing the reference exactly (dotted nested paths,
-  ``default``, per-field ``transform`` callables, ``recopy``).
+``Map``/``ToOrderedDict`` reshape dict payloads, and ``FuncNode`` /
+``MsgFuncNode`` run any callable. All four take one path: the node's
+callable runs through the one Python builder
+(``operators/base.py:python_udf``, via ``Node.apply_payload_fn`` /
+``Node.apply_python``), Arrow-batched and projected once. The builder
+decodes a JSON payload to a dict and turns a row that raises into that
+row's error; the callables of ``Map``/``ToOrderedDict`` do the
+reference's dict surgery exactly (dotted nested paths, ``default``,
+per-field ``transform`` callables, ``recopy``). No node here compiles
+to JVM expressions.
 
 Reference: Map ``nodes.py:752-796``, MapItem/JoinMapItem
 ``map_item.py:6-49``, ToOrderedDict ``nodes.py:805-854``, FuncNode

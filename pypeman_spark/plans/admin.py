@@ -6,9 +6,11 @@ REST over channels and their message stores: list, search (with
 push.
 
 Spark shape: a thin stdlib HTTP layer over (a) a channel registry
-``{name: (pipeline, message_store)}`` and (b) Spark SQL on the audit
-tables. Every endpoint compiles to one Catalyst plan via
-``MessageStore.search`` — the server holds no state of its own.
+``{name: StreamingChannel}`` and (b) Spark SQL on the audit tables. A
+read compiles to one Catalyst plan via ``MessageStore.search``; a
+replay or push runs the channel's ``handle``, so it is stored, parked
+and settled like any channel batch. The server holds no state of its
+own.
 """
 
 from __future__ import annotations
@@ -20,29 +22,36 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from ..message import messages_from_payloads
+from ..streaming.channel import StreamingChannel
 
 __all__ = ["ChannelRegistry", "AdminServer"]
 
 
 class ChannelRegistry:
-    """name → (pipeline, message_store); the object graph the reference
-    builds at import time (``graph.py:19-40``)."""
+    """name → channel (:class:`~..streaming.channel.StreamingChannel`);
+    the object graph the reference builds at import time
+    (``graph.py:19-40``)."""
 
     def __init__(self, spark):
         self.spark = spark
-        self._channels: dict[str, tuple] = {}
-        self._streams: dict[str, object] = {}
+        self._channels: dict[str, StreamingChannel] = {}
         self._tables: dict[str, object] = {}
 
     def register(self, name: str, pipeline, store, streaming_channel=None) -> None:
-        self._channels[name] = (pipeline, store)
-        if streaming_channel is not None:
-            self._streams[name] = streaming_channel
+        """Register ``streaming_channel``, else a source-less channel
+        over ``pipeline`` and ``store``."""
+        chan = streaming_channel or StreamingChannel(None, pipeline, store)
+        if chan.pipeline is not pipeline or chan.message_store is not store:
+            raise ValueError(
+                f"channel {name!r}: the streaming channel runs another "
+                "pipeline or store than the one registered"
+            )
+        self._channels[name] = chan
 
     def names(self) -> list[str]:
         return sorted(self._channels)
 
-    def get(self, name: str):
+    def get(self, name: str) -> StreamingChannel:
         return self._channels[name]
 
     # -- lakehouse tables (beyond-reference: the reference's remote
@@ -98,45 +107,29 @@ class ChannelRegistry:
 
     # -- lifecycle (views.py start_channel/stop_channel) ----------------
     def channel_status(self, name: str) -> str:
-        self.get(name)  # raise KeyError for unknown channels
-        sc = self._streams.get(name)
-        return sc.status if sc is not None else "BATCH"
+        chan = self.get(name)
+        return chan.status if chan.source is not None else "BATCH"
+
+    def _streaming(self, name: str) -> StreamingChannel:
+        chan = self.get(name)
+        if chan.source is None:
+            raise ValueError(f"channel {name!r} has no streaming source")
+        return chan
 
     def start_channel(self, name: str) -> dict:
-        sc = self._streams.get(name)
-        if sc is None:
-            raise ValueError(f"channel {name!r} has no streaming source")
-        if sc.query is None:
-            sc.start()
-        return {"name": name, "status": sc.status}
+        chan = self._streaming(name)
+        if chan.query is None:
+            chan.start()
+        return {"name": name, "status": chan.status}
 
     def stop_channel(self, name: str) -> dict:
-        sc = self._streams.get(name)
-        if sc is None:
-            raise ValueError(f"channel {name!r} has no streaming source")
-        sc.stop()
-        return {"name": name, "status": sc.status}
+        chan = self._streaming(name)
+        chan.stop()
+        return {"name": name, "status": chan.status}
 
     # -- operations (views.py) ------------------------------------------
-    def list_msgs(self, channel: str, **search_kw) -> list[dict]:
-        _pipe, store = self.get(channel)
-        rows = store.search(**search_kw).collect()
-        return [
-            {
-                "id": r["id"],
-                "timestamp": str(r["timestamp"]),
-                "state": r["state"],
-                "payload": r["payload"],
-                "meta": dict(r["meta"] or {}),
-            }
-            for r in rows
-        ]
-
-    def view_msg(self, channel: str, msg_id: str) -> dict | None:
-        _pipe, store = self.get(channel)
-        r = store.get(msg_id)
-        if r is None:
-            return None
+    @staticmethod
+    def _msg(r) -> dict:
         return {
             "id": r["id"],
             "timestamp": str(r["timestamp"]),
@@ -145,37 +138,35 @@ class ChannelRegistry:
             "meta": dict(r["meta"] or {}),
         }
 
+    def list_msgs(self, channel: str, **search_kw) -> list[dict]:
+        rows = self.get(channel).message_store.search(**search_kw).collect()
+        return [self._msg(r) for r in rows]
+
+    def view_msg(self, channel: str, msg_id: str) -> dict | None:
+        r = self.get(channel).message_store.get(msg_id)
+        return None if r is None else self._msg(r)
+
     def preview_msg(self, channel: str, msg_id: str, length: int = 1000):
-        _pipe, store = self.get(channel)
-        return store.get_preview_str(msg_id, length)
+        return self.get(channel).message_store.get_preview_str(msg_id, length)
 
     def replay_msg(self, channel: str, msg_id: str) -> dict:
-        """``channels.py:857-869``: fetch → renew → re-run pipeline."""
-        pipe, store = self.get(channel)
+        """``channels.py:857-869``: fetch → renew → the channel's
+        ``handle``."""
+        chan = self.get(channel)
         # detached from the store's files: the settle appends to them,
         # and a write to a path drops every cached frame that reads it
-        df = store.get_for_replay(msg_id).localCheckpoint(eager=True)
-        return {"replayed": msg_id, "outcomes": self._run(pipe, store, df)}
+        df = chan.message_store.get_for_replay(msg_id).localCheckpoint(eager=True)
+        with chan.handle(df) as out:
+            states = [r["state"] for r in out.select("state").collect()]
+        return {"replayed": msg_id, "outcomes": states}
 
     def push_msg(self, channel: str, payload: str) -> dict:
-        """``remoteadmin.py:217-228``: wrap raw text, run the channel."""
-        pipe, store = self.get(channel)
+        """``remoteadmin.py:217-228``: wrap raw text, the channel's
+        ``handle``."""
         df = messages_from_payloads(self.spark, [payload], channel=channel)
-        return {"pushed": 1, "outcomes": self._run(pipe, store, df)}
-
-    @staticmethod
-    def _run(pipe, store, df) -> list[str]:
-        """Store, run and settle ``df`` the way a channel batch does:
-        the settle append (states and ``store_meta``) and the returned
-        outcomes both read one materialised run of the pipeline."""
-        store.store(df)
-        out = pipe.run(df).all.persist()
-        try:
-            store.settle(out)
-            return [r["state"] for r in out.select("state").collect()]
-        finally:
-            out.unpersist()
-            pipe.release()
+        with self.get(channel).handle(df) as out:
+            states = [r["state"] for r in out.select("state").collect()]
+        return {"pushed": 1, "outcomes": states}
 
 
 _ROUTES = [

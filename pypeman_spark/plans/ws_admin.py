@@ -215,8 +215,8 @@ class WsAdminServer:
             channel = kw.pop("channel")
             kw = {k: v for k, v in kw.items() if v is not None}
             msgs = reg.list_msgs(channel, **kw)
-            _pipe, store = reg.get(channel)
-            return {"messages": msgs, "total": store.total()}
+            return {"messages": msgs,
+                    "total": reg.get(channel).message_store.total()}
         if method == "view_msg":
             return reg.view_msg(kw["channel"], kw["msg_id"])
         if method == "preview_msg":

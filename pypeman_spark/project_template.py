@@ -95,7 +95,7 @@ class ExampleChannelTest(unittest.TestCase):
 
     def test_channel_processes_message(self):
         registry = project.build_project(self.spark)
-        pipe, _store = registry.get("example")
+        pipe = registry.get("example").pipeline
         msgs = messages_from_payloads(self.spark, [{"hello": "world"}])
         res = pipe.run(msgs)
         self.assertEqual(res.counts(), {"processed": 1})

@@ -84,30 +84,7 @@ def scan_files(
 
         return spark.createDataFrame([], MESSAGE_SCHEMA)
 
-    if binary_file:
-        raw = spark.read.format("binaryFile").load(paths)
-        df = raw.select(
-            F.base64(F.col("content")).alias("payload"),
-            F.col("path").alias("__path"),
-        )
-        content_type = "application/octet-stream"
-    else:
-        df = (
-            spark.read.text(paths, wholetext=True)
-            .withColumn("__path", F.col("_metadata.file_path"))
-            .select(F.col("value").alias("payload"), "__path")
-        )
-        content_type = "application/text"
-    df = df.withColumn(
-        "meta",
-        F.create_map(
-            F.lit("filepath"), F.regexp_replace(F.col("__path"), "^file:", ""),
-            F.lit("filename"), F.element_at(F.split(F.col("__path"), "/"), -1),
-        ),
-    ).drop("__path")
-    return ensure_message_columns(
-        df.withColumn("content_type", F.lit(content_type)), channel=channel
-    )
+    return _read_messages(spark.read, paths, binary_file, channel)
 
 
 def stream_files(
@@ -120,42 +97,35 @@ def stream_files(
 ) -> DataFrame:
     """Streaming variant: exactly-once file pickup via the source's
     offset log; ``maxFilesPerTrigger`` ≈ the reference's tick batching."""
+    options = {"pathGlobFilter": glob}
+    if max_files_per_trigger:
+        options["maxFilesPerTrigger"] = max_files_per_trigger
+    return _read_messages(spark.readStream, basedir, binary_file, channel,
+                          **options)
+
+
+def _read_messages(reader, source, binary_file: bool, channel: str,
+                   **options) -> DataFrame:
+    """One message per file of ``source``, loaded by ``reader`` (a batch
+    or a streaming reader): payload = the file's text (base64 when
+    ``binary_file``), meta = its filepath and filename."""
     if binary_file:
-        reader = (
-            spark.readStream.format("binaryFile")
-            .option("pathGlobFilter", glob)
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        raw = reader.load(basedir)
-        df = raw.select(
-            F.base64(F.col("content")).alias("payload"),
-            F.col("path").alias("__path"),
-        )
+        raw = reader.format("binaryFile").options(**options).load(source)
+        payload, path = F.base64(F.col("content")), F.col("path")
         content_type = "application/octet-stream"
     else:
-        reader = (
-            spark.readStream.format("text")
-            .option("pathGlobFilter", glob)
-            .option("wholetext", "true")
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        raw = reader.load(basedir)
-        df = raw.select(
-            F.col("value").alias("payload"),
-            F.col("_metadata.file_path").alias("__path"),
-        )
+        raw = (reader.format("text").option("wholetext", "true")
+               .options(**options).load(source))
+        payload, path = F.col("value"), F.col("_metadata.file_path")
         content_type = "application/text"
-    df = df.withColumn(
-        "meta",
-        F.create_map(
-            F.lit("filepath"), F.regexp_replace(F.col("__path"), "^file:", ""),
-            F.lit("filename"), F.element_at(F.split(F.col("__path"), "/"), -1),
-        ),
-    ).drop("__path")
+    meta = F.create_map(
+        F.lit("filepath"), F.regexp_replace(path, "^file:", ""),
+        F.lit("filename"), F.element_at(F.split(path, "/"), -1),
+    )
     return ensure_message_columns(
-        df.withColumn("content_type", F.lit(content_type)), channel=channel
+        raw.select(payload.alias("payload"), meta.alias("meta"),
+                   F.lit(content_type).alias("content_type")),
+        channel=channel,
     )
 
 

@@ -1,22 +1,24 @@
 """Streaming channel: the pypeman channel lifecycle on Structured
 Streaming (SURVEY §2.H rows 62-65, §3.1).
 
-A :class:`StreamingChannel` binds a streaming message DataFrame (from
-sources/) to a :class:`~pypeman_spark.pipeline.Pipeline` via
-``foreachBatch``:
+A :class:`StreamingChannel` binds a message DataFrame source (from
+sources/, or ``None`` for a channel driven only by direct calls) to a
+:class:`~pypeman_spark.pipeline.Pipeline`. :meth:`StreamingChannel.handle`
+is the one message batch (``channels.py:465-517``): the ``foreachBatch``
+body, the admin replay and push, and the example ticks all run it.
 
-* each micro-batch runs the pipeline (one Catalyst plan per batch) and
-  persists its outcome (``PipelineResult.all``) once: the retry park and
-  the store's settle append both read those materialised rows, so every
-  message crosses each Python node once per batch, not once per action.
-  The outcome is unpersisted in ``finally``, so a failing batch releases
-  it too;
-* outcomes settle in the message store (audit) with one append
-  (``MessageStore.settle``): each row's state event and its
-  ``store_meta`` events, one job and one commit per batch;
+* it stores the batch, runs the pipeline (one Catalyst plan per batch)
+  and persists its outcome (``PipelineResult.all``) once: the retry
+  park, the settle append and the caller all read those materialised
+  rows, so every message crosses each Python node once per batch, not
+  once per action. The outcome is unpersisted on exit, so a failing
+  batch releases it too;
 * rows whose ``state`` is ``wait_retry`` — or error rows when
   ``retry_on_error`` — are parked in the retry store with their re-entry
   stage (dead-letter topology, ``retry.py:13-240``);
+* the other outcomes settle in the message store (audit) with one
+  append (``MessageStore.settle``): each row's state event and its
+  ``store_meta`` events, one job and one commit per batch;
 * the channel lifecycle (STARTING/PROCESSING/WAITING/STOPPED) mirrors
   ``channels.py:65-66`` via the StreamingQuery state, and listeners can
   subscribe through :func:`add_listener` (events.py:6-60 parity via
@@ -24,18 +26,20 @@ sources/) to a :class:`~pypeman_spark.pipeline.Pipeline` via
 
 Delivery: the file-source offset log + checkpointLocation give
 at-least-once delivery into ``foreachBatch``; Spark re-delivers an epoch
-whose offsets it had not committed before a crash. The store append,
-the park and the settle each commit with ``txn=(token, epoch_id)``,
-where ``token`` is the running query's id
-(:func:`~.token.query_token`; stable across restarts of one
-checkpoint), else, for a direct call, a uuid minted per channel
+whose offsets it had not committed before a crash. ``process_batch``
+runs ``handle`` with ``txn=(token, epoch_id)``, so the store append, the
+park and the settle each commit under it, where ``token`` is the
+running query's id (:func:`~.token.query_token`; stable across restarts
+of one checkpoint), else, for a direct call, a uuid minted per channel
 instance. So each table's write is exactly-once: a re-delivered
 epoch stores, parks and settles nothing twice, while a fresh checkpoint
 (epoch ids from 0 again) still lands. The batch as a whole is not
 exactly-once. A re-delivery re-runs the pipeline, so its side effects
 run again. And after a crash between the park and the settle, the first
 delivery's parks stand: a message the re-run settles is still retried
-once more by the next sweep.
+once more by the next sweep. An admin replay or push runs ``handle``
+with ``txn=None``, so it is not exactly-once at all; pypeman's
+``handle`` is not either.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -73,24 +78,24 @@ class StreamingChannel:
         self.message_store = message_store
         self.retry_store = retry_store
         self.retry_on_error = retry_on_error
-        self.checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
-            prefix=f"pypeman_spark_ckpt_{pipeline.channel}_"
-        )
+        self.checkpoint_dir = checkpoint_dir
         self.query = None
         self.batches_processed = 0
         self._token = uuid.uuid4().hex
 
-    # -- foreachBatch body ----------------------------------------------
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        txn = (query_token(batch_df.sparkSession, self._token), int(epoch_id))
+    # -- one message batch (channels.py:465-517 handle) -----------------
+    @contextmanager
+    def handle(self, df: DataFrame, txn: tuple[str, int] | None = None):
+        """Store ``df``, run the pipeline, park its retry rows and settle
+        the rest; yield the persisted outcome (every row, ``wait_retry``
+        included), released on exit."""
         outcome = None
         try:
             if self.message_store is not None:
-                self.message_store.store(batch_df, txn=txn)
-            res = self.pipeline.run(batch_df)
-            # the emptiness check, the park and the settle append read
-            # these materialised rows instead of re-running the chain
-            out = outcome = res.all.persist()
+                self.message_store.store(df, txn=txn)
+            # the park, the settle append and the caller read these
+            # materialised rows instead of re-running the chain
+            out = outcome = self.pipeline.run(df).all.persist()
             if self.retry_store is not None:
                 retry_cond = F.col("state") == WAIT_RETRY
                 if self.retry_on_error:
@@ -101,7 +106,7 @@ class StreamingChannel:
                     out = out.filter(~retry_cond)
             if self.message_store is not None:
                 self.message_store.settle(out, txn=txn)
-            self.batches_processed += 1
+            yield outcome
         finally:
             # the outcome and branch fan-outs persist per batch; release so
             # a long-running stream doesn't accumulate cached frames across
@@ -110,8 +115,19 @@ class StreamingChannel:
                 outcome.unpersist()
             self.pipeline.release()
 
+    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """The ``foreachBatch`` body: :meth:`handle` under
+        ``txn=(token, epoch_id)``."""
+        txn = (query_token(batch_df.sparkSession, self._token), int(epoch_id))
+        with self.handle(batch_df, txn=txn):
+            self.batches_processed += 1
+
     # -- lifecycle (channels.py:206-247) --------------------------------
     def start(self, trigger: dict | None = None):
+        if self.checkpoint_dir is None:
+            self.checkpoint_dir = tempfile.mkdtemp(
+                prefix=f"pypeman_spark_ckpt_{self.pipeline.channel}_"
+            )
         writer = (
             self.source.writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", os.path.join(self.checkpoint_dir, "cp"))

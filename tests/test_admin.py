@@ -127,6 +127,108 @@ def test_push_and_replay_run_the_pipeline_once(spark):
     finally:
         store.close()
 
+def _flaky_channel(spark, tmp_path, name):
+    """A channel whose ``flaky`` node raises under ``auto_retry``, with
+    a ``RetryStore``; registered with that channel."""
+    from pypeman_spark.store import RetryStore
+    from pypeman_spark.streaming.channel import StreamingChannel
+
+    def flaky(d):
+        raise ConnectionError("downstream down")
+
+    store = MemoryMessageStore(spark, channel=name)
+    rs = RetryStore(spark, str(tmp_path / "rt"), channel=name, retry_delay=0.0)
+    pipe = Pipeline(name).add(
+        JsonToPython(), FuncNode(flaky, name="flaky", auto_retry=True)
+    )
+    chan = StreamingChannel(None, pipe, store, rs)
+    reg = ChannelRegistry(spark)
+    reg.register(name, pipe, store, streaming_channel=chan)
+    return reg, chan, store, rs
+
+
+def test_push_and_replay_park_retry_rows(spark, tmp_path):
+    # a pushed or replayed message runs the channel's batch: a wait_retry
+    # outcome is parked at its node and keeps its stored pending state
+    reg, _chan, store, rs = _flaky_channel(spark, tmp_path, "park")
+    try:
+        assert reg.push_msg("park", json.dumps({"n": 1}))["outcomes"] == [
+            "wait_retry"
+        ]
+        (pushed,) = store.current().collect()
+        assert pushed["state"] == "pending"
+        assert [(r["id"], r["stage"]) for r in rs.pending().collect()] == [
+            (pushed["id"], "flaky")
+        ]
+        assert reg.replay_msg("park", pushed["id"])["outcomes"] == ["wait_retry"]
+        states = {r["id"]: r["state"] for r in store.current().collect()}
+        assert set(states.values()) == {"pending"} and len(states) == 2
+        parked = {r["id"]: r["stage"] for r in rs.pending().collect()}
+        assert parked == {i: "flaky" for i in states}
+    finally:
+        store.close()
+
+
+def test_push_runs_the_channels_current_pipeline(spark, tmp_path):
+    reg, chan, store, _rs = _flaky_channel(spark, tmp_path, "swap")
+    try:
+        chan.pipeline = Pipeline("swap").add(
+            JsonToPython(), FuncNode(lambda d: d, name="flaky")
+        )
+        assert reg.push_msg("swap", json.dumps({"n": 1}))["outcomes"] == [
+            "processed"
+        ]
+    finally:
+        store.close()
+
+
+def test_register_rejects_a_channel_over_another_store(spark):
+    from pypeman_spark.store import NullMessageStore
+    from pypeman_spark.streaming.channel import StreamingChannel
+
+    pipe = Pipeline("mis").add(FuncNode(lambda d: d, name="noop"))
+    store = NullMessageStore(spark, channel="mis")
+    chan = StreamingChannel(None, pipe, NullMessageStore(spark, channel="mis"))
+    reg = ChannelRegistry(spark)
+    with pytest.raises(ValueError):
+        reg.register("mis", pipe, store, streaming_channel=chan)
+    assert reg.names() == []
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_push_and_replay_job_counts(spark, tmp_path):
+    # guard: the callers read their outcomes from the batch's persisted
+    # rows, so a push is store + settle + collect and a replay adds the
+    # store read and its checkpoint
+    store = MemoryMessageStore(spark, channel="jobs")
+    pipe = Pipeline("jobs").add(
+        JsonToPython(), FuncNode(lambda d: d, name="noop")
+    )
+    reg = ChannelRegistry(spark)
+    reg.register("jobs", pipe, store)
+    try:
+        out, push_jobs = _jobs(spark, f"push_{tmp_path.name}", lambda: reg.push_msg(
+            "jobs", json.dumps({"n": 1})))
+        assert out["outcomes"] == ["processed"]
+        (mid,) = [r["id"] for r in store.current().collect()]
+        out, replay_jobs = _jobs(spark, f"replay_{tmp_path.name}",
+                                 lambda: reg.replay_msg("jobs", mid))
+        assert out["outcomes"] == ["processed"]
+        assert push_jobs <= 3
+        assert replay_jobs <= 6
+    finally:
+        store.close()
+
+
 def test_admin_shell_client(admin):
     # remoteadmin.py:403-557 shell client verbs over the live server
     from pypeman_spark.plans.admin_client import AdminClient

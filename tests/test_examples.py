@@ -18,7 +18,7 @@ def test_example_project_ticks(spark, tmp_path):
     assert sorted(reg.names()) == ["periodic", "watch_txt"]
     assert ex.run_periodic_tick(spark, reg) == 1
     assert ex.run_watch_tick(spark, reg, str(watch)) == 1
-    _, store = reg.get("watch_txt")
+    store = reg.get("watch_txt").message_store
     row = store.search(text="hi").collect()[0]
     assert row["state"] == "processed"
     assert row["meta"]["filename"] == "hello.txt"

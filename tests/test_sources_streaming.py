@@ -315,6 +315,36 @@ def test_streaming_channel_auto_retry_sweep(spark, tmp_path):
     assert rs.is_empty()
 
 
+def test_channel_makes_its_checkpoint_dir_on_start(spark, tmp_path, monkeypatch):
+    # a channel driven only by direct calls (a registered batch channel)
+    # leaves no temp dir behind; start() makes one when none was given
+    import tempfile
+
+    from pypeman_spark.plans.admin import ChannelRegistry
+    from pypeman_spark.store import NullMessageStore
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    store = NullMessageStore(spark, channel="ckpt")
+    pipe = Pipeline("ckpt").add(FuncNode(lambda d: d, name="noop"))
+    src = stream_files(spark, str(landing), glob="*.txt", channel="ckpt")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    StreamingChannel(None, pipe, store)
+    ChannelRegistry(spark).register("ckpt", pipe, store)
+    chan = StreamingChannel(src, pipe, store)
+    assert os.listdir(tmp) == []
+    chan.start()
+    try:
+        chan.process_all_available()
+    finally:
+        chan.stop()
+    (made,) = os.listdir(tmp)
+    assert made.startswith("pypeman_spark_ckpt_ckpt_")
+    assert chan.checkpoint_dir == str(tmp / made)
+
+
 def test_process_batch_runs_each_message_once(spark, tmp_path):
     # one process_batch = one pass of every message through the chain:
     # the retry park and both store appends read one materialised

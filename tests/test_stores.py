@@ -431,6 +431,16 @@ def test_channel_batch_settles_in_one_event_append(spark, tmp_path):
     assert jobs_one == jobs_two - 1
 
 
+def test_channel_batch_job_count(spark, tmp_path):
+    """Guard: one channel batch with a park and a settle runs at most 4
+    Spark jobs (store, park check, park, settle)."""
+    from pypeman_spark.store import FileMessageStore
+
+    store = FileMessageStore(spark, str(tmp_path / "audit"), channel="t")
+    jobs, _ = _settle_batch(spark, tmp_path, store, "jobs")
+    assert jobs <= 4
+
+
 def test_channel_batch_settle_current_view(spark, tmp_path):
     """After one settled batch, ``current()`` holds each settled row's
     state and store-meta; the parked row keeps ``pending`` and no meta."""

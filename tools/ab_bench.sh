@@ -1,12 +1,20 @@
 #!/bin/bash
-# Interleaved fresh-JVM A/B on the FIXED 30-query control list (the
-# only valid cross-round performance comparator — see
-# BENCH_DRIFT_NOTE.md). Usage:
-#   tools/ab_bench.sh <dirA> <dirB> [pairs] [out.jsonl]
-# Each side runs `python bench.py <control>` from its own checkout in
-# a fresh JVM; order is B A B A ... so host drift hits both equally.
+# Interleaved fresh-JVM A/B of two checkouts. Usage:
+#   tools/ab_bench.sh <dirA> <dirB> [pairs] [out.jsonl] [workload] [seed_base]
+# Without a workload, each side runs `python bench.py <control>` on the
+# FIXED 30-query control list (the only valid cross-round comparator of
+# the registry queries — see BENCH_DRIFT_NOTE.md); a line carries
+# total_s. With a perfbench workload (esb_channel, audit_search), each
+# side runs
+#   python3 perfbench/run.py --workload W --seed <seed_base+i> --seconds 5 --trace 0
+# so both sides of pair i share seed seed_base+i (default base 1000); a
+# line carries the end-to-end metrics setup_s, throughput and
+# main_p50_s, and for esb_channel the number of timed batches. Every
+# side runs from its own checkout in a fresh JVM, and the first side
+# alternates per pair (A B, B A, ...) so host drift hits both equally.
 set -eu
 A_DIR=$1; B_DIR=$2; PAIRS=${3:-4}; OUT=${4:-/tmp/ab_bench.jsonl}
+WORKLOAD=${5:-}; SEED_BASE=${6:-1000}
 CONTROL="pricing_summary shipping_priority local_supplier_volume
 top_orders_per_priority order_priority_check returned_items_report
 customer_order_distribution nation_market_share two_nation_volume
@@ -17,14 +25,41 @@ worst_substate_agg search_text_window dedup_exact_keep_first
 minhash_near_dup_pairs ngram_jaccard_pairs simhash_sketch
 embedding_cosine_topk lsh_ann_topk text_language_id text_quality_score
 token_counts doc_fingerprint"
-: > "$OUT"
-for i in $(seq 1 "$PAIRS"); do
-  for side in B A; do
-    dir=$B_DIR
-    if [ "$side" = A ]; then dir=$A_DIR; fi
+
+run_side() {  # <side> <dir> <pair>
+  local side=$1 dir=$2 i=$3
+  if [ -z "$WORKLOAD" ]; then
     total=$(cd "$dir" && python bench.py $CONTROL 2>/dev/null | tail -1 \
       | python -c "import json,sys; print(json.load(sys.stdin)['value'])")
-    echo "{\"run\": \"$side$i\", \"dir\": \"$dir\", \"total_s\": $total}" \
-      | tee -a "$OUT"
+    echo "{\"run\": \"$side$i\", \"dir\": \"$dir\", \"total_s\": $total}"
+    return
+  fi
+  local seed=$((SEED_BASE + i))
+  (cd "$dir" && python3 perfbench/run.py --workload "$WORKLOAD" \
+      --seed "$seed" --seconds 5 --trace 0 2>/dev/null | tail -1) \
+    | python3 -c '
+import json, os, sys
+side, d, w, seed = sys.argv[1:]
+res = json.load(sys.stdin)
+line = {"run": side, "dir": d, "workload": w, "seed": int(seed),
+        "correct": res["correct"], "failed": res["failed"]}
+line.update({k: v["value"] for k, v in res["metrics"].items()})
+if w == "esb_channel":
+    path = os.path.join(d, ".perfbench", "results",
+                        f"{w}-seed{seed}-trace0.json")
+    with open(path) as fh:
+        line["batches"] = json.load(fh)["detail"]["batches"]
+print(json.dumps(line))
+' "$side$i" "$dir" "$WORKLOAD" "$seed"
+}
+
+: > "$OUT"
+for i in $(seq 1 "$PAIRS"); do
+  order="A B"
+  if [ $((i % 2)) -eq 0 ]; then order="B A"; fi
+  for side in $order; do
+    dir=$A_DIR
+    if [ "$side" = B ]; then dir=$B_DIR; fi
+    run_side "$side" "$dir" "$i" | tee -a "$OUT"
   done
 done
