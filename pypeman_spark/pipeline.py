@@ -24,29 +24,37 @@ Spark-first translation:
 Scale notes: the entire chain is lazy; one pipeline = one Catalyst plan.
 ``when``/``case``/``fork`` persist the tagged frame before fan-out
 whenever a branch contains stages, so a K-arm branch never re-executes
-the upstream plan (scan + UDF stages) K+1 times; ``release()``
-unpersists when the run's outputs are consumed.
+the upstream plan (scan + UDF stages) K+1 times.
+
+A run owns what it caches; a :class:`Pipeline` keeps no per-run state.
+``_share`` records each frame it persists on the run being built (a
+``ContextVar`` set by ``run()``, so each thread sees only its own run).
+``with pipeline.run(df) as res:`` persists ``res.all``, and its exit
+releases ``all`` and that run's fan-out frames, never another run's.
+Fork branches are ``res.forks[name]``.
 
 Once per message: ``run()`` builds ``all`` from one pass over the
 finalized frame. Outcomes without a handler chain leave through a single
 ``state IN (...)`` filter, so a pipeline with no handler chains has no
 ``Union`` in ``all``; outcomes with one get their own arm, and the
-upstream is then shared through the same ``_share``/``release()`` path.
-Every Python callable a node runs goes through one builder,
+upstream is then shared through the same ``_share``. Every Python
+callable a node runs goes through one builder,
 ``operators.base.python_udf``, projected once and marked
 nondeterministic (``Node.apply_python``); with it, each Python node
 runs once per row of any one action on ``all``, and a row whose call
 raises is that row's ``error`` (``wait_retry`` under ``auto_retry``),
 never a failed batch. A caller that runs several actions on it
-(``StreamingChannel.process_batch``, ``RetryStore.retry_once``)
-persists it once, or each action re-runs the whole chain.
+(``StreamingChannel.handle``, ``RetryStore.retry_once``) enters the
+result, or each action re-runs the whole chain.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from contextvars import ContextVar, copy_context
+from dataclasses import dataclass
 from typing import Callable, Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .message import (
@@ -73,11 +81,11 @@ def _as_stage(obj: Node | StageFn) -> tuple[str, StageFn]:
     return name, obj
 
 
-def _slice_from(handlers: list[tuple[str, StageFn]], name: str) -> list:
-    names = [n for n, _ in handlers]
+def _pos(chain: list[tuple[str, StageFn]], name: str) -> int:
+    names = [n for n, _ in chain]
     if name not in names:
-        raise KeyError(f"unknown node {name!r}; have {names}")
-    return handlers[names.index(name):]
+        raise KeyError(f"unknown stage {name!r}; have {names}")
+    return names.index(name)
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -87,12 +95,38 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
+# (fan-out frames, fork branches by name) of the run being built
+_RUN: ContextVar[tuple[list, dict] | None] = ContextVar("pipeline_run", default=None)
+
+
+def _share(df: DataFrame) -> DataFrame:
+    """Persist a frame about to be consumed by >1 branch, on the run
+    that is building it (outside a run nothing would own the cache).
+
+    A K-arm ``case`` (or ``when``/``fork``) is filters + union over
+    the same upstream plan; without a persist, each branch — and any
+    eager sink inside one — re-executes the upstream (scan + UDF
+    stages) K+1 times. At 100 TB that's K redundant full scans, so
+    cache once and fan out. MEMORY_AND_DISK: spills instead of
+    recomputing.
+    """
+    run = _RUN.get()
+    if df.isStreaming or run is None:
+        return df
+    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    run[0].append(cached)
+    return cached
+
+
 @dataclass
 class PipelineResult:
     """Outcome-partitioned result of one pipeline run.
 
     ``df`` — successfully processed rows (state=processed), after join
     handlers. Mirrors the channel returning the final message on success.
+
+    ``with pipeline.run(df) as res:`` persists ``all``; the exit releases
+    ``all`` and ``cached`` (LRU eviction does, for a result never entered).
     """
 
     df: DataFrame
@@ -100,12 +134,20 @@ class PipelineResult:
     rejected: DataFrame
     errors: DataFrame
     all: DataFrame  # every outcome's rows, state column set
+    forks: dict[str, DataFrame]  # each fork's branch frame, by fork name
+    cached: list[DataFrame]  # the frames this run's fan-outs persisted
 
     def counts(self) -> dict[str, int]:
-        rows = (
-            self.all.groupBy("state").count().collect()
-        )
+        rows = self.all.groupBy("state").count().collect()
         return {r["state"]: r["count"] for r in rows}
+
+    def __enter__(self) -> "PipelineResult":
+        self.all.persist()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for frame in (self.all, *self.cached):
+            frame.unpersist()
 
 
 class Pipeline:
@@ -122,36 +164,6 @@ class Pipeline:
         self.fail_nodes: list[tuple[str, StageFn]] = []
         self.final_nodes: list[tuple[str, StageFn]] = []
         self.init_nodes: list[tuple[str, StageFn]] = []
-        self._persisted: list[DataFrame] = []
-
-    # -- branch-input sharing ---------------------------------------------
-    def _share(self, df: DataFrame) -> DataFrame:
-        """Persist a frame about to be consumed by >1 branch.
-
-        A K-arm ``case`` (or ``when``/``fork``) is filters + union over
-        the same upstream plan; without a persist, each branch — and any
-        eager sink inside one — re-executes the upstream (scan + UDF
-        stages) K+1 times. At 100 TB that's K redundant full scans, so
-        cache once and fan out. MEMORY_AND_DISK: spills instead of
-        recomputing. Call :meth:`release` (or let LRU eviction handle it)
-        when the run's outputs are consumed.
-        """
-        if df.isStreaming:
-            return df
-        from pyspark import StorageLevel
-
-        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(cached)
-        return cached
-
-    def release(self) -> None:
-        """Unpersist frames cached by branch fan-outs (idempotent)."""
-        for cached in self._persisted:
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
-        self._persisted.clear()
 
     # -- construction ----------------------------------------------------
     def add(self, *nodes: Node | StageFn) -> "Pipeline":
@@ -210,7 +222,7 @@ class Pipeline:
             c = F.coalesce((act & _cond).cast("boolean"), F.lit(False))
             src = df.withColumn("__take", c)
             if _sub.stages:
-                src = self._share(src)
+                src = _share(src)
             taken = src.filter(F.col("__take")).drop("__take")
             rest = src.filter(~F.col("__take")).drop("__take")
             branch_out = _sub._apply_stages(taken, _sub.stages)
@@ -248,7 +260,7 @@ class Pipeline:
                 arm_col = F.when(_subs[i][0], F.lit(i)).otherwise(arm_col)
             tagged = df.withColumn("__arm", F.when(act, arm_col).otherwise(F.lit(-1)))
             if any(s.stages for _c, s in _subs):
-                tagged = self._share(tagged)
+                tagged = _share(tagged)
             parts = [tagged.filter(F.col("__arm") == -1).drop("__arm")]
             for i, (_c, sub) in enumerate(_subs):
                 part = tagged.filter(F.col("__arm") == i).drop("__arm")
@@ -266,21 +278,22 @@ class Pipeline:
         main chain continues with the original rows."""
         sub = Pipeline(name or f"{self.name}.fork{len(self.stages)}", self.channel)
         sub.add(*nodes)
-        self._forks = getattr(self, "_forks", [])
 
         def _fork_stage(df: DataFrame, _sub=sub) -> DataFrame:
             # Branch shares df's plan; run sub-chain eagerly so its sinks
             # fire (fire-and-forget semantics; wait_subchans ≙ this being
             # synchronous in batch mode). Persist first: the branch's
             # sinks are separate actions, so without a cache the main
-            # chain re-executes the whole upstream.
-            src = self._share(df) if _sub.stages else df
+            # chain re-executes the whole upstream. The branch frame is
+            # the run's ``res.forks[name]``.
+            src = _share(df) if _sub.stages else df
             branch = _sub._apply_stages(src, _sub.stages)
-            _sub.last_fork_result = branch
+            run = _RUN.get()
+            if run is not None:
+                run[1][_sub.name] = branch
             return src
 
         self.stages.append((sub.name, _fork_stage))
-        self._forks.append(sub)
         return self
 
     # -- execution -------------------------------------------------------
@@ -333,22 +346,19 @@ class Pipeline:
         """
         df = ensure_message_columns(df, channel=self.channel)
         stages = self.stages
-        names = [s for s, _ in stages]
         if from_stage is not None:
-            if from_stage not in names:
-                raise KeyError(
-                    f"unknown stage {from_stage!r}; have {names}"
-                )
-            stages = stages[names.index(from_stage):]
+            stages = stages[_pos(stages, from_stage):]
         if to_stage is not None:
-            names = [s for s, _ in stages]
-            if to_stage not in names:
-                raise KeyError(f"unknown stage {to_stage!r}; have {names}")
-            stages = stages[: names.index(to_stage) + 1]
+            stages = stages[: _pos(stages, to_stage) + 1]
         init_nodes = [] if skip_init else self.init_nodes
         if init_from is not None:
-            init_nodes = _slice_from(self.init_nodes, init_from)
+            init_nodes = self.init_nodes[_pos(self.init_nodes, init_from):]
+        # a context of its own: the run's _RUN never leaks to the caller
+        return copy_context().run(self._build, df, init_nodes, stages)
 
+    def _build(self, df: DataFrame, init_nodes: list, stages: list) -> PipelineResult:
+        cached, forks = [], {}
+        _RUN.set((cached, forks))
         out = self._apply_stages(
             self._apply_stages(
                 df.withColumn(
@@ -377,7 +387,7 @@ class Pipeline:
         }
         if self.final_nodes or any(chains.values()):
             # >1 arm reads `out`: share it so the upstream runs once
-            out = self._share(out)
+            out = _share(out)
         parts = {
             state: self._run_handlers(out.filter(F.col("state") == state), chain)
             for state, chain in chains.items()
@@ -402,6 +412,8 @@ class Pipeline:
             rejected=parts[REJECTED],
             errors=parts[ERROR],
             all=allrows,
+            forks=forks,
+            cached=cached,
         )
 
     def inject(self, df: DataFrame, at: str | None = None):
@@ -430,10 +442,10 @@ class Pipeline:
         for chain in (self.join_nodes, self.drop_nodes,
                       self.reject_nodes, self.fail_nodes):
             if at in [n for n, _ in chain]:
-                out = self._run_handlers(df, _slice_from(chain, at))
+                out = self._run_handlers(df, chain[_pos(chain, at):])
                 return self._run_handlers(out, self.final_nodes)
         if at in [n for n, _ in self.final_nodes]:
-            return self._run_handlers(df, _slice_from(self.final_nodes, at))
+            return self._run_handlers(df, self.final_nodes[_pos(self.final_nodes, at):])
         raise KeyError(f"node {at!r} not found in any chain of {self.name!r}")
 
     # convenience: single-payload synchronous run (handle_and_wait parity,
@@ -442,8 +454,6 @@ class Pipeline:
         from .message import messages_from_payloads
 
         msgdf = messages_from_payloads(spark, [payload], meta=meta, channel=self.channel)
-        try:
-            rows = self.run(msgdf).all.collect()
-        finally:
-            self.release()
+        with self.run(msgdf) as res:
+            rows = res.all.collect()
         return rows[0] if rows else None

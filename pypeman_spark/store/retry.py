@@ -15,9 +15,10 @@ tombstone row ``(id, attempts, acked=true)`` in the same log. One fold,
 one ``snapshot()``. ``retry_due``, ``ack`` and ``is_empty`` read that,
 and only the public ``pending()`` sorts (pypeman lists the queue oldest
 first). A sweep checkpoints its due rows once, re-runs
-``Pipeline.run(df, from_stage=stage)`` per stage, and settles with one
-commit: the tombstones of every consumed generation plus the re-parks,
-so a failed settle leaves every message parked. A park takes
+``Pipeline.run(df, from_stage=stage)`` per stage (each run entered on
+one ``ExitStack``, so it stays cached until the settle), and settles
+with one commit: the tombstones of every consumed generation plus the
+re-parks, so a failed settle leaves every message parked. A park takes
 ``txn=(app, version)`` and no-ops when ``version`` is not above the
 log's last committed one for ``app``, so a channel's re-delivered epoch
 parks once. Files the log no longer references are reclaimed by
@@ -31,6 +32,7 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -186,25 +188,21 @@ class RetryStore:
         }
         counts = {"retried": 0, "succeeded": 0, "rejected": 0, "reparked": 0}
         settle = _tombstones(due)
-        outcomes = []
-        try:
+        # every stage's run stays cached until the settle reads its re-parks
+        with ExitStack() as runs:
             for stage, n_due in stages.items():
                 sel = due.filter(F.col("stage").eqNullSafe(F.lit(stage)))
                 batch = sel.select(*MESSAGE_COLUMNS).withColumn(
                     "state", F.lit(None).cast("string")
                 )
-                outcome = pipeline.run(batch, from_stage=stage).all.persist()
-                outcomes.append(outcome)
+                res = runs.enter_context(pipeline.run(batch, from_stage=stage))
                 # one job counts the stage's outcome; the re-parks below
                 # read the persisted rows
-                by_state = {
-                    r["state"]: r["count"]
-                    for r in outcome.groupBy("state").count().collect()
-                }
+                by_state = res.counts()
                 n_ok = by_state.get(PROCESSED, 0) + by_state.get(DROPPED, 0)
                 n_fail = by_state.get(ERROR, 0) + by_state.get(WAIT_RETRY, 0)
                 if n_fail:
-                    failed = outcome.filter(F.col("state").isin(ERROR, WAIT_RETRY))
+                    failed = res.all.filter(F.col("state").isin(ERROR, WAIT_RETRY))
                     repark = self._park_rows(
                         failed, stage, sel.select("id", "attempts")
                     ).withColumn(
@@ -220,8 +218,4 @@ class RetryStore:
                 counts["reparked"] += n_fail
             if stages:
                 self._append(settle)
-        finally:
-            for outcome in outcomes:
-                outcome.unpersist()
-            pipeline.release()
         return counts

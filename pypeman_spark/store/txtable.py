@@ -403,6 +403,14 @@ def _sql_name(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _keys_match(keys: "list[str]") -> "F.Column":
+    """``t`` and ``s`` hold the same key: null-safe, so a null key
+    part matches a null (a MERGE ``ON`` written with ``<=>``)."""
+    return functools.reduce(lambda a, b: a & b, [
+        F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys
+    ])
+
+
 def _file_uri(abspath: str) -> str:
     """``abspath`` in exactly the form Spark's ``_metadata.file_path``
     reports it (Hadoop ``Path.toString``: ``file:`` + single slash +
@@ -2835,10 +2843,6 @@ class TxTable:
         call is a no-op (exactly-once for streaming foreachBatch
         re-deliveries after checkpoint restart).
 
-        Keys match by equality, as in SQL ``MERGE``: a key holding a
-        null never matches a stored row, so each merge of it inserts
-        another row.
-
         ``mode="dv"`` delegates to :meth:`merge` with a whole-row
         update clause (matched rows replaced column-by-column, table
         columns absent from ``updates`` null-filled — byte-identical
@@ -2875,9 +2879,9 @@ class TxTable:
             eff = schema_act[0]["schema"] if schema_act else st.schema
             if old:
                 cur = self._read_files(old, st.schema, dvs=st.live)
-                merged = cur.join(
-                    updates.select(*self.key_cols),
-                    on=self.key_cols, how="left_anti",
+                merged = cur.alias("t").join(
+                    updates.select(*self.key_cols).alias("s"),
+                    on=_keys_match(self.key_cols), how="left_anti",
                 ).unionByName(updates, allowMissingColumns=True)
             else:
                 merged = updates
@@ -2928,10 +2932,8 @@ class TxTable:
         conflicts retry from a fresh snapshot unless the interleaved
         commit's buckets are disjoint. ``txn`` gives streaming
         foreachBatch idempotence. Source must carry one row per key —
-        the merge discipline. Keys match by equality, as in SQL
-        ``MERGE``: a key holding a null never matches a stored row, so
-        each merge of it inserts another row (the ``when_not_matched``
-        clause). Matched rows the clauses leave untouched
+        the merge discipline. Keys match null-safely: a null key part
+        matches a stored null. Matched rows the clauses leave untouched
         are physically rewritten but unchanged, so the change feed
         (:meth:`table_changes` / :meth:`stream_changes`) stays silent
         about them. Reference basis: this generalizes the store
@@ -3076,9 +3078,15 @@ class TxTable:
                     t = self.spark.createDataFrame([], StructType([
                         StructField(c, types[c]) for c in tbl_cols
                     ])).withColumn("__t", F.lit(1))
+                # one key column per key, as a USING join would give
+                keys = self.key_cols
                 return t.alias("t").join(
-                    s, on=self.key_cols, how="full_outer"
-                )
+                    s, on=_keys_match(keys), how="full_outer"
+                ).select(*[
+                    F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(k)
+                    for k in keys
+                ], *[F.col(f"t.{c}") for c in t.columns if c not in keys],
+                    *[F.col(f"s.{c}") for c in s.columns if c not in keys])
 
             adds, removed, dv_acts = self._dml_step(
                 st, old, (upd_gate if upd else F.lit(False)) | kill_del,

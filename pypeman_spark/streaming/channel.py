@@ -11,8 +11,8 @@ body, the admin replay and push, and the example ticks all run it.
   and persists its outcome (``PipelineResult.all``) once: the retry
   park, the settle append and the caller all read those materialised
   rows, so every message crosses each Python node once per batch, not
-  once per action. The outcome is unpersisted on exit, so a failing
-  batch releases it too;
+  once per action. The run owns that cache (``with pipeline.run(df)``):
+  its exit, also on a failing batch, releases only this batch's frames;
 * rows whose ``state`` is ``wait_retry`` — or error rows when
   ``retry_on_error`` — are parked in the retry store with their re-entry
   stage (dead-letter topology, ``retry.py:13-240``);
@@ -87,15 +87,14 @@ class StreamingChannel:
     @contextmanager
     def handle(self, df: DataFrame, txn: tuple[str, int] | None = None):
         """Store ``df``, run the pipeline, park its retry rows and settle
-        the rest; yield the persisted outcome (every row, ``wait_retry``
-        included), released on exit."""
-        outcome = None
-        try:
-            if self.message_store is not None:
-                self.message_store.store(df, txn=txn)
+        the rest; yield the run's persisted outcome (every row,
+        ``wait_retry`` included), released on exit."""
+        if self.message_store is not None:
+            self.message_store.store(df, txn=txn)
+        with self.pipeline.run(df) as res:
             # the park, the settle append and the caller read these
             # materialised rows instead of re-running the chain
-            out = outcome = self.pipeline.run(df).all.persist()
+            out = res.all
             if self.retry_store is not None:
                 retry_cond = F.col("state") == WAIT_RETRY
                 if self.retry_on_error:
@@ -106,14 +105,7 @@ class StreamingChannel:
                     out = out.filter(~retry_cond)
             if self.message_store is not None:
                 self.message_store.settle(out, txn=txn)
-            yield outcome
-        finally:
-            # the outcome and branch fan-outs persist per batch; release so
-            # a long-running stream doesn't accumulate cached frames across
-            # micro-batches
-            if outcome is not None:
-                outcome.unpersist()
-            self.pipeline.release()
+            yield res.all
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """The ``foreachBatch`` body: :meth:`handle` under
@@ -150,7 +142,8 @@ class StreamingChannel:
     def process_all_available(self) -> None:
         """Drain everything currently available (test/batch-drive mode —
         ``handle_and_wait`` parity for streams)."""
-        assert self.query is not None, "channel not started"
+        if self.query is None:
+            raise ValueError("channel not started")
         self.query.processAllAvailable()
 
     def stop(self) -> None:
@@ -160,7 +153,8 @@ class StreamingChannel:
 
     def run_retries_once(self) -> dict:
         """One retry sweep (the reference's background loop body)."""
-        assert self.retry_store is not None
+        if self.retry_store is None:
+            raise ValueError("channel has no retry store")
         return self.retry_store.retry_once(self.pipeline)
 
 

@@ -20,9 +20,6 @@ Why this shape at 100 TB:
   lands in the same commit as the data, so a re-delivered batch is a
   no-op and no crash point merges a batch twice.
 
-Key columns match by equality, as in SQL ``MERGE``: a null key never
-matches a stored row, so each batch adds its own row for it.
-
 This is the streaming twin of the batch ``hourly_event_rollup`` query —
 the registry drives both against the same oracle.
 """

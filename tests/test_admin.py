@@ -229,6 +229,38 @@ def test_push_and_replay_job_counts(spark, tmp_path):
         store.close()
 
 
+def test_concurrent_pushes_run_each_message_once(spark):
+    # pushes on one channel from two threads (AdminServer is a
+    # ThreadingHTTPServer): each push's run keeps its own branch fan-out
+    # cached until it ends, so the counting node runs once per message
+    from concurrent.futures import ThreadPoolExecutor
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def count(d):
+        calls.add(1)
+        return d
+
+    store = MemoryMessageStore(spark, channel="conc")
+    pipe = Pipeline("conc").add(
+        JsonToPython(), FuncNode(count, name="count")
+    ).when(F.col("payload").contains('"n": 1'), FuncNode(lambda d: d, name="one"))
+    reg = ChannelRegistry(spark)
+    reg.register("conc", pipe, store)
+
+    def push3():
+        return [reg.push_msg("conc", json.dumps({"n": i}))["outcomes"]
+                for i in range(3)]
+
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            outs = [f.result() for f in [pool.submit(push3) for _ in range(2)]]
+        assert [o for out in outs for o in out] == [["processed"]] * 6
+        assert calls.value == 6
+    finally:
+        store.close()
+
+
 def test_admin_shell_client(admin):
     # remoteadmin.py:403-557 shell client verbs over the live server
     from pypeman_spark.plans.admin_client import AdminClient

@@ -105,11 +105,9 @@ def test_fork_runs_both_chains(spark):
         .add(FuncNode(lambda d: {"main": True}, name="mainer"))
     )
     msgs = messages_from_payloads(spark, [{"x": 1}])
-    res = p.run(msgs)
-    assert payloads(res.df) == ['{"main": true}']
-    fork_sub = p._forks[0]
-    forked = fork_sub.last_fork_result
-    assert payloads(forked) == ['{"forked": true}']
+    with p.run(msgs) as res:
+        assert payloads(res.df) == ['{"main": true}']
+        assert payloads(res.forks["fk"]) == ['{"forked": true}']
 
 
 def test_explode_and_substate_agg(spark):
@@ -272,11 +270,8 @@ def test_quality_quarantine_routing(spark):
             name="quarantine",
         )
     )
-    try:
-        res = p.run(flagged)
+    with p.run(flagged) as res:
         counts = res.counts()
         assert counts == {"processed": 2, "rejected": 2}
         rej = res.all.filter(F.col("state") == "rejected").collect()
         assert all(r["err_msg"] == "quality violation" for r in rej)
-    finally:
-        p.release()

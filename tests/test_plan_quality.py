@@ -61,23 +61,20 @@ def test_case_fanout_scans_source_once(spark):
         (F.col("et") == "view", [FuncNode(lambda d: d, name="b")]),
         (F.col("et") == "purchase", [FuncNode(lambda d: d, name="c")]),
     )
-    try:
-        res = p.run(msgs)
-        # the tagged frame was persisted exactly once for the fan-out...
-        assert len(p._persisted) == 1
-        assert p._persisted[0].storageLevel.useMemory
-        # ...and every arm + the fall-through branch reads the cache
-        # (the FileScan text under each InMemoryRelation is the cached
-        # relation's recipe, deduped by the CacheManager at execution)
-        plan = plan_of(res.all)
-        assert plan.count("InMemoryTableScan") >= 4, plan
-        # one python evaluation per arm node, none re-run by the outcome
-        # filters over the union
-        assert plan.count("ArrowEvalPython") == 3, plan
-        # sanity: every row still routed exactly once
+    res = p.run(msgs)
+    # the tagged frame was persisted exactly once for the fan-out...
+    assert len(res.cached) == 1
+    assert res.cached[0].storageLevel.useMemory
+    # ...and every arm + the fall-through branch reads the cache
+    # (the FileScan text under each InMemoryRelation is the cached
+    # relation's recipe, deduped by the CacheManager at execution)
+    plan = plan_of(res.all)
+    assert plan.count("InMemoryTableScan") >= 4, plan
+    # one python evaluation per arm node, none re-run by the outcome
+    # filters over the union
+    assert plan.count("ArrowEvalPython") == 3, plan
+    with res:  # sanity: every row still routed exactly once
         assert res.all.count() == msgs.count()
-    finally:
-        p.release()
 
 
 def test_python_nodes_evaluate_once(spark):
@@ -169,12 +166,9 @@ def test_when_null_condition_keeps_rows(spark):
         F.get_json_object(F.col("payload"), "$.k") > 1,
         FuncNode(lambda d: d, name="branch"),
     )
-    try:
-        res = p.run(msgs)
+    with p.run(msgs) as res:
         assert res.all.count() == 3
         assert res.df.count() == 3  # both branches end processed
-    finally:
-        p.release()
 
 
 def test_bucketed_join_runs_without_exchange(spark, tmp_path):

@@ -226,6 +226,28 @@ def test_continuous_rollup_merge_rewrites_only_touched_day(spark, tmp_path):
     assert got == {("a", 2, 4.0), ("a", 1, 2.0), ("b", 1, 4.0)}
 
 
+def test_continuous_rollup_null_key_matches_batch(spark, tmp_path):
+    # a null key merges into its stored row, as the batch groupBy groups
+    # it: two batches, each with one null event_type in the same hour,
+    # leave one n=2 row
+    from pypeman_spark.streaming.rollup import ContinuousRollup
+
+    rows = [(_m(0), None, 1.0), (_m(5), None, 2.0), (_m(7), "a", 4.0)]
+    df = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
+    rollup = ContinuousRollup(spark, str(tmp_path / "agg"))
+    rollup.merge_batch(df.filter(F.col("value") < 2), 0)
+    rollup.merge_batch(df.filter(F.col("value") >= 2), 1)
+    inc = rollup.read().select(
+        F.col("bucket_start").alias("b"), "event_type", "n", "total"
+    )
+    exact = df.groupBy(
+        F.date_trunc("hour", "ts").alias("b"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
+    assert inc.exceptAll(exact).count() == 0
+    assert exact.exceptAll(inc).count() == 0
+    assert inc.count() == 2
+
+
 def test_hash_sample_nested_and_stable(spark):
     from pypeman_spark.functions.sampling import hash_sample
 

@@ -400,6 +400,71 @@ def test_process_batch_runs_each_message_once(spark, tmp_path):
         store.close()
 
 
+def _counting_when_pipe(spark, name):
+    # JsonToPython -> a counting node -> a when branch, so each run
+    # shares (persists) the counted frame for its fan-out
+    calls = spark.sparkContext.accumulator(0)
+
+    def count(d):
+        calls.add(1)
+        return d
+
+    pipe = Pipeline(name).add(
+        JsonToPython(), FuncNode(count, name="count")
+    ).when(F.col("payload").contains('"n": 1'), FuncNode(lambda d: d, name="one"))
+    return pipe, calls
+
+
+def test_nested_handle_keeps_the_outer_batch_cached(spark):
+    # a batch that ends inside another releases only its own frames: the
+    # outer batch's fan-out stays cached, so its rows cross the counting
+    # node once
+    pipe, calls = _counting_when_pipe(spark, "nest")
+    chan = StreamingChannel(None, pipe)
+    a = messages_from_payloads(spark, [{"n": i} for i in range(4)], channel="nest")
+    b = messages_from_payloads(spark, [{"n": i} for i in range(3)], channel="nest")
+    with chan.handle(a) as out_a:
+        with chan.handle(b) as out_b:
+            assert out_b.count() == 3
+        rows = out_a.collect()
+    assert sorted(r["state"] for r in rows) == ["processed"] * 4
+    assert calls.value == 4 + 3
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_retry_sweep_inside_a_batch_keeps_its_fanout_cached(spark, tmp_path):
+    # a sweep on the channel's pipeline while a batch is open releases
+    # only the sweep's own runs: every frame the batch cached stays
+    from pypeman_spark.store import RetryStore
+
+    pipe, calls = _counting_when_pipe(spark, "sweep")
+    rs = RetryStore(spark, str(tmp_path / "rt"), channel="sweep", retry_delay=0.0)
+    rs.store_until_retry(
+        messages_from_payloads(spark, [{"n": 9}], channel="sweep")
+    )
+    chan = StreamingChannel(None, pipe, retry_store=rs)
+    batch = messages_from_payloads(spark, [{"n": i} for i in range(4)], channel="sweep")
+    with chan.handle(batch) as out:
+        cached = _persisted_rdds(spark)
+        counts = chan.run_retries_once()
+        assert cached <= _persisted_rdds(spark)
+        assert out.count() == 4
+    assert counts == {"retried": 1, "succeeded": 1, "rejected": 0, "reparked": 0}
+    assert calls.value == 4 + 1
+
+
+def test_channel_preconditions_raise(spark):
+    # checked by a raise, not an assert that python -O removes
+    chan = StreamingChannel(None, Pipeline("pre"))
+    with pytest.raises(ValueError, match="no retry store"):
+        chan.run_retries_once()
+    with pytest.raises(ValueError, match="not started"):
+        chan.process_all_available()
+
+
 def test_http_sidecar_sync_respond_and_routing(spark, tmp_path):
     # VERDICT r01 items 1-2 (missing): synchronous request/response mode
     # (contrib/http.py:159-182) + method/url routing with {match_info}

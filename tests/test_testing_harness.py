@@ -49,16 +49,23 @@ def test_handle_and_wait(spark):
     assert row["state"] == "processed"
 
 
-def test_handle_and_wait_releases_shared_frames(spark):
+def test_handle_and_wait_releases_shared_frames(spark, monkeypatch):
     # a handler chain shares the stage output across outcome arms; the
-    # synchronous run unpersists it once the row is collected
+    # synchronous run releases it once the row is collected
     p = Pipeline("t").add(
         Reject(condition=F.col("payload").contains('"n": 4'), name="rej")
     ).add_reject_nodes(FuncNode(lambda d: {**d, "seen": True}, name="on_rej"))
+    runs = []
+    run = p.run
+    monkeypatch.setattr(p, "run", lambda df: runs.append(run(df)) or runs[-1])
     row = p.handle_and_wait(spark, {"n": 4})
     assert row["state"] == "rejected"
     assert json.loads(row["payload"]) == {"n": 4, "seen": True}
-    assert p._persisted == []
+    (res,) = runs
+    assert len(res.cached) == 1
+    for frame in (res.all, *res.cached):
+        level = frame.storageLevel
+        assert not (level.useMemory or level.useDisk)
 
 
 def test_observe_outcomes(spark):

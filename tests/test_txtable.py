@@ -50,6 +50,20 @@ def test_append_merge_delete_roundtrip(spark, tmp_path):
     ]
 
 
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_merge_upsert_null_key_matches_stored_null(spark, tmp_path, mode):
+    # keys match null-safely: upserting one null-key row twice leaves
+    # one row, and a second upsert of that key replaces it
+    t = _mk(spark, tmp_path)
+    t.append(_df(spark, [(1, "a")]))
+    row = _df(spark, [(None, "x")])
+    t.merge_upsert(row, mode=mode)
+    t.merge_upsert(row, mode=mode)
+    assert sorted(map(tuple, t.read().collect()), key=str) == [(1, "a"), (None, "x")]
+    t.merge_upsert(_df(spark, [(None, "y")]), mode=mode)
+    assert sorted(map(tuple, t.read().collect()), key=str) == [(1, "a"), (None, "y")]
+
+
 def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     """The 100 TB contract: a 1-key merge must remove files only in
     that key's bucket — every other bucket's files stay live."""

@@ -12,9 +12,13 @@
 # main_p50_s, and for esb_channel the number of timed batches. Every
 # side runs from its own checkout in a fresh JVM, and the first side
 # alternates per pair (A B, B A, ...) so host drift hits both equally.
+# Every line also records the host's core count (`nproc`, unset
+# OMP_NUM_THREADS) and SPARK_GRAFT_CPUS (null when unset), so a number
+# is only compared with numbers taken at the same core count.
 set -eu
 A_DIR=$1; B_DIR=$2; PAIRS=${3:-4}; OUT=${4:-/tmp/ab_bench.jsonl}
 WORKLOAD=${5:-}; SEED_BASE=${6:-1000}
+NPROC=$(env -u OMP_NUM_THREADS nproc); CPUS=${SPARK_GRAFT_CPUS:-null}
 CONTROL="pricing_summary shipping_priority local_supplier_volume
 top_orders_per_priority order_priority_check returned_items_report
 customer_order_distribution nation_market_share two_nation_volume
@@ -31,7 +35,8 @@ run_side() {  # <side> <dir> <pair>
   if [ -z "$WORKLOAD" ]; then
     total=$(cd "$dir" && python bench.py $CONTROL 2>/dev/null | tail -1 \
       | python -c "import json,sys; print(json.load(sys.stdin)['value'])")
-    echo "{\"run\": \"$side$i\", \"dir\": \"$dir\", \"total_s\": $total}"
+    echo "{\"run\": \"$side$i\", \"dir\": \"$dir\", \"total_s\": $total," \
+      "\"nproc\": $NPROC, \"spark_graft_cpus\": $CPUS}"
     return
   fi
   local seed=$((SEED_BASE + i))
@@ -39,9 +44,10 @@ run_side() {  # <side> <dir> <pair>
       --seed "$seed" --seconds 5 --trace 0 2>/dev/null | tail -1) \
     | python3 -c '
 import json, os, sys
-side, d, w, seed = sys.argv[1:]
+side, d, w, seed, nproc, cpus = sys.argv[1:]
 res = json.load(sys.stdin)
 line = {"run": side, "dir": d, "workload": w, "seed": int(seed),
+        "nproc": int(nproc), "spark_graft_cpus": json.loads(cpus),
         "correct": res["correct"], "failed": res["failed"]}
 line.update({k: v["value"] for k, v in res["metrics"].items()})
 if w == "esb_channel":
@@ -50,7 +56,7 @@ if w == "esb_channel":
     with open(path) as fh:
         line["batches"] = json.load(fh)["detail"]["batches"]
 print(json.dumps(line))
-' "$side$i" "$dir" "$WORKLOAD" "$seed"
+' "$side$i" "$dir" "$WORKLOAD" "$seed" "$NPROC" "$CPUS"
 }
 
 : > "$OUT"
