@@ -472,7 +472,6 @@ def cmd_tools(args) -> int:
                 "stats": tx.stats(),
                 "key_cols": tx.key_cols,
                 "n_buckets": tx.n_buckets,
-                "logstore": tx.logstore.kind,
                 "constraints": tx.constraints(),
             }))
             return 0

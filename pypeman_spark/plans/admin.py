@@ -75,7 +75,6 @@ class ChannelRegistry:
             "path": tx.path,
             "key_cols": list(tx.key_cols),
             "n_buckets": tx.n_buckets,
-            "logstore": tx.logstore.kind,
             "stats": tx.stats(),
             "constraints": tx.constraints(),
         }

@@ -1,58 +1,35 @@
-"""Pluggable commit-log storage for :class:`~.txtable.TxTable`.
+"""Commit-log storage for :class:`~.txtable.TxTable`.
 
 The ACID protocol (txtable.py module docstring) needs exactly one
 primitive from its log storage: **conditional put** — "publish this
 payload as version V iff V is unclaimed", atomically, across
-processes. Everything else is plain reads. This module extracts that
-seam so the table's guarantees are not silently filesystem-scoped:
+processes. Everything else is plain reads. :class:`LogStore` states
+that contract; :class:`FileLogStore` is the one implementation: one
+JSON-lines file per version, claimed via ``os.link`` of a
+fully-fsynced temp file (the same claim semantics as
+``O_CREAT|O_EXCL``, but with complete content the instant the name
+appears). Correct on local and truly-POSIX network filesystems; NOT
+correct on S3/GCS, where neither O_EXCL nor atomic link exists. The
+store is a cheap value object holding only a path (no open handles),
+so it pickles cleanly into Spark tasks and survives ``fork``/
+``spawn`` into writer processes.
 
-* :class:`FileLogStore` — the POSIX implementation (one JSON-lines
-  file per version; atomic claim via ``os.link`` of a fully-fsynced
-  temp file, the same claim semantics as ``O_CREAT|O_EXCL`` but with
-  complete content the instant the name appears). Correct on local
-  and truly-POSIX network filesystems; NOT correct on S3/GCS, where
-  neither O_EXCL nor atomic link exists.
-* :class:`SqliteLogStore` — a conditional-put implementation with NO
-  dependence on rename/link semantics: versions are rows in a SQLite
-  table with ``version INTEGER PRIMARY KEY`` and the claim is
-  ``INSERT OR IGNORE`` under SQLite's own cross-process locking
-  (WAL + busy timeout). This is the same *shape* as the LogStore a
-  real object-store deployment plugs in — DynamoDB/conditional-PUT on
-  S3, a lock service on GCS (the published Delta LogStore recipe,
-  Armbrust et al., VLDB 2020) — and running the full txtable test
-  matrix against it proves the commit protocol depends only on the
-  conditional-put contract, not on POSIX.
-
-Stores are cheap value objects holding only paths (no open handles),
-so they pickle cleanly into Spark tasks and survive ``fork``/
-``spawn`` into writer processes. :func:`open_logstore` autodetects
-the implementation from the on-disk layout so concurrent writers and
-re-openers can never disagree about which log they are speaking to.
-
-Object-store fault tolerance (chaos-tested in
-``tests/test_txtable_chaos.py``): the table layer absorbs S3-shaped
-failures around this seam — reads that briefly lag a successful put
-retry with backoff (``txtable._read_committed``) and a LISTED commit
-that never becomes readable raises ``LogReadError`` instead of
-silently replaying an incomplete live set; listings that lag a
-version the handle itself committed or previously saw are retried by
-``txtable._MonotonicLogStore`` (session read-your-own-writes /
-monotonic reads); and a crash between a durable conditional put and
-the client ack leaves a fully valid commit whose staged files are
-log-referenced, never vacuum-eligible orphans.
+The chaos tests (``tests/test_txtable_chaos.py``) wrap the file store
+in fault-injecting :class:`LogStore` subclasses: the table layer must
+absorb S3-shaped failures around this seam — reads and listings that
+lag a put (``txtable._read_committed``, ``txtable._MonotonicLogStore``)
+and a crash between a durable put and its ack.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sqlite3
 import uuid
 
-__all__ = ["LogStore", "FileLogStore", "SqliteLogStore", "open_logstore"]
+__all__ = ["LogStore", "FileLogStore"]
 
 _VERSION_DIGITS = 20
-_SQLITE_DB = "log.db"
 
 
 def _commit_name(version: int) -> str:
@@ -67,8 +44,6 @@ class LogStore:
     retention (``TxTable.truncate_log`` drops entries a checkpoint
     supersedes) and :meth:`overwrite` is a repair/testing escape
     hatch — neither is part of the commit protocol."""
-
-    kind = "abstract"
 
     def list_versions(self) -> "list[int]":
         raise NotImplementedError
@@ -101,11 +76,20 @@ class LogStore:
 class FileLogStore(LogStore):
     """One ``<version 20 digits>.json`` file per commit under
     ``log_dir``; atomic claim via hardlink of an fsynced temp file.
-    POSIX-only (see module docstring)."""
+    POSIX-only (see module docstring).
 
-    kind = "file"
+    A ``log.db`` under ``log_dir`` is the commit log of a retired
+    database store, whose commits this store cannot see: opening it
+    raises instead of reading the table as empty (a first commit would
+    then split the log in two)."""
 
     def __init__(self, log_dir: str):
+        legacy = os.path.join(log_dir, "log.db")
+        if os.path.exists(legacy):
+            raise ValueError(
+                f"{legacy}: commit log of a retired database log "
+                "store; only the file log (_txlog/*.json) has a reader"
+            )
         self.log_dir = log_dir
 
     def _path(self, version: int) -> str:
@@ -221,157 +205,3 @@ class FileLogStore(LogStore):
         with open(tmp, "w") as fh:
             fh.write(payload)
         os.replace(tmp, self._path(version))
-
-
-class SqliteLogStore(LogStore):
-    """Conditional-put log over SQLite (``log_dir/log.db``): the claim
-    is ``INSERT OR IGNORE`` on a primary-keyed version column — no
-    rename, no hardlink, no O_EXCL. Connections are opened per
-    operation (nothing to leak across fork/pickle); WAL journaling
-    lets readers proceed during a writer's commit and
-    ``synchronous=FULL`` gives the same durability the file store's
-    fsync does."""
-
-    kind = "sqlite"
-
-    def __init__(self, log_dir: str):
-        self.log_dir = log_dir
-        os.makedirs(log_dir, exist_ok=True)
-        self.db = os.path.join(log_dir, _SQLITE_DB)
-        con = self._connect()
-        try:
-            con.execute(
-                "CREATE TABLE IF NOT EXISTS commits ("
-                "version INTEGER PRIMARY KEY, payload TEXT NOT NULL)"
-            )
-            con.execute(
-                "CREATE TABLE IF NOT EXISTS checkpoints ("
-                "version INTEGER PRIMARY KEY, state TEXT NOT NULL)"
-            )
-            con.commit()
-        finally:
-            con.close()
-
-    def _connect(self) -> sqlite3.Connection:
-        con = sqlite3.connect(self.db, timeout=30.0)
-        con.execute("PRAGMA journal_mode=WAL")
-        con.execute("PRAGMA synchronous=FULL")
-        return con
-
-    def list_versions(self) -> "list[int]":
-        con = self._connect()
-        try:
-            return [r[0] for r in con.execute(
-                "SELECT version FROM commits ORDER BY version"
-            )]
-        finally:
-            con.close()
-
-    def read(self, version: int) -> "str | None":
-        con = self._connect()
-        try:
-            row = con.execute(
-                "SELECT payload FROM commits WHERE version = ?",
-                (int(version),),
-            ).fetchone()
-            return None if row is None else row[0]
-        finally:
-            con.close()
-
-    def put_if_absent(self, version: int, payload: str) -> bool:
-        con = self._connect()
-        try:
-            cur = con.execute(
-                "INSERT OR IGNORE INTO commits (version, payload) "
-                "VALUES (?, ?)",
-                (int(version), payload),
-            )
-            con.commit()
-            return cur.rowcount == 1
-        finally:
-            con.close()
-
-    def latest_checkpoint(self, upto: int) -> "tuple[int, dict] | None":
-        con = self._connect()
-        try:
-            row = con.execute(
-                "SELECT version, state FROM checkpoints "
-                "WHERE version <= ? ORDER BY version DESC LIMIT 1",
-                (int(upto),),
-            ).fetchone()
-            if row is None:
-                return None
-            state = row[1]
-            if isinstance(state, bytes):  # zlib blob (round 10+)
-                import zlib
-
-                state = zlib.decompress(state).decode("utf-8")
-            return row[0], json.loads(state)
-        finally:
-            con.close()
-
-    def write_checkpoint(self, version: int, state: dict) -> None:
-        # stored zlib-compressed since round 10 (sqlite is dynamically
-        # typed: bytes land as BLOB, pre-r10 TEXT rows still read)
-        import zlib
-
-        con = self._connect()
-        try:
-            con.execute(
-                "INSERT OR REPLACE INTO checkpoints (version, state) "
-                "VALUES (?, ?)",
-                (int(version),
-                 zlib.compress(json.dumps(state).encode("utf-8"), 6)),
-            )
-            con.commit()
-        finally:
-            con.close()
-
-    def list_checkpoints(self) -> "list[int]":
-        con = self._connect()
-        try:
-            return [r[0] for r in con.execute(
-                "SELECT version FROM checkpoints ORDER BY version"
-            )]
-        finally:
-            con.close()
-
-    def delete(self, version: int) -> None:
-        con = self._connect()
-        try:
-            con.execute(
-                "DELETE FROM commits WHERE version = ?", (int(version),)
-            )
-            con.commit()
-        finally:
-            con.close()
-
-    def overwrite(self, version: int, payload: str) -> None:
-        con = self._connect()
-        try:
-            con.execute(
-                "UPDATE commits SET payload = ? WHERE version = ?",
-                (payload, int(version)),
-            )
-            con.commit()
-        finally:
-            con.close()
-
-
-def open_logstore(log_dir: str, kind: "str | None" = None) -> LogStore:
-    """LogStore for ``log_dir``. With ``kind=None`` the implementation
-    is AUTODETECTED from the on-disk layout (``log.db`` present =>
-    sqlite), so every opener — re-opened tables, racing writer
-    processes, the streaming CDC source — agrees with the creator and
-    mixed-store corruption is impossible."""
-    if kind is None:
-        kind = (
-            "sqlite"
-            if os.path.exists(os.path.join(log_dir, _SQLITE_DB))
-            else "file"
-        )
-    if kind == "file":
-        return FileLogStore(log_dir)
-    if kind == "sqlite":
-        return SqliteLogStore(log_dir)
-    raise ValueError(f"unknown logstore kind: {kind!r}")

@@ -7,13 +7,11 @@ its load-bearing core — no proprietary code, just the public recipe:
 
 * **Immutable data files + an ordered commit log.** Every table
   mutation writes NEW parquet files, then publishes them through the
-  pluggable :mod:`.logstore`'s atomic CONDITIONAL PUT — "claim
-  version V iff unclaimed" — so exactly one writer wins each version.
-  The default store is one ``_txlog/<version 20 digits>.json`` file
-  per commit claimed via POSIX hardlink; the sqlite store provides
-  the same contract with no rename dependence (the shape an
-  object-store deployment needs). The log entry lists
-  ``add``/``remove`` file actions.
+  :mod:`.logstore`'s atomic CONDITIONAL PUT — "claim version V iff
+  unclaimed" — so exactly one writer wins each version: one
+  ``_txlog/<version 20 digits>.json`` file per commit, claimed via
+  POSIX hardlink. The log entry lists ``add``/``remove`` file
+  actions.
 * **Snapshot isolation for readers.** A snapshot is the file set
   obtained by replaying the log up to a version. Data files are never
   mutated, so a reader's DataFrame stays consistent regardless of
@@ -84,8 +82,7 @@ its commit leaves orphans that no snapshot references; :meth:`vacuum`
 deletes unreferenced files older than a grace period. A writer that
 dies mid-commit cannot corrupt the table: the LogStore contract
 requires the payload to be complete the instant the version becomes
-visible (the file store links a fully-fsynced temp file into place;
-the sqlite store commits the row transactionally).
+visible (the file store links a fully-fsynced temp file into place).
 """
 
 from __future__ import annotations
@@ -197,7 +194,7 @@ class _Plan(typing.NamedTuple):
     scopes: "set | None" = None
     extra: "dict | None" = None
 
-from .logstore import LogStore, open_logstore  # noqa: E402
+from .logstore import FileLogStore, LogStore  # noqa: E402
 
 
 class CommitConflict(RuntimeError):
@@ -428,11 +425,11 @@ def _file_uri(abspath: str) -> str:
 # Module-level log readers: pure LogStore+json, no SparkSession —
 # shared by TxTable and the streaming source (txtable_stream.py), whose
 # driver-side offset worker has no session to hand around. Each
-# accepts a LogStore or a log-dir path (autodetected impl).
+# accepts a LogStore or a log-dir path.
 
 
 def _as_logstore(store: "LogStore | str") -> LogStore:
-    return open_logstore(store) if isinstance(store, str) else store
+    return FileLogStore(store) if isinstance(store, str) else store
 
 
 class LogTruncatedError(RuntimeError):
@@ -467,16 +464,12 @@ class _MonotonicLogStore(LogStore):
     raises :class:`LogReadError` if it never settles, instead of
     silently replaying a table state that misses commits this very
     process knows exist. Transparent otherwise: every other call
-    delegates to the wrapped store, so impl-specific behavior
-    (hardlink vs sqlite conditional put) is untouched."""
+    delegates to the wrapped store, whose conditional put is
+    untouched."""
 
     def __init__(self, inner: "LogStore"):
         self.inner = inner
         self.known = -1
-
-    @property
-    def kind(self):  # noqa: D401 - delegate identity
-        return self.inner.kind
 
     def list_versions(self) -> "list[int]":
         import time as _time
@@ -762,12 +755,9 @@ class TxTable:
     metadata and re-read on open, so writers can never disagree on
     the bucketing).
 
-    ``logstore`` picks the commit-log storage (see
-    :mod:`.logstore`): ``"file"`` (default — POSIX hardlink claim),
-    ``"sqlite"`` (conditional-put with no rename dependence, the
-    object-store-shaped implementation), or a :class:`LogStore`
-    instance. On re-open the implementation is AUTODETECTED from the
-    on-disk layout, so every writer agrees with the table's creator.
+    The commit log is a :class:`~.logstore.FileLogStore` under
+    ``path/_txlog``; ``logstore`` takes a :class:`LogStore` instance
+    in its place (the fault-injection seam the chaos tests use).
 
     ``partition_by`` (fixed at creation, like the bucket layout)
     adds Hive-style ``col=value`` directory partitioning ABOVE the
@@ -793,7 +783,7 @@ class TxTable:
         key_cols: "list[str] | None" = None,
         n_buckets: int = 16,
         checkpoint_interval: int = 20,
-        logstore: "str | LogStore | None" = None,
+        logstore: "LogStore | None" = None,
         partition_by: "list[str] | None" = None,
         dv_table_cap: "int | None" = None,
         deep_clone_driver_max_bytes: "int | None" = None,
@@ -804,16 +794,7 @@ class TxTable:
         self.data_dir = os.path.join(path, "data")
         os.makedirs(self.log_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
-        if isinstance(logstore, LogStore):
-            self.logstore = logstore
-        else:
-            detected = open_logstore(self.log_dir)
-            if detected.list_versions() or logstore in (None, detected.kind):
-                # existing table: layout wins — a kind mismatch here
-                # would split the log between two stores
-                self.logstore = detected
-            else:
-                self.logstore = open_logstore(self.log_dir, logstore)
+        self.logstore = logstore or FileLogStore(self.log_dir)
         if not isinstance(self.logstore, _MonotonicLogStore):
             # session read-your-own-writes: this handle must never
             # replay a listing below a version it committed or saw
@@ -1548,17 +1529,23 @@ class TxTable:
         rewrite shares: claim the next version; on a race, walk the
         interleaved commits — commits :meth:`_commutes` clears let us
         re-claim directly (our rewrite is still exact), anything else
-        returns None so the caller retries from a fresh snapshot."""
-        v = base_v
-        while True:
+        returns None so the caller retries from a fresh snapshot. After
+        ``_COMMIT_ATTEMPTS ** 2`` lost claims it also returns None, so
+        an endless stream of commuting commits costs the caller one
+        attempt instead of spinning this walk forever. A re-claim costs
+        one log read where an attempt rebuilds the rewrite, hence the
+        larger budget: four writers racing disjoint partitions lose
+        more than ``_COMMIT_ATTEMPTS`` claims in a row, and none of
+        them should rebuild."""
+        for v in range(base_v, base_v + _COMMIT_ATTEMPTS ** 2):
             if self._commit(
                 v + 1, actions, op=op, buckets=tb, txn=txn,
                 scopes=scopes,
             ):
                 return v + 1
-            v += 1
-            if not self._commutes(v, touched, scopes, txn):
+            if not self._commutes(v + 1, touched, scopes, txn):
                 return None
+        return None
 
     def _commutes(
         self, version: int, touched: "set[int]", scopes: "set | None",
@@ -2629,109 +2616,6 @@ class TxTable:
             )
         return reader.load()
 
-    def drain_changes_available(
-        self, foreach_batch, checkpoint: str,
-        starting_version: int = 0,
-        max_commits_per_trigger: int = 0,
-        max_bytes_per_trigger: int = 0,
-        max_runs: int = 1000, run_timeout_s: float = 300.0,
-    ) -> dict:
-        """PACED availableNow catch-up over the change feed: run
-        ``availableNow`` queries (same checkpoint, so exactly-once
-        composes across runs) until the stream's committed offset
-        reaches the log head observed at drain start, then stop.
-
-        Why: the Python data source API has no
-        ``SupportsTriggerAvailableNow`` seam, so under availableNow
-        Spark calls ``latestOffset`` ONCE and a bounded reader
-        (``maxCommitsPerTrigger`` / ``maxBytesPerTrigger``) drains one
-        trigger's worth per run — admission control silently caps the
-        whole run instead of pacing it. This driver-side loop restores
-        the pacing: each run is one bounded micro-batch, progress is
-        read from the reader's own committed-offset marker (the same
-        file that pins :meth:`vacuum`), and a post-downtime backlog
-        of N commits drains in ceil(N / bound) runs — bounded sink
-        commits, never one giant batch. Returns ``{"runs",
-        "end_version", "target"}``.
-
-        Progress is read from the query CHECKPOINT itself (the last
-        batch in ``commits/`` and its planned end offset in
-        ``offsets/`` — Spark's documented streaming-checkpoint
-        layout), not the reader's vacuum-pinning marker: the source
-        ``commit()`` callback for a run's final batch only fires at
-        the NEXT run's initialization, so the marker lags one run
-        behind what the sink has durably committed.
-
-        ``checkpoint`` must be a LOCAL filesystem path (the progress
-        probe globs/opens it directly); with a DFS/object-store
-        checkpoint the probe would never observe progress — rather
-        than silently spinning ``max_runs`` no-op queries, the loop
-        raises RuntimeError after any run that failed to advance the
-        committed offset (an availableNow run over a non-empty
-        backlog always admits at least one commit, so a stall is
-        always a configuration or environment fault)."""
-        import glob as _glob
-
-        from ..streaming.drain import await_stream
-
-        target = self.version()
-
-        def committed() -> int:
-            done = [
-                int(os.path.basename(p))
-                for p in _glob.glob(
-                    os.path.join(checkpoint, "commits", "*")
-                )
-                if os.path.basename(p).isdigit()
-            ]
-            if not done:
-                return -1
-            try:
-                with open(os.path.join(
-                    checkpoint, "offsets", str(max(done))
-                )) as fh:
-                    # v1 header, metadata line, one offset line per
-                    # source — ours is the single source
-                    return int(
-                        json.loads(fh.read().splitlines()[-1])["version"]
-                    )
-            except (OSError, ValueError, KeyError, IndexError):
-                return -1
-
-        runs = 0
-        while runs < max_runs and committed() < target:
-            before = committed()
-            q = (
-                self.stream_changes(
-                    starting_version, max_commits_per_trigger,
-                    max_bytes_per_trigger,
-                )
-                .writeStream.foreachBatch(foreach_batch)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            await_stream(
-                q, run_timeout_s, f"drain_changes_available run {runs + 1}"
-            )
-            runs += 1
-            if committed() <= before:
-                # an availableNow run over a non-empty backlog always
-                # admits >= 1 commit; no observable progress means the
-                # probe can't see the checkpoint (non-local path?) or
-                # the run produced nothing durable — fail loudly
-                # instead of spinning max_runs no-op queries
-                raise RuntimeError(
-                    f"drain_changes_available: run {runs} advanced "
-                    f"the committed offset from {before} to "
-                    f"{committed()} (target {target}); the progress "
-                    f"probe requires a LOCAL checkpoint path "
-                    f"(got {checkpoint!r})"
-                )
-        return {
-            "runs": runs, "end_version": committed(), "target": target,
-        }
-
     # ---------------------------------------------------- mutations --
 
     def append(self, df: DataFrame,
@@ -3111,7 +2995,8 @@ class TxTable:
                     txn: "tuple[str, int] | None" = None) -> int:
         """Delete by key: scope-bound rewrite without the matching
         rows (same OCC loop as merge; partition-refined when
-        partition_by ⊆ key_cols).
+        partition_by ⊆ key_cols). Keys match null-safely, as in
+        merge: a null key deletes the row stored with a null key.
 
         ``mode="dv"`` is the GDPR-shaped point-delete fast path: the
         matching rows' POSITIONS publish as deletion-vector actions
@@ -3125,9 +3010,9 @@ class TxTable:
         ).cache()
 
         def rows(t: DataFrame) -> DataFrame:  # target rows, keys tagged
-            return t.join(keys, on=self.key_cols, how="left").select(
-                *t.columns, "__s"
-            )
+            return t.alias("t").join(
+                keys.alias("s"), on=_keys_match(self.key_cols), how="left",
+            ).select("t.*", "s.__s")
 
         def attempt(st: LogState) -> "_Plan | int":
             tb, scopes = self._touched_scopes(keys)
@@ -3885,7 +3770,6 @@ class TxTable:
     def clone(
         self, dest_path: str, version: "int | None" = None,
         timestamp=None, shallow: bool = True,
-        logstore: "str | None" = None,
     ) -> "TxTable":
         """``CREATE TABLE ... CLONE`` — a new independent table at
         ``dest_path`` whose initial state is this table's snapshot at
@@ -3946,7 +3830,7 @@ class TxTable:
         # read re-created them. (_clone_build re-checks inside the
         # pinned span to catch a concurrent clone racing this window.)
         if os.path.exists(dest_path) and (
-            open_logstore(os.path.join(dest_path, _LOG_DIR))
+            FileLogStore(os.path.join(dest_path, _LOG_DIR))
             .list_versions()
         ):
             raise ValueError(
@@ -4046,8 +3930,7 @@ class TxTable:
                     )
         try:
             committed = self._clone_build(
-                tgt, dest_path, src_version, shallow,
-                logstore, marker,
+                tgt, dest_path, src_version, shallow, marker,
             )
         except BaseException:
             if marker:
@@ -4099,7 +3982,7 @@ class TxTable:
 
     def _clone_build(
         self, tgt, dest_path: str, src_version: int,
-        shallow: bool, logstore, marker,
+        shallow: bool, marker,
     ) -> "TxTable":
         """Everything in :meth:`clone` between the marker write and a
         committed destination table. Split out so ``clone`` can wrap
@@ -4110,7 +3993,7 @@ class TxTable:
             sorted(tgt.live), f"clone(version={src_version})"
         )
         if os.path.exists(dest_path) and (
-            open_logstore(os.path.join(dest_path, _LOG_DIR))
+            FileLogStore(os.path.join(dest_path, _LOG_DIR))
             .list_versions()
         ):
             raise ValueError(
@@ -4121,7 +4004,6 @@ class TxTable:
             key_cols=list(self.key_cols),
             n_buckets=self.n_buckets,
             checkpoint_interval=self.checkpoint_interval,
-            logstore=logstore or self.logstore.kind,
             partition_by=list(self.partition_by) or None,
             # table properties travel with the layout identity
             dv_table_cap=(

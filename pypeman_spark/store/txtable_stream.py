@@ -45,7 +45,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .logstore import open_logstore
+from .logstore import FileLogStore
 from .txtable import (
     _LOG_DIR,
     LogTruncatedError,
@@ -152,10 +152,10 @@ class TxTableChangesStreamReader(DataSourceStreamReader):
             if f.metadata and f.metadata.get("physical")
             and f.metadata["physical"] != f.name
         }
-        # key cols live in version 0's meta action; the LogStore impl
-        # is autodetected from the layout (holds only paths — pickles
-        # cleanly into the driver-side offset worker)
-        self.logstore = open_logstore(self.log_dir)
+        # key cols live in version 0's meta action; the store holds
+        # only a path, so it pickles cleanly into the driver-side
+        # offset worker
+        self.logstore = FileLogStore(self.log_dir)
         meta = {}
         for line in (self.logstore.read(0) or "").splitlines():
             if line.strip():

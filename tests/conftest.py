@@ -13,12 +13,9 @@ from pypeman_spark.session import get_spark  # noqa: E402
 # everything marked here still runs in the full tier
 # (`-m "slow or not slow"`), which remains the release gate.
 #
-# Three classes are marked slow:
+# Two classes are marked slow:
 #  1. whole soak/chaos/robustness-matrix modules (SLOW_MODULES),
-#  2. the `[sqlite]` commit-log backend arms of the TxTable tests (the
-#     `[file]` arms execute the identical logic; sqlite is the
-#     alternate catalog backend),
-#  3. the heaviest individual tests by measured duration (SLOW_TESTS —
+#  2. the heaviest individual tests by measured duration (SLOW_TESTS —
 #     names, so a rename surfaces as "marked test not collected" in
 #     the assertion below rather than silently running fast-tier).
 # ---------------------------------------------------------------------------
@@ -38,7 +35,6 @@ SLOW_TESTS = {
     "test_inject_all_entry_points",
     "test_stream_changes_admission_control_paces_backlog[file]",
     "test_stream_changes_max_bytes_per_trigger[file]",
-    "test_drain_available_paced_catchup[file]",
     "test_medallion_cdc_chain_exactly_once[file]",
     "test_append_merge_delete_roundtrip[file]",
     "test_vacuum_refuses_under_mid_drain_stream[file]",
@@ -134,11 +130,7 @@ def pytest_collection_modifyitems(config, items):
     seen = set()
     for item in items:
         fname = os.path.basename(str(item.fspath))
-        if (
-            fname in SLOW_MODULES
-            or "[sqlite" in item.name
-            or item.name in SLOW_TESTS
-        ):
+        if fname in SLOW_MODULES or item.name in SLOW_TESTS:
             item.add_marker(slow)
             if item.name in SLOW_TESTS:
                 seen.add(item.name)
@@ -160,6 +152,15 @@ def _collects_whole_suite(config) -> bool:
     return any(
         here == r or here.startswith(r + os.sep) for r in roots or [start]
     )
+
+
+@pytest.fixture(params=["file"])
+def file_log(request):
+    """The commit-log store the TxTable test modules run against (they
+    use it via ``pytestmark``). FileLogStore is the only one; the
+    parameter stays so those tests keep the ``[file]`` ids that
+    SLOW_TESTS and earlier test reports name them by."""
+    return request.param
 
 
 @pytest.fixture(scope="session")

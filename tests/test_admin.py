@@ -365,7 +365,6 @@ def test_table_admin_info_and_history(table_admin):
     assert info["key_cols"] == ["k"] and info["n_buckets"] == 2
     assert info["stats"]["rows"] == 2 and info["stats"]["version"] == 3
     assert info["constraints"] == {"val_nonempty": "length(val) > 0"}
-    assert info["logstore"] == tx.logstore.kind
 
     status, body = _get(server, "/tables/events_tbl/history")
     assert status == 200

@@ -11,24 +11,12 @@ from pyspark.sql import functions as F
 
 from pypeman_spark.store.txtable import TxTable
 
-# Every test in this file runs under BOTH LogStore implementations
-# (POSIX hardlink claim vs sqlite conditional put): the commit
-# protocol's correctness must rest only on the conditional-put
-# contract, never on POSIX rename/link semantics.
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 def _mk(spark, tmp_path, **kw):
     kw.setdefault("key_cols", ["k"])
     kw.setdefault("n_buckets", 4)
-    kw.setdefault("logstore", _KIND["logstore"])
     return TxTable(spark, str(tmp_path / "tbl"), **kw)
 
 
@@ -62,6 +50,28 @@ def test_merge_upsert_null_key_matches_stored_null(spark, tmp_path, mode):
     assert sorted(map(tuple, t.read().collect()), key=str) == [(1, "a"), (None, "x")]
     t.merge_upsert(_df(spark, [(None, "y")]), mode=mode)
     assert sorted(map(tuple, t.read().collect()), key=str) == [(1, "a"), (None, "y")]
+
+
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_delete_keys_matches_null_key(spark, tmp_path, mode):
+    # delete_keys matches keys null-safely, like merge: a null key
+    # deletes the stored null-key row
+    t = _mk(spark, tmp_path)
+    t.append(_df(spark, [(None, "x"), (1, "a"), (2, "b")]))
+    t.delete_keys(_df(spark, [(None, ""), (1, "")]), mode=mode)
+    assert [tuple(r) for r in t.read().collect()] == [(2, "b")]
+
+
+def test_open_refuses_legacy_log_db(spark, tmp_path):
+    """A ``_txlog/log.db`` is the commit log of a retired database
+    store: opening the table raises, naming the file, instead of
+    reading an empty log that a first commit would split."""
+    log_dir = tmp_path / "tbl" / "_txlog"
+    log_dir.mkdir(parents=True)
+    (log_dir / "log.db").write_bytes(b"")
+    with pytest.raises(ValueError, match="log.db"):
+        _mk(spark, tmp_path)
+    assert os.listdir(log_dir) == ["log.db"]
 
 
 def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
@@ -310,14 +320,14 @@ def test_conflict_exhaustion_raises(spark, tmp_path, monkeypatch, mutation):
 def _race_commits(path, writer_id, n_commits, barrier):
     """Child process: race raw commits through the atomic-claim
     protocol (no Spark needed — the race is pure filesystem)."""
-    from pypeman_spark.store.logstore import open_logstore
+    from pypeman_spark.store.logstore import FileLogStore
 
     t = TxTable.__new__(TxTable)
     t.path = path
     t.log_dir = os.path.join(path, "_txlog")
     t.data_dir = os.path.join(path, "data")
     t.checkpoint_interval = 1 << 30
-    t.logstore = open_logstore(t.log_dir)  # layout decides the impl
+    t.logstore = FileLogStore(t.log_dir)
     barrier.wait()
     landed = []
     for i in range(n_commits):
@@ -953,34 +963,6 @@ def test_stream_changes_matches_batch_feed(spark, tmp_path):
         ).collect()
     )
     assert got == want and len(got) == 14
-
-
-def test_drain_available_paced_catchup(spark, tmp_path):
-    """availableNow + a bounded reader drains one trigger's worth per
-    run (no SupportsTriggerAvailableNow seam in the Python source
-    API) — drain_changes_available loops runs until the committed
-    offset reaches the drain-start head: a 20-commit backlog at
-    maxCommitsPerTrigger=5 takes exactly 4 bounded runs, one shared
-    checkpoint keeps it exactly-once, and re-draining is a 0-run
-    no-op."""
-    t = _mk(spark, tmp_path, n_buckets=2)
-    for i in range(20):
-        t.append(_df(spark, [(100 * i + j, f"v{i}") for j in range(3)]))
-    batches = []
-
-    def fb(df, _bid):
-        batches.append(df.count())
-
-    res = t.drain_changes_available(
-        fb, str(tmp_path / "ck"), max_commits_per_trigger=5,
-    )
-    assert res["runs"] == 4
-    assert res["end_version"] == res["target"] == t.version()
-    assert sum(batches) == 60  # every insert exactly once
-    res2 = t.drain_changes_available(
-        fb, str(tmp_path / "ck"), max_commits_per_trigger=5,
-    )
-    assert res2["runs"] == 0 and sum(batches) == 60
 
 
 def test_stream_changes_restart_resumes_at_offset(spark, tmp_path):

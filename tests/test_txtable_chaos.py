@@ -4,30 +4,28 @@ successful put, listings that return stale prefixes, a client crash
 between the durable put and the local ack — must cost retries or a
 LOUD error, never a silent wrong answer.
 
-The wrapper injects faults around a real LogStore (both impls), so
-what's under test is the protocol's use of the conditional-put
-contract, not any one store's filesystem semantics."""
+The wrapper injects faults around the real FileLogStore through the
+``TxTable(logstore=...)`` seam, so what's under test is the protocol's
+use of the conditional-put contract, not the store's filesystem
+semantics."""
 
+import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from pypeman_spark.store.logstore import LogStore, open_logstore
+from pypeman_spark.store import txtable
+from pypeman_spark.store.logstore import FileLogStore, LogStore
 from pypeman_spark.store.txtable import (
+    CommitConflict,
     LogReadError,
     TxTable,
     _read_committed,
 )
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 class ChaosLogStore(LogStore):
@@ -42,8 +40,6 @@ class ChaosLogStore(LogStore):
       put, then raises (crash between durable put and local ack — the
       writer never learns its commit landed).
     """
-
-    kind = "chaos"
 
     def __init__(self, inner, read_lag: int = 0, list_lag: int = 0):
         self.inner = inner
@@ -102,11 +98,33 @@ class ChaosLogStore(LogStore):
         return self.inner.overwrite(version, payload)
 
 
+class CrowdedLogStore(ChaosLogStore):
+    """Another writer wins every version this store claims: just
+    before each claim it publishes an empty append there (a commuting
+    commit whose scope is disjoint from any write). Raises past
+    ``limit`` claims, so a walk that never stops fails instead of
+    hanging."""
+
+    def __init__(self, inner, limit: int = 1000):
+        super().__init__(inner)
+        self.claims, self.limit = 0, limit
+
+    def put_if_absent(self, version, payload):
+        self.claims += 1
+        if self.claims > self.limit:
+            raise RuntimeError(f"{self.claims} claims: the walk never stops")
+        self.inner.put_if_absent(version, json.dumps({"commit": {
+            "version": version, "op": "append", "buckets": [],
+            "pid": 0, "ts": time.time(),
+        }}) + "\n")
+        return super().put_if_absent(version, payload)
+
+
 def _mk(spark, tmp_path, **chaos):
     path = str(tmp_path / "tbl")
     log_dir = os.path.join(path, "_txlog")
     os.makedirs(log_dir, exist_ok=True)
-    inner = open_logstore(log_dir, _KIND["logstore"])
+    inner = FileLogStore(log_dir)
     store = ChaosLogStore(inner, **chaos)
     t = TxTable(
         spark, path, key_cols=["k"], n_buckets=2, logstore=store,
@@ -217,3 +235,19 @@ def test_chaos_soak_mixed_faults_full_lifecycle(spark, tmp_path):
     assert t.count() == 19
     assert store.stats["lagged_reads"] > 0
     assert store.stats["stale_lists"] > 0
+
+
+def test_reclaim_walk_is_bounded(spark, tmp_path, monkeypatch):
+    """A writer behind an endless stream of commuting, scope-disjoint
+    commits re-claims at most _COMMIT_ATTEMPTS ** 2 times per attempt
+    and raises CommitConflict once its attempts run out, instead of
+    walking the log forever. Three attempts keep the walk short."""
+    monkeypatch.setattr(txtable, "_COMMIT_ATTEMPTS", 3)
+    t, _ = _mk(spark, tmp_path)
+    t.append(_df(spark, [(1, "a")]))
+    store = CrowdedLogStore(FileLogStore(t.log_dir))
+    crowded = TxTable(spark, t.path, logstore=store)
+    with pytest.raises(CommitConflict):
+        crowded.append(_df(spark, [(2, "b")]))
+    assert store.claims == 3 * 3 ** 2
+    assert [tuple(r) for r in t.read().collect()] == [(1, "a")]

@@ -16,20 +16,12 @@ from pyspark.sql import functions as F
 
 from pypeman_spark.store.txtable import TxTable
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 def _mk(spark, tmp_path, name="tbl", **kw):
     kw.setdefault("key_cols", ["k"])
     kw.setdefault("n_buckets", 2)
-    kw.setdefault("logstore", _KIND["logstore"])
     return TxTable(spark, str(tmp_path / name), **kw)
 
 
@@ -391,7 +383,6 @@ def test_shallow_clone_from_relative_source_path(spark, tmp_path):
     rel = os.path.relpath(str(tmp_path / "rel_tbl"))
     src = TxTable(
         spark, rel, key_cols=["k"], n_buckets=2,
-        logstore=_KIND["logstore"],
     )
     src.append(_df(spark, [(1, "a"), (2, "b")]))
     c = src.clone(str(tmp_path / "c"))

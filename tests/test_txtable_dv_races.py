@@ -16,20 +16,12 @@ import pytest
 
 from pypeman_spark.store.txtable import TxTable, _dv_decode, _dv_encode
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 def _mk(spark, tmp_path, **kw):
     kw.setdefault("key_cols", ["k"])
     kw.setdefault("n_buckets", 1)
-    kw.setdefault("logstore", _KIND["logstore"])
     return TxTable(spark, str(tmp_path / "tbl"), **kw)
 
 
@@ -47,7 +39,7 @@ def _race_dv_commits(path, writer_id, positions, barrier):
     union — exactly the writer discipline delete_where(mode="dv")
     follows — so a clash-forced retry recomposes over the
     interleaved writer's positions instead of overwriting them."""
-    from pypeman_spark.store.logstore import open_logstore
+    from pypeman_spark.store.logstore import FileLogStore
     from pypeman_spark.store.txtable import (
         _dv_decode as dec,
         _dv_encode as enc,
@@ -59,7 +51,7 @@ def _race_dv_commits(path, writer_id, positions, barrier):
     t.log_dir = os.path.join(path, "_txlog")
     t.data_dir = os.path.join(path, "data")
     t.checkpoint_interval = 1 << 30
-    t.logstore = open_logstore(t.log_dir)
+    t.logstore = FileLogStore(t.log_dir)
     rel = json.load(open(os.path.join(path, "race_target")))["file"]
     barrier.wait()
     landed, retries = [], 0

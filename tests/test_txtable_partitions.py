@@ -3,8 +3,7 @@ directory layout with exact per-file partition values in the log,
 partition-exact scan pruning, (partition, bucket)-scoped merges and
 conflict detection, and the predicate DML surface
 (delete_where / update_where / replace_where) including its
-metadata-only fast paths. Every test runs under BOTH LogStore
-implementations, like tests/test_txtable.py."""
+metadata-only fast paths."""
 
 import datetime as dt
 
@@ -16,14 +15,7 @@ from pypeman_spark.store.txtable import (
     TxTable,
 )
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 D1, D2, D3 = dt.date(2024, 1, 1), dt.date(2024, 1, 2), dt.date(2024, 1, 3)
@@ -33,7 +25,6 @@ def _mk(spark, tmp_path, **kw):
     kw.setdefault("key_cols", ["day", "k"])
     kw.setdefault("n_buckets", 4)
     kw.setdefault("partition_by", ["day"])
-    kw.setdefault("logstore", _KIND["logstore"])
     return TxTable(spark, str(tmp_path / "ptbl"), **kw)
 
 
@@ -105,7 +96,6 @@ def test_int_partition_values_compare_typed(spark, tmp_path):
     t = TxTable(
         spark, str(tmp_path / "ints"), key_cols=["p", "k"],
         n_buckets=2, partition_by=["p"],
-        logstore=_KIND["logstore"],
     )
     t.append(spark.createDataFrame(
         [(10, 1, "x"), (9, 2, "y")], "p int, k long, val string"
@@ -125,7 +115,6 @@ def test_partition_column_guards(spark, tmp_path):
     t3 = TxTable(
         spark, str(tmp_path / "nonkey"), key_cols=["k"],
         n_buckets=2, partition_by=["day"],
-        logstore=_KIND["logstore"],
     )
     t3.append(_df(spark, [(D1, 1, "x")]))
     with pytest.raises(ValueError, match="partition column"):
@@ -138,11 +127,11 @@ def test_partition_column_guards(spark, tmp_path):
         t.append(spark.createDataFrame([(7, "x")], "k long, val string"))
     with pytest.raises(ValueError, match="bucket"):
         TxTable(spark, str(tmp_path / "bad"), key_cols=["k"],
-                partition_by=["bucket"], logstore=_KIND["logstore"])
+                partition_by=["bucket"])
     with pytest.raises(ValueError, match="type"):
         tt = TxTable(
             spark, str(tmp_path / "badtype"), key_cols=["ts", "k"],
-            partition_by=["ts"], logstore=_KIND["logstore"],
+            partition_by=["ts"],
         )
         tt.append(spark.createDataFrame(
             [(dt.datetime(2024, 1, 1), 1)], "ts timestamp, k long"
@@ -357,7 +346,7 @@ def test_unpartitioned_tables_record_no_scopes(spark, tmp_path):
     """Zero-behavior-change lock: a plain table's commits must not
     grow a scopes field, and its DML falls back to bucket scoping."""
     t = TxTable(spark, str(tmp_path / "plain"), key_cols=["k"],
-                n_buckets=2, logstore=_KIND["logstore"])
+                n_buckets=2)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, val string")
     t.append(df)
     t.merge_upsert(spark.createDataFrame([(1, "A")], "k long, val string"))
@@ -373,7 +362,6 @@ def test_special_character_partition_values_roundtrip(spark, tmp_path):
     t = TxTable(
         spark, str(tmp_path / "strs"), key_cols=["cat", "k"],
         n_buckets=2, partition_by=["cat"],
-        logstore=_KIND["logstore"],
     )
     t.append(spark.createDataFrame(
         [("a b/c", 1, "x"), ("plain", 2, "y")],
@@ -397,7 +385,7 @@ def test_protocol_versions_partitioned_and_upgrade(spark, tmp_path):
     assert t.stats()["partition_by"] == ["day"]
     assert t.stats()["partitions"] == 3  # D1, D2, null
     plain = TxTable(spark, str(tmp_path / "plain"), key_cols=["k"],
-                    n_buckets=2, logstore=_KIND["logstore"])
+                    n_buckets=2)
     plain.append(spark.createDataFrame(
         [(1, "a"), (2, "b")], "k long, val string"))
     assert plain.protocol() == {"min_reader": 1, "min_writer": 1}
@@ -486,14 +474,14 @@ def _race_scoped_commits(path, writer_id, n_commits, part, barrier):
     import json
     import os
 
-    from pypeman_spark.store.logstore import open_logstore
+    from pypeman_spark.store.logstore import FileLogStore
 
     t = TxTable.__new__(TxTable)
     t.path = path
     t.log_dir = os.path.join(path, "_txlog")
     t.data_dir = os.path.join(path, "data")
     t.checkpoint_interval = 1 << 30
-    t.logstore = open_logstore(t.log_dir)
+    t.logstore = FileLogStore(t.log_dir)
     barrier.wait()
     landed, retries = [], 0
     for i in range(n_commits):

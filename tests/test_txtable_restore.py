@@ -21,20 +21,12 @@ from pypeman_spark.store.txtable import (
     VacuumedVersionError,
 )
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 def _mk(spark, tmp_path, **kw):
     kw.setdefault("key_cols", ["k"])
     kw.setdefault("n_buckets", 2)
-    kw.setdefault("logstore", _KIND["logstore"])
     return TxTable(spark, str(tmp_path / "tbl"), **kw)
 
 
@@ -414,14 +406,14 @@ def _race_restore_vs_appends(path, role, payload, barrier):
     all through the real conditional-put commit protocol."""
     import json as _json
 
-    from pypeman_spark.store.logstore import open_logstore
+    from pypeman_spark.store.logstore import FileLogStore
 
     t = TxTable.__new__(TxTable)
     t.path = path
     t.log_dir = os.path.join(path, "_txlog")
     t.data_dir = os.path.join(path, "data")
     t.checkpoint_interval = 1 << 30
-    t.logstore = open_logstore(t.log_dir)
+    t.logstore = FileLogStore(t.log_dir)
     barrier.wait()
     if role == "restore":
         from pypeman_spark.store.txtable import _replay_log

@@ -17,20 +17,12 @@ from pypeman_spark.store.txtable import (
     _log_floor,
 )
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 def _mk(spark, tmp_path, **kw):
     kw.setdefault("key_cols", ["k"])
     kw.setdefault("n_buckets", 2)
-    kw.setdefault("logstore", _KIND["logstore"])
     kw.setdefault("checkpoint_interval", 3)
     return TxTable(spark, str(tmp_path / "tbl"), **kw)
 
@@ -213,8 +205,8 @@ def test_vacuum_after_truncate_reclaims_as_orphans(spark, tmp_path):
 
 def test_checkpoint_compression_roundtrip_and_legacy(spark, tmp_path):
     """Checkpoints are compressed (the live-file list is the largest
-    metadata object at scale); both store impls must round-trip the
-    state exactly and still read PRE-compression checkpoints."""
+    metadata object at scale); the store must round-trip the state
+    exactly and still read PRE-compression checkpoints."""
     t = _mk(spark, tmp_path)  # interval 3
     _grow(spark, t, 7)
     cks = t.logstore.list_checkpoints()
@@ -223,37 +215,18 @@ def test_checkpoint_compression_roundtrip_and_legacy(spark, tmp_path):
     assert v == 6 and len(state["live"]) > 0
     # replay THROUGH the checkpoint equals the truth
     assert t.count() == 7 and t.read().count() == 7
-    if _KIND["logstore"] == "file":
-        import gzip
-        import json as _json
-
-        gz = os.path.join(
-            t.log_dir, f"{6:020d}.checkpoint.json.gz"
-        )
-        assert os.path.exists(gz)
-        raw = _json.dumps(state).encode()
-        assert os.path.getsize(gz) < len(raw)  # actually compressed
-        # legacy uncompressed checkpoint at a NEWER version wins and
-        # still reads (pre-compression tables keep working)
-        with open(os.path.join(
-            t.log_dir, f"{7:020d}.checkpoint.json"
-        ), "w") as fh:
-            fh.write(_json.dumps({**state, "version": 7}))
-        v2, st2 = t.logstore.latest_checkpoint(10)
-        assert v2 == 7 and st2["live"] == state["live"]
-        assert 7 in t.logstore.list_checkpoints()
-    else:
-        # legacy TEXT row in the sqlite checkpoints table still reads
-        import json as _json
-        import sqlite3
-
-        con = sqlite3.connect(os.path.join(t.log_dir, "log.db"))
-        con.execute(
-            "INSERT OR REPLACE INTO checkpoints (version, state) "
-            "VALUES (?, ?)",
-            (7, _json.dumps({**state, "version": 7})),
-        )
-        con.commit()
-        con.close()
-        v2, st2 = t.logstore.latest_checkpoint(10)
-        assert v2 == 7 and st2["live"] == state["live"]
+    gz = os.path.join(
+        t.log_dir, f"{6:020d}.checkpoint.json.gz"
+    )
+    assert os.path.exists(gz)
+    raw = json.dumps(state).encode()
+    assert os.path.getsize(gz) < len(raw)  # actually compressed
+    # legacy uncompressed checkpoint at a NEWER version wins and
+    # still reads (pre-compression tables keep working)
+    with open(os.path.join(
+        t.log_dir, f"{7:020d}.checkpoint.json"
+    ), "w") as fh:
+        fh.write(json.dumps({**state, "version": 7}))
+    v2, st2 = t.logstore.latest_checkpoint(10)
+    assert v2 == 7 and st2["live"] == state["live"]
+    assert 7 in t.logstore.list_checkpoints()

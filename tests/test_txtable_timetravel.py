@@ -23,20 +23,12 @@ from pypeman_spark.store.txtable import (
     _as_epoch,
 )
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 def _mk(spark, tmp_path, **kw):
     kw.setdefault("key_cols", ["k"])
     kw.setdefault("n_buckets", 2)
-    kw.setdefault("logstore", _KIND["logstore"])
     return TxTable(spark, str(tmp_path / "tbl"), **kw)
 
 

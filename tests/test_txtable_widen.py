@@ -16,20 +16,12 @@ from pyspark.sql.types import DoubleType, LongType
 
 from pypeman_spark.store.txtable import TxTable, _WIDENS
 
-_KIND = {"logstore": "file"}
-
-
-@pytest.fixture(autouse=True, params=["file", "sqlite"])
-def logstore_kind(request):
-    _KIND["logstore"] = request.param
-    yield request.param
-    _KIND["logstore"] = "file"
+pytestmark = pytest.mark.usefixtures("file_log")
 
 
 def _mk(spark, tmp_path, **kw):
     kw.setdefault("key_cols", ["k"])
     kw.setdefault("n_buckets", 2)
-    kw.setdefault("logstore", _KIND["logstore"])
     return TxTable(spark, str(tmp_path / "tbl"), **kw)
 
 
@@ -41,7 +33,7 @@ def test_every_listed_promotion_reads_old_files(spark, tmp_path):
         for j, to in enumerate(sorted(tos)):
             t = TxTable(
                 spark, str(tmp_path / f"t{i}_{j}"), key_cols=["k"],
-                n_buckets=1, logstore=_KIND["logstore"],
+                n_buckets=1,
             )
             vals = (
                 [(1, 42.0), (2, 7.0)] if frm == "float"
@@ -119,7 +111,7 @@ def test_widen_guards(spark, tmp_path):
     # appending a WIDER column without widening stays an error, now
     # with the remediation in the message
     t2 = TxTable(spark, str(tmp_path / "tbl2"), key_cols=["k"],
-                 n_buckets=2, logstore=_KIND["logstore"])
+                 n_buckets=2)
     t2.append(spark.createDataFrame([(1, 5)], "k long, v int"))
     with pytest.raises(ValueError, match="widen_column"):
         t2.append(spark.createDataFrame(
